@@ -2,6 +2,7 @@ package graft.cache
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ops.Relational
 
@@ -34,14 +35,21 @@ final class ParquetCache(spark: SparkSession, root: String) extends SeriesCache 
     else None
   }
 
+  /** One version directory, flat and written by one Spark write: its
+    * schema is read from a footer on the driver, no inference job. */
+  private def read(version: java.io.File): DataFrame =
+    spark.read.schema(Bridge.footerSchema(spark, version.getPath))
+      .parquet(version.getPath)
+
   /** Column names cached for this (freq, start, end) key, minus `date`.
-    * Footer-only read — no data scan. Reference `perustats/BCRP/cache.py:105-117`. */
+    * Footer-only read on the driver — no Spark job, no data scan.
+    * Reference `perustats/BCRP/cache.py:105-117`. */
   def cachedCodes(freq: String, start: String, end: String): Seq[String] = {
     val dir = tableDir(freq, start, end)
     currentVersion(dir) match {
       case Some(v) =>
-        spark.read.parquet(new java.io.File(dir, v).getPath)
-          .columns.toSeq.filter(c => c != "date" && c != "yq")
+        Bridge.footerSchema(spark, new java.io.File(dir, v).getPath)
+          .fieldNames.toSeq.filter(c => c != "date" && c != "yq")
       case None => Nil
     }
   }
@@ -65,7 +73,7 @@ final class ParquetCache(spark: SparkSession, root: String) extends SeriesCache 
     val dir = tableDir(freq, start, end)
     val merged = currentVersion(dir) match {
       case Some(v) =>
-        val existing = spark.read.parquet(new java.io.File(dir, v).getPath)
+        val existing = read(new java.io.File(dir, v))
         Relational.upsertWide(existing, incoming, "date")
       case None => incoming
     }
@@ -109,7 +117,7 @@ final class ParquetCache(spark: SparkSession, root: String) extends SeriesCache 
     val dir = tableDir(freq, start, end)
     val v = currentVersion(dir).getOrElse(
       throw new IllegalStateException(s"no cache table for ($freq,$start,$end)"))
-    val df = spark.read.parquet(new java.io.File(dir, v).getPath)
+    val df = read(new java.io.File(dir, v))
     val available = df.columns.toSet
     val wanted = codes.filter(available.contains)
     df.select(("date" +: wanted).map(col): _*)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** One declared operator query: a Spark pipeline plus (when SQL-expressible)
   * the equivalent DuckDB oracle SQL the driver replays at sf0.01.
@@ -16,14 +17,16 @@ object QueryDSL {
   val sqlToks: String =
     """list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"""
 
-  /** Load a driver testdata table from the given scale-factor directory. */
-  def T(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Load a driver testdata table from the given scale-factor directory.
+    * The schema comes from the table's parquet footer, read on the driver
+    * ([[org.apache.spark.sql.graftbridge.Bridge.footerSchema]]): a bare
+    * `spark.read.parquet` would run Spark's one-task schema-inference job
+    * on every call. */
+  def T(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Bridge.footerSchema(spark, path)).parquet(path)
+  }
 
-  /** Per-(name, input-dir) scratch path for sinks and persisted tables.
-    * The input-dir hash suffix keeps two concurrent runs over different sf
-    * dirs (the realistic overlap: Verify at sf0.01 while Bench runs sf0.1
-    * on one checkout) from racing on a single directory. */
   /** Collision-resistant tag for an input dir, safe in catalog table and
     * streaming-query names. Replaces `dir.hashCode.abs`, whose Int range
     * collides across sf dirs sharing a metastore and whose .abs is
@@ -31,6 +34,10 @@ object QueryDSL {
   def dirTag(sfDir: String): String =
     graft.functions.hashing.md5Long(sfDir).toHexString.take(8)
 
+  /** Per-(name, input-dir) scratch path for sinks and persisted tables.
+    * The input-dir hash suffix keeps two concurrent runs over different sf
+    * dirs (the realistic overlap: Verify at sf0.01 while Bench runs sf0.1
+    * on one checkout) from racing on a single directory. */
   def scratch(name: String, sfDir: String): String = {
     val suffix = dirTag(sfDir)
     val dir = new java.io.File("/root/repo/target/scratch", s"${name}_$suffix")
@@ -60,7 +67,7 @@ object QueryDSL {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = T(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // nanos-as-long generation
         raw.withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
@@ -92,9 +99,6 @@ object QueryDSL {
     * are partition-order-dependent and would be oracle-unstable.
     */
   def dec(c: Column): Column = c.cast("decimal(18,2)")
-
-  /** Same discipline spelled for the DuckDB side. */
-  def sqlDec(expr: String): String = s"CAST($expr AS DECIMAL(18,2))"
 
   /** DuckDB replay of [[graft.ops.Sampling.temperatureSample]]'s rate
     * derivation over relation `rel` (α = 0.5): group counts → √n weights →

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -32,8 +33,9 @@ object Streams {
     * parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across testdata
     * generations, so pinning one physical type would break every
     * streaming query on the next flip while the batch side adapts.
-    * Instead, probe the footer ONCE (a driver-side batch schema read —
-    * no data scanned) and branch exactly like the batch reader
+    * Instead, read the first matching file's footer ONCE on the driver
+    * ([[Bridge.footerSchema]]: no Spark job, no data scanned) and branch
+    * exactly like the batch reader
     * [[graft.queries.QueryDSL.events]]; both readers then derive the
     * library contract — `ts` = BIGINT nanos-since-epoch, `ts_utc` =
     * microsecond timestamp — from the file's ACTUAL type. The
@@ -47,8 +49,7 @@ object Streams {
     // batch reader sets it identically, so the two probes agree.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType =
-      try spark.read.option("pathGlobFilter", glob)
-        .parquet(dir).schema("ts").dataType
+      try Bridge.footerSchema(spark, dir, glob)("ts").dataType
       catch {
         // No matching file at start: FAIL LOUDLY instead of guessing. A
         // streaming source pins its schema for the query's lifetime, so
@@ -403,7 +404,7 @@ object Streams {
   def enrichBySegmentStreaming(spark: SparkSession, dir: String,
       name: String = "graft_st5"): DataFrame =
     drain(spark, name) { s =>
-      val dim = broadcast(s.read.parquet(s"$dir/customer.parquet")
+      val dim = broadcast(graft.queries.QueryDSL.T(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
       readEventsStream(s, dir)
         .join(dim, col("user_id") === col("c_custkey"))

@@ -39,6 +39,60 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalogManager.catalog(name)
 
+  /** The schema `spark.read.parquet(path)` infers, read from ONE parquet
+    * footer on the driver: Spark's inference runs a one-task footer job
+    * on every read, this runs none. Spark's own footer conversion reads
+    * the CURRENT session conf (nanosAsLong, NTZ inference, int96), and the
+    * result is nullable as every file relation's schema is. The file is
+    * Spark's non-merge choice: `path` itself, or for a flat directory the
+    * first visible file in path order whose name matches `glob` (names
+    * starting with `_` or `.` are hidden). A directory with subdirectories
+    * (a partitioned layout) throws, with no fallback to inference; a
+    * missing path or no matching file throws Spark's own PATH_NOT_FOUND /
+    * UNABLE_TO_INFER_SCHEMA. */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession, path: String,
+      glob: String = "*"): org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.{GlobFilter, Path}
+    import org.apache.spark.sql.errors.QueryCompilationErrors
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val conf = state.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status =
+      try fs.getFileStatus(root)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw QueryCompilationErrors.dataPathNotExistError(path)
+      }
+    val file =
+      if (status.isFile) status
+      else {
+        val visible = fs.listStatus(root).filterNot { f =>
+          val n = f.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        val dirs = visible.filter(_.isDirectory)
+        if (dirs.nonEmpty)
+          throw new IllegalArgumentException(s"footerSchema reads flat " +
+            s"directories only; $path has subdirectories " +
+            dirs.map(_.getPath.getName).sorted.mkString("[", ", ", "]"))
+        val matches = new GlobFilter(glob)
+        visible.filter(f => matches.accept(f.getPath))
+          .minByOption(_.getPath.toString)
+          .getOrElse(throw QueryCompilationErrors
+            .dataSchemaNotSpecifiedError("Parquet"))
+      }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(state.conf)).asNullable
+  }
+
   /** A STREAMING-tagged parquet scan over explicit files, for a v1
     * streaming `Source.getBatch`: the plan is the same `LogicalRelation`
     * a batch `spark.read.parquet` produces — so column pruning and
