@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec makes the omission a RED BUILD instead of a review finding, so
   * a registry entry physically cannot land without its documentation.
   * The same mechanical posture pins the input-table read rule: tables
-  * load through `QueryDSL.T`/`events`, never a bare `read.parquet`.
-  * No Spark session needed — pure registry + file introspection. */
+  * load through `QueryDSL.T`/`events`, never a bare `read.parquet`, and
+  * the drain rule: every bounded stream drain goes through the `Streams`
+  * drain combinator. No Spark session needed — pure registry + file
+  * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
 
   private def repoFile(name: String): String = {
@@ -72,5 +74,57 @@ class RegistryGuardSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, "input tables must load through QueryDSL.T/" +
       s"events (footer schema, no inference job):\n${hits.mkString("\n")}")
+  }
+
+  /** A hand-written drain: the `foreachBatch` sink, the drain call, or a
+    * child session created outside the combinator (its own def line is
+    * allowed). */
+  private val drainToken =
+    """\.foreachBatch\b|processAllAvailable|(?<!def )childSession\(""".r
+
+  /** Indices of the code lines (comment lines skipped) that hold a
+    * [[drainToken]]. */
+  private def drainHits(lines: Seq[String]): Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+          drainToken.findFirstIn(l).isDefined => i
+    }
+
+  test("no src/main code starts, drains or stops a stream outside the " +
+    "Streams drain combinator") {
+    // the old hand-written st13 drain trips the scan on all three counts
+    val oldDrain = """    val s = childSession(spark)
+      |    val q = readDocumentsStream(s, dir, glob, maxFilesPerTrigger)
+      |      .writeStream
+      |      .option("checkpointLocation", s"$outPath-ckpt")
+      |      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      |        applySketchBatch(batch, batchId, outPath, depth, width)
+      |      }
+      |      .queryName(name).start()
+      |    try q.processAllAvailable() finally q.stop()""".stripMargin
+    assert(drainHits(oldDrain.split("\n").toSeq) == Seq(0, 4, 8))
+    // the combinator: runDrain and its two faces, drain and drainBatches,
+    // from runDrain's def to the blank line after drainBatches' body
+    val streams = Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    val lines = Files.readAllLines(streams).asScala.toSeq
+    val from = lines.indexWhere(_.contains("private def runDrain("))
+    val faces = lines.indexWhere(_.contains("private def drainBatches("))
+    assert(from >= 0 && faces > from,
+      "drain combinator (runDrain … drainBatches) not found in Streams.scala")
+    val until = lines.indexWhere(_.trim.isEmpty, faces)
+    val combinator = lines.slice(from, until)
+    assert(combinator.exists(_.contains("private def drain(")))
+    assert(drainHits(combinator).size >= 3,
+      "the combinator itself must hold the drain calls it guards")
+    val files = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = for {
+      f <- files
+      src = Files.readAllLines(f).asScala.toSeq
+      i <- drainHits(src)
+      if !(Files.isSameFile(f, streams) && i >= from && i < until)
+    } yield s"$f:${i + 1}: ${src(i).trim}"
+    assert(hits.isEmpty, "bounded drains go through Streams.drain/" +
+      s"drainBatches, never a hand-written wrapper:\n${hits.mkString("\n")}")
   }
 }

@@ -6,16 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (getOrCreate -> one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Pin the persisted-index bucket layout the suites were written
-      // against (r17 made the default scale-adaptive — ops.Buckets).
-      .config("spark.graft.index.buckets", "8")
-      .getOrCreate()
+    // Pin the persisted-index bucket layout the suites were written
+    // against (r17 made the default scale-adaptive — ops.Buckets).
+    val s = LocalSession("4", "spark.graft.index.buckets" -> "8")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -183,33 +183,6 @@ class StreamingSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
-  test("watermarked append-mode window drops late data, emits closed windows") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[(java.sql.Timestamp, String)]
-    val q = Streams.tumblingCountsWatermarked(
-        source.toDF().toDF("ts_utc", "event_type"), delay = "30 minutes")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wm_spec").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      source.addData((ts("2024-01-01 10:05:00"), "a"),
-        (ts("2024-01-01 10:10:00"), "a"))
-      q.processAllAvailable()
-      // advance the watermark past 10:00-11:00 (needs event > 11:30)
-      source.addData((ts("2024-01-01 12:00:00"), "b"))
-      q.processAllAvailable()
-      // this event is behind the watermark -> dropped, window stays closed
-      source.addData((ts("2024-01-01 10:20:00"), "a"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("wm_spec")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-    assert(out.toSeq == Seq(("2024-01-01 10:00:00.0", "a", 2L)))
-  }
-
   test("streaming tumbling window == batch tumbling window") {
     val batch = Streams.tumblingCounts(QueryDSL.events(spark, sf))
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
@@ -327,9 +300,9 @@ class StreamingSpec extends SparkSpec {
     // more file lands. The checkpointed offsets must skip file 0 — but the
     // fold must NOT re-seed the index (seeding on restart would erase it).
     land(1)
-    Streams.textIndexIngestResume(spark, srcDir.toString, idxPath,
+    Streams.textIndexIngestStreaming(spark, srcDir.toString, idxPath,
       prefix = "graft_st21r", glob = "documents_*.parquet",
-      checkpoint = ckpt, name = "st21r_sink_b")
+      checkpoint = ckpt, name = "st21r_sink_b", seed = false)
     TextIndex.refresh(spark, "graft_st21r") // cross-session cache drop
     val stats = spark.table(TextIndex.corpusStatsTable("graft_st21r"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).head
@@ -1031,6 +1004,36 @@ class StreamingSpec extends SparkSpec {
       assert(ids(Manifest.read(spark, tbl, v.toLong)) ==
         ids(docs.filter(col("doc_id") % 4 < v)), s"version $v")
     }
+  }
+
+  test("drain telemetry is per drain: a stateless foreachBatch drain " +
+      "after a stateful memory drain reports one zero per micro-batch") {
+    import org.apache.spark.sql.functions._
+    import java.nio.file.Files
+    // stateful memory drain first: mapGroupsWithState keeps one state row
+    // per user, so its telemetry is non-zero
+    Streams.sessionizeStreaming(spark, sf, name = "telemetry_st2").count()
+    assert(Streams.lastDrainStateRows.get().exists(_ > 0L),
+      s"stateful drain reported ${Streams.lastDrainStateRows.get()}")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val srcDir = Files.createTempDirectory("telemetry_src")
+    for (i <- 0 until 4) {
+      val chunkDir = Files.createTempDirectory(s"telemetry_chunk$i")
+      docs.filter(col("doc_id") % 4 === i)
+        .coalesce(1).write.mode("overwrite").parquet(chunkDir.toString)
+      val part = chunkDir.toFile.listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = srcDir.resolve(s"documents_$i.parquet")
+      Files.copy(part.toPath, dst)
+      assert(dst.toFile.setLastModified(1700000000000L + i * 60000L))
+    }
+    val tbl = Files.createTempDirectory("telemetry_tbl").toString + "/t"
+    Streams.commitStreaming(spark, srcDir.toString, tbl,
+      glob = "documents_*.parquet", maxFilesPerTrigger = 1,
+      name = "telemetry_commit")
+    assert(Streams.lastDrainStateRows.get() == Seq(0L, 0L, 0L, 0L),
+      "the 4-micro-batch stateless drain must replace the previous " +
+        s"drain's telemetry, got ${Streams.lastDrainStateRows.get()}")
   }
 
   test("st20 streaming drift counts: 4-micro-batch partials re-aggregate " +
