@@ -188,7 +188,7 @@ object ChangeFeed {
           Seq("__dv_f", "__dv_p"), "left_anti")
       }
       // this step's delete volume, free from the mappings — the same
-      // size gate as the read-side anti-join
+      // size gate as the read-side DV filter
       val delta = grown.map { case (f, (_, n)) =>
         n - dvPrev.get(f).map(_._2).getOrElse(0L) }.sum
       val hinted =

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Minimal versioned-table commits — the lakehouse primitive (the
   * Delta/Iceberg shape) that belongs under every incremental structure this
@@ -1589,8 +1590,8 @@ object Manifest {
     * DELETE the Delta DV / Iceberg v2 position-delete shape: a row-level
     * delete publishes positions-to-hide for the files it touches instead
     * of rewriting them (at 100 TB, GDPR single-key erasure must not pay
-    * a file rewrite). Readers anti-join `(file, row position)` against
-    * the referenced DV parquet; a file without a mapping reads
+    * a file rewrite). Readers drop the `(file, row position)` pairs of
+    * the referenced DV parquet ([[dvJoin]]); a file without a mapping reads
     * untouched, so DV-less tables pay nothing. The in-force DV state
     * RESOLVES from the delta log exactly like the file list: a commit
     * records only the mappings it SET, appends inherit the base's,
@@ -1606,11 +1607,22 @@ object Manifest {
     * rows in shared DV directories harmless. */
   val DvPrefix = "dv."
 
-  /** Broadcast ceiling for the read-side DV anti-join, in total deleted
-    * positions (known for free from the mapping metadata). Past it the
-    * anti-join falls back to a shuffle join instead of flooding the
-    * driver — the same degrade-don't-crash gate as Merge's key set. */
+  /** Ceiling for the in-scan DV filter, in total deleted positions
+    * (known for free from the mapping metadata): up to it the positions
+    * are read on the driver into per-file bitmaps shipped as one
+    * broadcast variable; past it DV application falls back to a
+    * shuffle anti-join instead of flooding the driver — the same
+    * degrade-don't-crash gate as Merge's key set. */
   val DvBroadcastLimit: Long = 4L * 1000 * 1000
+
+  /** The on-disk shape of a DV directory, one row per deleted position:
+    * written by [[Merge]]'s DV publish, read back under this declared
+    * schema (no schema-inference job). */
+  val DvSchema: StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    StructType(Seq(StructField("file", StringType),
+      StructField("pos", LongType)))
+  }
 
   /** Deletion vectors in force at version `v` (newest when omitted):
     * fileRel → (dvDirRel, deleted position count). Resolved from the
@@ -1626,7 +1638,7 @@ object Manifest {
 
   /** The table-relative path of the file a scanned row came from, as a
     * plain codegen'd expression over `_metadata.file_path` (last three
-    * path segments — the fixed `data/bNNNNNN/<file>` layout): the join
+    * path segments — the fixed `data/bNNNNNN/<file>` layout): the file
     * key DV application matches on. */
   private[ops] def relPathCol: org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -1642,42 +1654,105 @@ object Manifest {
       .withColumn("__dv_p", col("_metadata.row_index"))
   }
 
+  /** The DV directories `dvs` references, absolute, in path order. */
+  private def dvDirs(tablePath: String,
+      dvs: Map[String, (String, Long)]): Seq[Path] =
+    dvs.values.map(_._1).toSeq.distinct.sorted
+      .map(r => Paths.get(tablePath).resolve(r))
+
   /** All deleted `(file, pos)` positions of `dvs`, as a distributed
-    * frame: reads the referenced DV directories, restricted to mapped
-    * files (a shared directory may hold stale rows for files whose
-    * mapping moved on — always position-subsets, but files with NO
-    * mapping must contribute nothing). */
+    * frame: reads the referenced DV directories under [[DvSchema]],
+    * restricted to mapped files (a shared directory may hold stale rows
+    * for files whose mapping moved on — always position-subsets, but
+    * files with NO mapping must contribute nothing). */
   private[ops] def dvPositions(spark: SparkSession, tablePath: String,
       dvs: Map[String, (String, Long)]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val dirs = dvs.values.map(_._1).toSeq.distinct.sorted
-      .map(r => Paths.get(tablePath).resolve(r).toString)
-    spark.read.parquet(dirs: _*)
+    spark.read.schema(DvSchema)
+      .parquet(dvDirs(tablePath, dvs).map(_.toString): _*)
       .filter(col("file").isInCollection(dvs.keys.toSeq))
   }
 
-  /** Anti-join a [[withPos]]-prepared frame against the DVs in force at
-    * `v`, keeping the `__dv_f`/`__dv_p` helper columns for callers that
-    * still need them (drop them when done). No-op without DVs. */
+  /** The positions of [[dvPositions]] read on the DRIVER with
+    * parquet-mr (no Spark job), one bitmap per mapped file, under the
+    * same mapped-files rule. Bounded by [[DvBroadcastLimit]]: these are
+    * the bytes a broadcast anti-join would collect to the driver too. */
+  private def dvBitmaps(spark: SparkSession, tablePath: String,
+      dvs: Map[String, (String, Long)])
+      : java.util.HashMap[String, Roaring64NavigableMap] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val opts = HadoopReadOptions.builder(conf).build()
+    val out = new java.util.HashMap[String, Roaring64NavigableMap]()
+    def parts(dir: Path): Seq[Path] = {
+      val ls = Files.list(dir)
+      try ls.iterator.asScala.toSeq.filterNot { f =>
+        val n = f.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }.sortBy(_.toString)
+      finally ls.close()
+    }
+    for (dir <- dvDirs(tablePath, dvs); part <- parts(dir)) {
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toString), conf), opts)
+      try {
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(rd.readNextRowGroup()).takeWhile(_ != null)
+          .foreach { rows =>
+            val rec = io.getRecordReader(rows, new GroupRecordConverter(schema))
+            for (_ <- 0L until rows.getRowCount) {
+              val g = rec.read()
+              val f = g.getString("file", 0)
+              if (dvs.contains(f))
+                out.computeIfAbsent(f, _ => new Roaring64NavigableMap())
+                  .addLong(g.getLong("pos", 0))
+            }
+          }
+      } finally rd.close()
+    }
+    out.values.forEach(_.runOptimize())
+    out
+  }
+
+  /** Hide the positions the DVs in force at `v` delete from a
+    * [[withPos]]-prepared frame ([[dvJoin]]), keeping the
+    * `__dv_f`/`__dv_p` helper columns for callers that still need them
+    * (drop them when done). No-op without DVs. */
   private[ops] def antiDv(spark: SparkSession, tablePath: String,
       v: Long, dfWithPos: DataFrame): DataFrame =
     dvJoin(spark, tablePath, deletionVectors(tablePath, v), dfWithPos)
 
-  /** The ONE owner of the DV anti-join construction: the positions
-    * scan, the size-gated broadcast hint, and the (file, pos) anti-join
-    * over a [[withPos]]-prepared frame. Helper columns kept. */
-  private def dvJoin(spark: SparkSession, tablePath: String,
+  /** The ONE owner of DV application over a [[withPos]]-prepared frame,
+    * helper columns kept. Up to `limit` total positions (default
+    * [[DvBroadcastLimit]]) it is a filter INSIDE the scan's stage: the
+    * positions are read on the driver ([[dvBitmaps]]), shipped as one
+    * broadcast variable, and tested per row by the deterministic
+    * `graft_dv_live` UDF — no join, no exchange, no extra Spark job.
+    * Past `limit` it is a shuffle `(file, pos)` anti-join against
+    * [[dvPositions]]. The bitmaps are built per call, never cached. */
+  private[ops] def dvJoin(spark: SparkSession, tablePath: String,
       dvs: Map[String, (String, Long)],
-      dfWithPos: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+      dfWithPos: DataFrame, limit: Long = DvBroadcastLimit): DataFrame = {
+    import org.apache.spark.sql.functions.{col, udf}
     if (dvs.isEmpty) dfWithPos
-    else {
+    else if (dvs.values.map(_._2).sum <= limit) {
+      val bc = spark.sparkContext.broadcast(
+        dvBitmaps(spark, tablePath, dvs))
+      val live = udf { (f: String, p: Long) =>
+        val deleted = bc.value.get(f)
+        deleted == null || !deleted.contains(p)
+      }.withName("graft_dv_live")
+      dfWithPos.filter(live(col("__dv_f"), col("__dv_p")))
+    } else {
       val dv = dvPositions(spark, tablePath, dvs)
         .select(col("file").as("__dv_f"), col("pos").as("__dv_p"))
-      val hinted =
-        if (dvs.values.map(_._2).sum <= DvBroadcastLimit) broadcast(dv)
-        else dv
-      dfWithPos.join(hinted, Seq("__dv_f", "__dv_p"), "left_anti")
+      dfWithPos.join(dv, Seq("__dv_f", "__dv_p"), "left_anti")
     }
   }
 
@@ -1873,11 +1948,15 @@ object Manifest {
   private def footerBatchStats(spark: SparkSession, tablePath: String,
       fresh: Seq[String], statsCols: Seq[String], schema: StructType)
       : (Map[String, String], Map[String, String]) = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val numericCols = numericStatsCols(schema, statsCols)
     val conf = spark.sessionState.newHadoopConf()
+    // read options built once per commit: the one-argument open builds
+    // a fresh Hadoop Configuration per footer
+    val opts = HadoopReadOptions.builder(conf).build()
     def asDouble(v: AnyRef): Option[Double] = v match {
       case l: java.lang.Long => Some(l.toDouble)
       case i: java.lang.Integer => Some(i.toDouble)
@@ -1888,7 +1967,7 @@ object Manifest {
     val perFile = fresh.map { rel =>
       val abs = Paths.get(tablePath).resolve(rel).toString
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(abs), conf))
+        new org.apache.hadoop.fs.Path(abs), conf), opts)
       try {
         val blocks = rd.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum

@@ -131,7 +131,9 @@ object Merge {
           case _ => None
         }
       }.toMap
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
+    // the guard proved at most one source row per key (nulls included),
+    // so the key projection is already distinct
+    val srcKeys = src.select(keyCols.map(col): _*)
     val keys =
       if (keyCount <= broadcastKeyLimit) broadcast(srcKeys) else srcKeys
     cowRewrite(spark, tablePath,
@@ -224,8 +226,8 @@ object Merge {
     * rows' positions per file — and let readers hide them. Write cost
     * is ∝ MATCHED ROWS, not touched-file bytes: the single-key GDPR
     * erasure on a 100 TB table publishes a few positions and zero data
-    * files. Reads of DV'd files pay a (broadcast, size-gated) anti-join
-    * until maintenance ([[deleteWhere]]-style rewrites,
+    * files. Reads of DV'd files pay a (size-gated) in-scan position
+    * filter until maintenance ([[deleteWhere]]-style rewrites,
     * [[Layout.optimizeWhere]], compaction) materializes the DV away —
     * exactly the COW/MoR trade every lakehouse exposes. Deletes stack:
     * a new DV carries the file's existing positions forward, and
@@ -463,7 +465,9 @@ object Merge {
       if (carried.isEmpty) matched
       else matched.unionByName(
         Manifest.dvPositions(spark, tablePath, carried))
-    allPos.coalesce(1).write.mode("append").parquet(dvDir.toString)
+    allPos.select(Manifest.DvSchema.map(f =>
+        col(f.name).cast(f.dataType)): _*)
+      .coalesce(1).write.mode("append").parquet(dvDir.toString)
     val dvRel = Paths.get(tablePath).relativize(dvDir).toString
     val dvLines = perFile.map { case (f, n) =>
       s"${Manifest.DvPrefix}$f" ->

@@ -17,7 +17,9 @@ import graft.sources.DvMarkedTable
   * [[graft.sources.GraftCatalog]] returns a [[DvMarkedTable]] for any
   * version whose manifest carries `dv.*` lines; this rule replaces that
   * relation with the DV-APPLIED read (`Manifest.read` — the pinned file
-  * list, recorded schema, and size-gated position anti-join), aliased
+  * list, recorded schema, and the in-scan position filter over
+  * driver-read bitmaps, a shuffle anti-join past
+  * `Manifest.DvBroadcastLimit` positions), aliased
   * back onto the relation's exact output attributes so references
   * resolved against the catalog table stay valid. DV-less versions
   * never see a [[DvMarkedTable]], so their plan is untouched — the

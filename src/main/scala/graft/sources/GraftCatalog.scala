@@ -55,8 +55,8 @@ import graft.ops.Manifest
   * that [[graft.plans.DvReadRewrite]] (injected by
   * `graft.GraftExtensions`) rewrites into the DV-applied read during
   * analysis — so SQL over an erasure-workload table (st32's steady
-  * state) just works, with the same size-gated position anti-join and
-  * pushdown as `Manifest.read`. Without the extension installed the
+  * state) just works, with the same size-gated in-scan position filter
+  * and pushdown as `Manifest.read`. Without the extension installed the
   * marked table REFUSES its scan loudly: silently resurrecting deleted
   * rows is the one unacceptable behavior. DV-less versions keep the
   * join-free native plan (ExtensionsSpec pins both).
@@ -164,7 +164,7 @@ class GraftCatalog extends TableCatalog {
       Manifest.schemaOf(path, v), classOf[ParquetFileFormat])
     // a DV-carrying version cannot be served by the raw scan (it would
     // resurrect deleted rows): mark it for the analysis-time rewrite
-    // (graft.plans.DvReadRewrite applies the position anti-join); the
+    // (graft.plans.DvReadRewrite applies the position filter); the
     // marker's scan refusal catches any path the rewrite missed
     if (snap.dv.isEmpty) table
     else new DvMarkedTable(table.name, path, v, table.schema)

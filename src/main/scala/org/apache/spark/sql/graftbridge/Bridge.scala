@@ -85,8 +85,11 @@ object Bridge {
           .getOrElse(throw QueryCompilationErrors
             .dataSchemaNotSpecifiedError("Parquet"))
       }
+    // explicit read options: the one-argument open builds a fresh Hadoop
+    // Configuration per call
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     val footer = try reader.getFooter finally reader.close()
     ParquetFileFormat.readSchemaFromFooter(
       new org.apache.parquet.hadoop.Footer(file.getPath, footer),

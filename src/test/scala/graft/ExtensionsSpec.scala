@@ -79,11 +79,12 @@ class ExtensionsSpec extends SparkSpec {
     assert(sqlRead("SELECT * FROM graft.t1") ==
       Set((2L, "b"), (4L, "d")), "SQL must hide the DV'd position")
     assert(sqlRead("SELECT * FROM graft.t1") == apiRead(5L))
-    // the DV'd plan carries the position anti-join, and predicates
-    // still push into the inner parquet scan
+    // the DV'd plan carries the in-scan position filter (no join, no
+    // exchange), and predicates still push into the inner parquet scan
     val dvPlan = spark.sql("SELECT * FROM graft.t1 WHERE id = 4")
       .queryExecution.executedPlan.toString
-    assert(dvPlan.contains("Join") && dvPlan.contains("LeftAnti"), dvPlan)
+    assert(dvPlan.contains("graft_dv_live"), dvPlan)
+    assert(!dvPlan.contains("Join") && !dvPlan.contains("Exchange"), dvPlan)
     assert(dvPlan.contains("PushedFilters: [IsNotNull(id), EqualTo(id,4)]"),
       dvPlan)
     // pre-DV versions still serve join-free

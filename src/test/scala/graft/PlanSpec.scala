@@ -602,9 +602,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("DV read plans: a version WITHOUT deletion vectors reads with " +
-    "the plain scan (no join added), a DV'd version applies a " +
-    "BROADCAST anti-join (never a shuffle at bounded delete volume), " +
-    "and data predicates still push into the scan under the DV") {
+    "the plain scan (no join added), a DV'd version applies the named " +
+    "in-scan position filter (no join, no exchange at bounded delete " +
+    "volume), and data predicates still push into the scan under the DV") {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import graft.ops.{Manifest, Merge}
@@ -622,9 +622,10 @@ class PlanSpec extends SparkSpec {
     val dv = Manifest.read(spark, tbl).filter(col("id") < 50L)
     dv.collect()
     val p1 = dv.queryExecution.executedPlan.toString
-    assert(p1.contains("BroadcastHashJoin") && p1.contains("LeftAnti"),
-      s"DV application must be a broadcast anti-join: $p1")
-    assert(!p1.contains("SortMergeJoin"), p1)
+    assert(p1.contains("graft_dv_live"),
+      s"DV application must be the named in-scan filter: $p1")
+    assert(!p1.contains("Join") && !p1.contains("Exchange"),
+      s"a DV'd read must add no join and no exchange: $p1")
     assert(p1.contains("PushedFilters: [IsNotNull(id), LessThan(id,50)"),
       s"data predicate must still push under the DV: $p1")
   }

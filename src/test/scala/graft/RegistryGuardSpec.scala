@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same mechanical posture pins the input-table read rule: tables
   * load through `QueryDSL.T`/`events`, never a bare `read.parquet`, and
   * the drain rule: every bounded stream drain goes through the `Streams`
-  * drain combinator. No Spark session needed — pure registry + file
+  * drain combinator, and the footer rule: every parquet-mr open passes
+  * read options built once. No Spark session needed — pure registry + file
   * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
 
@@ -126,5 +127,43 @@ class RegistryGuardSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${src(i).trim}"
     assert(hits.isEmpty, "bounded drains go through Streams.drain/" +
       s"drainBatches, never a hand-written wrapper:\n${hits.mkString("\n")}")
+  }
+
+  /** (line, argument count) of every `ParquetFileReader.open(` call in
+    * `src`, parentheses matched across lines. */
+  private def parquetOpens(src: String): Seq[(Int, Int)] = {
+    val token = "ParquetFileReader.open("
+    Iterator.iterate(src.indexOf(token))(i => src.indexOf(token, i + 1))
+      .takeWhile(_ >= 0).map { at =>
+        var (depth, commas, i) = (1, 0, at + token.length)
+        while (depth > 0) {
+          src(i) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case ',' if depth == 1 => commas += 1
+            case _ => ()
+          }
+          i += 1
+        }
+        (src.take(at).count(_ == '\n') + 1, commas + 1)
+      }.toSeq
+  }
+
+  test("no src/main code opens a parquet file with the one-argument " +
+    "ParquetFileReader.open (it builds a fresh Hadoop Configuration " +
+    "per call) — read options are built once and passed") {
+    assert(parquetOpens("val r = ParquetFileReader.open(\n" +
+      "  HadoopInputFile.fromStatus(file, conf))") == Seq((1, 1)))
+    assert(parquetOpens("x\nParquetFileReader.open(in(a, b), opts)") ==
+      Seq((2, 2)))
+    val opens = for {
+      f <- Files.walk(Paths.get("src/main")).iterator.asScala.toSeq
+      if f.toString.endsWith(".scala")
+      (line, args) <- parquetOpens(Files.readString(f))
+    } yield (s"$f:$line", args)
+    assert(opens.nonEmpty, "no ParquetFileReader.open under src/main")
+    val bare = opens.collect { case (at, 1) => at }
+    assert(bare.isEmpty, "pass HadoopReadOptions built once to " +
+      s"ParquetFileReader.open:\n${bare.mkString("\n")}")
   }
 }

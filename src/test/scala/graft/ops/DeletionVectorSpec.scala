@@ -408,4 +408,59 @@ class DeletionVectorSpec extends SparkSpec {
       .collect().sorted.toSeq ==
       (0L until 80L).filterNot(i => i == 7L || i == 8L))
   }
+
+  test("a DV'd read runs ONE Spark job: the positions are read on the " +
+    "driver and applied inside the scan (no inference, no exchange)") {
+    val tbl = freshTable()
+    seed(tbl)
+    assert(jobsDuring(Manifest.read(spark, tbl).collect()) == 1)
+    Merge.deleteWhereDv(spark, tbl, col("id").isin(3L, 21L, 22L))
+    var rows = 0
+    assert(jobsDuring {
+      rows = Manifest.read(spark, tbl).collect().length
+    } == 1, "a DV'd read must cost what a DV-less read costs")
+    assert(rows == 77)
+  }
+
+  test("the in-scan bitmap filter and the shuffle anti-join (past the " +
+    "size gate) hide the same rows: stacked DVs, time travel, and a " +
+    "DV'd SQL read") {
+    import org.apache.spark.sql.Row
+    val tbl = freshTable()
+    seed(tbl)
+    Merge.deleteWhereDv(spark, tbl, col("id").isin(1L, 21L))       // v5
+    Merge.deleteWhereDv(spark, tbl, col("id").isin(22L, 45L, 60L)) // v6
+    Merge.updateWhereDv(spark, tbl, col("id") === 61L,
+      Seq("v" -> lit(-1)))                                          // v7
+    val deleted = Map(5L -> Set(1L, 21L),
+      6L -> Set(1L, 21L, 22L, 45L, 60L),
+      7L -> Set(1L, 21L, 22L, 45L, 60L))
+    def applied(v: Long, limit: Long): (Set[Row], String) = {
+      val base = spark.read.schema(Manifest.schemaOf(tbl, v).get)
+        .parquet(Manifest.files(tbl, v)
+          .map(f => Paths.get(tbl).resolve(f).toString): _*)
+      val df = Manifest.dvJoin(spark, tbl, Manifest.deletionVectors(tbl, v),
+        Manifest.withPos(base), limit).drop("__dv_f", "__dv_p")
+      (df.collect().toSet, df.queryExecution.executedPlan.toString)
+    }
+    for (v <- 5L to 7L) {
+      val (viaFilter, pf) = applied(v, Manifest.DvBroadcastLimit)
+      val (viaJoin, pj) = applied(v, 0L)
+      assert(pf.contains("graft_dv_live") && !pf.contains("Join"), pf)
+      assert(pj.contains("LeftAnti") && !pj.contains("graft_dv_live"), pj)
+      assert(viaFilter == viaJoin, s"v$v: filter and anti-join disagree")
+      assert(viaFilter == Manifest.read(spark, tbl, v).collect().toSet)
+      val ids = viaFilter.map(_.getLong(0))
+      assert(ids == (0L until 80L).toSet -- deleted(v), s"v$v: $ids")
+    }
+    assert(applied(7L, 0L)._1.exists(r => r.getLong(0) == 61L &&
+      r.getInt(2) == -1), "the update's image reads on both paths")
+    // the SQL read (DvReadRewrite over the catalog) agrees with the
+    // shuffle path at the head and on a time-traveled version
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    for (v <- Seq(6L, 7L)) {
+      val sql = spark.sql(s"SELECT * FROM graft.`$tbl` VERSION AS OF $v")
+      assert(sql.collect().toSet == applied(v, 0L)._1, s"SQL v$v")
+    }
+  }
 }

@@ -1,9 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -24,20 +20,6 @@ class FooterSchemaSpec extends SparkSpec {
     spark.conf.set(key, value)
     try f
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring(f: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { f; ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
   }
 
   test("footerSchema equals the inferred schema for every input table at " +
