@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,9 +44,6 @@ object ChangeFeed {
 
   /** Committed version a feed row belongs to. */
   val VersionCol = "_commit_version"
-
-  private def resolve(tablePath: String, rels: Seq[String]): Seq[String] =
-    rels.map(rel => Paths.get(tablePath).resolve(rel).toString)
 
   /** Row-level diff of two same-schema snapshots by primary key —
     * ONE full-outer join on `keyCols` (null-safe), one pass, codegen:
@@ -115,9 +110,7 @@ object ChangeFeed {
     // INCREMENTAL WALK over the delta log: ONE snapshot resolution at
     // the range start, then one small delta manifest per version —
     // metadata cost ∝ changes, never ∝ versions × table file count
-    var running =
-      if (sinceVersion == 0) Manifest.emptySnap
-      else Manifest.snapshot(tablePath, sinceVersion)
+    var running = Manifest.at(tablePath, sinceVersion)
     val steps = ((sinceVersion + 1) to v1).flatMap { v =>
       val d = Manifest.delta(tablePath, v)
       val prevSnap = running
@@ -131,10 +124,9 @@ object ChangeFeed {
           val added = running.files.filterNot(prev.contains)
           val inserts =
             if (added.isEmpty) None
-            else Some(readStep(spark, tablePath, v, added)
+            else Some(running.scan(spark, added)
               .withColumn(TypeCol, lit("insert")))
-          val deletes =
-            dvDeltaImages(spark, tablePath, v, prevSnap.dv, running.dv)
+          val deletes = dvDeltaImages(spark, prevSnap, running)
           (inserts, deletes) match {
             case (Some(i), Some(de)) => Some(i.unionByName(de))
             case (i, de) => i.orElse(de)
@@ -142,8 +134,8 @@ object ChangeFeed {
         } else { // replace: row-level snapshot diff
           require(keyCols.nonEmpty, s"version $v of $tablePath is a " +
             "replace commit — row-level CDC needs keyCols")
-          Some(snapshotDiff(Manifest.read(spark, tablePath, v - 1),
-            Manifest.read(spark, tablePath, v), keyCols))
+          Some(snapshotDiff(prevSnap.read(spark), running.read(spark),
+            keyCols))
         }
       feed.map(_.withColumn(VersionCol, lit(v)))
     }
@@ -153,14 +145,14 @@ object ChangeFeed {
     val f = steps
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(
-        Manifest.read(spark, tablePath, v1).limit(0)
+        running.read(spark).limit(0)
           .withColumn(TypeCol, lit("insert"))
           .withColumn(VersionCol, lit(v1)))
     f.select((col(VersionCol) +: col(TypeCol) +:
       f.columns.filterNot(Set(VersionCol, TypeCol)).map(col).toSeq): _*)
   }
 
-  /** Rows version `v` hid behind DELETION-VECTOR growth over `v - 1`,
+  /** Rows version `cur` hid behind DELETION-VECTOR growth over `prev`,
     * tagged [[TypeCol]] = `delete` — a merge-on-read DELETE changes no
     * files, so its change IS the DV delta: positions this version hides
     * that the previous one did not are exactly the deleted rows (a new
@@ -171,10 +163,10 @@ object ChangeFeed {
     * sees MoR deletes (the r13 gap: syncReplica's append branch used to
     * drop them silently — permanent replica divergence for exactly the
     * GDPR-erasure commits that must propagate). */
-  private def dvDeltaImages(spark: SparkSession, tablePath: String,
-      v: Long, dvPrev: Map[String, (String, Long)],
-      dvCur: Map[String, (String, Long)]): Option[DataFrame] = {
-    val grown = dvCur.filter { case (f, m) => !dvPrev.get(f).contains(m) }
+  private def dvDeltaImages(spark: SparkSession, prev: Manifest.Snapshot,
+      cur: Manifest.Snapshot): Option[DataFrame] = {
+    val (tablePath, dvPrev) = (cur.tablePath, prev.dv)
+    val grown = cur.dv.filter { case (f, m) => !dvPrev.get(f).contains(m) }
     if (grown.isEmpty) None
     else {
       val newPos = {
@@ -194,34 +186,17 @@ object ChangeFeed {
       val hinted =
         if (delta <= Manifest.DvBroadcastLimit) broadcast(newPos)
         else newPos
-      Some(Manifest.withPos(
-          readStep(spark, tablePath, v, grown.keys.toSeq.sorted))
+      Some(Manifest.withPos(cur.scan(spark, grown.keys.toSeq.sorted))
         .join(hinted, Seq("__dv_f", "__dv_p"), "left_semi")
         .drop("__dv_f", "__dv_p")
         .withColumn(TypeCol, lit("delete")))
     }
   }
 
-  /** Read an append step's added files under the schema version `v`
-    * recorded — restricted to the columns the ADDED files can actually
-    * carry is unnecessary: the version's recorded schema already lists
-    * ancestor columns as nullable, and parquet reads absent columns as
-    * null. Falls back to footer inference for pre-schema-tracking
-    * tables. */
-  private def readStep(spark: SparkSession, tablePath: String, v: Long,
-      added: Seq[String]): DataFrame = {
-    val paths = resolve(tablePath, added)
-    Manifest.schemaOf(tablePath, v) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-  }
-
   /** Source version the newest replica commit has applied through;
     * 0 when the replica has never been synced. */
   def replicaSourceVersion(replicaPath: String): Long =
-    if (Manifest.version(replicaPath) == 0) 0L
-    else Manifest.meta(replicaPath).getOrElse("source_version", "0").toLong
+    Manifest.at(replicaPath).meta.getOrElse("source_version", "0").toLong
 
   /** Keep a DERIVED downstream table in sync with a source [[Manifest]]
     * table by applying its change feed — the production shape for
@@ -252,9 +227,7 @@ object ChangeFeed {
     var applied = 0
     // same incremental delta walk as [[changes]]: one snapshot at the
     // watermark, one small manifest read per source version
-    var running =
-      if (v0 == 0) Manifest.emptySnap
-      else Manifest.snapshot(sourcePath, v0)
+    var running = Manifest.at(sourcePath, v0)
     for (v <- (v0 + 1) to v1) {
       val d = Manifest.delta(sourcePath, v)
       val prevSnap = running
@@ -266,22 +239,17 @@ object ChangeFeed {
       if (layoutOnly) {
         // writer-flagged compaction: trust the flag — advance the
         // watermark with a zero-row append; no diff, no row data read
-        Manifest.commit(
-          transform(Manifest.read(spark, sourcePath, v)).limit(0),
+        Manifest.commit(transform(running.read(spark)).limit(0),
           replicaPath, meta = meta)
       } else if (prev.subsetOf(cur.toSet)) {
         val added = cur.filterNot(prev.contains)
-        // readStep: added files under the version's RECORDED schema, so a
-        // sync spanning an s23-style evolution commit sees the appended
+        // added files under the version's RECORDED schema, so a sync
+        // spanning an s23-style evolution commit sees the appended
         // columns (and pre-evolution ancestors as null) instead of
         // mis-inferring from footers; the replica commit then evolves its
         // own schema append-compatibly through Manifest.commit.
-        val ins =
-          if (added.isEmpty) transform(
-            Manifest.read(spark, sourcePath, v).limit(0))
-          else transform(readStep(spark, sourcePath, v, added))
-        dvDeltaImages(spark, sourcePath, v, prevSnap.dv,
-            running.dv) match {
+        val ins = transform(running.scan(spark, added))
+        dvDeltaImages(spark, prevSnap, running) match {
           case None => Manifest.commit(ins, replicaPath, meta = meta)
           case Some(images) =>
             // a merge-on-read DELETE hid rows without changing any file
@@ -298,16 +266,16 @@ object ChangeFeed {
               "deletion vectors (a merge-on-read DELETE) — applying it " +
               "to the replica needs keyCols")
             val delKeys = images.select(keyCols.map(col): _*).distinct()
-            val kept = Manifest.read(spark, replicaPath)
+            val replica = Manifest.at(replicaPath)
+            val kept = replica.read(spark)
               .join(delKeys, keyCols, "left_anti")
             Manifest.commit(
               kept.unionByName(ins, allowMissingColumns = true),
-              replicaPath, replace = true, meta = meta)
+              replicaPath, replace = true, meta = meta, base = replica)
         }
       } else {
-        val feed = snapshotDiff(
-          Manifest.read(spark, sourcePath, v - 1),
-          Manifest.read(spark, sourcePath, v), keyCols).persist()
+        val feed = snapshotDiff(prevSnap.read(spark), running.read(spark),
+          keyCols).persist()
         try {
           if (feed.isEmpty) {
             // pure compaction upstream (OPTIMIZE: same rows, new
@@ -315,8 +283,7 @@ object ChangeFeed {
             // changed, so advance the watermark with a zero-row
             // APPEND, leaving the replica's files untouched instead
             // of rewriting the whole replica.
-            Manifest.commit(
-              transform(Manifest.read(spark, sourcePath, v)).limit(0),
+            Manifest.commit(transform(running.read(spark)).limit(0),
               replicaPath, meta = meta)
           } else {
             val removed = feed
@@ -325,11 +292,12 @@ object ChangeFeed {
             val upserts = transform(feed
               .where(col(TypeCol).isin("insert", "update_postimage"))
               .drop(TypeCol))
-            val kept = Manifest.read(spark, replicaPath)
+            val replica = Manifest.at(replicaPath)
+            val kept = replica.read(spark)
               .join(removed, keyCols, "left_anti")
             Manifest.commit(
               kept.unionByName(upserts, allowMissingColumns = true),
-              replicaPath, replace = true, meta = meta)
+              replicaPath, replace = true, meta = meta, base = replica)
           }
         } finally { feed.unpersist(); () }
       }

@@ -84,36 +84,31 @@ object Layout {
   def optimizeWhere(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, column: String, lo: Double, hi: Double,
       numFiles: Int = 1): (Long, Int, Int) = {
-    val headV = Manifest.version(tablePath)
-    val all = Manifest.files(tablePath, headV)
-    val stats = Manifest.fileStats(tablePath)
+    // one resolution: targets, stats, DV'd content and conflict base
+    val snap = Manifest.at(tablePath)
+    val all = snap.files
+    val stats = snap.fileStats
     val targets = all.filter { f =>
       stats.get(f).flatMap(_.get(column)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true
       }
     }
-    if (targets.isEmpty)
-      return (Manifest.version(tablePath), 0, all.size)
-    val schema = Manifest.schemaOf(tablePath)
-      .getOrElse(Manifest.read(spark, tablePath).schema)
-    val paths = targets.map(r =>
-      java.nio.file.Paths.get(tablePath).resolve(r).toString)
+    if (targets.isEmpty) return (snap.version, 0, all.size)
     // DV-APPLIED rewrite: a targeted file's deletion vector is
     // materialized away here — the survivors are written WITHOUT the
     // hidden rows and the commit drops the removed files' mappings, so
     // maintenance is what retires the merge-on-read read-side tax
     // (still data_change=false: the hidden rows were already invisible)
     val v = Manifest.commit(
-      Manifest.applyDv(spark, tablePath, headV,
-          spark.read.schema(schema).parquet(paths: _*))
+      snap.applyDv(spark, snap.scan(spark, targets))
         .repartitionByRange(numFiles, col(column))
         .sortWithinPartitions(col(column)),
       tablePath, removeFiles = targets, statsCols = Seq(column),
       meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      // targets and rewrite content resolved at headV: a racing DV on a
+      // targets and rewrite content resolved at snap: a racing DV on a
       // target must conflict, not be silently absorbed-away stale
-      readVersion = headV)
+      base = snap)
     (v, targets.size, all.size - targets.size)
   }
 
@@ -130,19 +125,17 @@ object Layout {
     * whole-table compaction cost is ∝ the table, which is exactly why
     * the SQL verb takes a WHERE. */
   def compact(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, numFiles: Int = 1): (Long, Int, Int) = {
+      tablePath: String, numFiles: Int = 1): (Long, Int, Int) =
+    compact(spark, Manifest.at(tablePath), numFiles)
+
+  private def compact(spark: org.apache.spark.sql.SparkSession,
+      snap: Manifest.Snapshot, numFiles: Int): (Long, Int, Int) = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val headV = Manifest.version(tablePath)
-    val all = Manifest.files(tablePath, headV)
-    if (all.isEmpty) return (headV, 0, 0)
-    val schema = Manifest.schemaOf(tablePath)
-      .getOrElse(Manifest.read(spark, tablePath).schema)
-    val paths = all.map(r =>
-      java.nio.file.Paths.get(tablePath).resolve(r).toString)
-    val statsCols = Manifest.fileStats(tablePath).values
+    val all = snap.files
+    if (all.isEmpty) return (snap.version, 0, 0)
+    val statsCols = snap.fileStats.values
       .flatMap(_.keys).toSeq.distinct.sorted
-    val applied = Manifest.applyDv(spark, tablePath, headV,
-      spark.read.schema(schema).parquet(paths: _*))
+    val applied = snap.applyDv(spark, snap.scan(spark))
     // shrinking merges input splits shuffle-free (coalesce); GROWING
     // the file count — re-splitting oversized files — cannot (coalesce
     // only reduces), so it pays the one round-robin shuffle
@@ -150,9 +143,9 @@ object Layout {
       if (numFiles <= all.size) applied.coalesce(numFiles)
       else applied.repartition(numFiles)
     val v = Manifest.commit(sized,
-      tablePath, removeFiles = all, statsCols = statsCols,
+      snap.tablePath, removeFiles = all, statsCols = statsCols,
       meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      readVersion = headV)
+      base = snap)
     (v, all.size, 0)
   }
 
@@ -179,15 +172,10 @@ object Layout {
     require(cols.nonEmpty && cols.size <= 2,
       s"ZORDER BY takes one column (range clustering) or two (Morton " +
         s"interleave), got ${cols.size}")
-    val headV = Manifest.version(tablePath)
-    val all = Manifest.files(tablePath, headV)
-    if (all.isEmpty) return (headV, 0, 0)
-    val schema = Manifest.schemaOf(tablePath)
-      .getOrElse(Manifest.read(spark, tablePath).schema)
-    val paths = all.map(r =>
-      java.nio.file.Paths.get(tablePath).resolve(r).toString)
-    val applied = Manifest.applyDv(spark, tablePath, headV,
-      spark.read.schema(schema).parquet(paths: _*))
+    val snap = Manifest.at(tablePath)
+    val all = snap.files
+    if (all.isEmpty) return (snap.version, 0, 0)
+    val applied = snap.applyDv(spark, snap.scan(spark))
     val clustered = cols match {
       case Seq(a) =>
         applied.repartitionByRange(numFiles, col(a))
@@ -204,7 +192,7 @@ object Layout {
     val v = Manifest.commit(clustered, tablePath, removeFiles = all,
       statsCols = cols,
       meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      readVersion = headV)
+      base = snap)
     (v, all.size, 0)
   }
 
@@ -223,14 +211,13 @@ object Layout {
       tablePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Long, Int, Int) = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val live = Manifest.files(tablePath)
-    if (live.isEmpty) return (Manifest.version(tablePath), 0, 0)
-    val recorded = Manifest.fileBytes(tablePath)
-    val bytes = live.map(f =>
-      recorded.getOrElse(f, targetFileBytes)).sum
+    val snap = Manifest.at(tablePath)
+    if (snap.files.isEmpty) return (snap.version, 0, 0)
+    val bytes = snap.files.map(f =>
+      snap.bytes.getOrElse(f, targetFileBytes)).sum
     val n = math.max(1L,
       (bytes + targetFileBytes - 1) / targetFileBytes)
-    compact(spark, tablePath, math.min(n, Int.MaxValue.toLong).toInt)
+    compact(spark, snap, math.min(n, Int.MaxValue.toLong).toInt)
   }
 
   /** Data files per partition directory (spec/observability helper). */

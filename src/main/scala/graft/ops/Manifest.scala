@@ -179,7 +179,7 @@ object Manifest {
   private[ops] var onMetaRead: Path => Unit = _ => ()
 
   /** STRUCTURED meta prefixes must parse, or they must not publish:
-    * the [[Snap]] fold runs `toLong`/spec parsing on every resolution,
+    * the [[Snapshot]] fold runs `toLong`/spec parsing on every resolution,
     * so one commit carrying a malformed `txn.*`/`filerows.*`/
     * `filebytes.*`/`dv.*`/`filestats.*` value would brick every later
     * read of the table. Validated at the write gates ([[commit]],
@@ -188,7 +188,7 @@ object Manifest {
     meta.foreach { case (k, v) =>
       // validate by ACTUAL parse: a digit/length scan admits 19-digit
       // values above Long.MaxValue ('9999999999999999999'), which pass
-      // the gate yet make every later Snap-fold `toLong` throw — the
+      // the gate yet make every later Snapshot-fold `toLong` throw — the
       // exact bricked resolution this gate exists to prevent. Digits-only
       // additionally rejects sign forms ('+5', '-1'): txn versions share
       // the policy because lastTxn's never-wrote sentinel is -1, so a
@@ -215,7 +215,7 @@ object Manifest {
     }
 
   /** Parse one recorded `col:min:max|…` per-file stats spec — the ONE
-    * owner of the format ([[fileStats]] and [[readPruned]] both
+    * owner of the format ([[Snapshot.fileStats]] and [[readPruned]] both
     * consume it). */
   private def parseStatsSpec(spec: String)
       : Map[String, (Double, Double)] =
@@ -335,6 +335,13 @@ object Manifest {
           "reader would silently double-count as delta adds. Re-create " +
           "the table (or re-commit its content) with the current library.")
     checkFeatures(s"manifest v$v at $tablePath", meta.get(FeaturesKey))
+    if (!meta.contains(SchemaKey))
+      throw new IllegalStateException(
+        s"manifest v$v at $tablePath records no '#$SchemaKey=' line — " +
+          "every publish path writes the table schema, so this manifest " +
+          "was written by a pre-schema-tracking library version. " +
+          "Re-create the table (or re-commit its content) with the " +
+          "current library.")
     CommitDelta(v,
       added = ls.filterNot(l => l.startsWith("#") || l.startsWith("-")),
       removed = ls.filter(_.startsWith("-")).map(_.stripPrefix("-")),
@@ -344,33 +351,149 @@ object Manifest {
       meta = meta)
   }
 
-  /** A version's resolved state: live files (in commit order), the
-    * deletion-vector mappings in force, the live files' recorded
-    * per-file row counts / min-max stats / byte sizes / adding version
-    * (each written once by the file's adding commit, carried here while
-    * the file lives), and the per-appId TRANSACTION state (appId →
-    * (txnVersion, table version that recorded it) — overwrite-on-commit,
-    * surviving replace/restore like Delta's SetTransaction actions).
-    * Everything resolves from the SAME bounded checkpoint+delta read as
-    * the file list — so [[rowCount]]/[[fileStats]]/[[readPruned]]/
-    * [[fileInventory]]/[[lastTxn]]/[[dropStaged]] are all O(interval)
-    * metadata reads at any history length, and all survive vacuum
-    * through the checkpoints (in particular: a txn stamp or a WAP
-    * publish marker can never be silently lost to retention). */
-  private[graft] case class Snap(files: Vector[String],
+  /** TABLE STATE AS A VALUE — version `version` of `tablePath`,
+    * resolved once ([[at]]) and passed down: the Delta/Iceberg snapshot
+    * handle. A statement or a drain batch resolves ONE snapshot and
+    * every part of it (candidate files, stats, DV application, the
+    * commit's conflict base) reads this value, so no part can see a
+    * different head than another.
+    *
+    * Carries the version's own manifest meta (`versionMeta`, the
+    * `#key=value` lines — [[schema]], [[constraints]], user [[meta]]
+    * and [[commitTime]] derive from it) and the resolved state: live
+    * files (in commit order), the deletion-vector mappings in force,
+    * the live files' recorded per-file row counts / min-max stats /
+    * byte sizes / adding version (each written once by the file's
+    * adding commit, carried here while the file lives), and the
+    * per-appId TRANSACTION state (appId → (txnVersion, table version
+    * that recorded it) — overwrite-on-commit, surviving replace/restore
+    * like Delta's SetTransaction actions). Everything resolves from the
+    * SAME bounded checkpoint+delta read as the file list, so every
+    * derived answer is O(interval) metadata reads at any history
+    * length, and all survive vacuum through the checkpoints (a txn
+    * stamp or a WAP publish marker can never be silently lost to
+    * retention).
+    *
+    * A snapshot lives for one statement or one drain batch. It is
+    * NEVER cached or keyed on (path, version): a dropped and re-created
+    * table repeats version numbers with new content, and a held-over
+    * value would serve deleted files. Version 0 is the empty state of a
+    * table with no commit yet (no files, empty schema). */
+  final case class Snapshot(tablePath: String, version: Long,
+      versionMeta: Map[String, String],
+      files: Vector[String],
       dv: Map[String, (String, Long)],
       rows: Map[String, Long] = Map.empty,
       stats: Map[String, String] = Map.empty,
       bytes: Map[String, Long] = Map.empty,
       addedIn: Map[String, Long] = Map.empty,
-      txns: Map[String, (Long, Long)] = Map.empty)
+      txns: Map[String, (Long, Long)] = Map.empty) {
 
-  private[graft] val emptySnap = Snap(Vector.empty, Map.empty)
+    /** The recorded table schema ([[SchemaKey]]) — every publish path
+      * writes one and [[delta]] refuses a manifest without it. */
+    lazy val schema: StructType = versionMeta.get(SchemaKey)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new StructType())
+
+    /** CHECK constraints in force, by name. */
+    def constraints: Map[String, String] = versionMeta.collect {
+      case (k, expr) if k.startsWith(ConstraintPrefix) =>
+        k.stripPrefix(ConstraintPrefix) -> expr
+    }
+
+    /** Commit metadata recorded with the version: the `#key=value`
+      * manifest lines minus reserved internal keys ([[SchemaKey]] →
+      * [[schema]]; `constraint.*` → [[constraints]]; `txn.*` →
+      * [[lastTxn]]). Published atomically WITH the version — a reader
+      * can never observe the version without its metadata (the
+      * property [[Materialize.refresh]]'s source watermark rides on). */
+    def meta: Map[String, String] = versionMeta.filterNot { case (k, _) =>
+      Seq(ConstraintPrefix, TxnPrefix, FileStatsPrefix, FileRowsPrefix,
+        FileBytesPrefix, DvPrefix).exists(k.startsWith) ||
+        Set(SchemaKey, OpTypeKey, CommitTsKey, ReplaceKey, LogFormatKey,
+          FeaturesKey, MaxTsKey).contains(k)
+    }
+
+    /** Publish time, epoch millis: the recorded [[CommitTsKey]] stamp,
+      * or the manifest file's mtime for pre-stamp manifests. */
+    def commitTime: Long = stampOf(tablePath, version, versionMeta)
+
+    /** Exact LOGICAL row count from COMMIT METADATA alone — the
+      * metadata-only `SELECT count(*)` every table format serves: the
+      * [[FileRowsPrefix]] counts of the live files, each recorded by the
+      * version that added the file, MINUS the positions hidden by the
+      * deletion vectors (each `dv.*` line carries its position count,
+      * so a merge-on-read DELETE keeps this exact with zero extra I/O —
+      * the count always equals what [[read]] returns). None if any live
+      * file predates row-count recording (the caller falls back to a
+      * data read) and at version 0. */
+    def rowCount: Option[Long] =
+      if (version > 0 && rows.keySet == files.toSet)
+        Some(rows.values.sum - dv.values.map(_._2).sum)
+      else None
+
+    /** Per-file inventory — the `graft.<t>.files` metadata-table
+      * surface (Iceberg's `.files` convention): (relpath, version that
+      * added the file, recorded row count if the adding commit recorded
+      * one, positions hidden by the file's deletion vector). Exact even
+      * after vacuum (attribution survives through the checkpoints; a
+      * replace/restore attributes its re-listed files to itself, since
+      * it is their full state). Zero data or footer I/O. */
+    def fileInventory: Seq[(String, Long, Option[Long], Long)] =
+      files.map(f => (f, addedIn(f), rows.get(f),
+        dv.get(f).map(_._2).getOrElse(0L)))
+
+    /** Per-file numeric (min, max) stats: relpath → col → (min, max)
+      * as doubles. Recorded bounds are WIDENED by one ulp per side
+      * ([[commit]]), so they are conservative even for BIGINT values
+      * above 2^53 whose double image rounds — a file can never be
+      * falsely pruned by cast rounding. Files committed without stats
+      * are absent — readers must treat them as unprunable. */
+    def fileStats: Map[String, Map[String, (Double, Double)]] =
+      stats.map { case (f, spec) => f -> parseStatsSpec(spec) }
+
+    /** The RAW parquet scan of `rels` (table-relative; every live file
+      * by default) under the recorded schema — no footer inference, no
+      * deletion vectors applied ([[applyDv]] does that). An empty
+      * `rels` is an empty frame of the schema. */
+    def scan(spark: SparkSession, rels: Seq[String] = files): DataFrame =
+      spark.read.schema(schema).parquet(
+        rels.map(r => Paths.get(tablePath).resolve(r).toString): _*)
+
+    /** Hide every position this version's deletion vectors delete from
+      * `df`, a direct [[scan]] of this version's files ([[dvJoin]]).
+      * `keepPos` keeps the `__dv_f`/`__dv_p` helper columns ([[withPos]]
+      * — the `(file, position)` of every surviving row) for callers
+      * that still need them, and adds them even when the version has
+      * no DVs; without it a DV-less version returns `df` unchanged. */
+    def applyDv(spark: SparkSession, df: DataFrame,
+        keepPos: Boolean = false): DataFrame =
+      if (keepPos) dvJoin(spark, tablePath, dv, withPos(df))
+      else if (dv.isEmpty) df
+      else dvJoin(spark, tablePath, dv, withPos(df))
+        .drop("__dv_f", "__dv_p")
+
+    /** Read the table as of this version. The file list is pinned — later
+      * commits cannot change what this frame reads. The RECORDED schema
+      * drives the scan (no footer merge): files predating an appended
+      * column read it as null, and time travel sees exactly the schema
+      * the version published. Merge-on-read: deletion vectors apply
+      * inside the scan (no-op — the plain scan — without them). */
+    def read(spark: SparkSession): DataFrame = {
+      require(version > 0, s"no committed version at $tablePath")
+      applyDv(spark, scan(spark))
+    }
+  }
+
+  /** The state of `tablePath` before its first commit. */
+  private def emptySnapshot(tablePath: String): Snapshot =
+    Snapshot(tablePath, 0L, Map.empty, Vector.empty, Map.empty)
 
   /** Apply one commit's delta actions to the predecessor state. */
-  private[graft] def applySnapDelta(s: Snap, d: CommitDelta): Snap = {
+  private[graft] def applySnapDelta(s: Snapshot,
+      d: CommitDelta): Snapshot = {
     val base =
-      if (d.replace) emptySnap.copy(txns = s.txns)
+      if (d.replace) emptySnapshot(s.tablePath).copy(txns = s.txns)
       else if (d.removed.isEmpty) s
       else {
         val rm = d.removed.toSet
@@ -381,7 +504,8 @@ object Manifest {
     def tagged(prefix: String): Map[String, String] = d.meta.collect {
       case (k, value) if k.startsWith(prefix) =>
         k.stripPrefix(prefix) -> value }
-    Snap(base.files ++ d.added, base.dv ++ d.dvSet,
+    Snapshot(s.tablePath, d.version, d.meta,
+      base.files ++ d.added, base.dv ++ d.dvSet,
       base.rows ++ tagged(FileRowsPrefix).map { case (f, n) =>
         f -> n.toLong },
       base.stats ++ tagged(FileStatsPrefix),
@@ -392,7 +516,7 @@ object Manifest {
         app -> (n.toLong, d.version) })
   }
 
-  /** Checkpoint format marker. v2 checkpoints carry the FULL [[Snap]]
+  /** Checkpoint format marker. v2 checkpoints carry the FULL [[Snapshot]]
     * (txn state, adding versions, byte sizes); a v1 checkpoint lacks
     * them, so resolving from it would silently forget txn stamps —
     * refuse loudly instead (same posture as [[delta]]'s log marker). */
@@ -400,7 +524,7 @@ object Manifest {
   private val TxnStatePrefix = "txnstate."
   private val AddedInPrefix = "addedin."
 
-  private def readCkpt(tablePath: String, v: Long): Snap = {
+  private def readCkpt(tablePath: String, v: Long): Snapshot = {
     onMetaRead(ckptFile(tablePath, v))
     val ls = Files.readAllLines(ckptFile(tablePath, v)).toArray
       .map(_.toString).toSeq.filter(_.nonEmpty)
@@ -417,7 +541,10 @@ object Manifest {
       ls.filter(_.startsWith(s"#$prefix"))
         .map(_.stripPrefix(s"#$prefix").split("=", 2))
         .collect { case Array(f, value) => f -> value }.toMap
-    Snap(ls.filterNot(_.startsWith("#")).toVector,
+    // the version's own meta is its manifest's: [[snapshot]] reads it
+    // when the resolution starts AND ends at this checkpoint
+    Snapshot(tablePath, v, Map.empty,
+      ls.filterNot(_.startsWith("#")).toVector,
       tagged(DvPrefix).map { case (f, value) => f -> parseDv(value) },
       tagged(FileRowsPrefix).map { case (f, n) => f -> n.toLong },
       tagged(FileStatsPrefix),
@@ -440,12 +567,12 @@ object Manifest {
     * wins. Loud when `v` itself was vacuumed; names the broken link
     * when an INTERMEDIATE manifest is gone without a covering
     * checkpoint. */
-  private[graft] def snapshot(tablePath: String, v: Long): Snap = {
+  private def snapshot(tablePath: String, v: Long): Snapshot = {
     require(v > 0 && Files.exists(manifestFile(tablePath, v)),
       s"version $v is not committed at $tablePath")
     var w = v
     var acc = List.empty[CommitDelta]
-    var base: Snap = null
+    var base: Snapshot = null
     while (base == null) {
       if (Files.exists(ckptFile(tablePath, w))) base = readCkpt(tablePath, w)
       else if (!Files.exists(manifestFile(tablePath, w)))
@@ -460,10 +587,22 @@ object Manifest {
         // below it: txn stamps survive replace/restore walls (the Delta
         // SetTransaction contract), so resolution must reach the nearest
         // checkpoint (or v1) to carry them — still <= interval reads
-        if (w == 1) base = emptySnap else w -= 1
+        if (w == 1) base = emptySnapshot(tablePath) else w -= 1
       }
     }
-    acc.foldLeft(base)(applySnapDelta)
+    if (acc.isEmpty) base.copy(versionMeta = delta(tablePath, v).meta)
+    else acc.foldLeft(base)(applySnapDelta)
+  }
+
+  /** THE resolution verb: version `v` of `tablePath` (the head when
+    * omitted) as a [[Snapshot]] value — one head read plus one bounded
+    * checkpoint+delta fold ([[snapshot]]). Version 0 (a table with no
+    * commit yet) is the empty snapshot; a version that was never
+    * committed or was vacuumed refuses loudly. Callers resolve once per
+    * statement or drain batch and pass the value down. */
+  def at(tablePath: String, v: Long = -1L): Snapshot = {
+    val vv = if (v >= 0) v else version(tablePath)
+    if (vv == 0L) emptySnapshot(tablePath) else snapshot(tablePath, vv)
   }
 
   /** Write the resolved-state checkpoint for `v` (idempotent; racing
@@ -504,41 +643,14 @@ object Manifest {
   private def maybeCheckpoint(tablePath: String, v: Long): Unit =
     if (v % CheckpointInterval == 0) writeCheckpoint(tablePath, v)
 
-  private def listed(tablePath: String, v: Long): Seq[String] =
-    snapshot(tablePath, v).files
-
-  /** Table-relative parquet paths that ARE version `v` (newest version
-    * when omitted) — the file-level diff surface incremental readers
-    * ([[Materialize.filesAdded]]) build on. */
-  def files(tablePath: String, v: Long = -1L): Seq[String] =
-    listed(tablePath, if (v >= 0) v else version(tablePath))
-
+  /** Version `v`'s raw `#key=value` meta — ONE manifest read, for the
+    * probes that need a single stamp, not the resolved state
+    * ([[txnState]], [[versionAsOf]]). */
   private def rawMeta(tablePath: String, v: Long): Map[String, String] =
-    lines(tablePath, if (v >= 0) v else version(tablePath))
+    lines(tablePath, v)
       .filter(_.startsWith("#"))
       .map(_.stripPrefix("#").split("=", 2))
       .collect { case Array(k, value) => k -> value }.toMap
-
-  /** Commit metadata recorded with version `v` (newest when omitted):
-    * the `#key=value` manifest lines, minus reserved internal keys
-    * ([[SchemaKey]] → [[schemaOf]]; `constraint.*` → [[constraintsOf]];
-    * `txn.*` → [[lastTxn]]). Published atomically WITH the version — a
-    * reader can never observe the version without its metadata (the
-    * property [[Materialize.refresh]]'s source watermark rides on). */
-  def meta(tablePath: String, v: Long = -1L): Map[String, String] =
-    (rawMeta(tablePath, v) - SchemaKey)
-      .filterNot(_._1.startsWith(ConstraintPrefix))
-      .filterNot(_._1.startsWith(TxnPrefix))
-      .filterNot(_._1.startsWith(FileStatsPrefix))
-      .filterNot(_._1.startsWith(FileRowsPrefix))
-      .filterNot(_._1.startsWith(FileBytesPrefix))
-      .filterNot(_._1.startsWith(DvPrefix))
-      .filterNot(_._1 == OpTypeKey)
-      .filterNot(_._1 == CommitTsKey)
-      .filterNot(_._1 == ReplaceKey)
-      .filterNot(_._1 == LogFormatKey)
-      .filterNot(_._1 == FeaturesKey)
-      .filterNot(_._1 == MaxTsKey)
 
   /** Prefix of metadata keys recording per-file column min/max — the
     * Iceberg/Delta data-skipping stats, in the LOG where a reader finds
@@ -567,73 +679,6 @@ object Manifest {
     * back to the stat. */
   val FileBytesPrefix = "filebytes."
 
-  /** Exact LOGICAL row count of version `v` (newest when omitted) from
-    * COMMIT METADATA alone — the metadata-only `SELECT count(*)` every
-    * table format serves: sum the [[FileRowsPrefix]] counts of the live
-    * files, each recorded by the version that added the file, MINUS the
-    * positions hidden by the version's deletion vectors (each `dv.*`
-    * line carries its position count, so a merge-on-read DELETE keeps
-    * this exact with zero extra I/O — the count always equals what
-    * [[read]] at `v` returns). None if any live file predates row-count
-    * recording (the caller falls back to a data read); zero data or
-    * footer I/O otherwise. Resolution is the SAME bounded
-    * checkpoint+delta read as the file list (counts ride the [[Snap]]
-    * fold and the checkpoints), so the answer survives vacuum and
-    * never walks the whole history. */
-  def rowCount(tablePath: String, v: Long = -1L): Option[Long] = {
-    val upTo = if (v >= 0) v else version(tablePath)
-    if (upTo <= 0) return None
-    val snap = snapshot(tablePath, upTo)
-    if (snap.rows.keySet == snap.files.toSet)
-      Some(snap.rows.values.sum - snap.dv.values.map(_._2).sum)
-    else None
-  }
-
-  /** Per-file inventory of version `v` (newest when omitted) — the
-    * `graft.<t>.files` metadata-table surface (Iceberg's `.files`
-    * convention): (relpath, version that added the file, recorded row
-    * count if the adding commit recorded one, positions hidden by the
-    * version's deletion vector for the file). Adding versions ride the
-    * [[Snap]] fold, so this is the SAME bounded checkpoint+delta read
-    * as the file list — O(interval) metadata I/O at any history
-    * length, exact even after vacuum (attribution survives through the
-    * checkpoints; a replace/restore attributes its re-listed files to
-    * itself, since it is their full state). Zero data or footer I/O. */
-  def fileInventory(tablePath: String, v: Long = -1L)
-      : Seq[(String, Long, Option[Long], Long)] = {
-    val upTo = if (v >= 0) v else version(tablePath)
-    val snap = snapshot(tablePath, upTo)
-    snap.files.map(f => (f, snap.addedIn(f), snap.rows.get(f),
-      snap.dv.get(f).map(_._2).getOrElse(0L)))
-  }
-
-  /** Recorded per-file byte sizes of version `v`'s live files (newest
-    * when omitted): relpath → bytes, absent for files committed by
-    * pre-recording writers. Bounded checkpoint+delta resolution, like
-    * [[rowCount]]. */
-  def fileBytes(tablePath: String,
-      v: Long = -1L): Map[String, Long] = {
-    val upTo = if (v >= 0) v else version(tablePath)
-    if (upTo <= 0) Map.empty else snapshot(tablePath, upTo).bytes
-  }
-
-  /** Per-file numeric (min, max) stats for the files of version `v`
-    * (newest when omitted): relpath → col → (min, max) as doubles.
-    * Recorded bounds are WIDENED by one ulp per side
-    * ([[commit]]), so they are conservative even for BIGINT values
-    * above 2^53 whose double image rounds — a file can never be
-    * falsely pruned by cast rounding. Files committed without stats
-    * are simply absent — readers must treat them as unprunable.
-    * Bounded checkpoint+delta resolution, like [[rowCount]]. */
-  def fileStats(tablePath: String,
-      v: Long = -1L): Map[String, Map[String, (Double, Double)]] = {
-    val upTo = if (v >= 0) v else version(tablePath)
-    if (upTo <= 0) return Map.empty
-    snapshot(tablePath, upTo).stats.map { case (f, spec) =>
-      f -> parseStatsSpec(spec)
-    }
-  }
-
   /** MIN/MAX FILE SKIPPING — read only the files whose recorded
     * [min, max] for `column` intersects [`lo`, `hi`]; files without
     * stats are conservatively kept. Returns (frame over the kept files,
@@ -643,34 +688,22 @@ object Manifest {
     * ingest), a selective predicate plans in O(files) driver work and
     * reads O(matching files) bytes. Callers apply the EXACT predicate
     * on the returned frame (stats only bound, never filter rows).
-    * Recorded bounds are ulp-widened (see [[fileStats]]) so cast
+    * Recorded bounds are ulp-widened (see [[Snapshot.fileStats]]) so cast
     * rounding can never skip a matching file; `lo`/`hi` live in double
     * space, so for BIGINT probes above 2^53 pass bounds that are
     * conservative under double rounding (e.g. widen the same way). */
   def readPruned(spark: SparkSession, tablePath: String, column: String,
       lo: Double, hi: Double): (DataFrame, Int, Int) = {
-    val v = version(tablePath)
     // one resolution serves the file list, the stats AND the DV state
-    val snap = snapshot(tablePath, v)
-    val all = snap.files
-    val kept = all.filter { f =>
+    val snap = at(tablePath)
+    val kept = snap.files.filter { f =>
       snap.stats.get(f).flatMap(parseStatsSpec(_).get(column)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // no stats recorded: cannot prune
       }
     }
-    val schema = schemaOf(tablePath, v)
-    val paths = kept.map(r => Paths.get(tablePath).resolve(r).toString)
-    val df =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.getOrElse(read(spark, tablePath, v).schema))
-      else applyDvResolved(spark, tablePath, snap.dv, schema match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      })
-    (df, kept.size, all.size - kept.size)
+    (snap.applyDv(spark, snap.scan(spark, kept)), kept.size,
+      snap.files.size - kept.size)
   }
 
   /** Reserved metadata key recording the commit's wall-clock publish
@@ -684,14 +717,13 @@ object Manifest {
     * manifest file's mtime. */
   val CommitTsKey = "committs"
 
-  /** Publish time of version `v` (newest when omitted), epoch millis:
+  /** Publish time of version `v` with raw meta `meta`, epoch millis:
     * the recorded [[CommitTsKey]] stamp, or the manifest file's mtime
-    * for pre-stamp manifests. Driver-side metadata. */
-  def commitTime(tablePath: String, v: Long = -1L): Long = {
-    val vv = if (v >= 0) v else version(tablePath)
-    rawMeta(tablePath, vv).get(CommitTsKey).map(_.toLong).getOrElse(
-      Files.getLastModifiedTime(manifestFile(tablePath, vv)).toMillis)
-  }
+    * for pre-stamp manifests. */
+  private def stampOf(tablePath: String, v: Long,
+      meta: Map[String, String]): Long =
+    meta.get(CommitTsKey).map(_.toLong).getOrElse(
+      Files.getLastModifiedTime(manifestFile(tablePath, v)).toMillis)
 
   /** Reserved metadata key recording the RUNNING MAX of commit times
     * (`#maxts=<millis>`, = max(own [[CommitTsKey]], predecessor's
@@ -706,12 +738,12 @@ object Manifest {
     * recorded running max). A base without one (pre-recording writer)
     * degrades to max(now, base's own commit time) — still monotone
     * over the recorded suffix. */
-  private def maxTsMeta(tablePath: String, base: Long,
+  private def maxTsMeta(base: Snapshot,
       nowMillis: Long): Map[String, String] = {
     val prev =
-      if (base <= 0) Long.MinValue
-      else rawMeta(tablePath, base).get(MaxTsKey).map(_.toLong)
-        .getOrElse(commitTime(tablePath, base))
+      if (base.version <= 0) Long.MinValue
+      else base.versionMeta.get(MaxTsKey).map(_.toLong)
+        .getOrElse(base.commitTime)
     Map(MaxTsKey -> math.max(nowMillis, prev).toString)
   }
 
@@ -726,7 +758,7 @@ object Manifest {
   private def adjustedTimeAt(tablePath: String, v: Long): Long =
     rawMeta(tablePath, v).get(MaxTsKey).map(_.toLong).getOrElse(
       (1L to v).filter(w => Files.exists(manifestFile(tablePath, w)))
-        .map(commitTime(tablePath, _)).max)
+        .map(w => stampOf(tablePath, w, rawMeta(tablePath, w))).max)
 
   /** TIMESTAMP AS OF resolution: the newest version whose
     * monotonically-ADJUSTED commit time is <= `tsMillis` (each
@@ -939,6 +971,23 @@ object Manifest {
     Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
   }
 
+  /** The schema a staged manifest recorded — [[stageCommit]] always
+    * writes one; a stage without it refuses. */
+  private def stagedSchema(tablePath: String, id: String,
+      staged: Seq[String]): StructType =
+    staged.find(_.startsWith(s"#$SchemaKey="))
+      .map(l => DataType.fromJson(l.substring(SchemaKey.length + 2))
+        .asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"staged WAP id '$id' at $tablePath records no schema"))
+
+  /** The schema publishing a batch recorded as `batch` onto `head`
+    * yields: the head schema evolved append-compatibly by the batch's
+    * (the batch's own on an empty table). */
+  private def publishedSchema(head: Snapshot, batch: StructType)
+      : StructType =
+    if (head.version == 0) batch else evolve(head.schema, batch)
+
   /** The AUDIT view: the table as it WOULD read after publishing `id` —
     * the current head's live rows (deletion vectors applied) plus the
     * staged files, under the head schema evolved by the staged one.
@@ -947,23 +996,11 @@ object Manifest {
   def readStaged(spark: SparkSession, tablePath: String,
       id: String): DataFrame = {
     val staged = stagedLines(tablePath, id)
-    val stagedFiles = staged.filterNot(_.startsWith("#"))
-      .map(rel => Paths.get(tablePath).resolve(rel).toString)
-    val stagedSchema = staged.find(_.startsWith(s"#$SchemaKey="))
-      .map(l => DataType.fromJson(l.substring(SchemaKey.length + 2))
-        .asInstanceOf[StructType])
-    val headV = version(tablePath)
-    if (headV == 0)
-      return spark.read.schema(stagedSchema.get)
-        .parquet(stagedFiles: _*)
-    val headFiles = listed(tablePath, headV)
-      .map(rel => Paths.get(tablePath).resolve(rel).toString)
-    val schema = (schemaOf(tablePath, headV), stagedSchema) match {
-      case (Some(h), Some(st)) => evolve(h, st)
-      case (h, st) => h.orElse(st).get
-    }
-    applyDv(spark, tablePath, headV,
-      spark.read.schema(schema).parquet(headFiles ++ stagedFiles: _*))
+    val head = at(tablePath)
+    head.applyDv(spark, spark.read
+      .schema(publishedSchema(head, stagedSchema(tablePath, id, staged)))
+      .parquet((head.files ++ staged.filterNot(_.startsWith("#")))
+        .map(rel => Paths.get(tablePath).resolve(rel).toString): _*))
   }
 
   /** PUBLISH staged `id` as the next version — metadata-only: no data
@@ -1002,28 +1039,21 @@ object Manifest {
     val stagedMeta = staged.filter(_.startsWith("#"))
       .map(_.stripPrefix("#").split("=", 2))
       .collect { case Array(k, value) => k -> value }.toMap
-    val stagedSchema = stagedMeta.get(SchemaKey)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    var base = version(tablePath)
+    val batchSchema = stagedSchema(tablePath, id, staged)
+    var head = at(tablePath)
     // validate the head's constraints over ONLY the staged files; the
     // retry loop re-validates if the head's constraint set changes
     var validatedAgainst: Option[Map[String, String]] = None
     var attempts = 0
     while (true) {
-      val constraints =
-        if (base == 0) Map.empty[String, String]
-        else constraintsOf(tablePath, base)
+      val constraints = head.constraints
       if (!validatedAgainst.contains(constraints) &&
           constraints.nonEmpty && freshKept.nonEmpty) {
         import org.apache.spark.sql.functions.{expr, lit, sum, when}
         val paths = freshKept.map(rel =>
           Paths.get(tablePath).resolve(rel).toString)
-        val reader = stagedSchema match {
-          case Some(s) => spark.read.schema(s)
-          case None => spark.read
-        }
         val cNames = constraints.keys.toSeq.sorted
-        val viols = reader.parquet(paths: _*).agg(
+        val viols = spark.read.schema(batchSchema).parquet(paths: _*).agg(
           sum(when(!expr(constraints(cNames.head)), lit(1L))
             .otherwise(lit(0L))).as("c0"),
           cNames.tail.zipWithIndex.map { case (n, i) =>
@@ -1041,22 +1071,17 @@ object Manifest {
             " — nothing was published (the stage is intact)")
       }
       validatedAgainst = Some(constraints)
-      val schema = (if (base == 0) None else schemaOf(tablePath, base),
-          stagedSchema) match {
-        case (Some(h), Some(st)) => evolve(h, st)
-        case (h, st) => h.orElse(st).getOrElse(
-          throw new IllegalStateException("no schema to publish"))
-      }
+      val schema = publishedSchema(head, batchSchema)
       val constraintMeta = constraints
         .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-      val next = base + 1
+      val next = head.version + 1
       // delta manifest: the staged files publish as this version's adds;
       // the head's file list and DV state are inherited by resolution —
       // the publish is metadata-only AND O(staged), never O(table)
       val now = System.currentTimeMillis
       val lines =
         ((stagedMeta - SchemaKey) ++ constraintMeta ++ formatMeta ++
-          maxTsMeta(tablePath, base, now) +
+          maxTsMeta(head, now) +
           (txnKey -> "0") +
           (SchemaKey -> schema.json) +
           (CommitTsKey -> now.toString))
@@ -1090,7 +1115,7 @@ object Manifest {
             s"WAP publish of '$id' at $tablePath: still losing the " +
               s"publish race after $attempts rebases — giving up " +
               "(the stage is intact)")
-          base = version(tablePath)
+          head = at(tablePath)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -1217,18 +1242,15 @@ object Manifest {
     Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
   }
 
-  /** The branch's resolved (schema, constraint set, all added files,
+  /** The branch's resolved (base snapshot, schema, all added files,
     * merged structured meta): base state folded through the branch
     * commits in order. Constraints are the BASE's — frozen at fork
     * (constraint changes refuse on branches). */
   private def branchState(tablePath: String, name: String)
-      : (Long, StructType, Map[String, String], Seq[String],
-        Map[String, String]) = {
-    val base = branchBase(tablePath, name)
+      : (Snapshot, StructType, Seq[String], Map[String, String]) = {
+    val base = at(tablePath, branchBase(tablePath, name))
     val cs = branchCommits(tablePath, name)
-    var schema = schemaOf(tablePath, base).getOrElse(
-      throw new IllegalStateException(
-        s"base version $base of $tablePath records no schema"))
+    var schema = base.schema
     val files = Seq.newBuilder[String]
     var meta = Map.empty[String, String]
     cs.foreach { c =>
@@ -1241,7 +1263,7 @@ object Manifest {
       files ++= lines.filterNot(_.startsWith("#"))
       meta ++= (m - SchemaKey - CommitTsKey)
     }
-    (base, schema, constraintsOf(tablePath, base), files.result(), meta)
+    (base, schema, files.result(), meta)
   }
 
   /** Commit `df` onto branch `name` — the append-shaped branch commit:
@@ -1309,7 +1331,8 @@ object Manifest {
     meta.values.foreach(v => require(!v.contains("\n"),
       s"meta value may not span lines: '$v'"))
     validateStructuredMeta(meta)
-    val (_, headSchema, constraints, _, _) = branchState(tablePath, name)
+    val (base, headSchema, _, _) = branchState(tablePath, name)
+    val constraints = base.constraints
     // append-compatible evolution gate BEFORE writing (loud on type
     // changes; new columns ride)
     val evolved = evolve(headSchema, df.schema)
@@ -1396,12 +1419,10 @@ object Manifest {
     * to main readers (the isolation contract both directions). */
   def readBranch(spark: SparkSession, tablePath: String,
       name: String): DataFrame = {
-    val (base, schema, _, branchFiles, _) = branchState(tablePath, name)
-    val baseFiles = listed(tablePath, base)
-    val paths = (baseFiles ++ branchFiles)
+    val (base, schema, branchFiles, _) = branchState(tablePath, name)
+    val paths = (base.files ++ branchFiles)
       .map(rel => Paths.get(tablePath).resolve(rel).toString)
-    applyDv(spark, tablePath, base,
-      spark.read.schema(schema).parquet(paths: _*))
+    base.applyDv(spark, spark.read.schema(schema).parquet(paths: _*))
   }
 
   /** Publish branch `name` back onto the main chain as ONE
@@ -1430,23 +1451,22 @@ object Manifest {
         return v
       case None => ()
     }
-    val (base, schema, constraints, branchFiles, meta) =
-      branchState(tablePath, name)
+    val (base, schema, branchFiles, meta) = branchState(tablePath, name)
     val head = version(tablePath)
-    if (head != base)
+    if (head != base.version)
       throw new IllegalStateException(
         s"cannot fast-forward branch '$name' at $tablePath: main is at " +
-          s"version $head but the branch forked at $base — the chains " +
-          "have diverged. Re-branch from the head and replay the " +
+          s"version $head but the branch forked at ${base.version} — " +
+          "the chains have diverged. Re-branch from the head and replay the " +
           "branch's commits (append-shaped work is re-commitable), or " +
           "drop the branch")
-    val next = base + 1
+    val next = base.version + 1
     val now = System.currentTimeMillis
-    val constraintMeta = constraints
+    val constraintMeta = base.constraints
       .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
     val lines =
       (meta ++ constraintMeta ++ formatMeta ++
-        maxTsMeta(tablePath, base, now) +
+        maxTsMeta(base, now) +
         (s"$TxnPrefix$txnApp" -> "0") +
         (SchemaKey -> schema.json) +
         (CommitTsKey -> now.toString))
@@ -1537,7 +1557,7 @@ object Manifest {
     * Resolution is BOUNDED at any history length: the head manifest's
     * own stamp answers directly when present (the steady streaming
     * writer, whose stamp is on every commit — one read), else the
-    * checkpoint+delta [[Snap]] fold (≤ [[CheckpointInterval]]+1 reads;
+    * checkpoint+delta [[Snapshot]] fold (≤ [[CheckpointInterval]]+1 reads;
     * txn state rides the checkpoints, so a stamp survives vacuum and
     * replace/restore — the Delta SetTransaction contract). */
   private[graft] def txnState(tablePath: String,
@@ -1571,11 +1591,13 @@ object Manifest {
       statsCols: Seq[String] = Seq.empty): Option[Long] = {
     require(appId.nonEmpty && !appId.contains("=") && !appId.contains("\n"),
       s"invalid txn appId '$appId'")
-    if (lastTxn(tablePath, appId) >= txnVersion) None
+    // one resolution serves the txn probe and the commit's base
+    val head = at(tablePath)
+    if (head.txns.get(appId).exists(_._1 >= txnVersion)) None
     else
       try Some(commit(df, tablePath, replace,
         meta + (s"$TxnPrefix$appId" -> txnVersion.toString),
-        statsCols = statsCols))
+        statsCols = statsCols, base = head))
       catch {
         // lost the publish race to a concurrent writer that landed this
         // very transaction (the commit retry loop's txn conflict
@@ -1622,18 +1644,6 @@ object Manifest {
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
     StructType(Seq(StructField("file", StringType),
       StructField("pos", LongType)))
-  }
-
-  /** Deletion vectors in force at version `v` (newest when omitted):
-    * fileRel → (dvDirRel, deleted position count). Resolved from the
-    * delta log (checkpoint + bounded chain): a delete commit records
-    * only the mappings it SET; removed files drop theirs, replaces drop
-    * everything. */
-  def deletionVectors(tablePath: String,
-      v: Long = -1L): Map[String, (String, Long)] = {
-    val vv = if (v >= 0) v else version(tablePath)
-    if (vv <= 0) Map.empty
-    else snapshot(tablePath, vv).dv
   }
 
   /** The table-relative path of the file a scanned row came from, as a
@@ -1720,14 +1730,6 @@ object Manifest {
     out
   }
 
-  /** Hide the positions the DVs in force at `v` delete from a
-    * [[withPos]]-prepared frame ([[dvJoin]]), keeping the
-    * `__dv_f`/`__dv_p` helper columns for callers that still need them
-    * (drop them when done). No-op without DVs. */
-  private[ops] def antiDv(spark: SparkSession, tablePath: String,
-      v: Long, dfWithPos: DataFrame): DataFrame =
-    dvJoin(spark, tablePath, deletionVectors(tablePath, v), dfWithPos)
-
   /** The ONE owner of DV application over a [[withPos]]-prepared frame,
     * helper columns kept. Up to `limit` total positions (default
     * [[DvBroadcastLimit]]) it is a filter INSIDE the scan's stage: the
@@ -1756,25 +1758,6 @@ object Manifest {
     }
   }
 
-  /** DV-applied view of `base` (a direct scan of version `v`'s files):
-    * hides every deleted position, no-op when the version has no DVs. */
-  private[ops] def applyDv(spark: SparkSession, tablePath: String,
-      v: Long, base: DataFrame): DataFrame =
-    applyDvResolved(spark, tablePath, deletionVectors(tablePath, v), base)
-
-  /** [[applyDv]] with the DV mappings ALREADY RESOLVED — the scoped
-    * snapshot-reuse seam: a composite caller that has a version's
-    * [[Snap]] in hand passes its `dv` map through instead of paying a
-    * second checkpoint+delta resolution of the same version
-    * (content-identity-safe, unlike a (path, version) cache: the map
-    * came from the caller's own just-resolved state). */
-  private[ops] def applyDvResolved(spark: SparkSession,
-      tablePath: String, dvs: Map[String, (String, Long)],
-      base: DataFrame): DataFrame =
-    if (dvs.isEmpty) base
-    else dvJoin(spark, tablePath, dvs, withPos(base))
-      .drop("__dv_f", "__dv_p")
-
   /** Reserved metadata key holding the table schema at a version, as
     * single-line Spark JSON. The schema lives in the LOG, not in file
     * footers — the Delta/Iceberg contract: a read never lists or opens
@@ -1782,13 +1765,6 @@ object Manifest {
     * driver-side footer fetches), and schema EVOLUTION is a metadata
     * event, checked and published atomically with the commit. */
   val SchemaKey = "schema"
-
-  /** Schema recorded with version `v` (newest when omitted); None for
-    * tables written before schema tracking (read falls back to footer
-    * inference). */
-  def schemaOf(tablePath: String, v: Long = -1L): Option[StructType] =
-    rawMeta(tablePath, v).get(SchemaKey)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The widening-promotion lattice the parquet readers serve natively
     * (Spark 4's widening type promotions: an INT32 file column reads
@@ -1859,15 +1835,6 @@ object Manifest {
     * (`#constraint.<name>=<sql-expr>`) gates EVERY later commit. */
   val ConstraintPrefix = "constraint."
 
-  /** Constraints in force at version `v` (newest when omitted), by
-    * name. */
-  def constraintsOf(tablePath: String,
-      v: Long = -1L): Map[String, String] =
-    rawMeta(tablePath, v).collect {
-      case (k, expr) if k.startsWith(ConstraintPrefix) =>
-        k.stripPrefix(ConstraintPrefix) -> expr
-    }
-
   /** Record a CHECK constraint as a METADATA-ONLY commit (zero-row
     * append): every subsequent commit validates its rows against the
     * expression and ABORTS — nothing written, no version published — if
@@ -1880,13 +1847,14 @@ object Manifest {
       expression: String): Long = {
     require(name.nonEmpty && !name.contains("=") && !name.contains("\n"),
       s"invalid constraint name '$name'")
-    val existing = read(spark, tablePath)
+    val head = at(tablePath)
+    val existing = head.read(spark)
     val bad = existing
       .filter(!org.apache.spark.sql.functions.expr(expression)).count()
     require(bad == 0L, s"cannot add constraint '$name': $bad existing " +
       s"rows violate ($expression)")
     commit(existing.limit(0), tablePath,
-      meta = Map(s"$ConstraintPrefix$name" -> expression))
+      meta = Map(s"$ConstraintPrefix$name" -> expression), base = head)
   }
 
   /** Remove a constraint via a metadata-only commit. Later commits stop
@@ -1894,10 +1862,11 @@ object Manifest {
     * it gated. */
   def dropConstraint(spark: SparkSession, tablePath: String,
       name: String): Long = {
-    require(constraintsOf(tablePath).contains(name),
+    val head = at(tablePath)
+    require(head.constraints.contains(name),
       s"no constraint '$name' at $tablePath")
-    commit(read(spark, tablePath).limit(0), tablePath,
-      excludeConstraint = Some(name))
+    commit(head.read(spark).limit(0), tablePath,
+      excludeConstraint = Some(name), base = head)
   }
 
   /** Batch commit stats (per-file row counts + min/max bounds) read from
@@ -2034,16 +2003,19 @@ object Manifest {
     * replace and constraint-changing commits abort loudly on any
     * conflict. Callers that RESOLVE work against a snapshot before
     * committing (matched files, DV positions, rewrite content) pass
-    * that snapshot as `readVersion` so commits landing between their
-    * resolve and this call are conflict-checked too — the Delta
-    * transaction read-version. Returns the committed version number. */
+    * that snapshot as `base` so commits landing between their resolve
+    * and this call are conflict-checked too — the Delta transaction
+    * read-version; the base's files, constraints, schema and anchor
+    * DVs come from the value, not from a fresh resolution. Without a
+    * `base` (null) the commit resolves the head once itself. Returns
+    * the committed version number. */
   def commit(df: DataFrame, tablePath: String,
       replace: Boolean = false,
       meta: Map[String, String] = Map.empty,
       excludeConstraint: Option[String] = None,
       removeFiles: Seq[String] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
-      readVersion: Long = -1L,
+      base: Snapshot = null,
       allowTypeWidening: Boolean = false,
       inheritConstraints: Boolean = true): Long = {
     // `inheritConstraints = false` is the SQL REPLACE TABLE semantic —
@@ -2071,31 +2043,28 @@ object Manifest {
     validateStructuredMeta(meta)
     require(removeFiles.isEmpty || !replace,
       "removeFiles is meaningless with replace (replace drops everything)")
-    // `readVersion` is the Delta transaction read-version: the version
-    // the CALLER resolved its work against (matched files, DV
-    // positions, rewrite content). Without it, a conflicting commit
-    // landing between the caller's resolve and this entry would be
-    // invisible to the retry loop's anchor checks (the loop compares
-    // against the version IT saw first) — a compaction in that window
-    // could silently strand a racing DV delete's positions on a dead
-    // file. With it, `base` starts at the CURRENT head and the very
-    // first iteration runs the full conflict/rebase analysis against
-    // the caller's true baseline.
-    val prev0 =
-      if (readVersion < 0) version(tablePath)
-      else {
-        require(readVersion == 0 ||
-          Files.exists(manifestFile(tablePath, readVersion)),
-          s"readVersion $readVersion is not committed at $tablePath")
-        readVersion
-      }
+    // `base` is the Delta transaction read-version: the snapshot the
+    // CALLER resolved its work against (matched files, DV positions,
+    // rewrite content). Without it, a conflicting commit landing
+    // between the caller's resolve and this entry would be invisible
+    // to the retry loop's anchor checks (the loop compares against the
+    // version IT saw first) — a compaction in that window could
+    // silently strand a racing DV delete's positions on a dead file.
+    // With it, the loop starts at the CURRENT head and the very first
+    // iteration runs the full conflict/rebase analysis against the
+    // caller's true baseline.
+    require(base == null || base.tablePath == tablePath,
+      s"base snapshot of ${base.tablePath} passed to a commit of " +
+        tablePath)
+    val snap0 = if (base == null) at(tablePath) else base
+    val prev0 = snap0.version
     // the COPY-ON-WRITE commit shape (Delta remove/add actions): the new
     // manifest carries the previous file list MINUS `removeFiles` plus
     // this commit's files — the surgical rewrite MERGE/DELETE publish.
     // Every removed path must be live at the previous version; old
     // versions keep reading the removed files (never deleted here).
     if (removeFiles.nonEmpty) {
-      val live = listed(tablePath, prev0).toSet
+      val live = snap0.files.toSet
       val dead = removeFiles.filterNot(live.contains)
       require(dead.isEmpty,
         s"removeFiles not in version $prev0: ${dead.mkString(", ")}")
@@ -2104,8 +2073,8 @@ object Manifest {
     // [[dropConstraint]] carve-out; none at all for a fresh-slate SQL
     // REPLACE) plus any recorded by this commit
     val inherited0 =
-      if (prev0 == 0 || !inheritConstraints) Map.empty[String, String]
-      else constraintsOf(tablePath, prev0) -- excludeConstraint.toSeq
+      if (!inheritConstraints) Map.empty[String, String]
+      else snap0.constraints -- excludeConstraint.toSeq
     val passed = meta.collect {
       case (k, ex) if k.startsWith(ConstraintPrefix) =>
         k.stripPrefix(ConstraintPrefix) -> ex
@@ -2144,7 +2113,7 @@ object Manifest {
       .map(p => Paths.get(tablePath).relativize(Paths.get(p)).toString)
     // ONE bounded executor-side aggregate over the written batch serves
     // the whole commit: per-file row counts always (the audit stats
-    // [[history]]/[[rowCount]] answer from without touching data),
+    // [[history]]/[[Snapshot.rowCount]] answer from without touching data),
     // per-file min/max for `statsCols` (the Iceberg/Delta data-skipping
     // contract [[readPruned]] consumes), AND the CHECK-constraint
     // violation counts — fused into a single job so a constraint-gated
@@ -2279,28 +2248,30 @@ object Manifest {
     val rebasable = !replace && passed.isEmpty && excludeConstraint.isEmpty
     val anchorFiles = meta.keys.filter(_.startsWith(DvPrefix))
       .map(_.stripPrefix(DvPrefix)).toSet ++ removeFiles
-    val anchorDvAtPrev0: Map[String, (String, Long)] =
-      if (prev0 == 0 || anchorFiles.isEmpty) Map.empty
-      else snapshot(tablePath, prev0).dv
-        .filter { case (f, _) => anchorFiles.contains(f) }
-    var base = math.max(prev0, version(tablePath))
+    val anchorDvAtPrev0 =
+      snap0.dv.filter { case (f, _) => anchorFiles.contains(f) }
+    var head = math.max(prev0, version(tablePath))
     var attempts = 0
     while (true) {
-      if (base != prev0) {
+      // ONE resolution of the attempt's base serves the whole attempt:
+      // conflict checks, schema evolution, inherited constraints and the
+      // running-max stamp all derive from it (none when the caller's
+      // base is still the head)
+      val baseSnap = if (head == prev0) snap0 else at(tablePath, head)
+      if (head != prev0) {
         if (!rebasable) {
           rmTree(batchDir)
           throw new IllegalStateException(
             s"concurrent commit detected at $tablePath: version " +
-              s"${base} was published by another writer after this " +
+              s"$head was published by another writer after this " +
               "commit resolved its base, and a " +
               "replace/constraint commit cannot rebase — " +
               "retry on the new head")
         }
         if (anchorFiles.nonEmpty) {
-          val headSnap = snapshot(tablePath, base)
-          val headFiles = headSnap.files.toSet
+          val headFiles = baseSnap.files.toSet
           val gone = anchorFiles.filterNot(headFiles.contains)
-          val anchorDvAtHead = headSnap.dv
+          val anchorDvAtHead = baseSnap.dv
             .filter { case (f, _) => anchorFiles.contains(f) }
           if (gone.nonEmpty || anchorDvAtHead != anchorDvAtPrev0) {
             rmTree(batchDir)
@@ -2313,7 +2284,7 @@ object Manifest {
                 "the new head")
           }
         }
-        if (constraintsOf(tablePath, base) != inherited0) {
+        if (baseSnap.constraints != inherited0) {
           rmTree(batchDir)
           throw new IllegalStateException(
             s"concurrent commit detected at $tablePath: the table's " +
@@ -2333,35 +2304,23 @@ object Manifest {
         // and surrender the replay instead.
         meta.foreach { case (k, v) =>
           if (k.startsWith(TxnPrefix) &&
-              lastTxn(tablePath, k.stripPrefix(TxnPrefix)) >= v.toLong) {
+              baseSnap.txns.get(k.stripPrefix(TxnPrefix))
+                .exists(_._1 >= v.toLong)) {
             rmTree(batchDir)
             throw new TxnAlreadyApplied(tablePath,
               k.stripPrefix(TxnPrefix), v.toLong)
           }
         }
       }
-      // ONE read of the base's manifest serves the whole attempt:
-      // schema evolution, inherited constraints, and the running-max
-      // stamp all derive from it (on an object store each separate
-      // read is a round trip — the commit path pays exactly one)
-      val baseMeta =
-        if (base == 0) Map.empty[String, String]
-        else rawMeta(tablePath, base)
       val schema =
-        if (replace || base == 0) df.schema
-        else baseMeta.get(SchemaKey)
-          .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-          .map(evolve(_, df.schema, widen = allowTypeWidening))
-          .getOrElse(df.schema)
+        if (replace || head == 0) df.schema
+        else evolve(baseSnap.schema, df.schema, widen = allowTypeWidening)
       val inherited =
-        if (base == 0 || !inheritConstraints) Map.empty[String, String]
-        else baseMeta.collect {
-          case (k, ex) if k.startsWith(ConstraintPrefix) =>
-            k.stripPrefix(ConstraintPrefix) -> ex
-        } -- excludeConstraint.toSeq
+        if (!inheritConstraints) Map.empty[String, String]
+        else baseSnap.constraints -- excludeConstraint.toSeq
       val constraintMeta = (inherited ++ passed)
         .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-      val next = base + 1
+      val next = head + 1
       val opMeta =
         if (removeFiles.nonEmpty) Map(OpTypeKey -> "rewrite")
         else Map.empty[String, String]
@@ -2374,15 +2333,10 @@ object Manifest {
         if (replace) Map(ReplaceKey -> "true")
         else Map.empty[String, String]
       val now = System.currentTimeMillis
-      val prevMax =
-        if (base == 0) Long.MinValue
-        else baseMeta.get(MaxTsKey).map(_.toLong)
-          .orElse(baseMeta.get(CommitTsKey).map(_.toLong))
-          .getOrElse(commitTime(tablePath, base))
       val lines =
         (meta ++ constraintMeta ++ opMeta ++ replaceMeta ++
-          rowsMetaKept ++ statsMeta ++ bytesMetaKept ++ formatMeta +
-          (MaxTsKey -> math.max(now, prevMax).toString) +
+          rowsMetaKept ++ statsMeta ++ bytesMetaKept ++ formatMeta ++
+          maxTsMeta(baseSnap, now) +
           (SchemaKey -> schema.json) +
           (CommitTsKey -> now.toString))
           .toSeq.sorted
@@ -2412,7 +2366,7 @@ object Manifest {
               s"concurrent commit detected at $tablePath: still losing " +
                 s"the publish race after $attempts rebases — giving up")
           }
-          base = version(tablePath)
+          head = version(tablePath)
         case _: UnsupportedOperationException =>
           // Filesystem without hard links: POSIX rename is atomic but
           // NON-exclusive — it would silently replace a manifest a
@@ -2457,9 +2411,9 @@ object Manifest {
     * the whole table state, so it can never rebase). */
   def restore(tablePath: String, toVersion: Long,
       meta: Map[String, String] = Map.empty): Long = {
-    val head = version(tablePath)
-    require(toVersion >= 1 && toVersion <= head,
-      s"cannot restore $tablePath to $toVersion (head is $head)")
+    val head = at(tablePath)
+    require(toVersion >= 1 && toVersion <= head.version,
+      s"cannot restore $tablePath to $toVersion (head is ${head.version})")
     require(!meta.contains(SchemaKey), s"'$SchemaKey' is reserved")
     require(!meta.contains(CommitTsKey), s"'$CommitTsKey' is reserved")
     require(!meta.contains(ReplaceKey), s"'$ReplaceKey' is reserved")
@@ -2470,11 +2424,10 @@ object Manifest {
       s"invalid meta key '$k'"))
     meta.values.foreach(v => require(!v.contains("\n"),
       s"meta value may not span lines: '$v'"))
-    val snap = snapshot(tablePath, toVersion) // throws if vacuumed
+    val snap = at(tablePath, toVersion) // throws if vacuumed
     val restoredMeta =
-      rawMeta(tablePath, toVersion).get(SchemaKey)
-        .map(SchemaKey -> _).toMap ++
-      constraintsOf(tablePath, toVersion)
+      Map(SchemaKey -> snap.versionMeta(SchemaKey)) ++
+      snap.constraints
         .map { case (n, e) => s"$ConstraintPrefix$n" -> e } ++
       // the target's RESOLVED DV state returns with its files (a DV
       // added after the target must NOT survive the rollback; one the
@@ -2489,10 +2442,10 @@ object Manifest {
         s"$FileBytesPrefix$f" -> n.toString } ++
       formatMeta +
       (ReplaceKey -> "true")
-    val next = head + 1
+    val next = head.version + 1
     val now = System.currentTimeMillis
     val lines =
-      (meta ++ restoredMeta ++ maxTsMeta(tablePath, head, now) +
+      (meta ++ restoredMeta ++ maxTsMeta(head, now) +
         ("restore.of" -> toVersion.toString) +
         (CommitTsKey -> now.toString))
         .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ snap.files
@@ -2710,14 +2663,16 @@ object Manifest {
   /** DESCRIBE HISTORY — one row per committed version, answered from
     * COMMIT METADATA ALONE on stats-bearing tables: every commit records
     * its fresh files' row counts as [[FileRowsPrefix]] manifest lines,
-    * so the per-version row deltas are a driver-side metadata walk with
-    * ZERO data or footer I/O (the production-format contract — at 100 TB
-    * an audit query must not read the table; ManifestSpec proves history
-    * still answers with the data directory renamed away). Files written
-    * by PRE-STATS writers fall back to one read of exactly the uncovered
-    * files, under their adding version's recorded schema. Removed-row
-    * counts reuse the adding version's counts — a removed file was
-    * added earlier. */
+    * and the counts of every live file ride the [[Snapshot]] fold and
+    * the checkpoints, so the per-version row deltas are a driver-side
+    * metadata walk with ZERO data or footer I/O — also after vacuum
+    * dropped the adding manifests (the production-format contract — at
+    * 100 TB an audit query must not read the table; ManifestSpec proves
+    * history still answers with the data directory renamed away). Files
+    * with no recorded count anywhere (PRE-STATS writers) fall back to
+    * one read of exactly those files, under the version's recorded
+    * schema. Removed-row counts reuse the adding version's counts — a
+    * removed file was added earlier. */
   def history(spark: SparkSession, tablePath: String): Seq[CommitInfo] = {
     val vs = committedVersions(tablePath)
     val fileRows = scala.collection.mutable.Map.empty[String, Long]
@@ -2727,11 +2682,12 @@ object Manifest {
     // paired with their PREDECESSOR IN THE SURVIVING CHAIN (a vacuumed
     // table has gaps; the oldest retained version reads as the append
     // that created its whole file set — its carried files' counts come
-    // from the fallback read, since their adding manifests are gone);
-    // a step after a gap re-resolves from its checkpoint.
-    var running: Snap = emptySnap
+    // from its checkpoint); a step after a gap re-resolves from its
+    // checkpoint. Each version's meta is read once, with its delta.
+    val empty = emptySnapshot(tablePath)
+    var running = empty
     vs.zip(None +: vs.init.map(Some(_))).map { case (v, prevV) =>
-      val prevSnap = if (prevV.isEmpty) emptySnap else running
+      val prevSnap = if (prevV.isEmpty) empty else running
       val prev: Set[String] = prevSnap.files.toSet
       val curSnap =
         if (prevV.contains(v - 1)) applySnapDelta(running, delta(tablePath, v))
@@ -2740,22 +2696,12 @@ object Manifest {
       val cur = curSnap.files
       val added = cur.filterNot(prev.contains)
       val removed = prev -- cur
-      // commit-stats first: the version's own #filerows. lines
-      rawMeta(tablePath, v).foreach { case (k, n) =>
-        if (k.startsWith(FileRowsPrefix))
-          fileRows.getOrElseUpdate(k.stripPrefix(FileRowsPrefix),
-            n.toLong)
-      }
+      // recorded counts first: every live file's, from the fold
+      curSnap.rows.foreach { case (f, n) => fileRows.getOrElseUpdate(f, n) }
       val uncovered = added.filterNot(fileRows.contains)
       if (uncovered.nonEmpty) {
-        val paths = uncovered.map(r =>
-          Paths.get(tablePath).resolve(r).toString)
-        val reader = schemaOf(tablePath, v) match {
-          case Some(s) => spark.read.schema(s)
-          case None => spark.read
-        }
         import org.apache.spark.sql.functions.{col, count, lit}
-        reader.parquet(paths: _*)
+        curSnap.scan(spark, uncovered)
           .groupBy(col("_metadata.file_path").as("__f"))
           .agg(count(lit(1)).as("__n"))
           .collect().foreach { r =>
@@ -2771,7 +2717,8 @@ object Manifest {
         // then emits no group — record it explicitly
         uncovered.foreach(f => fileRows.getOrElseUpdate(f, 0L))
       }
-      val changeType = rawMeta(tablePath, v).getOrElse(OpTypeKey,
+      val meta = curSnap.versionMeta
+      val changeType = meta.getOrElse(OpTypeKey,
         if (removed.isEmpty) "append"
         else if (cur.forall(!prev.contains(_))) "replace"
         else "rewrite")
@@ -2785,34 +2732,15 @@ object Manifest {
       CommitInfo(v, changeType, added.size.toLong, removed.size.toLong,
         added.map(fileRows.getOrElse(_, 0L)).sum,
         removed.toSeq.map(fileRows.getOrElse(_, 0L)).sum + dvGrowth,
-        rawMeta(tablePath, v).get(ChangeFeed.DataChangeKey)
-          .forall(_ != "false"),
-        commitTime(tablePath, v))
+        meta.get(ChangeFeed.DataChangeKey).forall(_ != "false"),
+        curSnap.commitTime)
     }
   }
 
-  /** Read the table at `asOf` (default: the newest version). The resolved
-    * file list is pinned at call time — later commits cannot change what
-    * this frame reads. The version's RECORDED schema drives the scan (no
-    * footer merge): files predating an appended column read it as null,
-    * and time travel sees exactly the schema that version published.
-    * Tables without recorded schemas fall back to footer inference. */
+  /** Read the table at `asOf` (default: the newest version) — the
+    * public read verb, `at(tablePath, asOf).read(spark)`
+    * ([[Snapshot.read]]). */
   def read(spark: SparkSession, tablePath: String,
-      asOf: Long = -1L): DataFrame = {
-    val v = if (asOf >= 0) asOf else version(tablePath)
-    require(v > 0, s"no committed version at $tablePath")
-    // ONE snapshot resolution serves both the file list and the DV
-    // mappings (composite operators issue many reads of one version —
-    // the resolution is bounded, but it needn't be paid twice per read)
-    val snap = snapshot(tablePath, v)
-    val files = snap.files
-      .map(rel => Paths.get(tablePath).resolve(rel).toString)
-    val base = schemaOf(tablePath, v) match {
-      case Some(s) => spark.read.schema(s).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
-    // merge-on-read: hide positions deleted by the version's deletion
-    // vectors (no-op — same plan as before — when the version has none)
-    applyDvResolved(spark, tablePath, snap.dv, base)
-  }
+      asOf: Long = -1L): DataFrame =
+    at(tablePath, asOf).read(spark)
 }

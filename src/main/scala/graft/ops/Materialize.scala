@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Incremental MATERIALIZED-AGGREGATE maintenance over [[Manifest]]
@@ -32,8 +30,10 @@ object Materialize {
   /** Source version the newest committed aggregate version has folded
     * through; 0 when the aggregate has never been materialized. */
   def sourceVersion(aggPath: String): Long =
-    if (Manifest.version(aggPath) == 0) 0L
-    else Manifest.meta(aggPath).getOrElse("source_version", "0").toLong
+    watermark(Manifest.at(aggPath))
+
+  private def watermark(agg: Manifest.Snapshot): Long =
+    agg.meta.getOrElse("source_version", "0").toLong
 
   /** Table-relative parquet paths added to `sourcePath` after version
     * `v0` (exclusive) up to `v1` (inclusive), under an APPEND lineage.
@@ -47,19 +47,24 @@ object Materialize {
     * silent-divergence failure a GDPR erasure must not have) —
     * subtracting partials is not possible under the merge law, so the
     * caller must recompute. */
-  def filesAdded(sourcePath: String, v0: Long, v1: Long): Seq[String] = {
+  def filesAdded(sourcePath: String, v0: Long, v1: Long): Seq[String] =
+    added(Manifest.at(sourcePath, v0), Manifest.at(sourcePath, v1))
+
+  /** [[filesAdded]] between two resolved snapshots of one table. */
+  private def added(s0: Manifest.Snapshot,
+      s1: Manifest.Snapshot): Seq[String] = {
+    val (sourcePath, v0, v1, after) =
+      (s1.tablePath, s0.version, s1.version, s1.files)
     require(v0 <= v1, s"watermark v$v0 is ahead of source v$v1")
-    val after = Manifest.files(sourcePath, v1)
     if (v0 == 0) after
     else {
-      val before = Manifest.files(sourcePath, v0)
+      val before = s0.files
       val afterSet = after.toSet
       require(before.forall(afterSet.contains),
         s"append lineage severed between v$v0 and v$v1 at $sourcePath " +
           "(a replace commit rewrote files) — incremental refresh would " +
           "double-count; recompute the aggregate from scratch")
-      require(Manifest.deletionVectors(sourcePath, v0) ==
-          Manifest.deletionVectors(sourcePath, v1),
+      require(s0.dv == s1.dv,
         s"deletion vectors changed between v$v0 and v$v1 at " +
           s"$sourcePath (a merge-on-read DELETE hid rows already " +
           "folded into the aggregate) — incremental refresh cannot " +
@@ -79,26 +84,27 @@ object Materialize {
   def refresh(spark: SparkSession, sourcePath: String, aggPath: String,
       partial: DataFrame => DataFrame,
       merge: DataFrame => DataFrame): (Long, Int) = {
-    val v0 = sourceVersion(aggPath)
-    val v1 = Manifest.version(sourcePath)
+    // one resolution per table (plus the watermark version's state)
+    val agg = Manifest.at(aggPath)
+    val v0 = watermark(agg)
+    val src = Manifest.at(sourcePath)
+    val v1 = src.version
     require(v1 > 0, s"no committed version at $sourcePath")
-    if (v1 == v0) return (Manifest.version(aggPath), 0)
-    val delta = filesAdded(sourcePath, v0, v1)
+    if (v1 == v0) return (agg.version, 0)
+    val delta = added(Manifest.at(sourcePath, v0), src)
     // the from-scratch fold (v0 == 0) reads the WHOLE snapshot, so it
     // must be the DV-applied view — a source carrying deletion vectors
     // would otherwise fold erased rows into the fresh aggregate. The
     // incremental path needs no DV handling: filesAdded proved the DV
     // state unchanged, so added files provably carry no DV.
     val deltaRows =
-      if (v0 == 0) Manifest.read(spark, sourcePath, v1)
-      else spark.read.parquet(delta.map(rel =>
-        Paths.get(sourcePath).resolve(rel).toString): _*)
+      if (v0 == 0) src.read(spark) else src.scan(spark, delta)
     val deltaPartial = partial(deltaRows)
     val folded =
-      if (Manifest.version(aggPath) == 0) merge(deltaPartial)
-      else merge(Manifest.read(spark, aggPath).unionByName(deltaPartial))
+      if (agg.version == 0) merge(deltaPartial)
+      else merge(agg.read(spark).unionByName(deltaPartial))
     val v = Manifest.commit(folded, aggPath, replace = true,
-      meta = Map("source_version" -> v1.toString))
+      meta = Map("source_version" -> v1.toString), base = agg)
     (v, delta.size)
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Row-level MERGE / DELETE on [[Manifest]] tables as COPY-ON-WRITE file
@@ -74,38 +74,38 @@ object Merge {
       meta: Map[String, String] = Map.empty,
       broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): CowStats = {
     require(keyCols.nonEmpty, "merge needs key columns")
+    // ONE resolution serves the whole statement: candidate files, their
+    // stats, the DV'd scans and the commit's conflict base
+    val snap = Manifest.at(tablePath)
+    // the rewrite commit records key-column stats for ITS fresh files,
+    // so rewritten files stay prunable by later merges (a non-numeric
+    // key column yields all-null bounds and is dropped)
+    val statsCols = keyCols.filterNot(c => c.contains(":") || c.contains("|"))
     // MERGE into a not-yet-existing table creates it (the CREATE OR
     // MERGE shape streaming sinks need for their first micro-batch)
-    if (Manifest.version(tablePath) == 0L) {
+    if (snap.version == 0L) {
       val v = Manifest.commit(source, tablePath, meta = meta,
-        statsCols = keyCols.filterNot(c =>
-          c.contains(":") || c.contains("|")))
+        statsCols = statsCols, base = snap)
       // the creating commit recorded its files' row counts — the source
       // row count is their sum, pure metadata (no second source pass)
       return CowStats(v, 0, 0, 0, 0,
-        sourceRows = Manifest.rowCount(tablePath, v).getOrElse(-1L))
+        sourceRows = Manifest.at(tablePath, v).rowCount.getOrElse(-1L))
     }
     // SNAPSHOT the source before anything reads it: the guard below, the
     // key set, and the rewrite union must all see the SAME rows, or a
     // non-deterministic / concurrently-changing source could pass the
     // duplicate-key check (and the stats bounds) yet merge different
     // rows — the same read-twice race [[Manifest.commit]] closes by
-    // validating the written batch. localCheckpoint materializes ONE
+    // validating the written batch. The checkpoint ([[Checkpoints]]:
+    // local, or reliable under its configured dir) materializes ONE
     // eager evaluation (bounded: a MERGE source is a CDC batch, not the
     // table) and every later reference replays the stored partitions.
-    val src = source.localCheckpoint()
+    val src = Checkpoints.checkpoint(source)
     // ONE bounded aggregate over the source keys serves all three
     // guards: per-key row counts roll up to (distinct keys, max rows
     // per key, per-key-column min/max) — the duplicate-key precondition
     // check, the broadcast gate, and the file-skipping bounds below.
-    // Bounds only for NUMERIC key columns: under ANSI mode (the Spark 4
-    // default) a string key's double cast would THROW, not null out —
-    // non-numeric keys just don't prune, like the recorded file stats.
-    val numKeyCols = keyCols.filter(c => src.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val boundAggs = numKeyCols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"__mn_$c"),
-      max(col(c)).cast("double").as(s"__mx_$c")))
+    val (boundAggs, boundsOf) = keyBounds(src, keyCols)
     val guard = src.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .agg(count(lit(1)).as("__k"),
@@ -116,53 +116,62 @@ object Merge {
       s"MERGE source has duplicate keys on (${keyCols.mkString(", ")}): " +
         s"up to $maxPerKey source rows share one key; a MERGE source " +
         "must carry at most one row per key")
-    // Source key bounds (ulp-widened, like the recorded file stats) —
-    // a file whose recorded range is disjoint from the source's on ANY
-    // key column cannot contain a matched key, so the touch-detection
-    // scan skips it from pure manifest metadata.
-    val srcBounds: Map[String, (Double, Double)] =
-      numKeyCols.zipWithIndex.flatMap { case (c, i) =>
-        (Option(guard.get(2 + 2 * i)), Option(guard.get(3 + 2 * i))) match {
-          case (Some(mn), Some(mx))
-              if !mn.asInstanceOf[Double].isNaN &&
-                !mx.asInstanceOf[Double].isNaN =>
-            Some(c -> (Math.nextDown(mn.asInstanceOf[Double]),
-              Math.nextUp(mx.asInstanceOf[Double])))
-          case _ => None
-        }
-      }.toMap
+    // Source key bounds — a file whose recorded range is disjoint from
+    // the source's on ANY key column cannot contain a matched key, so
+    // the touch-detection scan skips it from pure manifest metadata.
+    val srcBounds = boundsOf(guard, 2)
     // the guard proved at most one source row per key (nulls included),
     // so the key projection is already distinct
     val srcKeys = src.select(keyCols.map(col): _*)
     val keys =
       if (keyCount <= broadcastKeyLimit) broadcast(srcKeys) else srcKeys
-    cowRewrite(spark, tablePath,
-      touches = snap => snap.join(keys, keyCols, "left_semi"),
+    cowRewrite(spark, snap,
+      touches = _.join(keys, keyCols, "left_semi"),
       rewrite = touched =>
         touched.join(keys, keyCols, "left_anti")
           .unionByName(src),
-      meta, candidates = Some(candidateFiles(tablePath, srcBounds)),
-      // the rewrite commit records key-column stats for ITS fresh
-      // files, so rewritten files stay prunable by later merges (a
-      // non-numeric key column yields all-null bounds and is dropped)
-      statsCols = keyCols.filterNot(c =>
-        c.contains(":") || c.contains("|")))
+      meta, candidates = Some(candidateFiles(snap, srcBounds)),
+      statsCols = statsCols)
       // duplicate-key guard passed ⇒ every key has exactly one source
       // row, so the guard's distinct-key count IS the source row count
       .copy(sourceRows = keyCount)
   }
 
-  /** Files of the current version whose recorded
-    * [[Manifest.FileStatsPrefix]] bounds could intersect `bounds` on
-    * every bounded column — the candidate set a COW touch scan must
-    * read. Files without stats (or without stats for a bounded column)
-    * are conservatively kept; pure driver-side metadata. */
-  private def candidateFiles(tablePath: String,
+  /** Min/max aggregates of the NUMERIC `keyCols` of `df`, for the
+    * caller to fuse into its one aggregate job, and the reader of their
+    * values from the result row (starting at index `from`): key bounds
+    * ulp-widened like the recorded file stats, absent for an all-null
+    * or NaN column. Under ANSI mode (the Spark 4 default) a string key's
+    * double cast would THROW, not null out — non-numeric keys (a
+    * string/UUID user id, the common GDPR key shape) just don't prune,
+    * exactly like the recorded file stats, which exist only for numeric
+    * columns. */
+  private def keyBounds(df: DataFrame, keyCols: Seq[String])
+      : (Seq[Column], (Row, Int) => Map[String, (Double, Double)]) = {
+    val num = keyCols.filter(c => df.schema(c).dataType
+      .isInstanceOf[org.apache.spark.sql.types.NumericType])
+    (num.flatMap(c => Seq(min(col(c)).cast("double").as(s"__mn_$c"),
+       max(col(c)).cast("double").as(s"__mx_$c"))),
+     (r, from) => num.zipWithIndex.flatMap { case (c, i) =>
+       val (mnI, mxI) = (from + 2 * i, from + 2 * i + 1)
+       if (r.isNullAt(mnI) || r.isNullAt(mxI) ||
+           r.getDouble(mnI).isNaN || r.getDouble(mxI).isNaN) None
+       else Some(c -> (Math.nextDown(r.getDouble(mnI)),
+         Math.nextUp(r.getDouble(mxI))))
+     }.toMap)
+  }
+
+  /** Files of `snap` whose recorded [[Manifest.FileStatsPrefix]]
+    * bounds could intersect `bounds` on every bounded column — the
+    * candidate set a touch scan must read. Files without stats (or
+    * without stats for a bounded column) are conservatively kept; pure
+    * driver-side metadata. */
+  private def candidateFiles(snap: Manifest.Snapshot,
       bounds: Map[String, (Double, Double)]): Seq[String] = {
-    val all = Manifest.files(tablePath)
+    val all = snap.files
     if (bounds.isEmpty) all
     else {
-      val stats = Manifest.fileStats(tablePath)
+      val stats = snap.fileStats
       all.filter { f =>
         stats.get(f).forall(colStats => bounds.forall { case (c, (lo, hi)) =>
           colStats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
@@ -200,15 +209,17 @@ object Merge {
     * EXACT predicate still decides every row, the range only bounds. */
   def deleteWhere(spark: SparkSession, tablePath: String, pred: Column,
       meta: Map[String, String] = Map.empty,
-      pruneRange: Option[(String, Double, Double)] = None): CowStats =
-    cowRewrite(spark, tablePath,
-      touches = snap => snap.filter(pred),
+      pruneRange: Option[(String, Double, Double)] = None): CowStats = {
+    val snap = Manifest.at(tablePath)
+    cowRewrite(spark, snap,
+      touches = _.filter(pred),
       rewrite = touched => touched.filter(!pred),
       meta, skipWhenUntouched = true,
-      candidates = Some(candidateFiles(tablePath,
+      candidates = Some(candidateFiles(snap,
         pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap)),
       // survivors keep their range column's stats prunable
       statsCols = pruneRange.map(_._1).toSeq)
+  }
 
   /** Accounting of one merge-on-read DELETE: no data file is read-
     * modified-written — the commit publishes ONLY deletion vectors.
@@ -218,6 +229,10 @@ object Merge {
     * paths). */
   case class DvStats(version: Long, filesBefore: Int, filesWithDv: Int,
       positionsAdded: Long, filesCandidates: Int)
+
+  /** The stats of a merge-on-read statement that publishes nothing. */
+  private def noop(snap: Manifest.Snapshot): DvStats =
+    DvStats(snap.version, snap.files.size, snap.dv.size, 0L, 0)
 
   /** DELETE FROM ... WHERE `pred` as MERGE-ON-READ (the Delta deletion-
     * vector / Iceberg v2 position-delete shape): instead of rewriting
@@ -239,7 +254,7 @@ object Merge {
   def deleteWhereDv(spark: SparkSession, tablePath: String, pred: Column,
       meta: Map[String, String] = Map.empty,
       pruneRange: Option[(String, Double, Double)] = None): DvStats =
-    deleteDv(spark, tablePath, _.filter(pred), meta,
+    deleteDv(spark, Manifest.at(tablePath), _.filter(pred), meta,
       pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap)
 
   /** Keyed MERGE-ON-READ DELETE — the literal GDPR erasure shape:
@@ -276,41 +291,19 @@ object Merge {
       meta: Map[String, String] = Map.empty,
       broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DvStats = {
     require(keyCols.nonEmpty, "at least one key column")
-    // Key bounds only for NUMERIC key types: under ANSI mode (the
-    // Spark 4 default) a string/UUID user id — the common GDPR key
-    // shape — would make the double cast THROW instead of yielding
-    // null, failing the whole erasure; a non-numeric key simply does
-    // not prune (bounds-less but correct), exactly like the recorded
-    // file stats, which exist only for numeric columns.
-    val numCols = keyCols.filter(c => keys.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val boundAggs = numCols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"__mn_$c"),
-      max(col(c)).cast("double").as(s"__mx_$c")))
+    val snap = Manifest.at(tablePath)
+    val (boundAggs, boundsOf) = keyBounds(keys, keyCols)
     val g = keys.agg(
       count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)
         .as("__k"),
       boundAggs: _*).head()
-    val bounds: Map[String, (Double, Double)] =
-      if (g.getLong(0) == 0L) Map.empty
-      else numCols.zipWithIndex.flatMap { case (c, i) =>
-        val (mnI, mxI) = (1 + 2 * i, 2 + 2 * i)
-        if (g.isNullAt(mnI) || g.isNullAt(mxI) ||
-            g.getDouble(mnI).isNaN || g.getDouble(mxI).isNaN) None
-        else Some(c -> (Math.nextDown(g.getDouble(mnI)),
-          Math.nextUp(g.getDouble(mxI))))
-      }.toMap
-    if (g.getLong(0) == 0L) {
-      val headV = Manifest.version(tablePath)
-      return DvStats(headV, Manifest.files(tablePath).size,
-        Manifest.deletionVectors(tablePath, headV).size, 0L, 0)
-    }
+    if (g.getLong(0) == 0L) return noop(snap)
     val keySet = keys.select(keyCols.map(col): _*).distinct()
     val hinted =
       if (g.getLong(0) <= broadcastKeyLimit) broadcast(keySet)
       else keySet
-    deleteDv(spark, tablePath,
-      _.join(hinted, keyCols, "left_semi"), meta, bounds)
+    deleteDv(spark, snap,
+      _.join(hinted, keyCols, "left_semi"), meta, boundsOf(g, 1))
   }
 
   /** A SOURCE column as seen inside [[mergeMatchedDv]]'s set/condition
@@ -330,7 +323,7 @@ object Merge {
     * predicate. `sets` values and `cond` are expressions over the
     * MATCHED frame: target columns by name, source columns via
     * [[srcCol]]. Empty `sets` = conditional keyed DELETE. The source
-    * executes ONCE (eager localCheckpoint) and must be key-unique —
+    * executes ONCE (an eager checkpoint) and must be key-unique —
     * duplicate key tuples are an ambiguous per-row update and refuse
     * before anything writes. Numeric key columns bound the structural
     * file pruning exactly like [[deleteKeysDvCols]]. Idempotent for
@@ -342,11 +335,18 @@ object Merge {
       sets: Seq[(String, Column)] = Seq.empty,
       cond: Option[Column] = None,
       meta: Map[String, String] = Map.empty,
-      broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DvStats = {
+      broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DvStats =
+    mergeMatchedDv(spark, Manifest.at(tablePath), source, keyCols, sets,
+      cond, meta, broadcastKeyLimit)
+
+  /** [[mergeMatchedDv]] against a snapshot the caller already resolved
+    * (the SQL command, which casts SET values onto its schema). */
+  private[graft] def mergeMatchedDv(spark: SparkSession,
+      snap: Manifest.Snapshot, source: DataFrame, keyCols: Seq[String],
+      sets: Seq[(String, Column)], cond: Option[Column],
+      meta: Map[String, String], broadcastKeyLimit: Long): DvStats = {
     require(keyCols.nonEmpty, "at least one key column")
-    val cols = Manifest.schemaOf(tablePath)
-      .map(_.fieldNames.toSeq)
-      .getOrElse(Manifest.read(spark, tablePath).columns.toSeq)
+    val cols = snap.schema.fieldNames.toSeq
     sets.foreach { case (c, _) =>
       require(cols.contains(c),
         s"SET column '$c' is not a table column (${cols.mkString(", ")})")
@@ -356,7 +356,7 @@ object Merge {
     }
     // ONE source execution: the matched set, the images, and any
     // commit-protocol retry all see the same rows
-    val src0 = source.localCheckpoint()
+    val src0 = Checkpoints.checkpoint(source)
     keyCols.foreach(k => require(src0.columns.contains(k),
       s"source has no key column '$k'"))
     val dup = src0.groupBy(keyCols.map(col): _*)
@@ -365,25 +365,9 @@ object Merge {
     require(dup == 0L,
       "merge source has duplicate key tuples — an ambiguous per-row " +
         "update; de-duplicate the source first")
-    val numCols = keyCols.filter(c => src0.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val boundAggs = numCols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"__mn_$c"),
-      max(col(c)).cast("double").as(s"__mx_$c")))
+    val (boundAggs, boundsOf) = keyBounds(src0, keyCols)
     val g = src0.agg(count(lit(1)).as("__k"), boundAggs: _*).head()
-    if (g.getLong(0) == 0L) {
-      val headV = Manifest.version(tablePath)
-      return DvStats(headV, Manifest.files(tablePath).size,
-        Manifest.deletionVectors(tablePath, headV).size, 0L, 0)
-    }
-    val bounds: Map[String, (Double, Double)] =
-      numCols.zipWithIndex.flatMap { case (c, i) =>
-        val (mnI, mxI) = (1 + 2 * i, 2 + 2 * i)
-        if (g.isNullAt(mnI) || g.isNullAt(mxI) ||
-            g.getDouble(mnI).isNaN || g.getDouble(mxI).isNaN) None
-        else Some(c -> (Math.nextDown(g.getDouble(mnI)),
-          Math.nextUp(g.getDouble(mxI))))
-      }.toMap
+    if (g.getLong(0) == 0L) return noop(snap)
     // keys stay bare (the join columns); EVERY source column also
     // rides prefixed, so set/cond expressions can name source keys too
     val renamed = src0.select(
@@ -392,12 +376,12 @@ object Merge {
     val hinted =
       if (g.getLong(0) <= broadcastKeyLimit) broadcast(renamed)
       else renamed
-    deleteDv(spark, tablePath,
+    deleteDv(spark, snap,
       m => {
         val joined = m.join(hinted, keyCols)
         cond.map(joined.filter).getOrElse(joined)
       },
-      meta, bounds,
+      meta, boundsOf(g, 1),
       mkImages =
         if (sets.isEmpty) None
         else Some { matched =>
@@ -414,27 +398,21 @@ object Merge {
     * commit ATOMICALLY with the DV lines — one version hides the old
     * positions and adds the new images, so a reader can never observe
     * the update half-applied. */
-  private def deleteDv(spark: SparkSession, tablePath: String,
+  private def deleteDv(spark: SparkSession, snap: Manifest.Snapshot,
       matches: DataFrame => DataFrame, meta: Map[String, String],
       bounds: Map[String, (Double, Double)],
       mkImages: Option[DataFrame => DataFrame] = None,
       statsCols: Seq[String] = Seq.empty): DvStats = {
     import java.nio.file.Files
-    val headV = Manifest.version(tablePath)
-    val before = Manifest.files(tablePath)
-    val dvs = Manifest.deletionVectors(tablePath, headV)
-    val noop = DvStats(headV, before.size, dvs.size, 0L, 0)
-    val cand = candidateFiles(tablePath, bounds)
-    if (cand.isEmpty) return noop
-    val schema = Manifest.schemaOf(tablePath)
-      .getOrElse(Manifest.read(spark, tablePath).schema)
+    val tablePath = snap.tablePath
+    val dvs = snap.dv
+    val cand = candidateFiles(snap, bounds)
+    if (cand.isEmpty) return noop(snap)
     // match against the LIVE view (positions already hidden by an
     // in-force DV are excluded — idempotent re-deletes add nothing),
     // with the scan built from candidate paths (structural stats prune)
-    val scan = Manifest.withPos(spark.read.schema(schema).parquet(
-      cand.map(r => Paths.get(tablePath).resolve(r).toString): _*))
     val matchedRows =
-      matches(Manifest.antiDv(spark, tablePath, headV, scan))
+      matches(snap.applyDv(spark, snap.scan(spark, cand), keepPos = true))
     val matched = matchedRows
       .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
     // per-file match counts: the commit-coordinator metadata action,
@@ -442,13 +420,13 @@ object Merge {
     val perFile = matched.groupBy(col("file"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) return noop
+    if (perFile.isEmpty) return noop(snap)
     // claim a fresh DV directory atomically (the batch-dir discipline:
     // a crashed delete's orphan dir is unreferenced debris vacuum
     // sweeps, never a correctness hazard)
     val dvRoot = Paths.get(tablePath, "dv")
     Files.createDirectories(dvRoot)
-    var claim = headV + 1
+    var claim = snap.version + 1
     var dvDir: java.nio.file.Path = null
     while (dvDir == null) {
       val c = dvRoot.resolve(f"d$claim%06d")
@@ -482,18 +460,17 @@ object Merge {
     // a compliance review must not see.
     val payload = mkImages match {
       case Some(images) => images(matchedRows)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case None => snap.scan(spark, Nil)
     }
     val op = if (mkImages.isDefined) "update" else "delete"
     val v = Manifest.commit(payload, tablePath,
       meta = meta ++ dvLines + (Manifest.OpTypeKey -> op),
       statsCols = statsCols,
-      // positions were resolved against headV: a rewrite of a touched
+      // positions were resolved against snap: a rewrite of a touched
       // file landing before this publish must conflict, not strand the
       // positions on a dead file
-      readVersion = headV)
-    DvStats(v, before.size,
+      base = snap)
+    DvStats(v, snap.files.size,
       (dvs.keySet ++ perFile.keySet).size,
       perFile.values.sum, cand.size)
   }
@@ -520,14 +497,22 @@ object Merge {
       sets: Seq[(String, Column)],
       meta: Map[String, String] = Map.empty,
       pruneRange: Option[(String, Double, Double)] = None,
-      statsCols: Seq[String] = Seq.empty): DvStats = {
+      statsCols: Seq[String] = Seq.empty): DvStats =
+    updateWhereDv(spark, Manifest.at(tablePath), pred, sets, meta,
+      pruneRange, statsCols)
+
+  /** [[updateWhereDv]] against a snapshot the caller already resolved
+    * (the SQL command, which casts SET values onto its schema). */
+  private[graft] def updateWhereDv(spark: SparkSession,
+      snap: Manifest.Snapshot, pred: Column, sets: Seq[(String, Column)],
+      meta: Map[String, String],
+      pruneRange: Option[(String, Double, Double)],
+      statsCols: Seq[String]): DvStats = {
     require(sets.nonEmpty, "UPDATE needs at least one SET column")
-    val cols = Manifest.schemaOf(tablePath)
-      .map(_.fieldNames.toSeq)
-      .getOrElse(Manifest.read(spark, tablePath).columns.toSeq)
+    val cols = snap.schema.fieldNames.toSeq
     sets.foreach { case (c, _) => require(cols.contains(c),
       s"SET column '$c' is not a table column (${cols.mkString(", ")})") }
-    deleteDv(spark, tablePath, _.filter(pred), meta,
+    deleteDv(spark, snap, _.filter(pred), meta,
       pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap,
       mkImages = Some { matched =>
         val updated = sets.foldLeft(matched) { case (df, (c, e)) =>
@@ -537,19 +522,17 @@ object Merge {
       statsCols = statsCols)
   }
 
-  /** The shared copy-on-write skeleton: locate the files `touches` hits
-    * (scanning only `candidates` when stats bounded the search),
-    * re-emit them through `rewrite`, publish with `removeFiles`. */
-  private def cowRewrite(spark: SparkSession, tablePath: String,
+  /** The shared copy-on-write skeleton: locate the files of `snap`
+    * that `touches` hits (scanning only `candidates` when stats bounded
+    * the search), re-emit them through `rewrite`, publish with
+    * `removeFiles` on `snap` as the commit's base. */
+  private def cowRewrite(spark: SparkSession, snap: Manifest.Snapshot,
       touches: DataFrame => DataFrame, rewrite: DataFrame => DataFrame,
       meta: Map[String, String],
       skipWhenUntouched: Boolean = false,
       candidates: Option[Seq[String]] = None,
       statsCols: Seq[String] = Seq.empty): CowStats = {
-    val headV = Manifest.version(tablePath)
-    val before = Manifest.files(tablePath)
-    val schema = Manifest.schemaOf(tablePath, headV)
-      .getOrElse(Manifest.read(spark, tablePath).schema)
+    val before = snap.files
     val cand = candidates.getOrElse(before)
     // The touch scan reads ONLY the candidate files — built from their
     // explicit paths, so the stats prune is structural (a skipped
@@ -559,48 +542,34 @@ object Merge {
     // hides can neither count as a match nor survive into a rewrite
     // (the rewrite MATERIALIZES the DV away — commit drops the removed
     // files' mappings).
-    val scanned =
-      if (cand.isEmpty) null // no candidate can match: no touches
-      else Manifest.antiDv(spark, tablePath, headV,
-        Manifest.withPos(
-          spark.read.schema(schema).parquet(
-            cand.map(r => Paths.get(tablePath).resolve(r).toString): _*)
-          .withColumn("__f", col("_metadata.file_path"))))
-        .drop("__dv_f", "__dv_p")
     // Driver-side FILE-PATH listing — the commit coordinator's matched-
     // file metadata action (bounded by the table's file count, no data
     // rows cross the driver); the data itself moves executor-side below.
     val touchedAbs =
-      if (scanned == null) Seq.empty[String]
-      else touches(scanned)
+      if (cand.isEmpty) Seq.empty[String] // no candidate can match
+      else touches(snap.applyDv(spark, snap.scan(spark, cand)
+          .withColumn("__f", col("_metadata.file_path"))))
         .select(col("__f")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
     if (touchedAbs.isEmpty && skipWhenUntouched)
-      return CowStats(Manifest.version(tablePath), before.size, 0,
-        before.size, cand.size)
-    val tblRoot = Paths.get(tablePath).toAbsolutePath.normalize
+      return CowStats(snap.version, before.size, 0, before.size, cand.size)
+    val tblRoot = Paths.get(snap.tablePath).toAbsolutePath.normalize
     val touchedRel = touchedAbs.map { p =>
       val fsPath = // _metadata.file_path is a URI (file:/...): decode it
         if (p.startsWith("file:")) new java.net.URI(p).getPath else p
       tblRoot.relativize(
         Paths.get(fsPath).toAbsolutePath.normalize).toString
     }
-    val touchedRows =
-      if (touchedAbs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        // DV-applied: a hidden position must not survive the rewrite
-        // (the commit drops the rewritten files' DV mappings — this
-        // read is what makes that sound)
-        Manifest.applyDv(spark, tablePath, headV,
-          spark.read.schema(schema).parquet(touchedAbs: _*))
-    val v = Manifest.commit(rewrite(touchedRows), tablePath, meta = meta,
-      removeFiles = touchedRel, statsCols = statsCols,
-      // the touch scan and the rewrite content resolved against headV:
+    // DV-applied: a hidden position must not survive the rewrite (the
+    // commit drops the rewritten files' DV mappings — this read is what
+    // makes that sound)
+    val touchedRows = snap.applyDv(spark, snap.scan(spark, touchedRel))
+    val v = Manifest.commit(rewrite(touchedRows), snap.tablePath,
+      meta = meta, removeFiles = touchedRel, statsCols = statsCols,
+      // the touch scan and the rewrite content resolved against snap:
       // a DV or rewrite landing on a touched file before this publish
       // must conflict (the rewrite would resurrect/lose its rows)
-      readVersion = headV)
+      base = snap)
     CowStats(v, before.size, touchedRel.size,
       before.size - touchedRel.size, cand.size)
   }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.ops.Manifest
 import graft.sources.DvMarkedTable
 
 /** Analyzer rule serving SQL reads of DELETION-VECTOR-carrying
@@ -15,11 +14,12 @@ import graft.sources.DvMarkedTable
   * relation into the real read plan.
   *
   * [[graft.sources.GraftCatalog]] returns a [[DvMarkedTable]] for any
-  * version whose manifest carries `dv.*` lines; this rule replaces that
-  * relation with the DV-APPLIED read (`Manifest.read` — the pinned file
-  * list, recorded schema, and the in-scan position filter over
-  * driver-read bitmaps, a shuffle anti-join past
-  * `Manifest.DvBroadcastLimit` positions), aliased
+  * version whose manifest carries `dv.*` lines, holding the snapshot
+  * `loadTable` resolved; this rule replaces that relation with that
+  * snapshot's DV-APPLIED read (`Snapshot.read` — the pinned file list,
+  * recorded schema, and the in-scan position filter over driver-read
+  * bitmaps, a shuffle anti-join past `Manifest.DvBroadcastLimit`
+  * positions) — no second resolution of the version — aliased
   * back onto the relation's exact output attributes so references
   * resolved against the catalog table stay valid. DV-less versions
   * never see a [[DvMarkedTable]], so their plan is untouched — the
@@ -63,8 +63,7 @@ case class DvReadRewrite(session: SparkSession) extends Rule[LogicalPlan] {
         val t = r.table.asInstanceOf[DvMarkedTable]
         // nested analysis of the DV-applied frame (view-resolution
         // shape: AnalysisContext brackets restore the outer context)
-        val applied = Manifest.read(session, t.tablePath, t.tableVersion)
-          .queryExecution.analyzed
+        val applied = t.snapshot.read(session).queryExecution.analyzed
         val byName = applied.output.map(a => a.name -> a).toMap
         Project(r.output.map { a =>
           Alias(byName(a.name), a.name)(exprId = a.exprId)

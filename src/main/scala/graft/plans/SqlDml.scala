@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.ops.{Manifest, Merge}
+import graft.ops.{Checkpoints, Manifest, Merge}
 import graft.sources.GraftCatalog
 
 /** SQL DML/DDL over governed [[graft.ops.Manifest]] tables — the write
@@ -119,7 +119,7 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
               // erasure when the subquery is the WHOLE condition, names
               // a plain table column, and is uncorrelated +
               // deterministic (the command materializes its result ONCE
-              // via localCheckpoint, so the commit protocol's read-set
+              // via an eager checkpoint, so the commit protocol's read-set
               // re-validation holds — re-executing a changed subquery on
               // rebase would validate a different key set than the one
               // the DVs were computed from)
@@ -450,7 +450,7 @@ object GraftSqlDml {
     val tbl = "/" + p.subpath(0, p.getNameCount - 3).toString
     if (Manifest.version(tbl) == 0) None
     else {
-      val live = Manifest.files(tbl).map(rel =>
+      val live = Manifest.at(tbl).files.map(rel =>
         java.nio.file.Paths.get(tbl).resolve(rel)
           .toAbsolutePath.normalize.toString).toSet
       val stale = roots.filterNot(r => live.contains(
@@ -494,7 +494,7 @@ case class GraftDeleteCommand(tablePath: String, cond: Expression)
 
 /** `DELETE FROM graft.t WHERE k IN (SELECT …)` → [[Merge.deleteKeysDv]]:
   * the set-shaped merge-on-read erasure. The subquery result
-  * materializes exactly ONCE (an eager localCheckpoint) before the
+  * materializes exactly ONCE (an eager checkpoint) before the
   * erasure runs — deleteKeysDv consumes the key frame more than once
   * (bounds aggregate, then the DV probe), and the commit protocol may
   * re-validate on rebase; both must see the SAME key set the first
@@ -506,8 +506,8 @@ case class GraftDeleteKeysCommand(tablePath: String, keyCol: String,
   override val output: Seq[Attribute] = GraftSqlDml.output
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(session: SparkSession): Seq[Row] = {
-    val keys = Bridge.ofRows(session, source)
-      .toDF(keyCol).localCheckpoint()
+    val keys = Checkpoints.checkpoint(Bridge.ofRows(session, source)
+      .toDF(keyCol))
     val stats = Merge.deleteKeysDv(session, tablePath, keys, keyCol)
     Seq(Row(stats.positionsAdded))
   }
@@ -519,7 +519,7 @@ case class GraftDeleteKeysCommand(tablePath: String, keyCol: String,
   * rewrite; insert-only degenerates to a pure append), duplicate-key
   * sources refused before anything writes, broadcast-vs-shuffle key
   * probing size-gated. The source executes ONCE inside the merge
-  * engine (its localCheckpointed snapshot), which also reports
+  * engine (its checkpointed snapshot), which also reports
   * num_affected_rows = source rows merged — a non-deterministic source
   * can never report a count inconsistent with what actually merged. */
 case class GraftMergeCommand(tablePath: String, source: LogicalPlan,
@@ -569,16 +569,15 @@ case class GraftUpdateKeysCommand(tablePath: String, keyCol: String,
   override val output: Seq[Attribute] = GraftSqlDml.output
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(session: SparkSession): Seq[Row] = {
-    val schema = Manifest.schemaOf(tablePath).getOrElse(
-      Manifest.read(session, tablePath).schema)
+    val snap = Manifest.at(tablePath)
     val setCols = sets.map { case (c, e) =>
-      c -> GraftSqlDml.rebind(e).cast(schema(c).dataType) }
+      c -> GraftSqlDml.rebind(e).cast(snap.schema(c).dataType) }
     // a pure key set: duplicates are harmless (unlike a MERGE source's
     // payload rows), so dedup instead of refusing
     val keys = Bridge.ofRows(session, source)
       .toDF(keyCol).distinct()
-    val stats = Merge.mergeMatchedDv(session, tablePath, keys,
-      Seq(keyCol), setCols)
+    val stats = Merge.mergeMatchedDv(session, snap, keys, Seq(keyCol),
+      setCols, None, Map.empty, Merge.DefaultBroadcastKeyLimit)
     Seq(Row(stats.positionsAdded))
   }
 }
@@ -609,13 +608,12 @@ case class GraftMergeMatchedCommand(tablePath: String,
         UnresolvedAttribute.quoted(s"__src_${a.name}")
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     })
-    val schema = Manifest.schemaOf(tablePath).getOrElse(
-      Manifest.read(session, tablePath).schema)
+    val snap = Manifest.at(tablePath)
     val setCols = sets.map { case (c, e) =>
-      c -> rb(e).cast(schema(c).dataType) }
+      c -> rb(e).cast(snap.schema(c).dataType) }
     val src = Bridge.ofRows(session, source)
-    val stats = Merge.mergeMatchedDv(session, tablePath, src, keyCols,
-      setCols, cond.map(rb))
+    val stats = Merge.mergeMatchedDv(session, snap, src, keyCols,
+      setCols, cond.map(rb), Map.empty, Merge.DefaultBroadcastKeyLimit)
     Seq(Row(stats.positionsAdded))
   }
 }
@@ -644,8 +642,8 @@ case class GraftInsertCommand(tablePath: String, source: LogicalPlan,
   override def run(session: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.col
     val df0 = Bridge.ofRows(session, source)
-    val schema = Manifest.schemaOf(tablePath).getOrElse(
-      Manifest.read(session, tablePath).schema)
+    val head = Manifest.at(tablePath)
+    val schema = head.schema
     val tcols = schema.fieldNames.toSeq
     val named =
       if (userCols.nonEmpty) {
@@ -679,7 +677,8 @@ case class GraftInsertCommand(tablePath: String, source: LogicalPlan,
         case None => col(c)
       }
     }: _*)
-    val v = Manifest.commit(aligned, tablePath, replace = overwrite)
+    val v = Manifest.commit(aligned, tablePath, replace = overwrite,
+      base = head)
     // the commit recorded its own fresh files' row counts — the
     // inserted-row count is their sum, pure driver-side metadata
     val n = Manifest.delta(tablePath, v).meta.collect {
@@ -757,17 +756,17 @@ case class GraftUpdateCommand(tablePath: String,
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftSqlDml.output
   override def run(session: SparkSession): Seq[Row] = {
-    val schema = Manifest.schemaOf(tablePath).getOrElse(
-      Manifest.read(session, tablePath).schema)
+    val snap = Manifest.at(tablePath)
     val setCols = sets.map { case (c, e) =>
       // cast SQL-typed values onto the column's recorded type, the way
       // the UPDATE alignment rules would (an int literal must not fail
       // a bigint column's append-compatible schema check)
-      c -> GraftSqlDml.rebind(e).cast(schema(c).dataType)
+      c -> GraftSqlDml.rebind(e).cast(snap.schema(c).dataType)
     }
     val pred = cond.map(GraftSqlDml.rebind).getOrElse(
       org.apache.spark.sql.functions.lit(true))
-    val stats = Merge.updateWhereDv(session, tablePath, pred, setCols)
+    val stats = Merge.updateWhereDv(session, snap, pred, setCols,
+      Map.empty, None, Seq.empty)
     Seq(Row(stats.positionsAdded))
   }
 }

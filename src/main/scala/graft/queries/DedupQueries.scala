@@ -1306,9 +1306,9 @@ object DedupQueries {
         // the forget-list persists; the store erases merge-on-read
         Manifest.commit(e.filter(col("vec_id") % 10 === 7)
           .select(col("vec_id")).coalesce(1), tombs)
-        val filesBefore = Manifest.files(store)
+        val filesBefore = Manifest.at(store).files
         Merge.deleteKeysDv(s, store, Manifest.read(s, tombs), "vec_id")
-        val zeroRewrites = Manifest.files(store) == filesBefore
+        val zeroRewrites = Manifest.at(store).files == filesBefore
         // masked serve: broadcast forget-list anti-joins the postings
         // BEFORE scoring — no over-fetch, no rank gap, x9's plan shape
         val cents = broadcast(s.table(s"${prefix}_cents"))

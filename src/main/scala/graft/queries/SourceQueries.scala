@@ -980,7 +980,7 @@ object SourceQueries {
     // exact row count OF EVERY VERSION — time travel included, and
     // across a copy-on-write delete whose rewrite re-recorded its
     // surviving file's count — is a driver-side metadata sum
-    // (Manifest.rowCount), zero data or footer I/O at any table size.
+    // (Snapshot.rowCount), zero data or footer I/O at any table size.
     // The oracle replays all four per-version counts from the base
     // table, so a miscounted file, a carry lost across the cow
     // rewrite, or a stale count after the delete flips the hash;
@@ -1001,7 +1001,7 @@ object SourceQueries {
           pmod(col("o_orderkey"), lit(3)) === 1 &&
             col("o_orderstatus") === "F")
         val counts = (1L to Manifest.version(tbl)).map { v =>
-          val rc = Manifest.rowCount(tbl, v) // pure manifest metadata
+          val rc = Manifest.at(tbl, v).rowCount // pure manifest metadata
           (v, rc.getOrElse(-1L), rc.isDefined)
         }
         import s.implicits._
@@ -1051,10 +1051,10 @@ object SourceQueries {
             tbl)
         // the "bad" delete: drops every F-status row (v3)
         Merge.deleteWhere(s, tbl, col("o_orderstatus") === "F")
-        val deletedRows = Manifest.rowCount(tbl).get // metadata count
-        val filesBefore = Manifest.files(tbl, 2L)
+        val deletedRows = Manifest.at(tbl).rowCount.get // metadata count
+        val filesBefore = Manifest.at(tbl, 2L).files
         val v = Manifest.restore(tbl, 2L) // v4, metadata-only
-        val restoredSame = Manifest.files(tbl, v) == filesBefore
+        val restoredSame = Manifest.at(tbl, v).files == filesBefore
         Manifest.read(s, tbl)
           .agg(count(lit(1)).as("n_rows"),
             sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
@@ -1062,9 +1062,9 @@ object SourceQueries {
             sum(dec(col("o_totalprice"))).cast("double").as("price_mass"))
           .select(col("n_rows"), col("f_rows"), col("price_mass"),
             lit(restoredSame).as("metadata_only"),
-            lit(Manifest.rowCount(tbl, 3L).contains(deletedRows))
+            lit(Manifest.at(tbl, 3L).rowCount.contains(deletedRows))
               .as("bad_still_readable"),
-            lit(Manifest.meta(tbl, v).get("restore.of").contains("2"))
+            lit(Manifest.at(tbl, v).meta.get("restore.of").contains("2"))
               .as("provenance"))
       },
       Some(
@@ -1157,13 +1157,13 @@ object SourceQueries {
             o.filter(col("o_orderkey") >= i * q &&
               col("o_orderkey") < (i + 1) * q).coalesce(1),
             tbl, statsCols = Seq("o_orderkey"))
-        val filesBefore = Manifest.files(tbl)
+        val filesBefore = Manifest.at(tbl).files
         val st = Merge.deleteWhereDv(s, tbl,
           col("o_orderkey") >= q && col("o_orderkey") < 2 * q &&
             col("o_orderstatus") === "F",
           pruneRange = Some(("o_orderkey", q.toDouble,
             (2 * q - 1).toDouble)))
-        val dvOnly = Manifest.files(tbl) == filesBefore &&
+        val dvOnly = Manifest.at(tbl).files == filesBefore &&
           st.version == 5L
         val morCount = Manifest.read(s, tbl, st.version).count()
         val preCount = Manifest.read(s, tbl, st.version - 1).count()
@@ -1174,7 +1174,7 @@ object SourceQueries {
         // the hidden positions away and drops the mapping
         Layout.optimizeWhere(s, tbl, "o_orderkey", q.toDouble,
           (2 * q - 1).toDouble)
-        val absorbed = Manifest.deletionVectors(tbl).isEmpty
+        val absorbed = Manifest.at(tbl).dv.isEmpty
         Manifest.read(s, tbl)
           .agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("price_mass"))
@@ -1241,7 +1241,7 @@ object SourceQueries {
         // view, so hidden rows are never copied into the new layout
         Manifest.commit(Manifest.read(s, tbl).repartition(1), tbl,
           replace = true)                                       // v6
-        val origFiles = Manifest.files(tbl, 5L)
+        val origFiles = Manifest.at(tbl, 5L).files
         // stage 1: drop pre-delete history, KEEP the DV'd version —
         // the steady state where time travel must stay compliant
         val (dropped1, _) = Manifest.vacuum(tbl, retainLast = 2)
@@ -1255,7 +1255,7 @@ object SourceQueries {
         val physical =
           origFiles.forall(f => !JFiles.exists(
             JPaths.get(tbl).resolve(f))) &&
-          Manifest.deletionVectors(tbl).isEmpty &&
+          Manifest.at(tbl).dv.isEmpty &&
           scala.util.Try(Manifest.read(s, tbl, 5L).count()).isFailure
         Manifest.read(s, tbl)
           .agg(count(lit(1)).as("n_rows"),
@@ -1310,7 +1310,7 @@ object SourceQueries {
             o.filter(col("o_orderkey") >= i * q &&
               col("o_orderkey") < (i + 1) * q).coalesce(1),
             tbl, statsCols = Seq("o_orderkey"))
-        val filesBefore = Manifest.files(tbl)
+        val filesBefore = Manifest.at(tbl).files
         val st = Merge.updateWhereDv(s, tbl,
           col("o_orderkey") >= q && col("o_orderkey") < 2 * q &&
             col("o_orderstatus") === "F",
@@ -1319,7 +1319,7 @@ object SourceQueries {
             (2 * q - 1).toDouble)),
           statsCols = Seq("o_orderkey"))
         val noRewrites =
-          filesBefore.toSet.subsetOf(Manifest.files(tbl).toSet) &&
+          filesBefore.toSet.subsetOf(Manifest.at(tbl).files.toSet) &&
           st.version == 5L
         val preClean = Manifest.read(s, tbl, 4L)
           .filter(col("o_orderstatus") === "X").isEmpty
@@ -1492,15 +1492,16 @@ object SourceQueries {
           statsCols = Seq("doc_id"))
         val auditClean = Manifest.readStaged(s, tbl, "ingest-clean")
           .filter(col("n_chars") < 0).isEmpty
-        val headFiles = Manifest.files(tbl).toSet
+        val headFiles = Manifest.at(tbl).files.toSet
         val diskBefore = parquetCount(tbl)
         val v = Manifest.publishStaged(s, tbl, "ingest-clean")
         // zero-copy: the new version carries the head verbatim, and
         // publish wrote or moved NO data file (the staged file already
         // on disk is simply referenced)
+        val published = Manifest.at(tbl).files
         val publishZeroCopy = v == headBefore + 1 &&
-          headFiles.subsetOf(Manifest.files(tbl).toSet) &&
-          Manifest.files(tbl).size > headFiles.size &&
+          headFiles.subsetOf(published.toSet) &&
+          published.size > headFiles.size &&
           parquetCount(tbl) == diskBefore
         Manifest.read(s, tbl)
           .groupBy(col("lang"))
@@ -1546,11 +1547,11 @@ object SourceQueries {
           T(s, dir, "documents")
             .select(col("doc_id"), col("lang"), col("n_chars"))
             .coalesce(2), tbl, statsCols = Seq("doc_id"))
-        val filesBefore = Manifest.files(tbl)
+        val filesBefore = Manifest.at(tbl).files
         val deleted = s.sql(
           s"DELETE FROM graft.`$tbl` WHERE doc_id % 11 = 3")
           .collect().head.getLong(0)
-        val deleteZeroCopy = Manifest.files(tbl) == filesBefore
+        val deleteZeroCopy = Manifest.at(tbl).files == filesBefore
         val updated = s.sql(
           s"UPDATE graft.`$tbl` SET n_chars = n_chars + 1000 " +
             "WHERE doc_id % 13 = 4")
@@ -1558,9 +1559,9 @@ object SourceQueries {
         // DELETE moves no file at all; UPDATE adds only its image
         // files — every pre-DML file is still listed verbatim (no
         // copy-on-write rewrite happened) and the DVs carry the hides
+        val head = Manifest.at(tbl)
         val zeroRewrites = deleteZeroCopy &&
-          filesBefore.toSet.subsetOf(Manifest.files(tbl).toSet) &&
-          Manifest.deletionVectors(tbl).nonEmpty
+          filesBefore.toSet.subsetOf(head.files.toSet) && head.dv.nonEmpty
         val hist = Manifest.history(s, tbl).takeRight(2)
           .map(_.change_type)
         // MERGE INTO (the upsert-by-key Delta idiom → Merge.upsert's
@@ -1669,7 +1670,7 @@ object SourceQueries {
           .createOrReplaceTempView(s"s39_seed_${dirTag(dir)}")
         s.sql(s"CREATE TABLE graft.`$tbl` AS " +
           s"SELECT * FROM s39_seed_${dirTag(dir)}")
-        val filesBefore = Manifest.files(tbl)
+        val filesBefore = Manifest.at(tbl).files
         T(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(4)) === 1)
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1678,7 +1679,7 @@ object SourceQueries {
           s"INSERT INTO graft.`$tbl` SELECT * FROM s39_ins_${dirTag(dir)}")
           .collect().head.getLong(0)
         val pureAppend =
-          filesBefore.toSet.subsetOf(Manifest.files(tbl).toSet) &&
+          filesBefore.toSet.subsetOf(Manifest.at(tbl).files.toSet) &&
             Manifest.history(s, tbl).last.change_type == "append"
         // schema-evolving INSERT: 'src' is a NEW column — the commit
         // evolves the schema; every earlier row reads it as null
@@ -1693,14 +1694,14 @@ object SourceQueries {
           .filter(pmod(col("doc_id"), lit(9)) === 2)
           .select(col("doc_id"))
           .createOrReplaceTempView(s"s39_req_${dirTag(dir)}")
-        val preErase = Manifest.files(tbl)
+        val preErase = Manifest.at(tbl).files
         val erased = s.sql(
           s"MERGE INTO graft.`$tbl` AS t " +
             s"USING s39_req_${dirTag(dir)} AS r ON t.doc_id = r.doc_id " +
             "WHEN MATCHED THEN DELETE")
           .collect().head.getLong(0)
-        val dvErasure = Manifest.files(tbl) == preErase &&
-          Manifest.deletionVectors(tbl).nonEmpty &&
+        val head = Manifest.at(tbl)
+        val dvErasure = head.files == preErase && head.dv.nonEmpty &&
           Manifest.history(s, tbl).last.change_type == "delete"
         Manifest.read(s, tbl)
           .groupBy(col("lang"))
@@ -1754,10 +1755,11 @@ object SourceQueries {
           .createOrReplaceTempView(s"s40_base_${dirTag(dir)}")
         s.sql(s"INSERT INTO graft.`$tbl` " +
           s"SELECT * FROM s40_base_${dirTag(dir)}")
-        val filesAfterInsert = Manifest.files(tbl)
+        val filesAfterInsert = Manifest.at(tbl).files
         s.sql(s"ALTER TABLE graft.`$tbl` ADD COLUMNS (n_chars BIGINT)")
-        val alterZeroFiles = Manifest.files(tbl) == filesAfterInsert &&
-          Manifest.schemaOf(tbl).get.fieldNames.toSeq ==
+        val altered = Manifest.at(tbl)
+        val alterZeroFiles = altered.files == filesAfterInsert &&
+          altered.schema.fieldNames.toSeq ==
             Seq("doc_id", "lang", "n_chars")
         T(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -1824,10 +1826,10 @@ object SourceQueries {
         s.sql(s"DELETE FROM graft.`$tbl` WHERE o_orderkey % 10 = 3")
         val opt = s.sql(s"OPTIMIZE graft.`$tbl`").collect().head // v6
         val optV = opt.getLong(0)
-        val optimized = opt.getLong(1) == 4L &&
-          Manifest.files(tbl).size == 1 &&
-          Manifest.deletionVectors(tbl).isEmpty &&
-          Manifest.fileStats(tbl).values.exists(_.contains("o_orderkey"))
+        val head = Manifest.at(tbl)
+        val optimized = opt.getLong(1) == 4L && head.files.size == 1 &&
+          head.dv.isEmpty &&
+          head.fileStats.values.exists(_.contains("o_orderkey"))
         val flaggedLayout = Manifest.history(s, tbl)
           .find(_.version == optV).exists(!_.data_change)
         // the "bad" write RESTORE must undo
@@ -1845,7 +1847,7 @@ object SourceQueries {
           .collect().head                                   // v8
         val restoredMetaOnly = res.getLong(1) == optV &&
           dataFiles() == before &&
-          Manifest.files(tbl) == Manifest.files(tbl, optV)
+          Manifest.at(tbl).files == Manifest.at(tbl, optV).files
         val vac = s.sql(s"VACUUM graft.`$tbl` RETAIN 3 VERSIONS")
           .collect().head
         val vacuumed = vac.getLong(0) > 0L && vac.getLong(1) > 0L &&
@@ -1969,7 +1971,7 @@ object SourceQueries {
         val d = T(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         Manifest.commit(d.coalesce(2), tbl, statsCols = Seq("doc_id"))
-        val filesBefore = Manifest.files(tbl)
+        val filesBefore = Manifest.at(tbl).files
         d.filter(pmod(col("doc_id"), lit(7)) === 2)
           .select(col("doc_id"), (col("n_chars") + 100).as("nc"))
           .createOrReplaceTempView(s"s43_upd_${dirTag(dir)}")
@@ -1989,9 +1991,9 @@ object SourceQueries {
             "WHEN MATCHED AND s.flag = 1 THEN DELETE")
           .collect().head.getLong(0)
         // both verbs are MoR: every original file still carries
+        val head = Manifest.at(tbl)
         val zeroRewrites =
-          filesBefore.toSet.subsetOf(Manifest.files(tbl).toSet) &&
-            Manifest.deletionVectors(tbl).nonEmpty
+          filesBefore.toSet.subsetOf(head.files.toSet) && head.dv.nonEmpty
         Manifest.read(s, tbl)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("cnt"),

@@ -426,11 +426,11 @@ object StreamPipelineQueries {
             ev.filter(col("user_id") >= i * q &&
               col("user_id") < (i + 1) * q).coalesce(1),
             tbl, statsCols = Seq("user_id"))
-        val seedFiles = Manifest.files(tbl)
+        val seedFiles = Manifest.at(tbl).files
         val erased = Streams.erasureStreaming(s, dir, tbl,
           name = s"graft_st32_${dirTag(dir)}")
-        val zeroRewrites = Manifest.files(tbl) == seedFiles
-        val dvTotal = Manifest.deletionVectors(tbl).values.map(_._2).sum
+        val zeroRewrites = Manifest.at(tbl).files == seedFiles
+        val dvTotal = Manifest.at(tbl).dv.values.map(_._2).sum
         erased.groupBy(col("event_type"))
           .agg(count(lit(1)).as("cnt"),
             sum(dec(col("value"))).cast("double").as("sum_value"))

@@ -153,25 +153,26 @@ class GraftCatalog extends TableCatalog {
         else tagsTable(s"$catalogName.${ident.toString}", parentPath))
       }
     }
-    val v = if (asOf >= 0) asOf else Manifest.version(path)
-    require(v > 0, s"no committed version at $path")
-    // ONE snapshot resolution serves the file list and the DV check
-    val snap = Manifest.snapshot(path, v)
+    // ONE snapshot resolution serves the file list, the schema and the
+    // DV check — and, for a DV'd version, the rewritten read itself
+    val snap = Manifest.at(path, asOf)
+    require(snap.version > 0, s"no committed version at $path")
     val files = snap.files.map(rel =>
       java.nio.file.Paths.get(path).resolve(rel).toString)
-    val table = ParquetTable(s"$catalogName.${ident.toString}@v$v", spark,
+    val table = ParquetTable(
+      s"$catalogName.${ident.toString}@v${snap.version}", spark,
       CaseInsensitiveStringMap.empty(), files.toIndexedSeq,
-      Manifest.schemaOf(path, v), classOf[ParquetFileFormat])
+      Some(snap.schema), classOf[ParquetFileFormat])
     // a DV-carrying version cannot be served by the raw scan (it would
     // resurrect deleted rows): mark it for the analysis-time rewrite
     // (graft.plans.DvReadRewrite applies the position filter); the
     // marker's scan refusal catches any path the rewrite missed
     if (snap.dv.isEmpty) table
-    else new DvMarkedTable(table.name, path, v, table.schema)
+    else new DvMarkedTable(table.name, snap)
   }
 
   /** `graft.<t>.files [VERSION AS OF v]` rows — [[Manifest
-    * .fileInventory]] rendered as a DSv2 metadata table (the Iceberg
+    * .Snapshot.fileInventory]] rendered as a DSv2 metadata table (the Iceberg
     * `.files` convention, per snapshot): one row per LIVE file of the
     * requested version (head when unversioned) with its adding version,
     * recorded row count (null for pre-stats writers) and DV'd position
@@ -186,7 +187,7 @@ class GraftCatalog extends TableCatalog {
       StructField("added_version", LongType, nullable = false),
       StructField("rows", LongType, nullable = true),
       StructField("dv_positions", LongType, nullable = false)))
-    val rows = Manifest.fileInventory(path, asOf)
+    val rows = Manifest.at(path, asOf).fileInventory
       .map { case (f, av, n, dv) =>
         new GenericInternalRow(Array[Any](UTF8String.fromString(f), av,
           n.map(Long.box).orNull, dv))
@@ -206,7 +207,7 @@ class GraftCatalog extends TableCatalog {
       asOf: Long = -1L): Table = {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types._
-    val v = if (asOf >= 0) asOf else Manifest.version(path)
+    val snap = Manifest.at(path, asOf)
     val schema = StructType(Seq(
       StructField("version", LongType, nullable = false),
       StructField("num_files", LongType, nullable = false),
@@ -215,12 +216,12 @@ class GraftCatalog extends TableCatalog {
       StructField("num_tags", LongType, nullable = false),
       StructField("num_constraints", LongType, nullable = false)))
     val rows = Array(new GenericInternalRow(Array[Any](
-      v,
-      Manifest.files(path, v).size.toLong,
-      Manifest.rowCount(path, v).map(Long.box).orNull,
-      Manifest.deletionVectors(path, v).values.map(_._2).sum,
+      snap.version,
+      snap.files.size.toLong,
+      snap.rowCount.map(Long.box).orNull,
+      snap.dv.values.map(_._2).sum,
       Manifest.tags(path).size.toLong,
-      Manifest.constraintsOf(path, v).size.toLong))
+      snap.constraints.size.toLong))
       : org.apache.spark.sql.catalyst.InternalRow)
     new MetadataRowsTable(name, schema, rows)
   }
@@ -339,10 +340,10 @@ class GraftCatalog extends TableCatalog {
       changes: TableChange*): Table = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val path = tablePath(ident)
-    require(Manifest.version(path) > 0, s"no committed version at $path")
+    // one resolution serves the statement: schema, constraints, base
+    val head = Manifest.at(path)
+    require(head.version > 0, s"no committed version at $path")
     val spark = SparkSession.active
-    def schema = Manifest.schemaOf(path).getOrElse(
-      Manifest.read(spark, path).schema)
     def emptyOf(s: StructType) = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     changes.toList match {
@@ -358,9 +359,9 @@ class GraftCatalog extends TableCatalog {
             if (ac.validatedTableVersion != null)
               // Spark's AddCheckConstraint plan already scanned the
               // existing rows; record the gate metadata-only
-              Manifest.commit(emptyOf(schema), path, meta = Map(
+              Manifest.commit(emptyOf(head.schema), path, meta = Map(
                 s"${Manifest.ConstraintPrefix}${c.name}" ->
-                  c.predicateSql))
+                  c.predicateSql), base = head)
             else
               Manifest.addConstraint(spark, path, c.name, c.predicateSql)
           case other => readOnly(
@@ -372,16 +373,15 @@ class GraftCatalog extends TableCatalog {
         if (dc.mode == TableChange.DropConstraint.Mode.CASCADE)
           readOnly("DROP CONSTRAINT CASCADE (no dependency graph to " +
             "cascade through — use plain DROP CONSTRAINT)")
-        if (Manifest.constraintsOf(path).contains(dc.name))
+        if (head.constraints.contains(dc.name))
           Manifest.dropConstraint(spark, path, dc.name)
         else if (!dc.ifExists)
           throw new IllegalArgumentException(
             s"no constraint '${dc.name}' at $path")
       case cs if cs.nonEmpty &&
           cs.forall(_.isInstanceOf[TableChange.UpdateColumnType]) =>
-        val s0 = schema
         val widened = cs.map(_.asInstanceOf[TableChange.UpdateColumnType])
-          .foldLeft(s0) { (acc, u) =>
+          .foldLeft(head.schema) { (acc, u) =>
             if (u.fieldNames.length != 1)
               readOnly(s"ALTER nested column " +
                 u.fieldNames.mkString("."))
@@ -395,7 +395,7 @@ class GraftCatalog extends TableCatalog {
         // the evolve gate decides losslessness: a non-widening change
         // refuses loudly from inside the commit, nothing published
         Manifest.commit(emptyOf(widened), path,
-          allowTypeWidening = true)
+          allowTypeWidening = true, base = head)
       case cs if cs.nonEmpty &&
           cs.forall(_.isInstanceOf[TableChange.AddColumn]) =>
         val adds = cs.map {
@@ -414,14 +414,15 @@ class GraftCatalog extends TableCatalog {
                   "CHECK constraint on future writes if needed")
             StructField(a.fieldNames.head, a.dataType, nullable = true)
         }
-        val s0 = schema
+        val s0 = head.schema
         adds.foreach(f => require(
           !s0.fieldNames.exists(_.equalsIgnoreCase(f.name)),
           s"column '${f.name}' already exists"))
         // a metadata-only evolving commit: zero rows, zero data
         // files — the appended columns ride the recorded schema like
         // any evolution
-        Manifest.commit(emptyOf(StructType(s0.fields ++ adds)), path)
+        Manifest.commit(emptyOf(StructType(s0.fields ++ adds)), path,
+          base = head)
       case other => readOnly(s"ALTER TABLE (${other.mkString(", ")})")
     }
     loadTable(ident)

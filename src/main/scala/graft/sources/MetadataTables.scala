@@ -16,23 +16,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * DELETION VECTORS: it resolves with the right name and schema (so
   * analysis, column references and star-expansion all work), and
   * [[graft.plans.DvReadRewrite]] — injected by `graft.GraftExtensions`
-  * — replaces its relation with the DV-applied read during analysis.
+  * — replaces its relation with the DV-applied read of the snapshot
+  * the catalog resolved (`snapshot.read`) during analysis.
   * Any scan attempt that ESCAPES the rewrite (extensions not
   * installed) fails loudly here instead of serving the raw files:
   * silently resurrecting deleted rows is the one unacceptable
   * behavior. */
-final class DvMarkedTable(tableName: String, val tablePath: String,
-    val tableVersion: Long, tableSchema: StructType) extends Table
+final class DvMarkedTable(tableName: String,
+    val snapshot: graft.ops.Manifest.Snapshot) extends Table
     with SupportsRead {
   override def name(): String = tableName
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = snapshot.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
     throw new IllegalStateException(
-      s"version $tableVersion of $tablePath carries deletion vectors; SQL " +
-        "reads need the DV rewrite rule — install graft.GraftExtensions " +
+      s"version ${snapshot.version} of ${snapshot.tablePath} carries " +
+        "deletion vectors; SQL reads need the DV rewrite rule — install " +
+        "graft.GraftExtensions " +
         "(spark.sql.extensions=graft.GraftExtensions at session build) " +
         "or read through Manifest.read. Refusing the raw scan: it would " +
         "resurrect deleted rows.")

@@ -91,13 +91,12 @@ class TableStreamProvider extends StreamSourceProvider
         "graft-table stream needs .load(<tablePath>)"))
 
   private def pinnedSchema(tablePath: String): StructType = {
-    require(Manifest.version(tablePath) > 0,
+    val head = Manifest.at(tablePath)
+    require(head.version > 0,
       s"graft-table stream: no committed version at $tablePath — the " +
         "table must exist before the stream starts (the pinned schema " +
         "and the initial snapshot both come from its head)")
-    Manifest.schemaOf(tablePath).getOrElse(
-      throw new IllegalStateException(
-        s"no recorded schema at $tablePath"))
+    head.schema
   }
 
   private def cdc(parameters: Map[String, String]): Boolean =
@@ -372,13 +371,13 @@ class TableStreamSource(sqlContext: SQLContext, tablePath: String,
         // capable parquet relation. Unbounded by maxFilesPerTrigger by
         // design (one snapshot = one batch; use startingVersion to
         // skip it).
-        if (Manifest.deletionVectors(tablePath, endV).isEmpty)
+        val snap = Manifest.at(tablePath, endV)
+        if (snap.dv.isEmpty)
           Bridge.streamingParquetScan(spark, baseSchema,
-            Manifest.files(tablePath, endV).map(abs))
+            snap.files.map(abs))
         else
-          Bridge.streamingWrap(
-            Manifest.read(spark, tablePath, endV)
-              .select(baseSchema.fieldNames.map(col).toSeq: _*))
+          Bridge.streamingWrap(snap.read(spark)
+            .select(baseSchema.fieldNames.map(col).toSeq: _*))
       case Some(startV) =>
         // incremental DELTA WALK: one small manifest read per version —
         // never a snapshot re-resolution per version served

@@ -1372,14 +1372,14 @@ object Streams {
         statsCols = Seq("user_id"))
     // gate against the FULL forget-list (this batch's requests included
     // — committed above, and a replay sees them committed already)
+    val forget = Manifest.at(tombstonePath)
     val admitted =
-      if (Manifest.version(tombstonePath) == 0L) batch
+      if (forget.version == 0L) batch
       else {
-        val tombs = Manifest.read(batch.sparkSession, tombstonePath)
+        val tombs = forget.read(batch.sparkSession)
           .select(col("user_id")).distinct()
         val hinted = // metadata-only size gate: zero I/O to decide
-          if (Manifest.rowCount(tombstonePath)
-              .exists(_ <= Merge.DefaultBroadcastKeyLimit))
+          if (forget.rowCount.exists(_ <= Merge.DefaultBroadcastKeyLimit))
             broadcast(tombs)
           else tombs
         batch.join(hinted, Seq("user_id"), "left_anti")
@@ -1457,10 +1457,11 @@ object Streams {
     * QUARANTINE — s24's write gate in continuous form, resolved the way
     * a stream must: aborting a micro-batch would stall the pipeline, so
     * each batch SPLITS instead — rows passing every constraint recorded
-    * on the target table ([[graft.ops.Manifest.constraintsOf]]) commit
-    * there, violating rows commit to the quarantine table tagged with a
-    * `violated` column naming the failed constraint(s) (the dead-letter
-    * contract: nothing is dropped, every quarantined row says why).
+    * on the target table ([[graft.ops.Manifest.Snapshot.constraints]])
+    * commit there, violating rows commit to the quarantine table tagged
+    * with a `violated` column naming the failed constraint(s) (the
+    * dead-letter contract: nothing is dropped, every quarantined row
+    * says why).
     * Both commits are atomic appends through
     * [[graft.ops.Manifest.commitOnce]] (each table tracks its own
     * applied-batch watermark, so a replay after either commit landed
@@ -1490,7 +1491,7 @@ object Streams {
   private[graft] def applyGatedBatch(batch: DataFrame, batchId: Long,
       tablePath: String, quarantinePath: String): Unit = {
     import graft.ops.Manifest
-    val cs = Manifest.constraintsOf(tablePath)
+    val cs = Manifest.at(tablePath).constraints
     require(cs.nonEmpty,
       s"gated ingest needs CHECK constraints on $tablePath")
     val names = cs.keys.toSeq.sorted
@@ -1985,7 +1986,7 @@ object Streams {
     * cross-table transaction. */
   private[graft] def applyCdcTailBatch(batch: DataFrame, batchId: Long,
       replica: String, keyCol: String): Unit = {
-    import graft.ops.{ChangeFeed, Manifest, Merge}
+    import graft.ops.{ChangeFeed, Checkpoints, Manifest, Merge}
     if (batch.isEmpty) return
     val sp = batch.sparkSession
     val vc = ChangeFeed.VersionCol
@@ -1993,16 +1994,15 @@ object Streams {
     val cols = batch.columns.filterNot(c => c == vc || c == tc).toSeq
     val pri = when(col(tc).isin("insert", "update_postimage"), 1)
       .otherwise(0)
-    // one bounded reduction over the batch; localCheckpoint because
-    // both halves consume it (and the upsert half must not re-plan a
-    // frame whose input the delete half just versioned)
-    val latest = batch
+    // one bounded reduction over the batch, checkpointed because both
+    // halves consume it (and the upsert half must not re-plan a frame
+    // whose input the delete half just versioned)
+    val latest = Checkpoints.checkpoint(batch
       .groupBy(col(keyCol).as("__k"))
       .agg(max_by(
         struct(col(tc).as("t"), struct(cols.map(col): _*).as("r")),
         struct(col(vc), pri.as("p"))).as("m"))
-      .select(col("m.t").as("__t"), col("m.r.*"))
-      .localCheckpoint(true)
+      .select(col("m.t").as("__t"), col("m.r.*")))
     val dels = latest.filter(col("__t") === "delete").select(col(keyCol))
     val ups = latest.filter(col("__t") =!= "delete").drop("__t")
     // ONE slice-count job over the checkpointed reduction gates both

@@ -170,12 +170,12 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3)))
       .toSeq
-    assert(viaSql == Manifest.fileInventory(tbl).sortBy(_._1))
+    assert(viaSql == Manifest.at(tbl).fileInventory.sortBy(_._1))
     assert(viaSql.map(_._2).toSet == Set(1L, 2L),
       "adding versions: one file from each append")
     assert(viaSql.map(_._4).sum == 1L, "one DV'd position")
     val logical = viaSql.flatMap(_._3).sum - viaSql.map(_._4).sum
-    assert(Manifest.rowCount(tbl).contains(logical) &&
+    assert(Manifest.at(tbl).rowCount.contains(logical) &&
       Manifest.read(spark, tbl).count() == logical)
     // metadata tables serve VERSION AS OF (the Iceberg per-snapshot
     // convention): .files at v1 shows only v1's file with no DV, and
@@ -186,10 +186,10 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3)))
       .toSeq
-    assert(filesAsOf(1L) == Manifest.fileInventory(tbl, 1L).sortBy(_._1))
+    assert(filesAsOf(1L) == Manifest.at(tbl, 1L).fileInventory.sortBy(_._1))
     assert(filesAsOf(1L).size == 1 && filesAsOf(1L).head._4 == 0L,
       "v1: one file, no DV yet")
-    assert(filesAsOf(2L) == Manifest.fileInventory(tbl, 2L).sortBy(_._1))
+    assert(filesAsOf(2L) == Manifest.at(tbl, 2L).fileInventory.sortBy(_._1))
     val d1 = spark.sql(
       "SELECT * FROM graft.t5.detail VERSION AS OF 1").collect().head
     assert(d1.getLong(0) == 1L && d1.getLong(1) == 1L &&
@@ -300,9 +300,9 @@ class ExtensionsSpec extends SparkSpec {
     assert(pairs(sqlT) == pairs(apiT), "SQL DELETE ≡ API DELETE")
     // the commit shape is merge-on-read: no data file moved, DV lines
     // published, history reads as a delete
-    assert(Manifest.files(sqlT) == Manifest.files(sqlT, 1L),
+    assert(Manifest.at(sqlT).files == Manifest.at(sqlT, 1L).files,
       "zero rewrites — the DELETE must publish only deletion vectors")
-    assert(Manifest.deletionVectors(sqlT).nonEmpty)
+    assert(Manifest.at(sqlT).dv.nonEmpty)
     assert(Manifest.history(spark, sqlT).last.change_type == "delete")
     assert(Manifest.history(spark, sqlT).last.rows_removed == 4L)
     // UPDATE: SQL vs API, with an int literal cast onto the bigint
@@ -341,11 +341,11 @@ class ExtensionsSpec extends SparkSpec {
     val detail = spark.sql(s"SELECT * FROM graft.`$sqlT`.detail")
       .collect().head
     assert(detail.getLong(0) == Manifest.version(sqlT))
-    assert(detail.getLong(1) == Manifest.files(sqlT).size.toLong)
+    assert(detail.getLong(1) == Manifest.at(sqlT).files.size.toLong)
     assert(detail.getLong(2) ==
       Manifest.read(spark, sqlT).count(), "metadata rows ≡ real count")
     assert(detail.getLong(3) ==
-      Manifest.deletionVectors(sqlT).values.map(_._2).sum)
+      Manifest.at(sqlT).dv.values.map(_._2).sum)
     assert(detail.getLong(5) == 1L, "the v_nonneg constraint counts")
     // MERGE INTO (upsert-by-key): SQL ≡ the Merge.upsert API — updates
     // replace matched keys, unmatched keys insert
@@ -403,9 +403,9 @@ class ExtensionsSpec extends SparkSpec {
       Seq(3L, 7L, 11L).toDF("id"), "id")
     assert(pairs(sqlT) == pairs(apiT), "SQL DELETE-IN ≡ API deleteKeysDv")
     // MoR commit shape earned: no data file moved, DVs published
-    assert(Manifest.files(sqlT) == Manifest.files(sqlT, 1L),
+    assert(Manifest.at(sqlT).files == Manifest.at(sqlT, 1L).files,
       "zero rewrites — only deletion vectors publish")
-    assert(Manifest.deletionVectors(sqlT).nonEmpty)
+    assert(Manifest.at(sqlT).dv.nonEmpty)
     assert(Manifest.history(spark, sqlT).last.change_type == "delete")
     // idempotent replay: the same statement hides nothing new
     assert(spark.sql(stmt).collect().head.getLong(0) == 0L)
@@ -483,9 +483,9 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows(sqlT) == rows(apiT), "SQL INSERT ≡ API append")
     // commit shape: a PURE APPEND — v1's files all carried, history says
     // append, and the pre-insert version still time-travels
-    assert(Manifest.files(sqlT).toSet
-      .intersect(Manifest.files(sqlT, 1L).toSet) ==
-      Manifest.files(sqlT, 1L).toSet)
+    assert(Manifest.at(sqlT).files.toSet
+      .intersect(Manifest.at(sqlT, 1L).files.toSet) ==
+      Manifest.at(sqlT, 1L).files.toSet)
     assert(Manifest.history(spark, sqlT).last.change_type == "append")
     assert(Manifest.read(spark, sqlT, 1L).count() == 20L)
     // explicit column list: reorder + fill unnamed columns with null
@@ -546,9 +546,9 @@ class ExtensionsSpec extends SparkSpec {
     Merge.deleteKeysDv(spark, mdApi, Seq(3L, 7L, 11L, 99L).toDF("id"),
       "id")
     assert(rows(mdSql) == rows(mdApi), "SQL MERGE-DELETE ≡ API erasure")
-    assert(Manifest.files(mdSql) == Manifest.files(mdSql, 1L),
+    assert(Manifest.at(mdSql).files == Manifest.at(mdSql, 1L).files,
       "zero rewrites — deletion vectors only")
-    assert(Manifest.deletionVectors(mdSql).nonEmpty)
+    assert(Manifest.at(mdSql).dv.nonEmpty)
     assert(Manifest.history(spark, mdSql).last.change_type == "delete")
     // a replayed request set matches nothing: idempotent by construction
     assert(spark.sql(
@@ -573,13 +573,13 @@ class ExtensionsSpec extends SparkSpec {
     // INSERT into a DV-CARRYING table (the DSv2 AppendData path — a
     // DV-marked target never falls back to V1): appends land, deleted
     // rows stay hidden
-    assert(Manifest.deletionVectors(mdSql).nonEmpty, "precondition")
+    assert(Manifest.at(mdSql).dv.nonEmpty, "precondition")
     val insDv = spark.sql(
       s"INSERT INTO graft.`$mdSql` VALUES (500, 5000)")
     assert(insDv.collect().head.getLong(0) == 1L)
     assert(rows(mdSql).contains((500L, 5000L)))
     assert(!rows(mdSql).exists(_._1 == 3L), "DV'd rows stay hidden")
-    assert(Manifest.deletionVectors(mdSql).nonEmpty,
+    assert(Manifest.at(mdSql).dv.nonEmpty,
       "append inherits the DV state")
     // INSERT OVERWRITE on the DV table = the replace commit (whole
     // state swaps; a partial overwrite condition would refuse)
@@ -587,7 +587,7 @@ class ExtensionsSpec extends SparkSpec {
       s"INSERT OVERWRITE graft.`$mdSql` VALUES (1, 10), (2, 20)")
     assert(owDv.collect().head.getLong(0) == 2L)
     assert(rows(mdSql) == Set((1L, 10L), (2L, 20L)))
-    assert(Manifest.deletionVectors(mdSql).isEmpty,
+    assert(Manifest.at(mdSql).dv.isEmpty,
       "replace drops the DV state with the files")
   }
 
@@ -634,10 +634,10 @@ class ExtensionsSpec extends SparkSpec {
       Some(col("v") >= 60L))
     assert(pairs(sqlT) == pairs(apiT),
       "SQL conditional partial MERGE-UPDATE ≡ API mergeMatchedDv")
-    assert(Manifest.files(sqlT).filter(_.contains("b000001")) ==
-      Manifest.files(sqlT, 1L).filter(_.contains("b000001")),
+    assert(Manifest.at(sqlT).files.filter(_.contains("b000001")) ==
+      Manifest.at(sqlT, 1L).files.filter(_.contains("b000001")),
       "MoR: the original files carry, only update images add")
-    assert(Manifest.deletionVectors(sqlT).nonEmpty)
+    assert(Manifest.at(sqlT).dv.nonEmpty)
     // conditional DELETE on a source-side flag
     Seq((2L, 1L), (3L, 0L), (9L, 1L)).toDF("id", "flag")
       .createOrReplaceTempView("mm_req")
@@ -698,7 +698,7 @@ class ExtensionsSpec extends SparkSpec {
     val t1 = s"$root/ddl_t1"
     spark.sql(s"CREATE TABLE graft.`$t1` (id BIGINT, v STRING)")
     assert(Manifest.version(t1) == 1L)
-    assert(Manifest.schemaOf(t1).get.fieldNames.toSeq == Seq("id", "v"))
+    assert(Manifest.at(t1).schema.fieldNames.toSeq == Seq("id", "v"))
     assert(Manifest.read(spark, t1).count() == 0L)
     spark.sql(s"INSERT INTO graft.`$t1` VALUES (1, 'a'), (2, 'b')")
     assert(Manifest.read(spark, t1).count() == 2L)
@@ -744,7 +744,7 @@ class ExtensionsSpec extends SparkSpec {
     // pre-ALTER version still time-travels with its own schema
     val vBefore = Manifest.version(t1)
     spark.sql(s"ALTER TABLE graft.`$t1` ADD COLUMNS (tag STRING)")
-    assert(Manifest.schemaOf(t1).get.fieldNames.toSeq ==
+    assert(Manifest.at(t1).schema.fieldNames.toSeq ==
       Seq("id", "v", "tag"))
     assert(Manifest.version(t1) == vBefore + 1)
     assert(spark.sql(s"SELECT * FROM graft.`$t1` WHERE tag IS NULL")
@@ -752,7 +752,7 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.`$t1` VALUES (3, 'c', 'fresh')")
     assert(spark.sql(
       s"SELECT * FROM graft.`$t1` WHERE tag = 'fresh'").count() == 1L)
-    assert(Manifest.schemaOf(t1, vBefore).get.fieldNames.length == 2,
+    assert(Manifest.at(t1, vBefore).schema.fieldNames.length == 2,
       "time travel keeps the pre-ALTER schema")
     // refusals: NOT NULL add, DROP COLUMN, duplicate add
     val e5 = intercept[Exception](spark.sql(
@@ -788,13 +788,13 @@ class ExtensionsSpec extends SparkSpec {
     val e0 = intercept[Exception](spark.sql(
       s"ALTER TABLE graft.`$t1` ADD CONSTRAINT v_big CHECK (v >= 100)"))
     assert(msgs(e0).nonEmpty)
-    assert(Manifest.constraintsOf(t1).isEmpty,
+    assert(Manifest.at(t1).constraints.isEmpty,
       "a failed ADD CONSTRAINT must record nothing")
     // a holding constraint records, and gates every later commit —
     // SQL INSERT and API commit alike
     spark.sql(s"ALTER TABLE graft.`$t1` ADD CONSTRAINT v_nonneg " +
       "CHECK (v >= 0)")
-    assert(Manifest.constraintsOf(t1) == Map("v_nonneg" -> "v >= 0"))
+    assert(Manifest.at(t1).constraints == Map("v_nonneg" -> "v >= 0"))
     val e1 = intercept[Exception](spark.sql(
       s"INSERT INTO graft.`$t1` VALUES (100, -5)"))
     assert(msgs(e1).exists(_.contains("v_nonneg")), msgs(e1))
@@ -806,7 +806,7 @@ class ExtensionsSpec extends SparkSpec {
     // DROP CONSTRAINT re-opens; IF EXISTS no-ops; missing refuses;
     // CASCADE refuses (no dependency graph to cascade through)
     spark.sql(s"ALTER TABLE graft.`$t1` DROP CONSTRAINT v_nonneg")
-    assert(Manifest.constraintsOf(t1).isEmpty)
+    assert(Manifest.at(t1).constraints.isEmpty)
     spark.sql(s"INSERT INTO graft.`$t1` VALUES (100, -5)")
     assert(Manifest.read(spark, t1).count() == 11L)
     spark.sql(s"ALTER TABLE graft.`$t1` DROP CONSTRAINT IF EXISTS nope")
@@ -823,11 +823,11 @@ class ExtensionsSpec extends SparkSpec {
     val t2 = s"$root/c_t2"
     Manifest.commit(Seq((1, 1.5f), (2, 2.5f)).toDF("i", "f")
       .coalesce(1), t2)
-    val filesBefore = Manifest.files(t2)
+    val filesBefore = Manifest.at(t2).files
     spark.sql(s"ALTER TABLE graft.`$t2` ALTER COLUMN i TYPE BIGINT")
-    assert(Manifest.schemaOf(t2).get("i").dataType ==
+    assert(Manifest.at(t2).schema("i").dataType ==
       org.apache.spark.sql.types.LongType)
-    assert(Manifest.files(t2) == filesBefore,
+    assert(Manifest.at(t2).files == filesBefore,
       "widening is metadata-only — zero data files moved")
     assert(Manifest.read(spark, t2).select("i").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L),
@@ -839,7 +839,7 @@ class ExtensionsSpec extends SparkSpec {
       s"ALTER TABLE graft.`$t2` ALTER COLUMN f TYPE INT"))
     assert(msgs(e4).exists(m => m.contains("NOT_SUPPORTED_CHANGE_COLUMN")
       || m.contains("lossless") || m.contains("widen")), msgs(e4))
-    assert(Manifest.schemaOf(t2).get("f").dataType ==
+    assert(Manifest.at(t2).schema("f").dataType ==
       org.apache.spark.sql.types.FloatType, "nothing published")
     // SQL REPLACE TABLE is a REDEFINITION: the replaced table's
     // constraints do NOT carry over (pre-fix this aborted on the
@@ -848,7 +848,7 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE graft.`$t3` AS SELECT 1L AS id, 5L AS v")
     Manifest.addConstraint(spark, t3, "v_pos", "v > 0")
     spark.sql(s"CREATE OR REPLACE TABLE graft.`$t3` AS SELECT 2L AS id")
-    assert(Manifest.constraintsOf(t3).isEmpty,
+    assert(Manifest.at(t3).constraints.isEmpty,
       "SQL REPLACE starts a fresh constraint slate")
     assert(Manifest.read(spark, t3).collect().map(_.getLong(0)).toSeq ==
       Seq(2L))
@@ -856,7 +856,7 @@ class ExtensionsSpec extends SparkSpec {
     // OPTIMIZE/restore shape) keeps inheriting — the s24 contract
     Manifest.addConstraint(spark, t3, "id_pos", "id > 0")
     Manifest.commit(Seq(3L).toDF("id"), t3, replace = true)
-    assert(Manifest.constraintsOf(t3) == Map("id_pos" -> "id > 0"),
+    assert(Manifest.at(t3).constraints == Map("id_pos" -> "id > 0"),
       "the API replace keeps the constraint set")
   }
 
@@ -881,14 +881,14 @@ class ExtensionsSpec extends SparkSpec {
         .map(j => (j.toLong, j * 2L)).toDF("id", "v").coalesce(1),
         t1, statsCols = Seq("id"))
     Merge.deleteWhereDv(spark, t1, col("id") % 7 === 0)
-    assert(Manifest.deletionVectors(t1).nonEmpty)
+    assert(Manifest.at(t1).dv.nonEmpty)
     // OPTIMIZE (bare): whole-table bin-pack into one file, DV
     // materialized away, stats re-harvested, flagged data_change=false
     val opt = spark.sql(s"OPTIMIZE graft.`$t1`").collect().head
     assert(opt.getLong(1) == 4L && opt.getLong(2) == 0L)
-    assert(Manifest.files(t1).size == 1)
-    assert(Manifest.deletionVectors(t1).isEmpty, "OPTIMIZE absorbs DVs")
-    assert(Manifest.fileStats(t1).values.exists(_.contains("id")),
+    assert(Manifest.at(t1).files.size == 1)
+    assert(Manifest.at(t1).dv.isEmpty, "OPTIMIZE absorbs DVs")
+    assert(Manifest.at(t1).fileStats.values.exists(_.contains("id")),
       "previously stats-bearing columns re-harvest")
     assert(Manifest.history(spark, t1)
       .find(_.version == opt.getLong(0)).exists(!_.data_change))
@@ -905,14 +905,14 @@ class ExtensionsSpec extends SparkSpec {
       .collect().head
     assert(ow.getLong(1) == 2L && ow.getLong(2) == 2L,
       "only the stats-intersecting files rewrite")
-    assert(Manifest.files(t2).size == 3)
+    assert(Manifest.at(t2).files.size == 3)
     // OPTIMIZE ZORDER BY (single column = range clustering): the
     // compacted t1 re-clusters into 2 files and a half-range probe
     // prunes structurally; WHERE + ZORDER together refuse loudly
     val zo = spark.sql(
       s"OPTIMIZE graft.`$t1` ZORDER BY (id) INTO 2 FILES")
       .collect().head
-    assert(zo.getLong(1) == 1L && Manifest.files(t1).size == 2)
+    assert(zo.getLong(1) == 1L && Manifest.at(t1).files.size == 2)
     val (_, zKept, zSkipped) = Manifest.readPruned(spark, t1,
       "id", 0.0, 9.0)
     assert(zKept == 1 && zSkipped == 1,
@@ -937,12 +937,12 @@ class ExtensionsSpec extends SparkSpec {
       .collect().head
     assert(res.getLong(1) == junkV - 1)
     assert(dataFiles(t2) == before, "restore is metadata-only")
-    assert(Manifest.files(t2) == Manifest.files(t2, junkV - 1))
+    assert(Manifest.at(t2).files == Manifest.at(t2, junkV - 1).files)
     assert(Manifest.read(spark, t2).filter(col("id") === 999L).count()
       == 0L)
     // RESTORE TO TIMESTAMP AS OF resolves through the adjusted stamps
     val ts = new java.sql.Timestamp(
-      Manifest.commitTime(t2, junkV - 1)).toString
+      Manifest.at(t2, junkV - 1).commitTime).toString
     val res2 = spark.sql(
       s"RESTORE graft.`$t2` TO TIMESTAMP AS OF '$ts'").collect().head
     assert(res2.getLong(1) >= junkV - 1)
@@ -954,7 +954,7 @@ class ExtensionsSpec extends SparkSpec {
     val vac = spark.sql(s"VACUUM graft.`$t2` RETAIN 2 VERSIONS")
       .collect().head
     assert(vac.getLong(0) > 0L, "versions beyond the horizon dropped")
-    assert(Manifest.files(t2, 2L).nonEmpty, "tagged version retained")
+    assert(Manifest.at(t2, 2L).files.nonEmpty, "tagged version retained")
     assert(Manifest.read(spark, t2).count() == 40L,
       "head reads exactly after the sweep")
     // a non-graft catalog refuses loudly at run time

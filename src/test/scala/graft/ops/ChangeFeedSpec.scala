@@ -126,12 +126,12 @@ class ChangeFeedSpec extends SparkSpec {
       .sorted.toSeq == Seq((2L, 20)))
     // a pure source compaction advances the watermark WITHOUT
     // rewriting the replica: its file list must be carried forward
-    val filesBefore = Manifest.files(rep).toSet
+    val filesBefore = Manifest.at(rep).files.toSet
     Manifest.commit(Manifest.read(spark, src).repartition(1), src,
       replace = true)
     assert(sync() == (4L, 1))
     assert(ChangeFeed.replicaSourceVersion(rep) == 4L)
-    assert(filesBefore.subsetOf(Manifest.files(rep).toSet),
+    assert(filesBefore.subsetOf(Manifest.at(rep).files.toSet),
       "compaction sync must not rewrite replica files")
     assert(Manifest.read(spark, rep).as[(Long, Int)].collect().sorted
       .toSeq == oneShot)
@@ -155,9 +155,9 @@ class ChangeFeedSpec extends SparkSpec {
     val rep2 = freshTable() + "/replica2"
     ChangeFeed.syncReplica(spark, src, rep2, keyCols = Seq.empty)
     // GDPR erasure: ids 2 and 4 hide behind a DV — zero files move
-    val filesBefore = Manifest.files(src)
+    val filesBefore = Manifest.at(src).files
     Merge.deleteKeysDv(spark, src, Seq(2L, 4L).toDF("id"), "id")   // v3
-    assert(Manifest.files(src) == filesBefore)
+    assert(Manifest.at(src).files == filesBefore)
     assert(sync() == (3L, 1))
     def repRows() = Manifest.read(spark, rep).as[(Long, Int)]
       .collect().sorted.toSeq
@@ -168,9 +168,9 @@ class ChangeFeedSpec extends SparkSpec {
     // an EMPTY feed, so the erased rows could never leave later
     Manifest.commit(Manifest.read(spark, src).repartition(1), src,
       replace = true)                                              // v4
-    val repFiles = Manifest.files(rep).toSet
+    val repFiles = Manifest.at(rep).files.toSet
     assert(sync() == (4L, 1))
-    assert(repFiles.subsetOf(Manifest.files(rep).toSet),
+    assert(repFiles.subsetOf(Manifest.at(rep).files.toSet),
       "the absorption rewrite must sync as a watermark-only append")
     assert(repRows() == Seq((1L, 10), (3L, 30), (5L, 50)))
     // keyless sync cannot apply a DV step: loud, not silent

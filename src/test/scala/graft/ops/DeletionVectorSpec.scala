@@ -30,20 +30,20 @@ class DeletionVectorSpec extends SparkSpec {
     "no-op (already-hidden rows cannot re-match)") {
     val tbl = freshTable()
     seed(tbl)
-    val before = Manifest.files(tbl)
+    val before = Manifest.at(tbl).files
     val st = Merge.deleteWhereDv(spark, tbl,
       col("id") >= 20L && col("id") < 40L && col("grp") === 0,
       pruneRange = Some(("id", 20.0, 39.0)))
     assert(st.positionsAdded == 10L && st.filesCandidates == 1 &&
       st.filesWithDv == 1, st.toString)
-    assert(Manifest.files(tbl) == before, "a MoR delete moves no files")
+    assert(Manifest.at(tbl).files == before, "a MoR delete moves no files")
     assert(Manifest.version(tbl) == 5L)
     val got = Manifest.read(spark, tbl).select("id").as[Long]
       .collect().sorted.toSeq
     assert(got == (0L until 80L).filterNot(i =>
       i >= 20 && i < 40 && i % 2 == 0))
     // the DV mapping is internal bookkeeping, not user metadata
-    assert(Manifest.meta(tbl).isEmpty)
+    assert(Manifest.at(tbl).meta.isEmpty)
     // idempotent: the hidden rows cannot match again — nothing publishes
     val again = Merge.deleteWhereDv(spark, tbl,
       col("id") >= 20L && col("id") < 40L && col("grp") === 0)
@@ -52,7 +52,7 @@ class DeletionVectorSpec extends SparkSpec {
     // dv.* lines carry position counts, so the metadata-only answer
     // subtracts them — still zero data I/O)
     assert(Manifest.read(spark, tbl).count() == 70L)
-    assert(Manifest.rowCount(tbl).contains(70L))
+    assert(Manifest.at(tbl).rowCount.contains(70L))
   }
 
   test("rowCount is DV-correct at head AND on time-traveled versions " +
@@ -64,7 +64,7 @@ class DeletionVectorSpec extends SparkSpec {
     Merge.deleteWhereDv(spark, tbl, col("id") < 5L)              // v5
     Merge.deleteWhereDv(spark, tbl, col("id") < 8L)              // v6
     for (v <- 1L to 6L)
-      assert(Manifest.rowCount(tbl, v)
+      assert(Manifest.at(tbl, v).rowCount
           .contains(Manifest.read(spark, tbl, v).count()),
         s"rowCount at v$v must equal the DV-applied read")
     val h = Manifest.history(spark, tbl)
@@ -87,7 +87,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(r.rows_removed == 20L && r.rows_added == 11L,
       "the touched file's 20 physical rows out, its 11 survivors in " +
         s"(8 DV'd + 1 deleted): $r")
-    assert(Manifest.rowCount(tbl)
+    assert(Manifest.at(tbl).rowCount
       .contains(Manifest.read(spark, tbl).count()))
   }
 
@@ -99,18 +99,18 @@ class DeletionVectorSpec extends SparkSpec {
     val s1 = Merge.deleteWhereDv(spark, tbl, col("id") === 21L) // v5
     val s2 = Merge.deleteWhereDv(spark, tbl, col("id") === 22L) // v6
     assert(s1.positionsAdded == 1L && s2.positionsAdded == 1L)
-    assert(Manifest.deletionVectors(tbl).values.map(_._2).sum == 2L,
+    assert(Manifest.at(tbl).dv.values.map(_._2).sum == 2L,
       "the second DV must carry the first's position forward")
     assert(Manifest.read(spark, tbl).count() == 78L)
     assert(Manifest.read(spark, tbl, 5L).count() == 79L)
     assert(Manifest.read(spark, tbl, 4L).count() == 80L)
     // restore to the pre-delete state: the DVs must NOT survive
     val rv = Manifest.restore(tbl, 4L) // v7
-    assert(Manifest.deletionVectors(tbl).isEmpty)
+    assert(Manifest.at(tbl).dv.isEmpty)
     assert(Manifest.read(spark, tbl).count() == 80L)
     // restore forward to the one-delete state: exactly v5's DV returns
     Manifest.restore(tbl, 5L) // v8
-    assert(Manifest.deletionVectors(tbl).values.map(_._2).sum == 1L)
+    assert(Manifest.at(tbl).dv.values.map(_._2).sum == 1L)
     assert(Manifest.read(spark, tbl).count() == 79L)
     assert(rv == 7L)
   }
@@ -141,7 +141,7 @@ class DeletionVectorSpec extends SparkSpec {
     val tbl = freshTable()
     seed(tbl)
     Merge.deleteWhereDv(spark, tbl, col("id") === 5L || col("id") === 25L)
-    assert(Manifest.deletionVectors(tbl).size == 2)
+    assert(Manifest.at(tbl).dv.size == 2)
     // readPruned: the stats-kept file's DV still applies
     val (pruned, kept, _) = Manifest.readPruned(spark, tbl, "id", 0, 19)
     assert(kept == 1 &&
@@ -152,9 +152,9 @@ class DeletionVectorSpec extends SparkSpec {
     val stats = Merge.upsert(spark, tbl,
       Seq((21L, 9, 999)).toDF("id", "grp", "v"), Seq("id"))
     assert(stats.filesRewritten == 1)
-    val dvAfter = Manifest.deletionVectors(tbl)
+    val dvAfter = Manifest.at(tbl).dv
     assert(dvAfter.size == 1 && dvAfter.keySet.forall(f =>
-      Manifest.files(tbl).contains(f)),
+      Manifest.at(tbl).files.contains(f)),
       s"rewritten file's mapping must drop: $dvAfter")
     val ids = Manifest.read(spark, tbl).select("id").as[Long]
       .collect().sorted.toSeq
@@ -163,7 +163,7 @@ class DeletionVectorSpec extends SparkSpec {
       .filter(col("id") === 21L).select("v").as[Int].head() == 999)
     // OPTIMIZE WHERE over file 1's range absorbs the remaining DV
     Layout.optimizeWhere(spark, tbl, "id", 0.0, 19.0)
-    assert(Manifest.deletionVectors(tbl).isEmpty)
+    assert(Manifest.at(tbl).dv.isEmpty)
     assert(Manifest.read(spark, tbl).select("id").as[Long]
       .collect().sorted.toSeq == ids)
     // pre-optimize versions still time-travel with their DV state
@@ -208,14 +208,14 @@ class DeletionVectorSpec extends SparkSpec {
     "no-match predicate publishes nothing") {
     val tbl = freshTable()
     seed(tbl) // 4 files, ids 0..79, v == id
-    val before = Manifest.files(tbl)
+    val before = Manifest.at(tbl).files
     val st = Merge.updateWhereDv(spark, tbl,
       col("id") >= 20L && col("id") < 25L,
       Seq("v" -> (col("v") + 1000)),
       pruneRange = Some(("id", 20.0, 24.0)), statsCols = Seq("id"))
     assert(st.positionsAdded == 5L && st.filesCandidates == 1,
       st.toString)
-    assert(before.toSet.subsetOf(Manifest.files(tbl).toSet),
+    assert(before.toSet.subsetOf(Manifest.at(tbl).files.toSet),
       "MoR update rewrites NO existing file — images only append")
     assert(Manifest.version(tbl) == 5L)
     val got = Manifest.read(spark, tbl).select("id", "v")
@@ -227,7 +227,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(Manifest.read(spark, tbl, 4L).filter(col("id") === 22L)
       .select("v").as[Int].head() == 22)
     // metadata surfaces: logical count unchanged, audit reads update
-    assert(Manifest.rowCount(tbl).contains(80L))
+    assert(Manifest.at(tbl).rowCount.contains(80L))
     val h = Manifest.history(spark, tbl).find(_.version == 5L).get
     assert(h.change_type == "update" &&
       h.rows_added == 5L && h.rows_removed == 5L, h.toString)
@@ -271,7 +271,7 @@ class DeletionVectorSpec extends SparkSpec {
       Seq("user-3", "user-15").toDF("uid"), "uid")
     assert(st.positionsAdded == 2L, st.toString)
     assert(st.filesCandidates == 2, "a non-numeric key cannot prune")
-    assert(Manifest.files(tbl).size == 2, "still zero data files moved")
+    assert(Manifest.at(tbl).files.size == 2, "still zero data files moved")
     val got = Manifest.read(spark, tbl).select("uid").as[String]
       .collect().toSet
     assert(!got.contains("user-3") && !got.contains("user-15") &&
@@ -335,7 +335,7 @@ class DeletionVectorSpec extends SparkSpec {
     // REBASE over a rewrite of an UNTOUCHED file: the interim winner
     // compacts file 4 (ids 60..79, DV-free) away; the loser deletes
     // from file 1 — both land
-    val f4 = Manifest.fileStats(tbl).collect {
+    val f4 = Manifest.at(tbl).fileStats.collect {
       case (f, s) if s("id")._1 >= 59.0 => f
     }.toSeq
     assert(f4.size == 1)
@@ -355,7 +355,7 @@ class DeletionVectorSpec extends SparkSpec {
     // ABORT when the TOUCHED file is rewritten away mid-window (its
     // positions would bind to a dead file): winner compacts file 2,
     // loser deletes from it
-    val f2 = Manifest.fileStats(tbl).collect {
+    val f2 = Manifest.at(tbl).fileStats.collect {
       case (f, s) if s("id")._1 >= 19.0 && s("id")._2 <= 40.0 => f
     }.toSeq
     assert(f2.size == 1, s"expected file 2, got $f2")
@@ -436,10 +436,10 @@ class DeletionVectorSpec extends SparkSpec {
       6L -> Set(1L, 21L, 22L, 45L, 60L),
       7L -> Set(1L, 21L, 22L, 45L, 60L))
     def applied(v: Long, limit: Long): (Set[Row], String) = {
-      val base = spark.read.schema(Manifest.schemaOf(tbl, v).get)
-        .parquet(Manifest.files(tbl, v)
+      val base = spark.read.schema(Manifest.at(tbl, v).schema)
+        .parquet(Manifest.at(tbl, v).files
           .map(f => Paths.get(tbl).resolve(f).toString): _*)
-      val df = Manifest.dvJoin(spark, tbl, Manifest.deletionVectors(tbl, v),
+      val df = Manifest.dvJoin(spark, tbl, Manifest.at(tbl, v).dv,
         Manifest.withPos(base), limit).drop("__dv_f", "__dv_p")
       (df.collect().toSet, df.queryExecution.executedPlan.toString)
     }

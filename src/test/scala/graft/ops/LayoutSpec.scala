@@ -86,7 +86,7 @@ class LayoutSpec extends SparkSpec {
     val (v, rewrote, carried) =
       Layout.optimizeWhere(spark, tbl, "k", 0.0, 13.0)
     assert(rewrote == 3 && carried == 1, s"($rewrote, $carried)")
-    assert(Manifest.files(tbl).size == 2) // 1 merged + 1 carried
+    assert(Manifest.at(tbl).files.size == 2) // 1 merged + 1 carried
     assert(Manifest.read(spark, tbl).collect().map(_.toSeq).toSet ==
       before, "optimize must never change content")
     // re-recorded stats keep pruning, stray now covered
@@ -112,14 +112,14 @@ class LayoutSpec extends SparkSpec {
         Seq.tabulate(50)(j => (i * 50L + j, s"v$i$j"))
           .toDF("id", "s").coalesce(1), tbl, statsCols = Seq("id"))
     Merge.deleteWhereDv(spark, tbl, col("id") % 10 === 3L)
-    assert(Manifest.deletionVectors(tbl).nonEmpty)
+    assert(Manifest.at(tbl).dv.nonEmpty)
     val beforeRows = Manifest.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val (v, rewrote, carried) = Layout.compact(spark, tbl, 2)
     assert(rewrote == 4 && carried == 0)
-    assert(Manifest.files(tbl, v).size == 2)
-    assert(Manifest.deletionVectors(tbl).isEmpty, "DVs absorbed")
-    assert(Manifest.fileStats(tbl).values.exists(_.contains("id")),
+    assert(Manifest.at(tbl, v).files.size == 2)
+    assert(Manifest.at(tbl).dv.isEmpty, "DVs absorbed")
+    assert(Manifest.at(tbl).fileStats.values.exists(_.contains("id")),
       "stats re-harvested for the previously stats-bearing column")
     assert(Manifest.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet == beforeRows,
@@ -128,12 +128,12 @@ class LayoutSpec extends SparkSpec {
       .find(_.version == v).exists(!_.data_change))
     // compactAuto: target = total recorded bytes / 3 → 3-4 files,
     // planned purely from #filebytes metadata
-    val total = Manifest.fileBytes(tbl).values.sum
+    val total = Manifest.at(tbl).bytes.values.sum
     assert(total > 0L, "the compacted files recorded their bytes")
     val (v2, rewrote2, _) = Layout.compactAuto(spark, tbl,
       targetFileBytes = total / 3)
     assert(rewrote2 == 2)
-    val nOut = Manifest.files(tbl, v2).size
+    val nOut = Manifest.at(tbl, v2).files.size
     assert(nOut >= 3 && nOut <= 4,
       s"auto sizing must plan ~ceil(bytes/target) files, got $nOut")
     assert(Manifest.read(spark, tbl).collect()
@@ -164,8 +164,8 @@ class LayoutSpec extends SparkSpec {
     // 1-D: range clustering on x
     val (v1, rw1, _) = Layout.optimizeZOrder(spark, tbl, Seq("x"),
       numFiles = 4)
-    assert(rw1 == 4 && Manifest.files(tbl, v1).size == 4)
-    assert(Manifest.deletionVectors(tbl).isEmpty, "DVs absorbed")
+    assert(rw1 == 4 && Manifest.at(tbl, v1).files.size == 4)
+    assert(Manifest.at(tbl).dv.isEmpty, "DVs absorbed")
     val (_, kept1, skipped1) = Manifest.readPruned(spark, tbl,
       "x", 0.0, 15.0)
     assert(kept1 == 1 && skipped1 == 3,
@@ -176,11 +176,11 @@ class LayoutSpec extends SparkSpec {
     // all of y)
     val (v2, rw2, _) = Layout.optimizeZOrder(spark, tbl, Seq("x", "y"),
       numFiles = 16, bits = 6)
-    assert(rw2 == 4 && Manifest.files(tbl, v2).size == 16)
+    assert(rw2 == 4 && Manifest.at(tbl, v2).files.size == 16)
     def boxFiles(xlo: Double, xhi: Double, ylo: Double,
         yhi: Double): Int = {
-      val stats = Manifest.fileStats(tbl)
-      Manifest.files(tbl).count { f =>
+      val stats = Manifest.at(tbl).fileStats
+      Manifest.at(tbl).files.count { f =>
         stats.get(f).forall { cs =>
           cs.get("x").forall { case (mn, mx) => mx >= xlo && mn <= xhi } &&
           cs.get("y").forall { case (mn, mx) => mx >= ylo && mn <= yhi }

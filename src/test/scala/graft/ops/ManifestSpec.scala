@@ -170,11 +170,11 @@ class ManifestSpec extends SparkSpec {
     Manifest.commit(Seq(2).toDF("x"), tbl) // no meta
     Manifest.commit(Seq(3).toDF("x"), tbl,
       meta = Map("day" -> "2026-08-15", "src" -> "a=b")) // '=' in value ok
-    assert(Manifest.meta(tbl, 1L) == Map("day" -> "2026-08-14"))
-    assert(Manifest.meta(tbl, 2L) == Map.empty)
-    assert(Manifest.meta(tbl) == Map("day" -> "2026-08-15", "src" -> "a=b"))
+    assert(Manifest.at(tbl, 1L).meta == Map("day" -> "2026-08-14"))
+    assert(Manifest.at(tbl, 2L).meta == Map.empty)
+    assert(Manifest.at(tbl).meta == Map("day" -> "2026-08-15", "src" -> "a=b"))
     // meta lines never leak into the file list
-    assert(Manifest.files(tbl).forall(_.endsWith(".parquet")))
+    assert(Manifest.at(tbl).files.forall(_.endsWith(".parquet")))
     assert(Manifest.read(spark, tbl).as[Int].collect().sorted.toSeq ==
       Seq(1, 2, 3))
     intercept[IllegalArgumentException](Manifest.commit(
@@ -243,7 +243,7 @@ class ManifestSpec extends SparkSpec {
     assert(e.getMessage.contains("cannot change column"))
     Manifest.commit(Seq((5L, 9)).toDF("id", "x"), tbl, replace = true)
     assert(Manifest.read(spark, tbl).columns.toSeq == Seq("id", "x"))
-    assert(Manifest.schemaOf(tbl).get.fieldNames.toSeq == Seq("id", "x"))
+    assert(Manifest.at(tbl).schema.fieldNames.toSeq == Seq("id", "x"))
   }
 
   test("CHECK constraints: declared once, gate every later commit " +
@@ -256,34 +256,34 @@ class ManifestSpec extends SparkSpec {
       Manifest.addConstraint(spark, tbl, "big", "v > 15"))
     assert(e0.getMessage.contains("existing"))
     Manifest.addConstraint(spark, tbl, "positive", "v > 0")
-    assert(Manifest.constraintsOf(tbl) == Map("positive" -> "v > 0"))
+    assert(Manifest.at(tbl).constraints == Map("positive" -> "v > 0"))
     // a violating commit aborts loudly and publishes NOTHING
     val vBefore = Manifest.version(tbl)
-    val filesBefore = Manifest.files(tbl)
+    val filesBefore = Manifest.at(tbl).files
     val e = intercept[IllegalArgumentException](
       Manifest.commit(Seq((3L, -5), (4L, 40)).toDF("id", "v"), tbl))
     assert(e.getMessage.contains("positive") &&
       e.getMessage.contains("1 rows"))
     assert(Manifest.version(tbl) == vBefore)
-    assert(Manifest.files(tbl) == filesBefore)
+    assert(Manifest.at(tbl).files == filesBefore)
     // valid commits pass; the constraint survives a replace commit
     Manifest.commit(Seq((5L, 50)).toDF("id", "v"), tbl)
     Manifest.commit(Manifest.read(spark, tbl).repartition(1), tbl,
       replace = true)
-    assert(Manifest.constraintsOf(tbl) == Map("positive" -> "v > 0"))
+    assert(Manifest.at(tbl).constraints == Map("positive" -> "v > 0"))
     intercept[IllegalArgumentException](
       Manifest.commit(Seq((6L, 0)).toDF("id", "v"), tbl))
     // dropping the constraint lifts the gate
     Manifest.dropConstraint(spark, tbl, "positive")
-    assert(Manifest.constraintsOf(tbl).isEmpty)
+    assert(Manifest.at(tbl).constraints.isEmpty)
     Manifest.commit(Seq((6L, 0)).toDF("id", "v"), tbl)
     assert(Manifest.read(spark, tbl).count() == 4L)
     intercept[IllegalArgumentException](
       Manifest.dropConstraint(spark, tbl, "positive"))
   }
 
-  test("pre-schema-tracking manifests (no recorded schema) still read " +
-    "via footer inference") {
+  test("pre-schema-tracking manifests (no recorded schema) refuse " +
+    "loudly, naming the version") {
     val tbl = freshTable()
     Manifest.commit(Seq((1L, "a")).toDF("id", "s"), tbl)
     // strip the schema line, simulating a table written before tracking
@@ -291,9 +291,11 @@ class ManifestSpec extends SparkSpec {
     val kept = java.nio.file.Files.readAllLines(mf).toArray.map(_.toString)
       .filterNot(_.startsWith(s"#${Manifest.SchemaKey}="))
     java.nio.file.Files.write(mf, kept.mkString("\n").getBytes)
-    assert(Manifest.schemaOf(tbl).isEmpty)
-    assert(Manifest.read(spark, tbl).collect().map(_.getLong(0)).toSeq ==
-      Seq(1L))
+    // every publish path records the schema, so a manifest without one
+    // refuses like a pre-delta-log manifest — no footer inference
+    val e = intercept[IllegalStateException](Manifest.read(spark, tbl))
+    assert(e.getMessage.contains("manifest v1 ") &&
+      e.getMessage.contains(s"#${Manifest.SchemaKey}="), e.getMessage)
   }
 
   test("Materialize.refresh fails loudly when a replace commit severed " +
@@ -360,7 +362,7 @@ class ManifestSpec extends SparkSpec {
     Thread.sleep(25)
     Manifest.commit(Seq((2L, "b")).toDF("id", "s"), tbl)         // v2
     val t2 = System.currentTimeMillis()
-    assert(Manifest.commitTime(tbl, 1L) <= Manifest.commitTime(tbl, 2L))
+    assert(Manifest.at(tbl, 1L).commitTime <= Manifest.at(tbl, 2L).commitTime)
     assert(Manifest.versionAsOf(tbl, t1) == 1L)
     assert(Manifest.versionAsOf(tbl, t2) == 2L)
     assert(Manifest.versionAsOf(tbl, System.currentTimeMillis()) == 2L)
@@ -368,7 +370,7 @@ class ManifestSpec extends SparkSpec {
       Manifest.versionAsOf(tbl, t0))
     assert(e.getMessage.contains("no version"), e.getMessage)
     // the stamp is reserved: hidden from meta(), refused as user meta
-    assert(!Manifest.meta(tbl).contains(Manifest.CommitTsKey))
+    assert(!Manifest.at(tbl).meta.contains(Manifest.CommitTsKey))
     intercept[IllegalArgumentException](
       Manifest.commit(Seq((3L, "c")).toDF("id", "s"), tbl,
         meta = Map(Manifest.CommitTsKey -> "0")))
@@ -393,7 +395,7 @@ class ManifestSpec extends SparkSpec {
     val legacy = new String(java.nio.file.Files.readAllBytes(mf))
       .linesIterator.filterNot(_.startsWith("#committs=")).mkString("\n")
     java.nio.file.Files.write(mf, legacy.getBytes)
-    assert(Manifest.commitTime(tbl, 1L) ==
+    assert(Manifest.at(tbl, 1L).commitTime ==
       java.nio.file.Files.getLastModifiedTime(mf).toMillis)
   }
 
@@ -450,9 +452,9 @@ class ManifestSpec extends SparkSpec {
     } finally JFiles.move(hidden, data)
     // metadata-only COUNT(*): every version's exact row count from the
     // manifests, time travel included, across the cow delete
-    assert(Manifest.rowCount(tbl, 1L).contains(2L))
-    assert(Manifest.rowCount(tbl, 2L).contains(3L))
-    assert(Manifest.rowCount(tbl).contains(2L)) // v3: (3L,30) deleted
+    assert(Manifest.at(tbl, 1L).rowCount.contains(2L))
+    assert(Manifest.at(tbl, 2L).rowCount.contains(3L))
+    assert(Manifest.at(tbl).rowCount.contains(2L)) // v3: (3L,30) deleted
     // a PRE-STATS writer's manifest (no #filerows. lines): strip v1's
     // and history must fall back to reading exactly v1's file
     val mf = Paths.get(tbl, "_manifests", "v000001.txt")
@@ -466,7 +468,7 @@ class ManifestSpec extends SparkSpec {
       == expected)
     // rowCount refuses to guess for pre-stats files: v1's file is live
     // at v2 but its count is gone — None, caller falls back to a read
-    assert(Manifest.rowCount(tbl, 2L).isEmpty)
+    assert(Manifest.at(tbl, 2L).rowCount.isEmpty)
   }
 
   test("restore: rollback is a METADATA-ONLY commit (answers with the " +
@@ -486,15 +488,15 @@ class ManifestSpec extends SparkSpec {
     JFiles.move(data, hidden)
     val v = try Manifest.restore(tbl, 2L) finally JFiles.move(hidden, data)
     assert(v == 4L)
-    assert(Manifest.files(tbl, 4L) == Manifest.files(tbl, 2L))
+    assert(Manifest.at(tbl, 4L).files == Manifest.at(tbl, 2L).files)
     assert(Manifest.read(spark, tbl).count() == 2L)
-    assert(Manifest.meta(tbl).get("restore.of").contains("2"))
+    assert(Manifest.at(tbl).meta.get("restore.of").contains("2"))
     // the restored state carries the target's constraints forward
     intercept[IllegalArgumentException](
       Manifest.commit(Seq((9L, -1)).toDF("id", "v"), tbl))
     // the undone version stays readable (restore appends, never rewinds)
     assert(Manifest.read(spark, tbl, 3L).count() == 1L)
-    assert(Manifest.rowCount(tbl, 3L).contains(1L))
+    assert(Manifest.at(tbl, 3L).rowCount.contains(1L))
     // a vacuumed target version fails loudly
     val tbl2 = freshTable()
     Manifest.commit(Seq(1).toDF("x"), tbl2)
@@ -524,7 +526,7 @@ class ManifestSpec extends SparkSpec {
       .coalesce(1), tbl, statsCols = Seq("k"))
     // a commit WITHOUT stats: its file must stay unprunable
     Manifest.commit(Seq((100L, "e")).toDF("k", "s").coalesce(1), tbl)
-    val stats = Manifest.fileStats(tbl)
+    val stats = Manifest.at(tbl).fileStats
     assert(stats.size == 2) // only the stats-recorded files
     // recorded bounds are ulp-WIDENED (conservative even when a long
     // past 2^53 rounds under the double cast) — contain the true range,
@@ -534,7 +536,7 @@ class ManifestSpec extends SparkSpec {
       case ((lo, hi), (mn, mx)) => lo <= mn && hi >= mx &&
         mn - lo <= 2 * math.ulp(mn) && hi - mx <= 2 * math.ulp(mx) },
       bounds.toString)
-    assert(Manifest.meta(tbl).isEmpty) // filestats.* is internal
+    assert(Manifest.at(tbl).meta.isEmpty) // filestats.* is internal
     // probe [4, 9]: file 1 overlaps at its max (boundary kept), file 2
     // is disjoint (skipped), the stat-less file is kept conservatively
     val (df, kept, skipped) = Manifest.readPruned(spark, tbl, "k", 4, 9)
@@ -571,8 +573,8 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.version(tbl) == 3L)
     assert(Manifest.read(spark, tbl).as[Int].collect().sorted.toSeq ==
       Seq(1, 2, 100))
-    assert(Manifest.files(tbl, 2L).toSet.subsetOf(
-      Manifest.files(tbl, 3L).toSet), "rebase must carry the winner")
+    assert(Manifest.at(tbl, 2L).files.toSet.subsetOf(
+      Manifest.at(tbl, 3L).files.toSet), "rebase must carry the winner")
     val mdir = Paths.get(tbl, "_manifests")
     val tmpLeft = {
       val s = JFiles.list(mdir)
@@ -653,7 +655,7 @@ class ManifestSpec extends SparkSpec {
       statsCols = Seq("id"))
     // an operator resolves a compaction: targets + content AT rv
     val rv = Manifest.version(tbl)
-    val targets = Manifest.files(tbl, rv)
+    val targets = Manifest.at(tbl, rv).files
     val content = Manifest.read(spark, tbl, rv).coalesce(1)
     // ... and BEFORE it commits, a DV delete lands on the target file
     Merge.deleteWhereDv(spark, tbl, col("id") === 3L)
@@ -662,21 +664,20 @@ class ManifestSpec extends SparkSpec {
     // iteration sees the DV anchor moved since rv and aborts loudly
     val e = intercept[IllegalStateException](
       Manifest.commit(content, tbl, removeFiles = targets,
-        statsCols = Seq("id"), readVersion = rv))
+        statsCols = Seq("id"), base = Manifest.at(tbl, rv)))
     assert(e.getMessage.contains("concurrent commit"))
     assert(!Manifest.read(spark, tbl).select("id").as[Long]
       .collect().contains(3L), "the delete stays in force")
     // the retried op resolves fresh (DV-applied) and absorbs the DV
     val rv2 = Manifest.version(tbl)
     Manifest.commit(Manifest.read(spark, tbl, rv2).coalesce(1), tbl,
-      removeFiles = Manifest.files(tbl, rv2), statsCols = Seq("id"),
-      readVersion = rv2)
-    assert(Manifest.deletionVectors(tbl).isEmpty)
+      removeFiles = Manifest.at(tbl, rv2).files, statsCols = Seq("id"),
+      base = Manifest.at(tbl, rv2))
+    assert(Manifest.at(tbl).dv.isEmpty)
     assert(Manifest.read(spark, tbl).select("id").as[Long]
       .collect().sorted.toSeq == (0L until 10L).filterNot(_ == 3L))
     // a bogus read-version fails before any write
-    intercept[IllegalArgumentException](
-      Manifest.commit((0L until 3L).toDF("id"), tbl, readVersion = 99L))
+    intercept[IllegalArgumentException](Manifest.at(tbl, 99L))
   }
 
   test("mixed-writer stress across the FULL rebase matrix: concurrent " +
@@ -719,7 +720,7 @@ class ManifestSpec extends SparkSpec {
           // and MUST conflict (this content was read pre-DV)
           val rv = Manifest.version(tbl)
           val lo = i * 100.0; val hi = lo + 99.0
-          val targets = Manifest.fileStats(tbl, rv).collect {
+          val targets = Manifest.at(tbl, rv).fileStats.collect {
             case (f, st) if st.get("id").exists { case (mn, mx) =>
               mn >= lo - 1 && mx <= hi + 1 } => f
           }.toSeq
@@ -728,7 +729,7 @@ class ManifestSpec extends SparkSpec {
               Manifest.read(spark, tbl, rv)
                 .filter(col("id") >= lo && col("id") <= hi).coalesce(1),
               tbl, removeFiles = targets, statsCols = Seq("id"),
-              readVersion = rv)
+              base = Manifest.at(tbl, rv))
           }
           ()
         })
@@ -860,7 +861,7 @@ class ManifestSpec extends SparkSpec {
         (i * 10 until i * 10 + 10).map(_.toLong).toDF("id").coalesce(1),
         tbl, statsCols = Seq("id"))
     def fileOf(lo: Double, hi: Double): Seq[String] =
-      Manifest.fileStats(tbl).collect {
+      Manifest.at(tbl).fileStats.collect {
         case (f, s) if s("id")._1 >= lo - 1 && s("id")._2 <= hi + 1 => f
       }.toSeq
     def ids(): Seq[Long] =
@@ -921,7 +922,7 @@ class ManifestSpec extends SparkSpec {
     // succeeds, absorbing the DV
     Manifest.commit(rewriteD(), tbl, removeFiles = fD,
       statsCols = Seq("id"))
-    assert(Manifest.deletionVectors(tbl).isEmpty)
+    assert(Manifest.at(tbl).dv.isEmpty)
     assert(ids() ==
       ((0L until 40L).filterNot(_ == 35L) :+ 100L).sorted)
   }
@@ -948,7 +949,7 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.lastTxn(tbl, "other") == 0L)
     // txn.* is internal bookkeeping: invisible to user metadata
     assert((1L to 3L).forall(v =>
-      Manifest.meta(tbl, v).keys.forall(!_.startsWith(Manifest.TxnPrefix))))
+      Manifest.at(tbl, v).meta.keys.forall(!_.startsWith(Manifest.TxnPrefix))))
     // a plain commit in between must not blind the newest-first scan
     Manifest.commit(Seq(5).toDF("x"), tbl)
     assert(Manifest.lastTxn(tbl, "app") == 1L)
@@ -1016,18 +1017,18 @@ class ManifestSpec extends SparkSpec {
       Map(s"${Manifest.ConstraintPrefix}t" -> "1 = 1")) // arm the data pass
     Manifest.commit(df, tblA, statsCols = cols)
     Manifest.commit(df, tblB, statsCols = cols)
-    def statsOf(t: String) = Manifest.fileStats(t).values.toSeq
+    def statsOf(t: String) = Manifest.at(t).fileStats.values.toSeq
     assert(statsOf(tblA) == statsOf(tblB),
       s"footer bounds must equal data-pass bounds: " +
         s"${statsOf(tblA)} vs ${statsOf(tblB)}")
     // string col records no bound on either path; the others do
     assert(statsOf(tblB).head.keySet == Set("big", "d", "maybe"))
-    assert(Manifest.rowCount(tblA).contains(3L) &&
-      Manifest.rowCount(tblB).contains(3L))
+    assert(Manifest.at(tblA).rowCount.contains(3L) &&
+      Manifest.at(tblB).rowCount.contains(3L))
     // zero-row batch file: explicit 0 count, no bounds, still countable
     val tblC = freshTable()
     Manifest.commit(df.limit(0).coalesce(1), tblC, statsCols = cols)
-    assert(Manifest.rowCount(tblC).contains(0L))
+    assert(Manifest.at(tblC).rowCount.contains(0L))
   }
 
   test("txn conflict check in the rebase loop: two writers replaying " +
@@ -1089,12 +1090,12 @@ class ManifestSpec extends SparkSpec {
       "every append applied exactly once")
     // the version chain is linear: each version's fresh file set is
     // non-empty and pairwise disjoint, and their union IS the head list
-    val head = Manifest.files(tbl, 40L)
+    val head = Manifest.at(tbl, 40L).files
     assert(head.distinct.size == head.size, "no double-listed file")
     val fresh = (1L to 40L).map { v =>
       val prev = if (v == 1L) Set.empty[String]
-        else Manifest.files(tbl, v - 1).toSet
-      Manifest.files(tbl, v).toSet -- prev
+        else Manifest.at(tbl, v - 1).files.toSet
+      Manifest.at(tbl, v).files.toSet -- prev
     }
     assert(fresh.forall(_.nonEmpty), "every commit contributed a file")
     assert(fresh.map(_.size).sum == head.size &&
@@ -1119,7 +1120,7 @@ class ManifestSpec extends SparkSpec {
       .filter(_.nonEmpty)
     assert(lines30.count(l => !l.startsWith("#") && !l.startsWith("-"))
       == 1, s"delta manifest must list only its own add:\n$lines30")
-    assert(Manifest.files(tbl).size == 30,
+    assert(Manifest.at(tbl).files.size == 30,
       "resolution still sees every live file")
     // checkpoints pin the resolved state every CheckpointInterval
     assert(Files.exists(Paths.get(tbl, "_manifests", "v000010.ckpt")) &&
@@ -1131,7 +1132,7 @@ class ManifestSpec extends SparkSpec {
       assert(Manifest.read(spark, tbl, v.toLong).as[Int]
         .collect().sorted.toSeq == (1 to v),
         s"version $v must resolve through the delta chain")
-      assert(Manifest.files(tbl, v.toLong).size == v)
+      assert(Manifest.at(tbl, v.toLong).files.size == v)
     }
     // data-skipping stats survive the delta encoding
     val (_, kept, skipped) = Manifest.readPruned(spark, tbl, "x",
@@ -1139,7 +1140,7 @@ class ManifestSpec extends SparkSpec {
     assert(kept == 3 && skipped == 27,
       "per-file min/max pruning over the delta log")
     // metadata-only rowCount too
-    assert(Manifest.rowCount(tbl).contains(30L))
+    assert(Manifest.at(tbl).rowCount.contains(30L))
   }
 
   test("vacuum CHECKPOINTS before it breaks the delta chain: retained " +
@@ -1171,13 +1172,13 @@ class ManifestSpec extends SparkSpec {
     // per-file row counts ride the checkpoints: the metadata-only
     // COUNT(*) still answers AFTER the adding manifests were vacuumed
     // (pre-r15 this degraded to a data read)
-    assert(Manifest.rowCount(tbl).contains(7L))
-    assert(Manifest.rowCount(tbl, 3L).contains(3L))
+    assert(Manifest.at(tbl).rowCount.contains(7L))
+    assert(Manifest.at(tbl, 3L).rowCount.contains(3L))
     // and a follow-up append + vacuum keeps working on the gapped log
     Manifest.commit(Seq(8).toDF("x"), tbl)
     assert(Manifest.read(spark, tbl).as[Int].collect().sorted.toSeq
       == (1 to 8))
-    assert(Manifest.rowCount(tbl).contains(8L))
+    assert(Manifest.at(tbl).rowCount.contains(8L))
   }
 
   test("restore carries the target's row counts and stats across its " +
@@ -1187,7 +1188,7 @@ class ManifestSpec extends SparkSpec {
     (1 to 3).foreach(i => Manifest.commit(
       Seq(i * 10).toDF("x").coalesce(1), tbl, statsCols = Seq("x")))
     Manifest.restore(tbl, 2L) // v4 = v2's state behind a replace flag
-    assert(Manifest.rowCount(tbl).contains(2L))
+    assert(Manifest.at(tbl).rowCount.contains(2L))
     val (_, kept, skipped) = Manifest.readPruned(spark, tbl, "x",
       9.0, 11.0)
     assert(kept == 1 && skipped == 1,
@@ -1293,7 +1294,7 @@ class ManifestSpec extends SparkSpec {
     "adding manifests, replace/restore attribute to themselves") {
     val tbl = freshTable()
     (1 to 25).foreach(i => Manifest.commit(Seq(i).toDF("x"), tbl))
-    val (inv, reads) = countingReads(Manifest.fileInventory(tbl))
+    val (inv, reads) = countingReads(Manifest.at(tbl).fileInventory)
     assert(inv.size == 25)
     assert(reads <= Manifest.CheckpointInterval + 2,
       s"fileInventory must be checkpoint-bounded, read $reads")
@@ -1301,10 +1302,10 @@ class ManifestSpec extends SparkSpec {
     assert(inv.map(_._2).sorted == (1L to 25L))
     // vacuum v1..v23: attribution survives through the checkpoints
     Manifest.vacuum(tbl, retainLast = 2)
-    assert(Manifest.fileInventory(tbl).map(_._2).sorted == (1L to 25L))
+    assert(Manifest.at(tbl).fileInventory.map(_._2).sorted == (1L to 25L))
     // restore is a replace-flagged full state: files re-attribute to it
     val rv = Manifest.restore(tbl, 24L)
-    assert(Manifest.fileInventory(tbl).map(_._2).distinct == Seq(rv))
+    assert(Manifest.at(tbl).fileInventory.map(_._2).distinct == Seq(rv))
   }
 
   test("legacy formats refuse loudly: a manifest without #log=delta " +
@@ -1317,15 +1318,15 @@ class ManifestSpec extends SparkSpec {
     Files.write(mf, body.linesIterator
       .filterNot(_.startsWith(s"#${Manifest.LogFormatKey}="))
       .mkString("\n").getBytes("UTF-8"))
-    val e1 = intercept[IllegalStateException](Manifest.files(tbl))
+    val e1 = intercept[IllegalStateException](Manifest.at(tbl).files)
     assert(e1.getMessage.contains("pre-delta-log"))
     Files.write(mf, body.getBytes("UTF-8")) // repair
-    assert(Manifest.files(tbl).size == 12)
+    assert(Manifest.at(tbl).files.size == 12)
     val ck = java.nio.file.Paths.get(tbl, "_manifests", "v000010.ckpt")
     val ckBody = new String(Files.readAllBytes(ck), "UTF-8")
     Files.write(ck, ckBody.linesIterator
       .filterNot(_ == "#ckptver=2").mkString("\n").getBytes("UTF-8"))
-    val e2 = intercept[IllegalStateException](Manifest.files(tbl, 10L))
+    val e2 = intercept[IllegalStateException](Manifest.at(tbl, 10L).files)
     assert(e2.getMessage.contains("ckptver"))
   }
 
@@ -1335,8 +1336,8 @@ class ManifestSpec extends SparkSpec {
     val tbl = freshTable()
     Manifest.commit((1 to 100).toDF("x"), tbl)
     (2 to 11).foreach(i => Manifest.commit(Seq(i).toDF("x"), tbl))
-    val bytes = Manifest.fileBytes(tbl)
-    val files = Manifest.files(tbl)
+    val bytes = Manifest.at(tbl).bytes
+    val files = Manifest.at(tbl).files
     assert(bytes.keySet == files.toSet, "every live file has a size")
     files.foreach { rel =>
       assert(bytes(rel) ==
@@ -1344,12 +1345,12 @@ class ManifestSpec extends SparkSpec {
     }
     // restore re-carries sizes across its replace wall
     val rv = Manifest.restore(tbl, 5L)
-    val restored = Manifest.fileBytes(tbl, rv)
-    assert(restored.keySet == Manifest.files(tbl, rv).toSet)
+    val restored = Manifest.at(tbl, rv).bytes
+    assert(restored.keySet == Manifest.at(tbl, rv).files.toSet)
     // vacuum everything below the restore: sizes still answer (fold
     // state, not manifest walks)
     Manifest.vacuum(tbl, retainLast = 1)
-    assert(Manifest.fileBytes(tbl).keySet == Manifest.files(tbl).toSet)
+    assert(Manifest.at(tbl).bytes.keySet == Manifest.at(tbl).files.toSet)
   }
 
   test("type-widening schema evolution is an EXPLICIT opt-in: a long " +
@@ -1367,11 +1368,11 @@ class ManifestSpec extends SparkSpec {
     assert(e.getMessage.contains("allowTypeWidening"))
     // opt-in: the column widens to long; every generation reads under
     // the widened schema via the readers' native promotion — no rewrite
-    val filesBefore = Manifest.files(tbl)
+    val filesBefore = Manifest.at(tbl).files
     Manifest.commit(spark.range(5, 8).selectExpr("id as x"), tbl,
       allowTypeWidening = true)
-    assert(Manifest.schemaOf(tbl).get("x").dataType == LongType)
-    assert(filesBefore.toSet.subsetOf(Manifest.files(tbl).toSet),
+    assert(Manifest.at(tbl).schema("x").dataType == LongType)
+    assert(filesBefore.toSet.subsetOf(Manifest.at(tbl).files.toSet),
       "widening is metadata-only — no file rewritten")
     assert(Manifest.read(spark, tbl).selectExpr("sum(x)")
       .head().getLong(0) == (0L until 8L).sum)
@@ -1379,10 +1380,10 @@ class ManifestSpec extends SparkSpec {
     // opt-in (merged type stays long; its int files read as long)
     Manifest.commit(spark.range(8, 10).selectExpr("cast(id as int) as x"),
       tbl, allowTypeWidening = true)
-    assert(Manifest.schemaOf(tbl).get("x").dataType == LongType)
+    assert(Manifest.at(tbl).schema("x").dataType == LongType)
     assert(Manifest.read(spark, tbl).count() == 10L)
     // time travel sees each version's own schema
-    assert(Manifest.schemaOf(tbl, 1L).get("x").dataType == IntegerType)
+    assert(Manifest.at(tbl, 1L).schema("x").dataType == IntegerType)
     // non-lossless changes refuse even with the opt-in
     val e2 = intercept[IllegalArgumentException](
       Manifest.commit(spark.range(2).selectExpr("cast(id as string) as x"),
@@ -1430,24 +1431,24 @@ class ManifestSpec extends SparkSpec {
     "(boundaries included), still exact after vacuum gaps") {
     val tbl = freshTable()
     (1 to 60).foreach(i => Manifest.commit(Seq(i).toDF("x"), tbl))
-    val t30 = Manifest.commitTime(tbl, 30L)
-    val t31 = Manifest.commitTime(tbl, 31L)
+    val t30 = Manifest.at(tbl, 30L).commitTime
+    val t31 = Manifest.at(tbl, 31L).commitTime
     val (hit, reads) = countingReads(Manifest.versionAsOf(tbl, t30))
     // adjusted times are nondecreasing; same-millisecond neighbors all
     // resolve to the newest version at that stamp
-    assert(hit >= 30L && Manifest.commitTime(tbl, hit) <= t31)
+    assert(hit >= 30L && Manifest.at(tbl, hit).commitTime <= t31)
     assert(reads <= 16,
       s"versionAsOf must be O(log n) reads on 60 versions, read $reads")
     assert(Manifest.versionAsOf(tbl, System.currentTimeMillis + 10000)
       == 60L)
     intercept[IllegalArgumentException](
-      Manifest.versionAsOf(tbl, Manifest.commitTime(tbl, 1L) - 10))
+      Manifest.versionAsOf(tbl, Manifest.at(tbl, 1L).commitTime - 10))
     // vacuum gaps don't break the search: each version carries the
     // whole prefix's running max itself
     Manifest.vacuum(tbl, retainLast = 20)
     assert(Manifest.versionAsOf(tbl,
       System.currentTimeMillis + 10000) == 60L)
-    val tMid = Manifest.commitTime(tbl, 50L)
+    val tMid = Manifest.at(tbl, 50L).commitTime
     val hit2 = Manifest.versionAsOf(tbl, tMid)
     assert(hit2 >= 50L && hit2 <= 60L)
   }
@@ -1467,7 +1468,7 @@ class ManifestSpec extends SparkSpec {
       s"hinted version() must not list the manifest dir (listed $lists0)")
     val ((hit, reads), listsT) = countingLists(
       countingReads(Manifest.versionAsOf(tbl,
-        Manifest.commitTime(tbl, 12L))))
+        Manifest.at(tbl, 12L).commitTime)))
     assert(hit >= 12L && listsT == 0 && reads <= 16,
       s"versionAsOf must be list-free and O(log n) (lists=$listsT, " +
         s"reads=$reads)")
@@ -1494,7 +1495,7 @@ class ManifestSpec extends SparkSpec {
     // not forward-probe into the gap and report an ancient head
     Manifest.tag(tbl, "audit", 3L)
     Manifest.vacuum(tbl, retainLast = 5)
-    assert(Manifest.files(tbl, 3L).nonEmpty, "tagged v3 retained")
+    assert(Manifest.at(tbl, 3L).files.nonEmpty, "tagged v3 retained")
     val (v3, lists3) = countingLists(Manifest.version(tbl))
     assert(v3 == 25L && lists3 == 0, "post-vacuum head is hint-served")
     JFiles.write(hintF, "3".getBytes) // stale hint at the tagged island
@@ -1508,7 +1509,7 @@ class ManifestSpec extends SparkSpec {
     val (v5, lists5) = countingLists(
       Manifest.versionAsOf(tbl, System.currentTimeMillis + 10000))
     assert(v5 == 26L && lists5 == 0)
-    val mid = Manifest.commitTime(tbl, 23L)
+    val mid = Manifest.at(tbl, 23L).commitTime
     val h2 = Manifest.versionAsOf(tbl, mid)
     assert(h2 >= 23L && h2 <= 26L)
   }
@@ -1530,7 +1531,7 @@ class ManifestSpec extends SparkSpec {
     val featLine = s"#${Manifest.FeaturesKey}=$feats"
     assert(JFiles.readAllLines(ckpt).contains(featLine))
     // the internal key stays out of the user-meta surface
-    assert(!Manifest.meta(tbl).contains(Manifest.FeaturesKey))
+    assert(!Manifest.at(tbl).meta.contains(Manifest.FeaturesKey))
     // an unknown manifest feature refuses naming it
     val m11 = JPaths.get(tbl, "_manifests", "v000011.txt")
     val orig = JFiles.readAllLines(m11).asScala.toSeq
@@ -1604,7 +1605,7 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.read(spark, tbl).collect()
       .map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     assert(Manifest.branches(tbl).isEmpty, "published branch retired")
-    assert(Manifest.constraintsOf(tbl).contains("v_nonneg"))
+    assert(Manifest.at(tbl).constraints.contains("v_nonneg"))
     assert(Manifest.history(spark, tbl).last.change_type == "append")
     // idempotent replay (the link-then-cleanup crash window): a second
     // fastForward of the same name returns the published version
@@ -1616,7 +1617,7 @@ class ManifestSpec extends SparkSpec {
     Manifest.commitBranch(Seq((4L, 40L)).toDF("id", "v"), tbl, "late")
     Manifest.commit(Seq((5L, 50L)).toDF("id", "v"), tbl)       // v4
     Manifest.vacuum(tbl, retainLast = 1)
-    assert(Manifest.files(tbl, 3L).nonEmpty,
+    assert(Manifest.at(tbl, 3L).files.nonEmpty,
       "the branch base version survives vacuum outside the window")
     assert(Manifest.readBranch(spark, tbl, "late").collect()
       .map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L),
@@ -1633,7 +1634,7 @@ class ManifestSpec extends SparkSpec {
     Manifest.commitBranch(Seq((6L, 60L, "x")).toDF("id", "v", "tag"),
       tbl, "evo")
     Manifest.fastForward(spark, tbl, "evo")
-    assert(Manifest.schemaOf(tbl).get.fieldNames.toSeq ==
+    assert(Manifest.at(tbl).schema.fieldNames.toSeq ==
       Seq("id", "v", "tag"))
     assert(Manifest.read(spark, tbl).filter(col("tag").isNull)
       .count() == 4L, "pre-evolution rows read null")

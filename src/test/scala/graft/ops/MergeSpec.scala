@@ -33,7 +33,7 @@ class MergeSpec extends SparkSpec {
     "holding matched keys rewrite — the rest carry by reference and " +
     "older versions still time-travel") {
     val tbl = freshTable(); seed(tbl)
-    val before = Manifest.files(tbl)
+    val before = Manifest.at(tbl).files
     // id 0 lives in the first file; id 23 exists (third file); id 99 new
     val src = Seq((0L, "UP", 9), (23L, "UP2", 9), (99L, "NEW", 9))
       .toDF("id", "s", "g")
@@ -46,7 +46,7 @@ class MergeSpec extends SparkSpec {
       now(99L) == ("NEW", 9))
     assert(now(1L) == ("v01", 0) && now(11L) == ("v11", 1)) // untouched
     // the carried file is the SAME relative path, not a rewritten copy
-    val after = Manifest.files(tbl).toSet
+    val after = Manifest.at(tbl).files.toSet
     assert((before.toSet intersect after).size == 1)
     // pre-merge versions pinned: v3 reads the original 12 rows
     val v3 = asMap(Manifest.read(spark, tbl, 3L))
@@ -64,12 +64,12 @@ class MergeSpec extends SparkSpec {
     assert(asMap(Manifest.read(spark, tbl)).size == 13)
     // the constraint gates the merge's rewritten rows like any commit
     val v = Manifest.version(tbl)
-    val files = Manifest.files(tbl)
+    val files = Manifest.at(tbl).files
     val e = intercept[IllegalArgumentException](
       Merge.upsert(spark, tbl,
         Seq((0L, "B", -1)).toDF("id", "s", "g"), Seq("id")))
     assert(e.getMessage.contains("g_nonneg"))
-    assert(Manifest.version(tbl) == v && Manifest.files(tbl) == files)
+    assert(Manifest.version(tbl) == v && Manifest.at(tbl).files == files)
   }
 
   test("deleteWhere rewrites only files containing matches with their " +
@@ -180,7 +180,7 @@ class MergeSpec extends SparkSpec {
         Seq.tabulate(4)(j => (i * 10L + j, s"v$i$j", i.toLong))
           .toDF("id", "s", "g").coalesce(1), tbl,
         statsCols = Seq("id", "g"))
-    val filesBefore = Manifest.files(tbl)
+    val filesBefore = Manifest.at(tbl).files
     // requests: (10, 1) matches a live row; (11, 3) half-matches (id
     // exists, wrong g) — must delete nothing
     val st = Merge.deleteKeysDvCols(spark, tbl,
@@ -194,7 +194,7 @@ class MergeSpec extends SparkSpec {
     val now = Manifest.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(!now.contains((10L, 1L)) && now.contains((11L, 1L)))
-    assert(Manifest.files(tbl) == filesBefore, "MoR: zero rewrites")
+    assert(Manifest.at(tbl).files == filesBefore, "MoR: zero rewrites")
     // idempotent replay: the tuple is already hidden
     val st2 = Merge.deleteKeysDvCols(spark, tbl,
       Seq((10L, 1L)).toDF("id", "g"), Seq("id", "g"))
@@ -245,5 +245,40 @@ class MergeSpec extends SparkSpec {
     val st2 = Merge.upsert(spark, fresh,
       Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "s", "g"), Seq("id"))
     assert(st2.sourceRows == 2L)
+  }
+
+  test("upsert honours the session checkpoint strategy: with " +
+    "spark.graft.checkpoint.dir set its source is checkpointed reliably " +
+    "to files under that dir; unset, it writes none") {
+    import java.nio.file.{Files => JFiles, Path}
+    import org.apache.spark.CheckpointDirReset
+    val tbl = freshTable()
+    seed(tbl)
+    val dir = JFiles.createTempDirectory("graft_merge_ckpt")
+    def written(): Long = {
+      val st = JFiles.walk(dir)
+      try st.filter((p: Path) => JFiles.isRegularFile(p)).count()
+      finally st.close()
+    }
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    CheckpointDirReset(sc, None) // the first dir set wins: make it ours
+    spark.conf.set(Checkpoints.DirKey, dir.toString)
+    try Merge.upsert(spark, tbl,
+      Seq((1L, "u1", 9), (30L, "n30", 9)).toDF("id", "s", "g"), Seq("id"))
+    finally {
+      spark.conf.unset(Checkpoints.DirKey)
+      CheckpointDirReset(sc, prior)
+    }
+    val n = written()
+    assert(n > 0, "no reliable checkpoint files written")
+    // unset: the default local checkpoint writes no file
+    Merge.upsert(spark, tbl,
+      Seq((2L, "u2", 9)).toDF("id", "s", "g"), Seq("id"))
+    assert(written() == n)
+    assert(asMap(Manifest.read(spark, tbl))
+      .filter { case (id, _) => id < 3L || id == 30L } ==
+      Map(0L -> ("v00", 0), 1L -> ("u1", 9), 2L -> ("u2", 9),
+        30L -> ("n30", 9)))
   }
 }

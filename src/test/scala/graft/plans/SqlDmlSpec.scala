@@ -17,7 +17,7 @@ class SqlDmlSpec extends SparkSpec {
     Files.createTempDirectory("sqldml_tbl").toString
 
   private def liveAbs(tbl: String): Seq[String] =
-    Manifest.files(tbl).map(rel =>
+    Manifest.at(tbl).files.map(rel =>
       Paths.get(tbl).resolve(rel).toAbsolutePath.normalize.toString)
 
   test("ADVICE r16: V1 INSERT-target recovery — live files resolve to " +

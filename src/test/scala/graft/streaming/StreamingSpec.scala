@@ -511,12 +511,12 @@ class StreamingSpec extends SparkSpec {
     assert(Manifest.version(rep) == 6L)
     assert(ChangeFeed.replicaSourceVersion(rep) == 6L)
     // the final compaction left the source at targetFiles files
-    assert(Manifest.files(s"$tbl/src").size == 2)
+    assert(Manifest.at(s"$tbl/src").files.size == 2)
     // compaction steps appended ZERO rows to the replica (its lineage
     // is append-only: every earlier file list is carried forward)
     for (v <- 1L until 6L)
-      assert(Manifest.files(rep, v).toSet
-        .subsetOf(Manifest.files(rep, v + 1).toSet),
+      assert(Manifest.at(rep, v).files.toSet
+        .subsetOf(Manifest.at(rep, v + 1).files.toSet),
         s"replica v${v + 1} rewrote files")
     // maintained replica == one-shot filter over everything streamed
     val oneShot = QueryDSL.events(spark, sf)
@@ -1787,13 +1787,13 @@ class StreamingSpec extends SparkSpec {
       assert(dst.toFile.setLastModified(1700000000000L + i * 60000L))
     }
     val tblStream = seed()
-    val seedFiles = Manifest.files(tblStream)
+    val seedFiles = Manifest.at(tblStream).files
     val streamed = Streams.erasureStreaming(spark, srcDir.toString,
         tblStream, glob = "events_*.parquet", maxFilesPerTrigger = 1,
         name = "st32_spec_sink")
       .select("user_id", "event_type", "value").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(Manifest.files(tblStream) == seedFiles,
+    assert(Manifest.at(tblStream).files == seedFiles,
       "erasure must move zero data files")
     assert(Manifest.version(tblStream) > 4L, "some batch must erase")
     // one-shot twin: all requests at once against a fresh seed
@@ -1904,7 +1904,7 @@ class StreamingSpec extends SparkSpec {
     // even event_id — admitted before their request existed); the rest
     // of the suppression was gated (their error rows and batch-2 rows)
     val suppressed = ev.count() - streamed.size
-    val dvTotal = Manifest.deletionVectors(main).values.map(_._2).sum
+    val dvTotal = Manifest.at(main).dv.values.map(_._2).sum
     val expectedDv = QueryDSL.events(spark, sf)
       .filter(col("event_type") =!= "error" && col("event_id") % 2 === 0)
       .join(erased.distinct(), Seq("user_id"), "left_semi").count()
@@ -1954,7 +1954,7 @@ class StreamingSpec extends SparkSpec {
     assert(Manifest.read(spark, main).collect()
       .map(_.getLong(0)).toSeq == Seq(20L),
       "previously-admitted rows of the requester must be DV-erased")
-    assert(Manifest.deletionVectors(main).values.map(_._2).sum == 2L)
+    assert(Manifest.at(main).dv.values.map(_._2).sum == 2L)
     val vAfterErase = Manifest.version(main)
     // batch 2: user 13 re-appears with fresh rows — GATED at the door:
     // no main commit at all (skip-empty), no DV growth, nothing to read
