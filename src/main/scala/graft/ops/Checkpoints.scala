@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation strategy for iterative / multi-branch plans
@@ -34,11 +35,16 @@ object Checkpoints {
     spark.conf.getOption(DirKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
-        // getCheckpointDir returns the fs-qualified form of whatever was
-        // set, so compare presence, not equality: the first configured dir
-        // wins for the SparkContext's lifetime (re-point it explicitly with
-        // sc.setCheckpointDir if a job truly needs to switch mid-session).
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        // setCheckpointDir(dir) checkpoints under a fresh `dir/<uuid>`
+        // and getCheckpointDir returns that subdir fs-qualified: re-point
+        // the context whenever the configured dir is not its parent, so
+        // the dir configured NOW always receives the files
+        val want = new Path(dir)
+        val qualified =
+          want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        if (!sc.getCheckpointDir.map(d => new Path(d).getParent)
+              .contains(qualified))
+          sc.setCheckpointDir(dir)
         df.checkpoint()
       case None => df.localCheckpoint()
     }

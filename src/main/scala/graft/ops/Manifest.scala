@@ -66,6 +66,47 @@ object Manifest {
     finally s.close()
   }
 
+  /** THE atomic-exclusive file write — every manifest, checkpoint, WAP
+    * stage, branch and tag file lands through it (only the advisory
+    * `_head`/`_gapceil` hints are replaced in place instead, see
+    * [[writeLongFile]]): `body` goes to a writer-unique tmp
+    * file in `target`'s directory (concurrent writers of one target never
+    * share a staging file), which is hard-linked into place — link()
+    * appears fully formed or not at all and, unlike rename(), fails with
+    * EEXIST when the target exists, so a racing writer can never
+    * silently replace the winner. The tmp is always deleted. False when
+    * `target` already exists. */
+  private def linkNew(target: Path, body: Seq[String]): Boolean = {
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(target.getParent,
+      s".${target.getFileName}-", ".tmp")
+    try {
+      Files.write(tmp, body.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** CLAIM a fresh `<prefix>NNNNNN` directory under `root` atomically,
+    * numbering upward from `from` (createDirectory fails on EEXIST, so
+    * two writers never share one): a dir left by a CRASHED writer is
+    * simply skipped — never reclaimed, so a claim can never destroy a
+    * concurrent writer's in-flight data — and a later vacuum sweeps it
+    * (it is unreferenced by construction). Claimed numbers are storage
+    * addresses, not version numbers. */
+  private[ops] def claimDir(root: Path, prefix: String, from: Long): Path = {
+    Files.createDirectories(root)
+    @annotation.tailrec def claim(n: Long): Path = {
+      val cand = root.resolve(f"$prefix$n%06d")
+      val won = try { Files.createDirectory(cand); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      if (won) cand else claim(n + 1)
+    }
+    claim(from)
+  }
+
   /** Test seam: invoked immediately before each manifest-publish attempt
     * (ManifestSpec injects a competing commit here to exercise the
     * optimistic-rebase path deterministically). No-op in production. */
@@ -182,8 +223,8 @@ object Manifest {
     * the [[Snapshot]] fold runs `toLong`/spec parsing on every resolution,
     * so one commit carrying a malformed `txn.*`/`filerows.*`/
     * `filebytes.*`/`dv.*`/`filestats.*` value would brick every later
-    * read of the table. Validated at the write gates ([[commit]],
-    * [[stageCommit]]) — loud before anything publishes. */
+    * read of the table. Validated at the one write gate, [[checkMeta]]
+    * — loud before anything publishes. */
   private def validateStructuredMeta(meta: Map[String, String]): Unit =
     meta.foreach { case (k, v) =>
       // validate by ACTUAL parse: a digit/length scan admits 19-digit
@@ -213,6 +254,23 @@ object Manifest {
         require(scala.util.Try(parseStatsSpec(v)).isSuccess,
           s"'$k' must carry 'col:min:max|…', got '$v'")
     }
+
+  /** THE write gate for caller meta — every path that publishes a
+    * caller's `meta` ([[commit]], [[stageCommit]], [[commitBranch]],
+    * [[restore]]) passes it here first: the reserved keys each publish
+    * writes itself, keys that would break the `#key=value` line shape,
+    * values spanning lines (a '\n' would inject arbitrary manifest
+    * lines — forged txn./dv./constraint entries, bogus file paths), and
+    * malformed structured values ([[validateStructuredMeta]]). */
+  private def checkMeta(meta: Map[String, String]): Unit = {
+    Seq(SchemaKey, CommitTsKey, ReplaceKey, LogFormatKey, FeaturesKey,
+      MaxTsKey).foreach(k => require(!meta.contains(k), s"'$k' is reserved"))
+    meta.keys.foreach(k => require(!k.contains("=") && !k.contains("\n"),
+      s"invalid meta key '$k'"))
+    meta.values.foreach(v => require(!v.contains("\n"),
+      s"meta value may not span lines: '$v'"))
+    validateStructuredMeta(meta)
+  }
 
   /** Parse one recorded `col:min:max|…` per-file stats spec — the ONE
     * owner of the format ([[Snapshot.fileStats]] and [[readPruned]] both
@@ -626,22 +684,40 @@ object Manifest {
       snap.txns.toSeq.sortBy(_._1).map { case (app, (tv, av)) =>
         s"#$TxnStatePrefix$app=$tv:$av" } ++
       snap.files))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)
-    val tmp = Files.createTempFile(manifestDir(tablePath),
-      f".c$v%06d-", ".tmp")
-    Files.write(tmp, body)
-    try Files.createLink(ckptFile(tablePath, v), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => ()
-      case _: UnsupportedOperationException =>
-        if (!Files.exists(ckptFile(tablePath, v)))
-          Files.move(tmp, ckptFile(tablePath, v),
-            StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(tmp)
+    linkNew(ckptFile(tablePath, v), body)
   }
 
   private def maybeCheckpoint(tablePath: String, v: Long): Unit =
     if (v % CheckpointInterval == 0) writeCheckpoint(tablePath, v)
+
+  /** THE main-chain publish: version `base.version + 1` as `base`'s
+    * successor. The manifest is the caller's `meta` plus the format
+    * stamp ([[formatMeta]]), the running-max stamp ([[maxTsMeta]]), the
+    * schema and the commit time, as sorted `#key=value` lines, then the
+    * `-` removals, then the adds. Publishes through [[linkNew]] right
+    * after the [[beforePublish]] seam; a winner writes its interval
+    * checkpoint and the head hint. None when another writer took the
+    * version — the caller decides whether to rebase, surrender or
+    * refuse. */
+  private def publishVersion(tablePath: String, base: Snapshot,
+      meta: Map[String, String], schema: StructType,
+      removed: Seq[String], added: Seq[String]): Option[Long] = {
+    val next = base.version + 1
+    val now = System.currentTimeMillis
+    val lines =
+      (meta ++ formatMeta ++ maxTsMeta(base, now) +
+        (SchemaKey -> schema.json) +
+        (CommitTsKey -> now.toString))
+        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
+      removed.map("-" + _) ++ added
+    beforePublish()
+    if (!linkNew(manifestFile(tablePath, next), lines)) None
+    else {
+      maybeCheckpoint(tablePath, next)
+      writeHeadHint(tablePath, next)
+      Some(next)
+    }
+  }
 
   /** Version `v`'s raw `#key=value` meta — ONE manifest read, for the
     * probes that need a single stamp, not the resolved state
@@ -709,8 +785,9 @@ object Manifest {
   /** Reserved metadata key recording the commit's wall-clock publish
     * time (epoch millis) — what `TIMESTAMP AS OF` resolves against
     * (the Delta/Iceberg convention: every commit carries its time).
-    * Written fresh by every [[commit]]/[[restore]] publish attempt, so
-    * a rebase re-stamps. Clock skew between writers is tolerated the
+    * Written fresh by every main-chain publish attempt
+    * ([[publishVersion]]) and every branch commit, so a rebase
+    * re-stamps. Clock skew between writers is tolerated the
     * way Delta tolerates it: [[versionAsOf]] resolves on the RUNNING
     * MAX of the per-version stamps, so the version order always wins
     * over a regressing clock. Pre-stamp manifests fall back to the
@@ -836,18 +913,11 @@ object Manifest {
     val vv = if (v >= 0) v else version(tablePath)
     require(vv > 0 && Files.exists(manifestFile(tablePath, vv)),
       s"version $vv is not committed at $tablePath")
-    Files.createDirectories(refsDir(tablePath))
-    val f = refsDir(tablePath).resolve(name)
-    val tmp = Files.createTempFile(refsDir(tablePath), s".$name-", ".tmp")
-    Files.write(tmp, vv.toString.getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(f, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"tag '$name' already exists at $tablePath (version " +
-            s"${resolveRef(tablePath, name)}) — tags are immutable; " +
-            "deleteTag first")
-    } finally Files.deleteIfExists(tmp)
+    if (!linkNew(refsDir(tablePath).resolve(name), Seq(vv.toString)))
+      throw new IllegalArgumentException(
+        s"tag '$name' already exists at $tablePath (version " +
+          s"${resolveRef(tablePath, name)}) — tags are immutable; " +
+          "deleteTag first")
     vv
   }
 
@@ -905,53 +975,18 @@ object Manifest {
     require(validRefName(id), s"invalid WAP id '$id'")
     require(!Files.exists(wapFile(tablePath, id)),
       s"WAP id '$id' is already staged at $tablePath")
-    require(!meta.contains(SchemaKey), s"'$SchemaKey' is reserved")
-    require(!meta.contains(CommitTsKey), s"'$CommitTsKey' is reserved")
-    require(!meta.contains(ReplaceKey), s"'$ReplaceKey' is reserved")
-    require(!meta.contains(LogFormatKey), s"'$LogFormatKey' is reserved")
-    require(!meta.contains(FeaturesKey), s"'$FeaturesKey' is reserved")
-    require(!meta.contains(MaxTsKey), s"'$MaxTsKey' is reserved")
-    meta.keys.foreach(k => require(!k.contains("=") && !k.contains("\n"),
-      s"invalid meta key '$k'"))
-    // values get the same line-injection guard as [[commit]]: a '\n' in
-    // a value would inject arbitrary manifest lines (forged txn./dv./
-    // constraint entries, bogus file paths) that publishStaged then
-    // carries verbatim into a published version
-    meta.values.foreach(v => require(!v.contains("\n"),
-      s"meta value may not span lines: '$v'"))
-    validateStructuredMeta(meta)
-    Files.createDirectories(manifestDir(tablePath))
-    val dataDir = Paths.get(tablePath, "data")
-    Files.createDirectories(dataDir)
-    var claim = version(tablePath) + 1
-    var batchDir: Path = null
-    while (batchDir == null) {
-      val cand = dataDir.resolve(f"b$claim%06d")
-      try { Files.createDirectory(cand); batchDir = cand }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => claim += 1
-      }
-    }
-    df.write.mode("append").parquet(batchDir.toString)
-    val fresh = ls(batchDir)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(p => Paths.get(tablePath).relativize(Paths.get(p)).toString)
-    val (rowsMeta, statsMeta) = footerBatchStats(df.sparkSession,
-      tablePath, fresh, statsCols, df.schema)
+    checkMeta(meta)
+    val batch = writeBatch(df, tablePath, version(tablePath) + 1, statsCols)
     val lines =
-      (meta ++ rowsMeta ++ statsMeta ++ freshBytesMeta(tablePath, fresh) +
+      (meta ++ batch.rowsMeta ++ batch.statsMeta ++
+        freshBytesMeta(tablePath, batch.fresh) +
         (SchemaKey -> df.schema.json))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ fresh
-    val tmp = Files.createTempFile(manifestDir(tablePath),
-      s".wap-$id-", ".tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(wapFile(tablePath, id), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        rmTree(batchDir)
-        throw new IllegalArgumentException(
-          s"WAP id '$id' is already staged at $tablePath")
-    } finally Files.deleteIfExists(tmp)
+        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ batch.fresh
+    if (!linkNew(wapFile(tablePath, id), lines)) {
+      rmTree(batch.dir)
+      throw new IllegalArgumentException(
+        s"WAP id '$id' is already staged at $tablePath")
+    }
   }
 
   /** Staged WAP ids, oldest-named first. */
@@ -1049,59 +1084,28 @@ object Manifest {
       val constraints = head.constraints
       if (!validatedAgainst.contains(constraints) &&
           constraints.nonEmpty && freshKept.nonEmpty) {
-        import org.apache.spark.sql.functions.{expr, lit, sum, when}
         val paths = freshKept.map(rel =>
           Paths.get(tablePath).resolve(rel).toString)
-        val cNames = constraints.keys.toSeq.sorted
-        val viols = spark.read.schema(batchSchema).parquet(paths: _*).agg(
-          sum(when(!expr(constraints(cNames.head)), lit(1L))
-            .otherwise(lit(0L))).as("c0"),
-          cNames.tail.zipWithIndex.map { case (n, i) =>
-            sum(when(!expr(constraints(n)), lit(1L)).otherwise(lit(0L)))
-              .as(s"c${i + 1}") }: _*).head()
-        val bad = cNames.zipWithIndex
-          .map { case (n, i) =>
-            n -> (if (viols.isNullAt(i)) 0L else viols.getLong(i)) }
-          .filter(_._2 > 0)
-        if (bad.nonEmpty) throw new IllegalArgumentException(
-          "requirement failed: staged WAP id '" + id + "' violates " +
-            "CHECK constraint(s) " +
-            bad.map { case (n, c) =>
-              s"'$n' ($c rows: ${constraints(n)})" }.mkString(", ") +
-            " — nothing was published (the stage is intact)")
+        constraintAggregate(tablePath,
+          spark.read.schema(batchSchema).parquet(paths: _*), constraints,
+          Seq.empty)._2.foreach(bad => throw new IllegalArgumentException(
+            "requirement failed: staged WAP id '" + id + "' violates " +
+              s"CHECK constraint(s) $bad — nothing was published (the " +
+              "stage is intact)"))
       }
       validatedAgainst = Some(constraints)
-      val schema = publishedSchema(head, batchSchema)
       val constraintMeta = constraints
         .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-      val next = head.version + 1
       // delta manifest: the staged files publish as this version's adds;
       // the head's file list and DV state are inherited by resolution —
       // the publish is metadata-only AND O(staged), never O(table)
-      val now = System.currentTimeMillis
-      val lines =
-        ((stagedMeta - SchemaKey) ++ constraintMeta ++ formatMeta ++
-          maxTsMeta(head, now) +
-          (txnKey -> "0") +
-          (SchemaKey -> schema.json) +
-          (CommitTsKey -> now.toString))
-          .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
-        freshKept
-      val tmp = Files.createTempFile(manifestDir(tablePath),
-        s".v$next-", ".tmp")
-      Files.write(tmp,
-        lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      beforePublish()
-      try {
-        Files.createLink(manifestFile(tablePath, next), tmp)
-        Files.deleteIfExists(tmp)
-        Files.deleteIfExists(wapFile(tablePath, id))
-        maybeCheckpoint(tablePath, next)
-        writeHeadHint(tablePath, next)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
+      publishVersion(tablePath, head,
+        (stagedMeta - SchemaKey) ++ constraintMeta + (txnKey -> "0"),
+        publishedSchema(head, batchSchema), Nil, freshKept) match {
+        case Some(next) =>
+          Files.deleteIfExists(wapFile(tablePath, id))
+          return next
+        case None =>
           // the winner may have been ANOTHER publisher of this very
           // stage: surrender to its version instead of double-listing
           alreadyPublished match {
@@ -1191,16 +1195,10 @@ object Manifest {
     val base = if (from >= 0) from else version(tablePath)
     require(base > 0 && Files.exists(manifestFile(tablePath, base)),
       s"version $base is not committed at $tablePath")
-    val tmp = Files.createTempFile(manifestDir(tablePath),
-      s".branch-$name-", ".tmp")
-    Files.write(tmp, s"#base=$base".getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(branchRefFile(tablePath, name), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"branch '$name' already exists at $tablePath — " +
-            "fastForward or dropBranch first")
-    } finally Files.deleteIfExists(tmp)
+    if (!linkNew(branchRefFile(tablePath, name), Seq(s"#base=$base")))
+      throw new IllegalArgumentException(
+        s"branch '$name' already exists at $tablePath — " +
+          "fastForward or dropBranch first")
     base
   }
 
@@ -1323,93 +1321,38 @@ object Manifest {
       name: String, meta: Map[String, String],
       statsCols: Seq[String],
       txnGate: Option[(String, Long)]): Long = {
-    require(!meta.contains(SchemaKey), s"'$SchemaKey' is reserved")
-    require(!meta.contains(CommitTsKey), s"'$CommitTsKey' is reserved")
-    require(!meta.contains(ReplaceKey), s"'$ReplaceKey' is reserved")
-    meta.keys.foreach(k => require(!k.contains("=") && !k.contains("\n"),
-      s"invalid meta key '$k'"))
-    meta.values.foreach(v => require(!v.contains("\n"),
-      s"meta value may not span lines: '$v'"))
-    validateStructuredMeta(meta)
+    checkMeta(meta)
     val (base, headSchema, _, _) = branchState(tablePath, name)
-    val constraints = base.constraints
     // append-compatible evolution gate BEFORE writing (loud on type
     // changes; new columns ride)
     val evolved = evolve(headSchema, df.schema)
-    val dataDir = Paths.get(tablePath, "data")
-    Files.createDirectories(dataDir)
-    var claim = version(tablePath) + 1
-    var batchDir: Path = null
-    while (batchDir == null) {
-      val cand = dataDir.resolve(f"b$claim%06d")
-      try { Files.createDirectory(cand); batchDir = cand }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => claim += 1
-      }
-    }
-    df.write.mode("append").parquet(batchDir.toString)
-    val fresh = ls(batchDir)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(p => Paths.get(tablePath).relativize(Paths.get(p)).toString)
-    // the fork-frozen constraint gate, over the WRITTEN rows (one
-    // bounded aggregate — what was written is what was checked)
-    if (constraints.nonEmpty && fresh.nonEmpty) {
-      import org.apache.spark.sql.functions.{expr, lit, sum, when}
-      val cNames = constraints.keys.toSeq.sorted
-      val viols = df.sparkSession.read.schema(df.schema)
-        .parquet(batchDir.toString).agg(
-          sum(when(!expr(constraints(cNames.head)), lit(1L))
-            .otherwise(lit(0L))).as("c0"),
-          cNames.tail.zipWithIndex.map { case (n, i) =>
-            sum(when(!expr(constraints(n)), lit(1L)).otherwise(lit(0L)))
-              .as(s"c${i + 1}") }: _*).head()
-      val bad = cNames.zipWithIndex
-        .map { case (n, i) =>
-          n -> (if (viols.isNullAt(i)) 0L else viols.getLong(i)) }
-        .filter(_._2 > 0)
-      if (bad.nonEmpty) {
-        rmTree(batchDir)
-        throw new IllegalArgumentException(
-          s"requirement failed: branch '$name' commit violates CHECK " +
-            "constraint(s) " + bad.map { case (n, c) =>
-              s"'$n' ($c rows: ${constraints(n)})" }.mkString(", ") +
-            " — nothing landed on the branch")
-      }
-    }
-    val (rowsMeta, statsMeta) = footerBatchStats(df.sparkSession,
-      tablePath, fresh, statsCols, df.schema)
+    // the fork-frozen constraint gate, over the WRITTEN rows
+    val batch = writeBatch(df, tablePath, version(tablePath) + 1, statsCols,
+      base.constraints, bad => s"requirement failed: branch '$name' " +
+        s"commit violates CHECK constraint(s) $bad — nothing landed on " +
+        "the branch")
     val lines =
-      (meta ++ rowsMeta ++ statsMeta ++
-        freshBytesMeta(tablePath, fresh) +
+      (meta ++ batch.rowsMeta ++ batch.statsMeta ++
+        freshBytesMeta(tablePath, batch.fresh) +
         (SchemaKey -> evolved.json) +
         (CommitTsKey -> System.currentTimeMillis.toString))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ fresh
+        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ batch.fresh
     // optimistic link-retry on the branch commit number; a txn-gated
     // commit RE-PROBES its stamp after every lost race — the loser of
     // two writers replaying the same micro-batch surrenders instead
     // of landing the batch twice (commit's TxnAlreadyApplied contract)
     var next = branchCommits(tablePath, name).lastOption
       .getOrElse(0L) + 1
-    while (true) {
-      val tmp = Files.createTempFile(manifestDir(tablePath),
-        s".branch-$name-c$next-", ".tmp")
-      Files.write(tmp,
-        lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      try {
-        Files.createLink(branchCommitFile(tablePath, name, next), tmp)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          txnGate.foreach { case (app, tv) =>
-            if (branchTxn(tablePath, name, app).exists(_ >= tv)) {
-              rmTree(batchDir)
-              throw new TxnAlreadyApplied(tablePath, app, tv)
-            }
-          }
-          next += 1
-      } finally Files.deleteIfExists(tmp)
+    while (!linkNew(branchCommitFile(tablePath, name, next), lines)) {
+      txnGate.foreach { case (app, tv) =>
+        if (branchTxn(tablePath, name, app).exists(_ >= tv)) {
+          rmTree(batch.dir)
+          throw new TxnAlreadyApplied(tablePath, app, tv)
+        }
+      }
+      next += 1
     }
-    throw new IllegalStateException("unreachable")
+    next
   }
 
   /** The branch view: the BASE version's state (deletion vectors
@@ -1460,34 +1403,14 @@ object Manifest {
           "the chains have diverged. Re-branch from the head and replay the " +
           "branch's commits (append-shaped work is re-commitable), or " +
           "drop the branch")
-    val next = base.version + 1
-    val now = System.currentTimeMillis
     val constraintMeta = base.constraints
       .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-    val lines =
-      (meta ++ constraintMeta ++ formatMeta ++
-        maxTsMeta(base, now) +
-        (s"$TxnPrefix$txnApp" -> "0") +
-        (SchemaKey -> schema.json) +
-        (CommitTsKey -> now.toString))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ branchFiles
-    val tmp = Files.createTempFile(manifestDir(tablePath),
-      s".v$next-", ".tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    beforePublish()
-    try {
-      Files.createLink(manifestFile(tablePath, next), tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"cannot fast-forward branch '$name' at $tablePath: a main " +
-            s"commit won the race for version $next — the chains have " +
-            "diverged. Re-branch from the new head and replay")
-    }
-    Files.deleteIfExists(tmp)
-    maybeCheckpoint(tablePath, next)
-    writeHeadHint(tablePath, next)
+    val next = publishVersion(tablePath, base,
+      meta ++ constraintMeta + (s"$TxnPrefix$txnApp" -> "0"), schema, Nil,
+      branchFiles).getOrElse(throw new IllegalStateException(
+        s"cannot fast-forward branch '$name' at $tablePath: a main " +
+          s"commit won the race for version ${base.version + 1} — the " +
+          "chains have diverged. Re-branch from the new head and replay"))
     branchCommits(tablePath, name).foreach(c =>
       Files.deleteIfExists(branchCommitFile(tablePath, name, c)))
     Files.deleteIfExists(branchRefFile(tablePath, name))
@@ -1974,6 +1897,113 @@ object Manifest {
        s"$FileStatsPrefix$f" -> spec }.toMap)
   }
 
+  /** THE constraint aggregate: ONE bounded executor-side pass over
+    * `scan` (a batch's written files) grouped by file, yielding each
+    * file's row count and min/max for `numCols`, plus the formatted
+    * CHECK-constraint violations (`'name' (n rows: expr), …`, None when
+    * every row holds) — fused into a single job so a constraint-gated
+    * stats-bearing commit reads its batch once, not three times. Min/max
+    * are widened one ulp per side so a lossy long→double cast (values
+    * past 2^53, e.g. nanosecond timestamps) can only LOOSEN a bound,
+    * never falsely prune a matching file. A file with zero rows emits
+    * no group. */
+  private def constraintAggregate(tablePath: String, scan: DataFrame,
+      constraints: Map[String, String], numCols: Seq[String])
+      : (Map[String, (Long, String)], Option[String]) = {
+    import org.apache.spark.sql.functions.{col, count, expr, lit,
+      sum, when, max => fmax, min => fmin}
+    val cNames = constraints.keys.toSeq.sorted
+    val aggs = count(lit(1L)).as("__rows") +:
+      (cNames.map(n => sum(when(
+         !expr(constraints(n)), lit(1L)).otherwise(lit(0L)))
+         .as(s"__viol_$n")) ++
+       numCols.flatMap(c => Seq(
+         fmin(col(c)).cast("double").as(s"__mn_$c"),
+         fmax(col(c)).cast("double").as(s"__mx_$c"))))
+    val statsBase = 2 + cNames.size
+    val perFile = scan
+      .groupBy(col("_metadata.file_path").as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().map { r =>
+        val p = r.getString(0)
+        val fs = if (p.startsWith("file:"))
+          new java.net.URI(p).getPath else p
+        val rel = Paths.get(tablePath).toAbsolutePath.normalize
+          .relativize(Paths.get(fs).toAbsolutePath.normalize)
+          .toString
+        val viols = cNames.zipWithIndex.map { case (n, i) =>
+          n -> (if (r.isNullAt(2 + i)) 0L else r.getLong(2 + i))
+        }
+        val spec = numCols.zipWithIndex.flatMap { case (c, i) =>
+          (Option(r.get(statsBase + 2 * i)),
+           Option(r.get(statsBase + 1 + 2 * i))) match {
+            case (Some(mn), Some(mx))
+                if !mn.asInstanceOf[Double].isNaN &&
+                  !mx.asInstanceOf[Double].isNaN =>
+              Some(s"$c:${Math.nextDown(mn.asInstanceOf[Double])}:" +
+                s"${Math.nextUp(mx.asInstanceOf[Double])}")
+            case _ => None // all-null or NaN column: unprunable
+          }
+        }.mkString("|")
+        (rel, r.getLong(1), viols, spec)
+      }
+    val bad = cNames.map(n =>
+        n -> perFile.map(_._3.toMap.getOrElse(n, 0L)).sum)
+      .filter(_._2 > 0)
+    (perFile.map(t => t._1 -> (t._2, t._4)).toMap,
+     if (bad.isEmpty) None
+     else Some(bad.map { case (n, c) =>
+       s"'$n' ($c rows: ${constraints(n)})" }.mkString(", ")))
+  }
+
+  /** A written batch: its claimed dir, its fresh files (table-relative,
+    * sorted) and their `#filerows.`/`#filestats.` meta. */
+  private case class Batch(dir: Path, fresh: Seq[String],
+      rowsMeta: Map[String, String], statsMeta: Map[String, String])
+
+  /** THE batch writer: claims a fresh `data/bNNNNNN` dir ([[claimDir]],
+    * from `from`), writes `df` into it (append into the just-claimed
+    * empty dir ≡ a fresh write, without overwrite's delete-and-recreate
+    * window that would drop the claim) and lists the fresh files. Their
+    * per-file row counts (the audit stats [[history]]/
+    * [[Snapshot.rowCount]] answer from without touching data) and
+    * min/max for `statsCols` (the data-skipping stats [[readPruned]]
+    * consumes) come from the batch's own footers — nothing forces a data
+    * re-read — or, when `constraints` are in force, from the one
+    * [[constraintAggregate]] over the WRITTEN files, which validates
+    * them in the same job. A violation deletes the batch dir and aborts
+    * with `refusal(violations)`. An EMPTY batch skips both. */
+  private def writeBatch(df: DataFrame, tablePath: String, from: Long,
+      statsCols: Seq[String], constraints: Map[String, String] = Map.empty,
+      refusal: String => String = identity): Batch = {
+    val dir = claimDir(Paths.get(tablePath, "data"), "b", from)
+    df.write.mode("append").parquet(dir.toString)
+    val fresh = ls(dir)
+      .filter(_.endsWith(".parquet")).sorted
+      .map(p => Paths.get(tablePath).relativize(Paths.get(p)).toString)
+    if (fresh.isEmpty) Batch(dir, fresh, Map.empty, Map.empty)
+    else if (constraints.isEmpty) {
+      val (rows, stats) = footerBatchStats(df.sparkSession, tablePath,
+        fresh, statsCols, df.schema)
+      Batch(dir, fresh, rows, stats)
+    } else {
+      val (perFile, bad) = constraintAggregate(tablePath,
+        df.sparkSession.read.schema(df.schema).parquet(dir.toString),
+        constraints, numericStatsCols(df.schema, statsCols))
+      bad.foreach { b =>
+        rmTree(dir)
+        throw new IllegalArgumentException(refusal(b))
+      }
+      // a fresh file can hold zero rows (empty partition) and then
+      // emits no group — record it explicitly as 0
+      Batch(dir, fresh,
+        fresh.map(f => s"$FileRowsPrefix$f" ->
+          perFile.get(f).map(_._1).getOrElse(0L).toString).toMap,
+        perFile.collect { case (f, (_, spec)) if spec.nonEmpty =>
+          s"$FileStatsPrefix$f" -> spec })
+    }
+  }
+
   /** Commit `df` as the next version. Append commits carry the previous
     * version's files plus the new ones; `replace = true` carries only the
     * new ones; `removeFiles` (with `replace = false`) carries the previous
@@ -1991,8 +2021,9 @@ object Manifest {
     * manifest publish — a violating commit deletes its batch files and
     * aborts with per-constraint counts, publishing nothing.
     *
-    * CONCURRENCY: batch dirs are claimed atomically (two writers never
-    * share one) and the publish is an atomic-exclusive link with the
+    * CONCURRENCY: batch dirs are claimed atomically ([[claimDir]] — two
+    * writers never share one) and the publish is [[publishVersion]]'s
+    * atomic-exclusive link with the
     * table-format optimistic retry — a pure append losing the version
     * race rebases onto the new head (disjoint files, schema and
     * constraints re-resolved; aborts loudly if the head's constraint
@@ -2030,17 +2061,7 @@ object Manifest {
         "dropConstraint to remove one from a live table)")
     statsCols.foreach(c => require(!c.contains(":") && !c.contains("|"),
       s"invalid stats column name '$c'"))
-    require(!meta.contains(SchemaKey), s"'$SchemaKey' is reserved")
-    require(!meta.contains(CommitTsKey), s"'$CommitTsKey' is reserved")
-    require(!meta.contains(ReplaceKey), s"'$ReplaceKey' is reserved")
-    meta.keys.foreach(k => require(!k.contains("=") && !k.contains("\n"),
-      s"invalid meta key '$k'"))
-    require(!meta.contains(LogFormatKey), s"'$LogFormatKey' is reserved")
-    require(!meta.contains(FeaturesKey), s"'$FeaturesKey' is reserved")
-    require(!meta.contains(MaxTsKey), s"'$MaxTsKey' is reserved")
-    meta.values.foreach(v => require(!v.contains("\n"),
-      s"meta value may not span lines: '$v'"))
-    validateStructuredMeta(meta)
+    checkMeta(meta)
     require(removeFiles.isEmpty || !replace,
       "removeFiles is meaningless with replace (replace drops everything)")
     // `base` is the Delta transaction read-version: the snapshot the
@@ -2080,115 +2101,15 @@ object Manifest {
         k.stripPrefix(ConstraintPrefix) -> ex
     }
     val constraints = inherited0 ++ passed
-    // CLAIM a fresh batch directory atomically (createDirectory fails
-    // on EEXIST): a dir left by a CRASHED commit is simply skipped —
-    // never reclaimed, so a claim can never destroy a concurrent
-    // writer's in-flight data — and a later vacuum sweeps it (it is
-    // unreferenced by construction: its manifest never published). The
-    // claimed number can exceed the published version (dir names are
-    // storage addresses, not version numbers; manifests carry explicit
-    // file lists).
-    val dataDir = Paths.get(tablePath, "data")
-    Files.createDirectories(dataDir)
-    var claim = prev0 + 1
-    var batchDir: Path = null
-    while (batchDir == null) {
-      val cand = dataDir.resolve(f"b$claim%06d")
-      try { Files.createDirectory(cand); batchDir = cand }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => claim += 1
-      }
-    }
-    // Write FIRST, then validate the WRITTEN files: `df` is executed
-    // exactly once, so a non-deterministic or concurrently-changing
-    // input can never pass validation yet land different (violating)
-    // rows — what it wrote is literally what was checked. A violation
-    // deletes the batch dir and aborts; no manifest was published, so
-    // readers never saw anything. (append into the just-claimed empty
-    // dir ≡ a fresh write, without overwrite's delete-and-recreate
-    // window that would drop the claim.)
-    df.write.mode("append").parquet(batchDir.toString)
-    val fresh = ls(batchDir)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(p => Paths.get(tablePath).relativize(Paths.get(p)).toString)
-    // ONE bounded executor-side aggregate over the written batch serves
-    // the whole commit: per-file row counts always (the audit stats
-    // [[history]]/[[Snapshot.rowCount]] answer from without touching data),
-    // per-file min/max for `statsCols` (the Iceberg/Delta data-skipping
-    // contract [[readPruned]] consumes), AND the CHECK-constraint
-    // violation counts — fused into a single job so a constraint-gated
-    // stats-bearing commit reads its batch once, not three times. A
-    // violation deletes the batch dir and aborts; nothing published.
-    // Min/max are widened one ulp per side so a lossy long→double cast
-    // (values past 2^53, e.g. nanosecond timestamps) can only LOOSEN a
-    // bound, never falsely prune a matching file. An EMPTY batch (a
-    // metadata-only commit wrote no files) skips the job outright.
-    val cNames = constraints.keys.toSeq.sorted
-    val (rowsMeta, statsMeta): (Map[String, String], Map[String, String]) =
-      if (fresh.isEmpty) (Map.empty, Map.empty)
-      else if (cNames.isEmpty)
-        // no constraints to validate ⇒ nothing forces a data re-read:
-        // harvest counts + bounds from the batch's own footers (~free)
-        footerBatchStats(df.sparkSession, tablePath, fresh, statsCols,
-          df.schema)
-      else {
-        import org.apache.spark.sql.functions.{col, count, expr, lit,
-          sum, when, max => fmax, min => fmin}
-        val numCols = numericStatsCols(df.schema, statsCols)
-        val aggs = count(lit(1L)).as("__rows") +:
-          (cNames.map(n => sum(when(
-             !expr(constraints(n)), lit(1L)).otherwise(lit(0L)))
-             .as(s"__viol_$n")) ++
-           numCols.flatMap(c => Seq(
-             fmin(col(c)).cast("double").as(s"__mn_$c"),
-             fmax(col(c)).cast("double").as(s"__mx_$c"))))
-        val statsBase = 2 + cNames.size
-        val perFile = df.sparkSession.read.schema(df.schema)
-          .parquet(batchDir.toString)
-          .groupBy(col("_metadata.file_path").as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            val p = r.getString(0)
-            val fs = if (p.startsWith("file:"))
-              new java.net.URI(p).getPath else p
-            val rel = Paths.get(tablePath).toAbsolutePath.normalize
-              .relativize(Paths.get(fs).toAbsolutePath.normalize)
-              .toString
-            val viols = cNames.zipWithIndex.map { case (n, i) =>
-              n -> (if (r.isNullAt(2 + i)) 0L else r.getLong(2 + i))
-            }
-            val spec = numCols.zipWithIndex.flatMap { case (c, i) =>
-              (Option(r.get(statsBase + 2 * i)),
-               Option(r.get(statsBase + 1 + 2 * i))) match {
-                case (Some(mn), Some(mx))
-                    if !mn.asInstanceOf[Double].isNaN &&
-                      !mx.asInstanceOf[Double].isNaN =>
-                  Some(s"$c:${Math.nextDown(mn.asInstanceOf[Double])}:" +
-                    s"${Math.nextUp(mx.asInstanceOf[Double])}")
-                case _ => None // all-null or NaN column: unprunable
-              }
-            }.mkString("|")
-            (rel, r.getLong(1), viols, spec)
-          }
-        val bad = cNames.map(n =>
-            n -> perFile.map(_._3.toMap.getOrElse(n, 0L)).sum)
-          .filter(_._2 > 0)
-        if (bad.nonEmpty) {
-          rmTree(batchDir)
-          throw new IllegalArgumentException(
-            "requirement failed: commit violates CHECK constraint(s) " +
-              bad.map { case (n, c) =>
-                s"'$n' ($c rows: ${constraints(n)})" }.mkString(", ") +
-              " — nothing was published")
-        }
-        val byRel = perFile.map(t => t._1 -> (t._2, t._4)).toMap
-        // a fresh file can hold zero rows (empty partition) and then
-        // emits no group — record it explicitly as 0
-        (fresh.map(f => s"$FileRowsPrefix$f" ->
-           byRel.get(f).map(_._1).getOrElse(0L).toString).toMap,
-         byRel.collect { case (f, (_, spec)) if spec.nonEmpty =>
-           s"$FileStatsPrefix$f" -> spec })
-      }
+    // Write FIRST, then validate the WRITTEN files ([[writeBatch]]):
+    // `df` is executed exactly once, so a non-deterministic or
+    // concurrently-changing input can never pass validation yet land
+    // different (violating) rows — what it wrote is literally what was
+    // checked. A violation deletes the batch dir and aborts; no manifest
+    // was published, so readers never saw anything.
+    val batch = writeBatch(df, tablePath, prev0 + 1, statsCols, constraints,
+      bad => s"requirement failed: commit violates CHECK constraint(s) " +
+        s"$bad — nothing was published")
     // ZERO-ROW batch files drop from the listing (Delta never publishes
     // an empty add action): a metadata-only commit — ADD CONSTRAINT,
     // a DV delete, an empty micro-batch — stays truly metadata-only
@@ -2199,21 +2120,19 @@ object Manifest {
     // first or replace commit of an empty frame — readers resolve their
     // empty scan from the file's footer).
     val freshKept = {
-      val nonEmpty = fresh.filter(f =>
-        rowsMeta.get(s"$FileRowsPrefix$f").forall(_ != "0"))
+      val nonEmpty = batch.fresh.filter(f =>
+        batch.rowsMeta.get(s"$FileRowsPrefix$f").forall(_ != "0"))
       if (nonEmpty.nonEmpty || (!replace && prev0 > 0)) nonEmpty
-      else fresh
+      else batch.fresh
     }
     val keptKeys = freshKept.map(f => s"$FileRowsPrefix$f").toSet
-    val rowsMetaKept = rowsMeta.filter(kv => keptKeys.contains(kv._1))
+    val rowsMetaKept =
+      batch.rowsMeta.filter(kv => keptKeys.contains(kv._1))
     val bytesMetaKept = freshBytesMeta(tablePath, freshKept)
     // PUBLISH with optimistic concurrency (the table-format retry):
     // each attempt builds the manifest against the CURRENT head and
-    // claims the next version via an atomic-exclusive hard link (link()
-    // appears fully-formed or not at all, and — unlike POSIX rename() —
-    // fails with EEXIST if the target landed in the meantime, so a
-    // racing writer can never silently replace the winner). Losing the
-    // race is terminal only when rebasing is unsound: a PURE APPEND
+    // claims the next version through [[publishVersion]] (None when the
+    // version landed in the meantime). Losing the race is terminal only when rebasing is unsound: a PURE APPEND
     // always rebases onto the new head (fresh files disjoint by the
     // batch-dir claim, head's file list re-carried, schema and
     // constraints re-resolved), and a DV or copy-on-write commit
@@ -2223,7 +2142,7 @@ object Manifest {
     // appends whose head grew a DIFFERENT constraint set than they
     // validated against abort loudly instead (their correctness was
     // resolved against a now-stale base).
-    Files.createDirectories(manifestDir(tablePath))
+    //
     // REBASE ELIGIBILITY (the liveness half of optimistic concurrency;
     // the loop below enforces the safety half per attempt). A commit's
     // correctness was resolved against `prev0` through its READ-SET
@@ -2260,7 +2179,7 @@ object Manifest {
       val baseSnap = if (head == prev0) snap0 else at(tablePath, head)
       if (head != prev0) {
         if (!rebasable) {
-          rmTree(batchDir)
+          rmTree(batch.dir)
           throw new IllegalStateException(
             s"concurrent commit detected at $tablePath: version " +
               s"$head was published by another writer after this " +
@@ -2274,7 +2193,7 @@ object Manifest {
           val anchorDvAtHead = baseSnap.dv
             .filter { case (f, _) => anchorFiles.contains(f) }
           if (gone.nonEmpty || anchorDvAtHead != anchorDvAtPrev0) {
-            rmTree(batchDir)
+            rmTree(batch.dir)
             throw new IllegalStateException(
               s"concurrent commit detected at $tablePath: a file this " +
                 "commit rewrites or deletes from was " +
@@ -2285,7 +2204,7 @@ object Manifest {
           }
         }
         if (baseSnap.constraints != inherited0) {
-          rmTree(batchDir)
+          rmTree(batch.dir)
           throw new IllegalStateException(
             s"concurrent commit detected at $tablePath: the table's " +
               "CHECK constraints changed after this commit validated " +
@@ -2306,7 +2225,7 @@ object Manifest {
           if (k.startsWith(TxnPrefix) &&
               baseSnap.txns.get(k.stripPrefix(TxnPrefix))
                 .exists(_._1 >= v.toLong)) {
-            rmTree(batchDir)
+            rmTree(batch.dir)
             throw new TxnAlreadyApplied(tablePath,
               k.stripPrefix(TxnPrefix), v.toLong)
           }
@@ -2320,7 +2239,6 @@ object Manifest {
         else baseSnap.constraints -- excludeConstraint.toSeq
       val constraintMeta = (inherited ++ passed)
         .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-      val next = head + 1
       val opMeta =
         if (removeFiles.nonEmpty) Map(OpTypeKey -> "rewrite")
         else Map.empty[String, String]
@@ -2332,66 +2250,20 @@ object Manifest {
       val replaceMeta =
         if (replace) Map(ReplaceKey -> "true")
         else Map.empty[String, String]
-      val now = System.currentTimeMillis
-      val lines =
-        (meta ++ constraintMeta ++ opMeta ++ replaceMeta ++
-          rowsMetaKept ++ statsMeta ++ bytesMetaKept ++ formatMeta ++
-          maxTsMeta(baseSnap, now) +
-          (SchemaKey -> schema.json) +
-          (CommitTsKey -> now.toString))
-          .toSeq.sorted
-          .map { case (k, v) => s"#$k=$v" } ++
-        removeFiles.map("-" + _) ++
-        freshKept
-      // writer-unique tmp (createTempFile): concurrent publishers of
-      // the same version must not overwrite each other's staging file
-      val tmp = Files.createTempFile(manifestDir(tablePath),
-        s".v$next-", ".tmp")
-      Files.write(tmp,
-        lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      beforePublish()
-      try {
-        Files.createLink(manifestFile(tablePath, next), tmp)
-        Files.deleteIfExists(tmp)
-        maybeCheckpoint(tablePath, next)
-        writeHeadHint(tablePath, next)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
+      publishVersion(tablePath, baseSnap,
+        meta ++ constraintMeta ++ opMeta ++ replaceMeta ++ rowsMetaKept ++
+          batch.statsMeta ++ bytesMetaKept,
+        schema, removeFiles, freshKept) match {
+        case Some(next) => return next
+        case None =>
           attempts += 1
           if (attempts > 20) {
-            rmTree(batchDir)
+            rmTree(batch.dir)
             throw new IllegalStateException(
               s"concurrent commit detected at $tablePath: still losing " +
                 s"the publish race after $attempts rebases — giving up")
           }
           head = version(tablePath)
-        case _: UnsupportedOperationException =>
-          // Filesystem without hard links: POSIX rename is atomic but
-          // NON-exclusive — it would silently replace a manifest a
-          // racing writer just published, losing that committed
-          // version. There is no exclusive atomic publish primitive on
-          // such a filesystem, so this path does NOT offer multi-writer
-          // rebase semantics: re-check the slot immediately before the
-          // move (narrows the race to the single-writer contract the
-          // pre-hardlink code had) and treat an occupied slot as a
-          // terminal conflict rather than rebasing into a lossy rename.
-          if (Files.exists(manifestFile(tablePath, next))) {
-            Files.deleteIfExists(tmp)
-            rmTree(batchDir)
-            throw new IllegalStateException(
-              s"concurrent commit detected at $tablePath: version " +
-                s"$next was published by another writer, and this " +
-                "filesystem has no hard links (no exclusive atomic " +
-                "publish) — multi-writer commits require hard-link " +
-                "support; retry on the new head")
-          }
-          Files.move(tmp, manifestFile(tablePath, next),
-            StandardCopyOption.ATOMIC_MOVE)
-          maybeCheckpoint(tablePath, next)
-          writeHeadHint(tablePath, next)
-          return next
       }
     }
     throw new IllegalStateException("unreachable")
@@ -2414,19 +2286,9 @@ object Manifest {
     val head = at(tablePath)
     require(toVersion >= 1 && toVersion <= head.version,
       s"cannot restore $tablePath to $toVersion (head is ${head.version})")
-    require(!meta.contains(SchemaKey), s"'$SchemaKey' is reserved")
-    require(!meta.contains(CommitTsKey), s"'$CommitTsKey' is reserved")
-    require(!meta.contains(ReplaceKey), s"'$ReplaceKey' is reserved")
-    require(!meta.contains(LogFormatKey), s"'$LogFormatKey' is reserved")
-    require(!meta.contains(FeaturesKey), s"'$FeaturesKey' is reserved")
-    require(!meta.contains(MaxTsKey), s"'$MaxTsKey' is reserved")
-    meta.keys.foreach(k => require(!k.contains("=") && !k.contains("\n"),
-      s"invalid meta key '$k'"))
-    meta.values.foreach(v => require(!v.contains("\n"),
-      s"meta value may not span lines: '$v'"))
+    checkMeta(meta)
     val snap = at(tablePath, toVersion) // throws if vacuumed
     val restoredMeta =
-      Map(SchemaKey -> snap.versionMeta(SchemaKey)) ++
       snap.constraints
         .map { case (n, e) => s"$ConstraintPrefix$n" -> e } ++
       // the target's RESOLVED DV state returns with its files (a DV
@@ -2439,51 +2301,16 @@ object Manifest {
       snap.rows.map { case (f, n) => s"$FileRowsPrefix$f" -> n.toString } ++
       snap.stats.map { case (f, spec) => s"$FileStatsPrefix$f" -> spec } ++
       snap.bytes.map { case (f, n) =>
-        s"$FileBytesPrefix$f" -> n.toString } ++
-      formatMeta +
+        s"$FileBytesPrefix$f" -> n.toString } +
       (ReplaceKey -> "true")
-    val next = head.version + 1
-    val now = System.currentTimeMillis
-    val lines =
-      (meta ++ restoredMeta ++ maxTsMeta(head, now) +
-        ("restore.of" -> toVersion.toString) +
-        (CommitTsKey -> now.toString))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ snap.files
-    Files.createDirectories(manifestDir(tablePath))
-    val tmp = Files.createTempFile(manifestDir(tablePath),
-      s".v$next-", ".tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    beforePublish()
-    try {
-      Files.createLink(manifestFile(tablePath, next), tmp)
-      Files.deleteIfExists(tmp)
-      maybeCheckpoint(tablePath, next)
-      writeHeadHint(tablePath, next)
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"concurrent commit detected at $tablePath: version $next " +
-            "was published by another writer — a restore resolves the " +
-            "whole table state and cannot rebase; retry on the new head")
-      case _: UnsupportedOperationException =>
-        // no hard links ⇒ no exclusive publish; same last-instant
-        // re-check as [[commit]]'s fallback (single-writer contract)
-        if (Files.exists(manifestFile(tablePath, next))) {
-          Files.deleteIfExists(tmp)
-          throw new IllegalStateException(
-            s"concurrent commit detected at $tablePath: version $next " +
-              "was published by another writer — a restore resolves " +
-              "the whole table state and cannot rebase; retry on the " +
-              "new head")
-        }
-        Files.move(tmp, manifestFile(tablePath, next),
-          StandardCopyOption.ATOMIC_MOVE)
-        maybeCheckpoint(tablePath, next)
-        writeHeadHint(tablePath, next)
-        next
-    }
+    publishVersion(tablePath, head,
+      meta ++ restoredMeta + ("restore.of" -> toVersion.toString),
+      snap.schema, Nil, snap.files).getOrElse(
+      throw new IllegalStateException(
+        s"concurrent commit detected at $tablePath: version " +
+          s"${head.version + 1} was published by another writer — a " +
+          "restore resolves the whole table state and cannot rebase; " +
+          "retry on the new head"))
   }
 
   /** VACUUM — the explicitly destructive maintenance half the commit path

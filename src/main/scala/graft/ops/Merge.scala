@@ -403,7 +403,6 @@ object Merge {
       bounds: Map[String, (Double, Double)],
       mkImages: Option[DataFrame => DataFrame] = None,
       statsCols: Seq[String] = Seq.empty): DvStats = {
-    import java.nio.file.Files
     val tablePath = snap.tablePath
     val dvs = snap.dv
     val cand = candidateFiles(snap, bounds)
@@ -424,17 +423,8 @@ object Merge {
     // claim a fresh DV directory atomically (the batch-dir discipline:
     // a crashed delete's orphan dir is unreferenced debris vacuum
     // sweeps, never a correctness hazard)
-    val dvRoot = Paths.get(tablePath, "dv")
-    Files.createDirectories(dvRoot)
-    var claim = snap.version + 1
-    var dvDir: java.nio.file.Path = null
-    while (dvDir == null) {
-      val c = dvRoot.resolve(f"d$claim%06d")
-      try { Files.createDirectory(c); dvDir = c }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => claim += 1
-      }
-    }
+    val dvDir = Manifest.claimDir(Paths.get(tablePath, "dv"), "d",
+      snap.version + 1)
     // the new DV for each touched file = its fresh matches plus its
     // existing positions carried forward (supersede-by-containment:
     // stale rows in older shared dirs stay harmless subsets)

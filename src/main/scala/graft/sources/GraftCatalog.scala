@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, Table,
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -71,13 +72,17 @@ import graft.ops.Manifest
 class GraftCatalog extends TableCatalog {
 
   private var catalogName: String = _
-  private var root: Option[String] = None
 
   override def initialize(name: String,
-      options: CaseInsensitiveStringMap): Unit = {
+      options: CaseInsensitiveStringMap): Unit =
     catalogName = name
-    root = Option(options.get("root"))
-  }
+
+  /** The catalog root, read from the LIVE session conf at every
+    * resolution: Spark caches the catalog instance per session, so a
+    * root captured at [[initialize]] would silently ignore a later
+    * `spark.sql.catalog.<name>.root` change. */
+  private def root: Option[String] = Option(SQLConf.get.getConfString(
+    s"spark.sql.catalog.$catalogName.root", null))
 
   override def name(): String = catalogName
 

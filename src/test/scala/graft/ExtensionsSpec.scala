@@ -101,6 +101,31 @@ class ExtensionsSpec extends SparkSpec {
       .map(_.getString(1)).contains("t1"))
   }
 
+  test("graft catalog: the root is read at every resolution — after " +
+    "spark.sql.catalog.graft.root moves, a name resolves under the new " +
+    "root") {
+    import java.nio.file.Files
+    import graft.ops.Manifest
+    import spark.implicits._
+    val key = "spark.sql.catalog.graft.root"
+    spark.conf.set("spark.sql.catalog.graft",
+      "graft.sources.GraftCatalog")
+    val prior = scala.util.Try(spark.conf.get(key)).toOption
+    val a = Files.createTempDirectory("graft_cat_a").toString
+    val b = Files.createTempDirectory("graft_cat_b").toString
+    Manifest.commit(Seq(1L).toDF("id"), s"$a/t")
+    Manifest.commit(Seq(2L, 3L).toDF("id"), s"$b/t")
+    try {
+      spark.conf.set(key, a)
+      assert(spark.sql("SELECT * FROM graft.t").count() == 1L)
+      spark.conf.set(key, b)
+      assert(spark.sql("SELECT * FROM graft.t").count() == 2L)
+    } finally prior match {
+      case Some(r) => spark.conf.set(key, r)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("graft catalog: SELECT * FROM graft.<t>.history equals " +
     "Manifest.history — merge-on-read deletes read as optype=delete " +
     "with their DV row deltas — and a real table named 'history' " +

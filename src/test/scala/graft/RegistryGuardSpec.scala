@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * load through `QueryDSL.T`/`events`, never a bare `read.parquet`, and
   * the drain rule: every bounded stream drain goes through the `Streams`
   * drain combinator, and the footer rule: every parquet-mr open passes
-  * read options built once. No Spark session needed — pure registry + file
+  * read options built once, and the publish rule: every exclusive-link
+  * write and every dir claim has one home in `Manifest`. No Spark
+  * session needed — pure registry + file
   * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
 
@@ -165,5 +167,65 @@ class RegistryGuardSpec extends AnyFunSuite {
     val bare = opens.collect { case (at, 1) => at }
     assert(bare.isEmpty, "pass HadoopReadOptions built once to " +
       s"ParquetFileReader.open:\n${bare.mkString("\n")}")
+  }
+
+  /** An exclusive-link write, and a dir claim (the atomic
+    * createDirectory, or a `bNNNNNN`/`dNNNNNN` claim-name literal). */
+  private val linkToken = """Files\.createLink\(""".r
+  private val claimToken =
+    """Files\.createDirectory\(|[bd]\$\{?\w+\}?%06d""".r
+
+  /** Indices of the code lines (comment lines skipped) matching `token`. */
+  private def codeHits(lines: Seq[String], token: scala.util.matching.Regex)
+      : Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+          token.findFirstIn(l).isDefined => i
+    }
+
+  /** Line indices of the definition whose line contains `sig`: from that
+    * line to the first blank line after it. */
+  private def defSpan(lines: Seq[String], sig: String): Range = {
+    val from = lines.indexWhere(_.contains(sig))
+    assert(from >= 0, s"'$sig' not found")
+    from until lines.indexWhere(_.trim.isEmpty, from)
+  }
+
+  test("every exclusive-link write in src/main goes through " +
+    "Manifest.linkNew (plus FoldFiles.linkOrCopy's EXDEV-aware link) and " +
+    "every batch/DV dir claim through Manifest.claimDir") {
+    // the hand-written shapes both guards replaced trip them
+    val oldClaim = """    var claim = prev0 + 1
+      |    var batchDir: Path = null
+      |    while (batchDir == null) {
+      |      val cand = dataDir.resolve(f"b$claim%06d")
+      |      try { Files.createDirectory(cand); batchDir = cand }""".stripMargin
+    assert(codeHits(oldClaim.split("\n").toSeq, claimToken) == Seq(3, 4))
+    val oldLink = """    Files.write(tmp, body)
+      |    try Files.createLink(ckptFile(tablePath, v), tmp)""".stripMargin
+    assert(codeHits(oldLink.split("\n").toSeq, linkToken) == Seq(1))
+    val manifest = Paths.get("src/main/scala/graft/ops/Manifest.scala")
+    val foldFiles = Paths.get("src/main/scala/graft/ops/FoldFiles.scala")
+    def lines(f: java.nio.file.Path) = Files.readAllLines(f).asScala.toSeq
+    val homes = Seq(
+      (linkToken, manifest, defSpan(lines(manifest), "def linkNew(")),
+      (linkToken, foldFiles, defSpan(lines(foldFiles), "def linkOrCopy(")),
+      (claimToken, manifest, defSpan(lines(manifest), "def claimDir(")))
+    homes.foreach { case (token, f, span) =>
+      assert(codeHits(lines(f), token).count(span.contains) == 1,
+        s"$f: the home at line ${span.start + 1} must hold exactly one $token")
+    }
+    val files = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = for {
+      f <- files
+      src = lines(f)
+      token <- Seq(linkToken, claimToken)
+      i <- codeHits(src, token)
+      if !homes.exists { case (t, h, span) =>
+        t == token && Files.isSameFile(f, h) && span.contains(i) }
+    } yield s"$f:${i + 1}: ${src(i).trim}"
+    assert(hits.isEmpty, "exclusive-link writes go through Manifest.linkNew " +
+      s"and dir claims through Manifest.claimDir:\n${hits.mkString("\n")}")
   }
 }

@@ -230,6 +230,28 @@ class DedupSimilaritySpec extends SparkSpec {
     } finally spark.conf.unset(Checkpoints.DirKey)
   }
 
+  test("Checkpoints: re-pointing spark.graft.checkpoint.dir mid-session " +
+    "takes effect — the dir configured now receives the files") {
+    import java.nio.file.{Files, Path}
+    def written(dir: Path): Long = {
+      val s = Files.walk(dir)
+      try s.filter((p: Path) => Files.isRegularFile(p)).count()
+      finally s.close()
+    }
+    val a = Files.createTempDirectory("graft_ckpt_a")
+    val b = Files.createTempDirectory("graft_ckpt_b")
+    try {
+      spark.conf.set(Checkpoints.DirKey, a.toString)
+      assert(Checkpoints.checkpoint(spark.range(10).toDF()).count() == 10L)
+      val inA = written(a)
+      assert(inA > 0, "no reliable checkpoint files under the first dir")
+      spark.conf.set(Checkpoints.DirKey, b.toString)
+      assert(Checkpoints.checkpoint(spark.range(10).toDF()).count() == 10L)
+      assert(written(b) > 0, "the re-pointed dir received no files")
+      assert(written(a) == inA, "the first dir kept receiving files")
+    } finally spark.conf.unset(Checkpoints.DirKey)
+  }
+
   test("asof lastPrior attaches latest prior value, null before first") {
     val left = Seq((1L, 10L, "a"), (1L, 25L, "b"), (2L, 5L, "c"))
       .toDF("k", "ts", "tag")

@@ -1233,6 +1233,28 @@ class ManifestSpec extends SparkSpec {
     intercept[IllegalArgumentException](Manifest.tag(tbl, "2026"))
     Manifest.tag(tbl, "audit-2026") // letters allowed, of course
     assert(Manifest.tags(tbl) == Map("audit-2026" -> 1L))
+    // every write gate refuses the same meta: line-spanning values,
+    // malformed structured values (a published 'txn.x=abc' would make
+    // every later resolution's toLong throw) and the six reserved keys
+    Manifest.branch(tbl, "gate")
+    val gates: Seq[(String, Map[String, String] => Any)] = Seq(
+      "commit" -> (m => Manifest.commit(Seq(2).toDF("x"), tbl, meta = m)),
+      "stageCommit" -> (m =>
+        Manifest.stageCommit(Seq(2).toDF("x"), tbl, "bad3", meta = m)),
+      "commitBranch" -> (m =>
+        Manifest.commitBranch(Seq(2).toDF("x"), tbl, "gate", meta = m)),
+      "restore" -> (m => Manifest.restore(tbl, 1L, meta = m)))
+    val badMeta = Seq(Map("note" -> "a\ndata/forged.parquet"),
+      Map("txn.x" -> "abc"), Map("dv.f" -> "bad")) ++
+      Seq(Manifest.SchemaKey, Manifest.CommitTsKey, Manifest.ReplaceKey,
+        Manifest.LogFormatKey, Manifest.FeaturesKey, Manifest.MaxTsKey)
+        .map(k => Map(k -> "1"))
+    for ((gate, write) <- gates; m <- badMeta) withClue(s"$gate $m: ") {
+      intercept[IllegalArgumentException](write(m))
+    }
+    assert(Manifest.version(tbl) == 1L && Manifest.stagedIds(tbl).isEmpty &&
+      Manifest.branches(tbl) == Map("gate" -> (1L, 0L)))
+    assert(Manifest.read(spark, tbl).count() == 1L)
   }
 
   /** Count manifest/checkpoint file reads during `body` via the

@@ -251,7 +251,6 @@ class MergeSpec extends SparkSpec {
     "spark.graft.checkpoint.dir set its source is checkpointed reliably " +
     "to files under that dir; unset, it writes none") {
     import java.nio.file.{Files => JFiles, Path}
-    import org.apache.spark.CheckpointDirReset
     val tbl = freshTable()
     seed(tbl)
     val dir = JFiles.createTempDirectory("graft_merge_ckpt")
@@ -260,16 +259,10 @@ class MergeSpec extends SparkSpec {
       try st.filter((p: Path) => JFiles.isRegularFile(p)).count()
       finally st.close()
     }
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    CheckpointDirReset(sc, None) // the first dir set wins: make it ours
     spark.conf.set(Checkpoints.DirKey, dir.toString)
     try Merge.upsert(spark, tbl,
       Seq((1L, "u1", 9), (30L, "n30", 9)).toDF("id", "s", "g"), Seq("id"))
-    finally {
-      spark.conf.unset(Checkpoints.DirKey)
-      CheckpointDirReset(sc, prior)
-    }
+    finally spark.conf.unset(Checkpoints.DirKey)
     val n = written()
     assert(n > 0, "no reliable checkpoint files written")
     // unset: the default local checkpoint writes no file
