@@ -21,7 +21,9 @@ import graft.functions.{BpePairArray, BpeRewrite, DeflateLen, DotProduct, Md5Lon
   * extension rewrites): [[graft.plans.DvReadRewrite]] serving SQL reads
   * of deletion-vector-carrying [[graft.sources.GraftCatalog]] versions,
   * [[graft.plans.GraftSqlDml]] routing SQL DML/DDL through the
-  * merge-on-read engine's commit protocol, and
+  * merge-on-read engine's commit protocol (every keyed DELETE/UPDATE/
+  * MERGE form through the one keyed command,
+  * [[graft.plans.GraftMergeMatchedCommand]]), and
   * [[graft.plans.GraftSqlParser]] adding the maintenance verbs
   * (OPTIMIZE/VACUUM/RESTORE) Spark's grammar lacks.
   */

@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * conjunctive box predicate overlaps few files however it mixes the
   * dimensions. LayoutSpec measures exactly that: a 2-D box query touches
   * ~1/8 of z-ordered files vs. every file of an unclustered layout.
+  * The [[Manifest]]-table compactions ([[optimizeWhere]], [[compact]],
+  * [[optimizeZOrder]]) each pick their target files
+  * ([[Manifest.Snapshot.filesWithin]] for a range) and a shape; the
+  * DV-applied read and the `removeFiles` publish are
+  * [[Merge.rewriteFiles]], the one copy-on-write rewrite.
   */
 object Layout {
 
@@ -67,6 +72,10 @@ object Layout {
       .repartition(col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(outPath)
 
+  /** The commit meta of every layout rewrite: the `data_change=false`
+    * writer flag (content unchanged; CDC consumers skip the commit). */
+  private val layoutMeta = Map(ChangeFeed.DataChangeKey -> "false")
+
   /** OPTIMIZE WHERE — SELECTIVE compaction of a [[Manifest]] table (the
     * Delta `OPTIMIZE ... WHERE` shape): only the files whose recorded
     * `#filestats.` range intersects [`lo`, `hi`] on `column` rewrite —
@@ -86,30 +95,15 @@ object Layout {
       numFiles: Int = 1): (Long, Int, Int) = {
     // one resolution: targets, stats, DV'd content and conflict base
     val snap = Manifest.at(tablePath)
-    val all = snap.files
-    val stats = snap.fileStats
-    val targets = all.filter { f =>
-      stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    if (targets.isEmpty) return (snap.version, 0, all.size)
-    // DV-APPLIED rewrite: a targeted file's deletion vector is
-    // materialized away here — the survivors are written WITHOUT the
-    // hidden rows and the commit drops the removed files' mappings, so
+    val targets = snap.filesWithin(Map(column -> (lo, hi)))
+    if (targets.isEmpty) return (snap.version, 0, snap.files.size)
+    // a targeted file's deletion vector is materialized away here, so
     // maintenance is what retires the merge-on-read read-side tax
     // (still data_change=false: the hidden rows were already invisible)
-    val v = Manifest.commit(
-      snap.applyDv(spark, snap.scan(spark, targets))
-        .repartitionByRange(numFiles, col(column))
-        .sortWithinPartitions(col(column)),
-      tablePath, removeFiles = targets, statsCols = Seq(column),
-      meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      // targets and rewrite content resolved at snap: a racing DV on a
-      // target must conflict, not be silently absorbed-away stale
-      base = snap)
-    (v, targets.size, all.size - targets.size)
+    val v = Merge.rewriteFiles(spark, snap, targets, Seq(column),
+      layoutMeta)(_.repartitionByRange(numFiles, col(column))
+        .sortWithinPartitions(col(column)))
+    (v, targets.size, snap.files.size - targets.size)
   }
 
   /** OPTIMIZE (bare) — whole-table BIN-PACK compaction of a
@@ -135,17 +129,13 @@ object Layout {
     if (all.isEmpty) return (snap.version, 0, 0)
     val statsCols = snap.fileStats.values
       .flatMap(_.keys).toSeq.distinct.sorted
-    val applied = snap.applyDv(spark, snap.scan(spark))
     // shrinking merges input splits shuffle-free (coalesce); GROWING
     // the file count — re-splitting oversized files — cannot (coalesce
     // only reduces), so it pays the one round-robin shuffle
-    val sized =
-      if (numFiles <= all.size) applied.coalesce(numFiles)
-      else applied.repartition(numFiles)
-    val v = Manifest.commit(sized,
-      snap.tablePath, removeFiles = all, statsCols = statsCols,
-      meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      base = snap)
+    val v = Merge.rewriteFiles(spark, snap, all, statsCols, layoutMeta)(
+      applied =>
+        if (numFiles <= all.size) applied.coalesce(numFiles)
+        else applied.repartition(numFiles))
     (v, all.size, 0)
   }
 
@@ -175,24 +165,20 @@ object Layout {
     val snap = Manifest.at(tablePath)
     val all = snap.files
     if (all.isEmpty) return (snap.version, 0, 0)
-    val applied = snap.applyDv(spark, snap.scan(spark))
-    val clustered = cols match {
-      case Seq(a) =>
-        applied.repartitionByRange(numFiles, col(a))
-          .sortWithinPartitions(col(a))
-      case Seq(a, b) =>
-        val dom = lit(1L << bits)
-        applied.withColumn("__z", zValue(
-            pmod(col(a).cast("long"), dom),
-            pmod(col(b).cast("long"), dom), bits))
-          .repartitionByRange(numFiles, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z")
-    }
-    val v = Manifest.commit(clustered, tablePath, removeFiles = all,
-      statsCols = cols,
-      meta = Map(ChangeFeed.DataChangeKey -> "false"),
-      base = snap)
+    val v = Merge.rewriteFiles(spark, snap, all, cols, layoutMeta)(
+      applied => cols match {
+        case Seq(a) =>
+          applied.repartitionByRange(numFiles, col(a))
+            .sortWithinPartitions(col(a))
+        case Seq(a, b) =>
+          val dom = lit(1L << bits)
+          applied.withColumn("__z", zValue(
+              pmod(col(a).cast("long"), dom),
+              pmod(col(b).cast("long"), dom), bits))
+            .repartitionByRange(numFiles, col("__z"))
+            .sortWithinPartitions(col("__z"))
+            .drop("__z")
+      })
     (v, all.size, 0)
   }
 

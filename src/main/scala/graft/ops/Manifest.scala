@@ -510,6 +510,23 @@ object Manifest {
     def fileStats: Map[String, Map[String, (Double, Double)]] =
       stats.map { case (f, spec) => f -> parseStatsSpec(spec) }
 
+    /** THE stats prune: the live files whose recorded [[fileStats]]
+      * bounds intersect `bounds` on every bounded column — the
+      * candidate set of a touch or match scan, the OPTIMIZE WHERE
+      * targets, the [[readPruned]] file set. A file without stats for
+      * a bounded column is kept (stats only bound, they never prove a
+      * match absent). Pure driver-side metadata. */
+    private[ops] def filesWithin(
+        bounds: Map[String, (Double, Double)]): Vector[String] =
+      if (bounds.isEmpty) files
+      else {
+        val st = fileStats
+        files.filter(f => st.get(f).forall(cs =>
+          bounds.forall { case (c, (lo, hi)) =>
+            cs.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+          }))
+      }
+
     /** The RAW parquet scan of `rels` (table-relative; every live file
       * by default) under the recorded schema — no footer inference, no
       * deletion vectors applied ([[applyDv]] does that). An empty
@@ -759,7 +776,8 @@ object Manifest {
     * [min, max] for `column` intersects [`lo`, `hi`]; files without
     * stats are conservatively kept. Returns (frame over the kept files,
     * kept count, skipped count). The pruning decision is pure manifest
-    * metadata — zero data or footer I/O — which is the entire point:
+    * metadata ([[Snapshot.filesWithin]]) — zero data or footer I/O —
+    * which is the entire point:
     * combined with clustering ([[Layout.zOrderWrite]] / range-batched
     * ingest), a selective predicate plans in O(files) driver work and
     * reads O(matching files) bytes. Callers apply the EXACT predicate
@@ -772,12 +790,7 @@ object Manifest {
       lo: Double, hi: Double): (DataFrame, Int, Int) = {
     // one resolution serves the file list, the stats AND the DV state
     val snap = at(tablePath)
-    val kept = snap.files.filter { f =>
-      snap.stats.get(f).flatMap(parseStatsSpec(_).get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // no stats recorded: cannot prune
-      }
-    }
+    val kept = snap.filesWithin(Map(column -> (lo, hi)))
     (snap.applyDv(spark, snap.scan(spark, kept)), kept.size,
       snap.files.size - kept.size)
   }
@@ -1086,7 +1099,7 @@ object Manifest {
           constraints.nonEmpty && freshKept.nonEmpty) {
         val paths = freshKept.map(rel =>
           Paths.get(tablePath).resolve(rel).toString)
-        constraintAggregate(tablePath,
+        constraintAggregate(
           spark.read.schema(batchSchema).parquet(paths: _*), constraints,
           Seq.empty)._2.foreach(bad => throw new IllegalArgumentException(
             "requirement failed: staged WAP id '" + id + "' violates " +
@@ -1571,8 +1584,10 @@ object Manifest {
 
   /** The table-relative path of the file a scanned row came from, as a
     * plain codegen'd expression over `_metadata.file_path` (last three
-    * path segments — the fixed `data/bNNNNNN/<file>` layout): the file
-    * key DV application matches on. */
+    * path segments — the fixed `data/bNNNNNN/<file>` layout, so no
+    * driver-side URI decoding): THE file key. DV application matches
+    * on it; the copy-on-write touched-file list, the constraint
+    * aggregate and [[history]]'s row-count fallback group by it. */
   private[ops] def relPathCol: org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     concat_ws("/", slice(split(col("_metadata.file_path"), "/"), -3, 3))
@@ -1907,7 +1922,7 @@ object Manifest {
     * past 2^53, e.g. nanosecond timestamps) can only LOOSEN a bound,
     * never falsely prune a matching file. A file with zero rows emits
     * no group. */
-  private def constraintAggregate(tablePath: String, scan: DataFrame,
+  private def constraintAggregate(scan: DataFrame,
       constraints: Map[String, String], numCols: Seq[String])
       : (Map[String, (Long, String)], Option[String]) = {
     import org.apache.spark.sql.functions.{col, count, expr, lit,
@@ -1922,15 +1937,9 @@ object Manifest {
          fmax(col(c)).cast("double").as(s"__mx_$c"))))
     val statsBase = 2 + cNames.size
     val perFile = scan
-      .groupBy(col("_metadata.file_path").as("__f"))
+      .groupBy(relPathCol.as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
-        val p = r.getString(0)
-        val fs = if (p.startsWith("file:"))
-          new java.net.URI(p).getPath else p
-        val rel = Paths.get(tablePath).toAbsolutePath.normalize
-          .relativize(Paths.get(fs).toAbsolutePath.normalize)
-          .toString
         val viols = cNames.zipWithIndex.map { case (n, i) =>
           n -> (if (r.isNullAt(2 + i)) 0L else r.getLong(2 + i))
         }
@@ -1945,7 +1954,7 @@ object Manifest {
             case _ => None // all-null or NaN column: unprunable
           }
         }.mkString("|")
-        (rel, r.getLong(1), viols, spec)
+        (r.getString(0), r.getLong(1), viols, spec)
       }
     val bad = cNames.map(n =>
         n -> perFile.map(_._3.toMap.getOrElse(n, 0L)).sum)
@@ -1987,7 +1996,7 @@ object Manifest {
         fresh, statsCols, df.schema)
       Batch(dir, fresh, rows, stats)
     } else {
-      val (perFile, bad) = constraintAggregate(tablePath,
+      val (perFile, bad) = constraintAggregate(
         df.sparkSession.read.schema(df.schema).parquet(dir.toString),
         constraints, numericStatsCols(df.schema, statsCols))
       bad.foreach { b =>
@@ -2527,19 +2536,11 @@ object Manifest {
       curSnap.rows.foreach { case (f, n) => fileRows.getOrElseUpdate(f, n) }
       val uncovered = added.filterNot(fileRows.contains)
       if (uncovered.nonEmpty) {
-        import org.apache.spark.sql.functions.{col, count, lit}
+        import org.apache.spark.sql.functions.{count, lit}
         curSnap.scan(spark, uncovered)
-          .groupBy(col("_metadata.file_path").as("__f"))
+          .groupBy(relPathCol.as("__f"))
           .agg(count(lit(1)).as("__n"))
-          .collect().foreach { r =>
-            val rel = Paths.get(tablePath).toAbsolutePath.normalize
-              .relativize(Paths.get({
-                val p = r.getString(0)
-                if (p.startsWith("file:")) new java.net.URI(p).getPath
-                else p
-              }).toAbsolutePath.normalize).toString
-            fileRows(rel) = r.getLong(1)
-          }
+          .collect().foreach(r => fileRows(r.getString(0)) = r.getLong(1))
         // a file can hold zero rows (empty append/metadata commit) and
         // then emits no group — record it explicitly
         uncovered.foreach(f => fileRows.getOrElseUpdate(f, 0L))

@@ -2,8 +2,9 @@ package graft.ops
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** Row-level MERGE / DELETE on [[Manifest]] tables as COPY-ON-WRITE file
   * rewrites — the Delta `MERGE INTO` / `DELETE FROM` shape, and the reason
@@ -101,25 +102,17 @@ object Merge {
     // eager evaluation (bounded: a MERGE source is a CDC batch, not the
     // table) and every later reference replays the stored partitions.
     val src = Checkpoints.checkpoint(source)
-    // ONE bounded aggregate over the source keys serves all three
-    // guards: per-key row counts roll up to (distinct keys, max rows
-    // per key, per-key-column min/max) — the duplicate-key precondition
-    // check, the broadcast gate, and the file-skipping bounds below.
-    val (boundAggs, boundsOf) = keyBounds(src, keyCols)
-    val guard = src.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(count(lit(1)).as("__k"),
-        max(col("__n")).as("__m") +: boundAggs: _*).head()
-    val keyCount = guard.getLong(0)
-    val maxPerKey = if (guard.isNullAt(1)) 0L else guard.getLong(1)
+    // ONE bounded aggregate over the source keys ([[keyGuard]]) serves
+    // all three guards: the duplicate-key precondition check, the
+    // broadcast gate, and the file-skipping bounds — a file whose
+    // recorded range is disjoint from the source's on ANY key column
+    // cannot contain a matched key, so the touch-detection scan skips
+    // it from pure manifest metadata.
+    val (keyCount, maxPerKey, srcBounds) = keyGuard(src, keyCols)
     require(maxPerKey <= 1L,
       s"MERGE source has duplicate keys on (${keyCols.mkString(", ")}): " +
         s"up to $maxPerKey source rows share one key; a MERGE source " +
         "must carry at most one row per key")
-    // Source key bounds — a file whose recorded range is disjoint from
-    // the source's on ANY key column cannot contain a matched key, so
-    // the touch-detection scan skips it from pure manifest metadata.
-    val srcBounds = boundsOf(guard, 2)
     // the guard proved at most one source row per key (nulls included),
     // so the key projection is already distinct
     val srcKeys = src.select(keyCols.map(col): _*)
@@ -130,55 +123,47 @@ object Merge {
       rewrite = touched =>
         touched.join(keys, keyCols, "left_anti")
           .unionByName(src),
-      meta, candidates = Some(candidateFiles(snap, srcBounds)),
-      statsCols = statsCols)
+      meta, srcBounds, statsCols)
       // duplicate-key guard passed ⇒ every key has exactly one source
       // row, so the guard's distinct-key count IS the source row count
       .copy(sourceRows = keyCount)
   }
 
-  /** Min/max aggregates of the NUMERIC `keyCols` of `df`, for the
-    * caller to fuse into its one aggregate job, and the reader of their
-    * values from the result row (starting at index `from`): key bounds
-    * ulp-widened like the recorded file stats, absent for an all-null
-    * or NaN column. Under ANSI mode (the Spark 4 default) a string key's
-    * double cast would THROW, not null out — non-numeric keys (a
-    * string/UUID user id, the common GDPR key shape) just don't prune,
-    * exactly like the recorded file stats, which exist only for numeric
-    * columns. */
-  private def keyBounds(df: DataFrame, keyCols: Seq[String])
-      : (Seq[Column], (Row, Int) => Map[String, (Double, Double)]) = {
-    val num = keyCols.filter(c => df.schema(c).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType])
-    (num.flatMap(c => Seq(min(col(c)).cast("double").as(s"__mn_$c"),
-       max(col(c)).cast("double").as(s"__mx_$c"))),
-     (r, from) => num.zipWithIndex.flatMap { case (c, i) =>
-       val (mnI, mxI) = (from + 2 * i, from + 2 * i + 1)
-       if (r.isNullAt(mnI) || r.isNullAt(mxI) ||
-           r.getDouble(mnI).isNaN || r.getDouble(mxI).isNaN) None
-       else Some(c -> (Math.nextDown(r.getDouble(mnI)),
-         Math.nextUp(r.getDouble(mxI))))
-     }.toMap)
+  /** THE key guard: ONE bounded aggregate over the key tuples of
+    * `df` — group by `keyCols`, then (distinct key tuples, max rows per
+    * tuple, per-NUMERIC-key-column min/max ulp-widened like the
+    * recorded file stats). A null tuple is one group; an all-null or
+    * NaN column yields no bound. Each caller reads its own decisions
+    * from the one job: a duplicate refusal (max rows > 1), the no-op
+    * (0 keys), the broadcast gate (keys vs `broadcastKeyLimit`) and the
+    * stats prune ([[Manifest.Snapshot.filesWithin]]). Under ANSI mode
+    * (the Spark 4 default) a string key's double cast would THROW, not
+    * null out — non-numeric keys (a string/UUID user id, the common
+    * GDPR key shape) just don't prune, exactly like the recorded file
+    * stats, which exist only for numeric columns. */
+  private def keyGuard(df: DataFrame, keyCols: Seq[String])
+      : (Long, Long, Map[String, (Double, Double)]) = {
+    val num = keyCols.filter(c =>
+      df.schema(c).dataType.isInstanceOf[NumericType])
+    val g = df.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(count(lit(1)).as("__k"), max(col("__n")).as("__m") +:
+        num.flatMap(c => Seq(min(col(c)).cast("double"),
+          max(col(c)).cast("double"))): _*).head()
+    val bounds = num.zipWithIndex.flatMap { case (c, i) =>
+      val (mnI, mxI) = (2 + 2 * i, 3 + 2 * i)
+      if (g.isNullAt(mnI) || g.isNullAt(mxI) ||
+          g.getDouble(mnI).isNaN || g.getDouble(mxI).isNaN) None
+      else Some(c -> (Math.nextDown(g.getDouble(mnI)),
+        Math.nextUp(g.getDouble(mxI))))
+    }.toMap
+    (g.getLong(0), if (g.isNullAt(1)) 0L else g.getLong(1), bounds)
   }
 
-  /** Files of `snap` whose recorded [[Manifest.FileStatsPrefix]]
-    * bounds could intersect `bounds` on every bounded column — the
-    * candidate set a touch scan must read. Files without stats (or
-    * without stats for a bounded column) are conservatively kept; pure
-    * driver-side metadata. */
-  private def candidateFiles(snap: Manifest.Snapshot,
-      bounds: Map[String, (Double, Double)]): Seq[String] = {
-    val all = snap.files
-    if (bounds.isEmpty) all
-    else {
-      val stats = snap.fileStats
-      all.filter { f =>
-        stats.get(f).forall(colStats => bounds.forall { case (c, (lo, hi)) =>
-          colStats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        })
-      }
-    }
-  }
+  /** A declared `pruneRange` as stats-prune bounds. */
+  private def within(r: Option[(String, Double, Double)])
+      : Map[String, (Double, Double)] =
+    r.map { case (c, lo, hi) => c -> (lo, hi) }.toMap
 
   /** Idempotent [[upsert]] for replayable writers (the streaming MERGE
     * sink): the (appId, txnVersion) stamp publishes atomically with the
@@ -214,11 +199,9 @@ object Merge {
     cowRewrite(spark, snap,
       touches = _.filter(pred),
       rewrite = touched => touched.filter(!pred),
-      meta, skipWhenUntouched = true,
-      candidates = Some(candidateFiles(snap,
-        pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap)),
+      meta, within(pruneRange),
       // survivors keep their range column's stats prunable
-      statsCols = pruneRange.map(_._1).toSeq)
+      statsCols = pruneRange.map(_._1).toSeq, skipWhenUntouched = true)
   }
 
   /** Accounting of one merge-on-read DELETE: no data file is read-
@@ -255,20 +238,23 @@ object Merge {
       meta: Map[String, String] = Map.empty,
       pruneRange: Option[(String, Double, Double)] = None): DvStats =
     deleteDv(spark, Manifest.at(tablePath), _.filter(pred), meta,
-      pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap)
+      within(pruneRange))
 
   /** Keyed MERGE-ON-READ DELETE — the literal GDPR erasure shape:
     * every row whose `keyCol` appears in `keys` (a DataFrame — the
     * erasure-request set, never collected to the driver) hides behind
-    * a deletion vector. One bounded aggregate over the request set
-    * yields the distinct-key count (the broadcast gate — past
+    * a deletion vector. The one [[keyGuard]] aggregate over the request
+    * set yields the distinct key-tuple count (a null tuple counts as
+    * one: the no-op when 0, and the broadcast gate — past
     * `broadcastKeyLimit` the membership semi-join degrades to shuffle
     * instead of flooding the driver, [[DefaultBroadcastKeyLimit]]) and
     * the key bounds (stats-pruning the match scan to candidate files,
-    * like [[upsert]]). Idempotent by MoR construction: a replayed
-    * request set finds its rows already hidden, matches nothing, and
-    * publishes nothing — which is what makes the streaming erasure
-    * sink exactly-once without a txn stamp. */
+    * like [[upsert]]); duplicate request keys are harmless to a
+    * membership probe, so they are not refused. Idempotent by MoR
+    * construction: a replayed request set finds its rows already
+    * hidden, matches nothing, and publishes nothing — which is what
+    * makes the streaming erasure sink exactly-once without a txn
+    * stamp. */
   def deleteKeysDv(spark: SparkSession, tablePath: String,
       keys: DataFrame, keyCol: String,
       meta: Map[String, String] = Map.empty,
@@ -292,18 +278,13 @@ object Merge {
       broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DvStats = {
     require(keyCols.nonEmpty, "at least one key column")
     val snap = Manifest.at(tablePath)
-    val (boundAggs, boundsOf) = keyBounds(keys, keyCols)
-    val g = keys.agg(
-      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)
-        .as("__k"),
-      boundAggs: _*).head()
-    if (g.getLong(0) == 0L) return noop(snap)
+    val (n, _, bounds) = keyGuard(keys, keyCols)
+    if (n == 0L) return noop(snap)
     val keySet = keys.select(keyCols.map(col): _*).distinct()
     val hinted =
-      if (g.getLong(0) <= broadcastKeyLimit) broadcast(keySet)
-      else keySet
+      if (n <= broadcastKeyLimit) broadcast(keySet) else keySet
     deleteDv(spark, snap,
-      _.join(hinted, keyCols, "left_semi"), meta, boundsOf(g, 1))
+      _.join(hinted, keyCols, "left_semi"), meta, bounds)
   }
 
   /** A SOURCE column as seen inside [[mergeMatchedDv]]'s set/condition
@@ -325,8 +306,12 @@ object Merge {
     * [[srcCol]]. Empty `sets` = conditional keyed DELETE. The source
     * executes ONCE (an eager checkpoint) and must be key-unique —
     * duplicate key tuples are an ambiguous per-row update and refuse
-    * before anything writes. Numeric key columns bound the structural
-    * file pruning exactly like [[deleteKeysDvCols]]. Idempotent for
+    * before anything writes, checked in the same [[keyGuard]] job that
+    * sizes the broadcast and bounds the prune. Every keyed SQL form
+    * (DELETE/UPDATE … WHERE k IN (SELECT …), MERGE … WHEN MATCHED
+    * THEN DELETE/UPDATE) lowers here. Numeric key columns bound the
+    * structural file pruning exactly like [[deleteKeysDvCols]].
+    * Idempotent for
     * DELETE by MoR construction; an UPDATE replay re-matches the
     * updated images only if they still satisfy `cond` (standard MERGE
     * semantics). */
@@ -359,29 +344,24 @@ object Merge {
     val src0 = Checkpoints.checkpoint(source)
     keyCols.foreach(k => require(src0.columns.contains(k),
       s"source has no key column '$k'"))
-    val dup = src0.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-      .limit(1).count()
-    require(dup == 0L,
+    val (n, maxPerKey, bounds) = keyGuard(src0, keyCols)
+    require(maxPerKey <= 1L,
       "merge source has duplicate key tuples — an ambiguous per-row " +
         "update; de-duplicate the source first")
-    val (boundAggs, boundsOf) = keyBounds(src0, keyCols)
-    val g = src0.agg(count(lit(1)).as("__k"), boundAggs: _*).head()
-    if (g.getLong(0) == 0L) return noop(snap)
+    if (n == 0L) return noop(snap)
     // keys stay bare (the join columns); EVERY source column also
     // rides prefixed, so set/cond expressions can name source keys too
     val renamed = src0.select(
       keyCols.map(col) ++
         src0.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
     val hinted =
-      if (g.getLong(0) <= broadcastKeyLimit) broadcast(renamed)
-      else renamed
+      if (n <= broadcastKeyLimit) broadcast(renamed) else renamed
     deleteDv(spark, snap,
       m => {
         val joined = m.join(hinted, keyCols)
         cond.map(joined.filter).getOrElse(joined)
       },
-      meta, boundsOf(g, 1),
+      meta, bounds,
       mkImages =
         if (sets.isEmpty) None
         else Some { matched =>
@@ -405,7 +385,7 @@ object Merge {
       statsCols: Seq[String] = Seq.empty): DvStats = {
     val tablePath = snap.tablePath
     val dvs = snap.dv
-    val cand = candidateFiles(snap, bounds)
+    val cand = snap.filesWithin(bounds)
     if (cand.isEmpty) return noop(snap)
     // match against the LIVE view (positions already hidden by an
     // in-force DV are excluded — idempotent re-deletes add nothing),
@@ -502,8 +482,7 @@ object Merge {
     val cols = snap.schema.fieldNames.toSeq
     sets.foreach { case (c, _) => require(cols.contains(c),
       s"SET column '$c' is not a table column (${cols.mkString(", ")})") }
-    deleteDv(spark, snap, _.filter(pred), meta,
-      pruneRange.map { case (c, lo, hi) => c -> (lo, hi) }.toMap,
+    deleteDv(spark, snap, _.filter(pred), meta, within(pruneRange),
       mkImages = Some { matched =>
         val updated = sets.foldLeft(matched) { case (df, (c, e)) =>
           df.withColumn(c, e) }
@@ -513,54 +492,52 @@ object Merge {
   }
 
   /** The shared copy-on-write skeleton: locate the files of `snap`
-    * that `touches` hits (scanning only `candidates` when stats bounded
-    * the search), re-emit them through `rewrite`, publish with
-    * `removeFiles` on `snap` as the commit's base. */
+    * that `touches` hits (scanning only the stats-pruned candidates of
+    * `bounds`), re-emit them through `rewrite`, publish through
+    * [[rewriteFiles]]. */
   private def cowRewrite(spark: SparkSession, snap: Manifest.Snapshot,
       touches: DataFrame => DataFrame, rewrite: DataFrame => DataFrame,
-      meta: Map[String, String],
-      skipWhenUntouched: Boolean = false,
-      candidates: Option[Seq[String]] = None,
-      statsCols: Seq[String] = Seq.empty): CowStats = {
+      meta: Map[String, String], bounds: Map[String, (Double, Double)],
+      statsCols: Seq[String],
+      skipWhenUntouched: Boolean = false): CowStats = {
     val before = snap.files
-    val cand = candidates.getOrElse(before)
+    val cand = snap.filesWithin(bounds)
     // The touch scan reads ONLY the candidate files — built from their
     // explicit paths, so the stats prune is structural (a skipped
     // file's bytes cannot be read), not a filter Spark may or may not
     // push. A file outside the candidate set provably holds no match.
-    // Every frame is the DV-APPLIED view: a position a deletion vector
-    // hides can neither count as a match nor survive into a rewrite
-    // (the rewrite MATERIALIZES the DV away — commit drops the removed
-    // files' mappings).
-    // Driver-side FILE-PATH listing — the commit coordinator's matched-
-    // file metadata action (bounded by the table's file count, no data
-    // rows cross the driver); the data itself moves executor-side below.
-    val touchedAbs =
+    // The scan is the DV-APPLIED view: a position a deletion vector
+    // hides cannot count as a match.
+    // Driver-side FILE-KEY listing ([[Manifest.relPathCol]]) — the
+    // commit coordinator's matched-file metadata action (bounded by the
+    // table's file count, no data rows cross the driver); the data
+    // itself moves executor-side in the rewrite.
+    val touched =
       if (cand.isEmpty) Seq.empty[String] // no candidate can match
       else touches(snap.applyDv(spark, snap.scan(spark, cand)
-          .withColumn("__f", col("_metadata.file_path"))))
+          .withColumn("__f", Manifest.relPathCol)))
         .select(col("__f")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
-    if (touchedAbs.isEmpty && skipWhenUntouched)
+    if (touched.isEmpty && skipWhenUntouched)
       return CowStats(snap.version, before.size, 0, before.size, cand.size)
-    val tblRoot = Paths.get(snap.tablePath).toAbsolutePath.normalize
-    val touchedRel = touchedAbs.map { p =>
-      val fsPath = // _metadata.file_path is a URI (file:/...): decode it
-        if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-      tblRoot.relativize(
-        Paths.get(fsPath).toAbsolutePath.normalize).toString
-    }
-    // DV-applied: a hidden position must not survive the rewrite (the
-    // commit drops the rewritten files' DV mappings — this read is what
-    // makes that sound)
-    val touchedRows = snap.applyDv(spark, snap.scan(spark, touchedRel))
-    val v = Manifest.commit(rewrite(touchedRows), snap.tablePath,
-      meta = meta, removeFiles = touchedRel, statsCols = statsCols,
-      // the touch scan and the rewrite content resolved against snap:
-      // a DV or rewrite landing on a touched file before this publish
-      // must conflict (the rewrite would resurrect/lose its rows)
-      base = snap)
-    CowStats(v, before.size, touchedRel.size,
-      before.size - touchedRel.size, cand.size)
+    val v = rewriteFiles(spark, snap, touched, statsCols, meta)(rewrite)
+    CowStats(v, before.size, touched.size,
+      before.size - touched.size, cand.size)
   }
+
+  /** THE copy-on-write publish: `targets` of `snap` read DV-APPLIED,
+    * reshaped by `shape`, committed with `removeFiles = targets` on
+    * `snap` as the conflict base. The DV-applied read is what makes a
+    * rewrite sound — the commit drops the removed files' DV mappings,
+    * so a raw read would resurrect deleted rows — and the base makes a
+    * DV or rewrite that lands on a target before this publish conflict
+    * instead of being silently absorbed or lost. [[cowRewrite]] and
+    * the [[Layout]] compactions publish here. */
+  private[ops] def rewriteFiles(spark: SparkSession,
+      snap: Manifest.Snapshot, targets: Seq[String],
+      statsCols: Seq[String], meta: Map[String, String])(
+      shape: DataFrame => DataFrame): Long =
+    Manifest.commit(shape(snap.applyDv(spark, snap.scan(spark, targets))),
+      snap.tablePath, meta = meta, removeFiles = targets,
+      statsCols = statsCols, base = snap)
 }

@@ -2,14 +2,14 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   AttributeReference, EqualTo, Expression, InSubquery, ListQuery,
   SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{AppendData,
   Assignment, CreateTable, CreateTableAsSelect, DeleteAction,
-  DeleteFromTable, InsertAction, InsertIntoStatement, LogicalPlan,
-  MergeIntoTable, OverwriteByExpression, ReplaceTableAsSelect,
-  SubqueryAlias, UpdateAction, UpdateTable}
+  DeleteFromTable, Distinct, InsertAction, InsertIntoStatement,
+  LogicalPlan, MergeIntoTable, OverwriteByExpression, Project,
+  ReplaceTableAsSelect, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.ops.{Checkpoints, Manifest, Merge}
+import graft.ops.{Manifest, Merge}
 import graft.sources.GraftCatalog
 
 /** SQL DML/DDL over governed [[graft.ops.Manifest]] tables — the write
@@ -41,16 +41,22 @@ import graft.sources.GraftCatalog
   * analyzer rule swaps the unsupported-by-DSv2 node for a runnable
   * command that drives the table-format write path.
   *
+  * Every KEYED form — `DELETE FROM t WHERE k IN (SELECT …)`, `UPDATE t
+  * SET … WHERE k IN (SELECT …)` and `MERGE … WHEN MATCHED [AND cond]
+  * THEN DELETE | UPDATE SET …` — is one command,
+  * [[GraftMergeMatchedCommand]] → [[Merge.mergeMatchedDv]]: the IN
+  * forms and the unconditional MERGE-DELETE pass the DISTINCT key
+  * projection of their source ([[keySet]]; duplicate request keys
+  * dedupe), and the engine materializes its source once, so the
+  * commit protocol's read-set re-validation holds.
+  *
   * Scope: conditions and SET values must be plain expressions over the
-  * table's columns, with the IN-subquery carve-out — `DELETE FROM t
-  * WHERE k IN (SELECT …)` and `UPDATE t SET … WHERE k IN (SELECT …)`
-  * with an uncorrelated deterministic subquery lower to the keyed
-  * merge-on-read engines ([[Merge.deleteKeysDv]] /
-  * [[Merge.mergeMatchedDv]]; the key set materializes once, so the
-  * commit protocol's read-set re-validation holds). Every other
-  * subquery shape (correlated, non-deterministic, SET values, MERGE
-  * conditions, NOT IN) fails loudly naming the Scala API rather than
-  * resolving against a snapshot the commit protocol can't re-check.
+  * table's columns, with the IN-subquery carve-out above (an
+  * uncorrelated deterministic subquery over a plain key column).
+  * Every other subquery shape (correlated, non-deterministic, SET
+  * values, MERGE conditions, NOT IN) fails loudly naming the Scala
+  * API rather than resolving against a snapshot the commit protocol
+  * can't re-check.
   * Destructive/un-governed DDL (DROP, RENAME) keeps the catalog's
   * loud read-only refusal. */
 case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
@@ -115,17 +121,19 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
           case Some(path) =>
             cond match {
               // `DELETE FROM t WHERE k IN (SELECT …)` — the GDPR verb
-              // users actually type — lowers to the merge-on-read keyed
-              // erasure when the subquery is the WHOLE condition, names
+              // users actually type — lowers to the keyed merge-on-read
+              // command when the subquery is the WHOLE condition, names
               // a plain table column, and is uncorrelated +
-              // deterministic (the command materializes its result ONCE
+              // deterministic (the engine materializes its result ONCE
               // via an eager checkpoint, so the commit protocol's read-set
               // re-validation holds — re-executing a changed subquery on
               // rebase would validate a different key set than the one
               // the DVs were computed from)
               case InSubquery(Seq(a: AttributeReference), l: ListQuery)
                   if l.outerAttrs.isEmpty && deterministicPlan(l.plan) =>
-                GraftDeleteKeysCommand(path, a.name, l.plan)
+                GraftMergeMatchedCommand(path,
+                  keySet(l.plan, Seq(l.plan.output.head -> a.name)),
+                  Seq(a.name), Nil, None)
               case _ =>
                 noSubquery("DELETE", Seq(cond))
                 GraftDeleteCommand(path, cond)
@@ -154,7 +162,9 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
                   l: ListQuery))
                   if l.outerAttrs.isEmpty && deterministicPlan(l.plan) =>
                 noSubquery("UPDATE", sets.map(_._2))
-                GraftUpdateKeysCommand(path, a.name, l.plan, sets)
+                GraftMergeMatchedCommand(path,
+                  keySet(l.plan, Seq(l.plan.output.head -> a.name)),
+                  Seq(a.name), sets, None)
               case _ =>
                 noSubquery("UPDATE",
                   cond.toSeq ++ assignments.map(_.value))
@@ -167,10 +177,13 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
           case Some(path) =>
             matchedOnlyForm(m) match {
               case Some((None, Seq())) =>
-                // the unconditional keyed DELETE keeps its dedicated
-                // command (semi-join probe, no source columns needed)
-                GraftMergeDeleteCommand(path, m.sourceTable,
-                  mergeConditionKeys(m))
+                // the unconditional keyed DELETE needs no source column
+                // but the keys: it probes their distinct projection
+                val keys = mergeConditionKeys(m)
+                GraftMergeMatchedCommand(path, keySet(m.sourceTable,
+                  keys.map(k => m.sourceTable.output
+                    .find(_.name.equalsIgnoreCase(k)).get -> k)),
+                  keys, Nil, None)
               case Some((condOpt, sets)) =>
                 noSubquery("MERGE", condOpt.toSeq ++ sets.map(_._2))
                 GraftMergeMatchedCommand(path, m.sourceTable,
@@ -253,6 +266,14 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
           replace = false, ifNotExists = ct.ignoreIfExists,
           orCreate = true)
     }
+
+  /** The DISTINCT key set a keyed command probes: `cols` of `source`,
+    * each aliased to its table key name — duplicate request keys
+    * dedupe, so a pure key set never trips the engine's key-unique
+    * source rule. */
+  private def keySet(source: LogicalPlan,
+      cols: Seq[(Attribute, String)]): LogicalPlan =
+    Distinct(Project(cols.map { case (a, k) => Alias(a, k)() }, source))
 
   /** Resolve a DDL statement's name to a graft table path (None when
     * the identifier belongs to another catalog). Unlike
@@ -353,9 +374,9 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan] {
     *   WHEN MATCHED [AND cond] THEN DELETE          → (cond, Nil)
     *   WHEN MATCHED [AND cond] THEN UPDATE SET …    → (cond, sets)
     *
-    * — both route to the merge-on-read matched-action engine
-    * ([[Merge.deleteKeysDvCols]] for the bare DELETE,
-    * [[Merge.mergeMatchedDv]] otherwise). A SET on a merge-key column
+    * — both route to the merge-on-read matched-action engine,
+    * [[Merge.mergeMatchedDv]] (the bare DELETE over the distinct key
+    * projection of the source, [[keySet]]). A SET on a merge-key column
     * refuses (updating the match identity is not a keyed update) —
     * except the identity no-op `k = src.k` the analyzer's `SET *`
     * expansion produces, which drops out. None = not matched-only
@@ -492,27 +513,6 @@ case class GraftDeleteCommand(tablePath: String, cond: Expression)
   }
 }
 
-/** `DELETE FROM graft.t WHERE k IN (SELECT …)` → [[Merge.deleteKeysDv]]:
-  * the set-shaped merge-on-read erasure. The subquery result
-  * materializes exactly ONCE (an eager checkpoint) before the
-  * erasure runs — deleteKeysDv consumes the key frame more than once
-  * (bounds aggregate, then the DV probe), and the commit protocol may
-  * re-validate on rebase; both must see the SAME key set the first
-  * execution produced. Returns num_affected_rows = positions newly
-  * hidden (idempotent by MoR construction: a replay hides nothing
-  * new). */
-case class GraftDeleteKeysCommand(tablePath: String, keyCol: String,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftSqlDml.output
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(session: SparkSession): Seq[Row] = {
-    val keys = Checkpoints.checkpoint(Bridge.ofRows(session, source)
-      .toDF(keyCol))
-    val stats = Merge.deleteKeysDv(session, tablePath, keys, keyCol)
-    Seq(Row(stats.positionsAdded))
-  }
-}
-
 /** `MERGE INTO graft.t USING src ON <keys> WHEN MATCHED THEN UPDATE
   * SET * WHEN NOT MATCHED THEN INSERT *` → [[Merge.upsert]]: the
   * copy-on-write keyed merge (only files containing a matched key
@@ -535,56 +535,12 @@ case class GraftMergeCommand(tablePath: String, source: LogicalPlan,
   }
 }
 
-/** `MERGE INTO graft.t USING src ON t.k = src.k [AND t.k2 = src.k2 …]
-  * WHEN MATCHED THEN DELETE` → [[Merge.deleteKeysDvCols]]: the
-  * merge-on-read keyed erasure — rows whose whole key tuple appears in
-  * the source hide behind deletion vectors (positions ∝ matched rows,
-  * zero data files rewritten), idempotent by MoR construction.
-  * Composite keys are the multi-tenant GDPR request shape
-  * ((tenant_id, user_id)); every numeric key column contributes a
-  * range to the structural file pruning. Returns num_affected_rows =
-  * positions newly hidden. */
-case class GraftMergeDeleteCommand(tablePath: String,
-    source: LogicalPlan, keyCols: Seq[String])
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftSqlDml.output
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(session: SparkSession): Seq[Row] = {
-    val keys = Bridge.ofRows(session, source)
-      .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-    val stats = Merge.deleteKeysDvCols(session, tablePath, keys, keyCols)
-    Seq(Row(stats.positionsAdded))
-  }
-}
-
-/** `UPDATE graft.t SET … WHERE k IN (SELECT …)` →
-  * [[Merge.mergeMatchedDv]] with the subquery's DISTINCT key set as
-  * the once-materialized source: rows whose key appears in the set
-  * take the SET values (rebound over the table's columns, cast onto
-  * recorded types) in ONE atomic MoR commit. SET on the key column
-  * itself refuses — the engine's match-identity rule. */
-case class GraftUpdateKeysCommand(tablePath: String, keyCol: String,
-    source: LogicalPlan, sets: Seq[(String, Expression)])
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftSqlDml.output
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(session: SparkSession): Seq[Row] = {
-    val snap = Manifest.at(tablePath)
-    val setCols = sets.map { case (c, e) =>
-      c -> GraftSqlDml.rebind(e).cast(snap.schema(c).dataType) }
-    // a pure key set: duplicates are harmless (unlike a MERGE source's
-    // payload rows), so dedup instead of refusing
-    val keys = Bridge.ofRows(session, source)
-      .toDF(keyCol).distinct()
-    val stats = Merge.mergeMatchedDv(session, snap, keys, Seq(keyCol),
-      setCols, None, Map.empty, Merge.DefaultBroadcastKeyLimit)
-    Seq(Row(stats.positionsAdded))
-  }
-}
-
-/** `MERGE INTO graft.t USING src ON <keys> WHEN MATCHED [AND cond]
-  * THEN UPDATE SET <partial> | DELETE` (matched-only, no INSERT
-  * clause) → [[Merge.mergeMatchedDv]]: ONE merge-on-read commit —
+/** Every keyed SQL DML form → [[Merge.mergeMatchedDv]]: `MERGE INTO
+  * graft.t USING src ON <keys> WHEN MATCHED [AND cond] THEN UPDATE SET
+  * <partial> | DELETE` (matched-only, no INSERT clause), and — over
+  * the distinct key projection of their source — `DELETE FROM graft.t
+  * WHERE k IN (SELECT …)`, `UPDATE graft.t SET … WHERE k IN (SELECT …)`
+  * and the unconditional MERGE-DELETE. ONE merge-on-read commit —
   * matched rows (key tuple in source, condition satisfied) hide
   * behind deletion vectors; a partial UPDATE's images (named columns
   * replaced from the rebound expressions, the rest carried) commit

@@ -216,13 +216,6 @@ object Streams {
       ()
     }
 
-    /** Run `body` unless `batchId` is already recorded as applied, then
-      * record it. Returns true when the body ran. */
-    def once(dir: String, appId: String, batchId: Long)(
-        body: => Unit): Boolean =
-      if (last(dir, appId) >= batchId) false
-      else { body; record(dir, appId, batchId); true }
-
     /** Test seam: throw immediately after the `.staged` marker lands —
       * the exact point that used to be the fold→marker residual window. */
     private[graft] var failAfterStage: Boolean = false

@@ -579,6 +579,16 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.sql(
       s"MERGE INTO graft.`$mdSql` AS t USING md_req AS s ON t.id = s.id " +
         "WHEN MATCHED THEN DELETE").collect().head.getLong(0) == 0L)
+    // a duplicate-key request set dedupes (a pure key set, like
+    // DELETE … IN): (3),(3),(7) hides 2 rows and reports 2
+    val mdDup = seed("md_dup")
+    Seq(3L, 3L, 7L).toDF("id").createOrReplaceTempView("md_dup_req")
+    assert(spark.sql(
+      s"MERGE INTO graft.`$mdDup` AS t USING md_dup_req AS s " +
+        "ON t.id = s.id WHEN MATCHED THEN DELETE")
+      .collect().head.getLong(0) == 2L)
+    assert(rows(mdDup) == rows(seed("md_dup_ref"))
+      .filterNot(r => r._1 == 3L || r._1 == 7L))
     // composite-key MERGE-DELETE (the multi-tenant request shape):
     // only the WHOLE key tuple matches — a half-matching tuple
     // deletes nothing — and SQL ≡ Merge.deleteKeysDvCols
@@ -614,6 +624,50 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows(mdSql) == Set((1L, 10L), (2L, 20L)))
     assert(Manifest.at(mdSql).dv.isEmpty,
       "replace drops the DV state with the files")
+  }
+
+  test("every keyed SQL form reads its source once: DELETE-IN, " +
+    "UPDATE-IN, MERGE-DELETE and MERGE matched-UPDATE each scan a " +
+    "parquet source in exactly one executed plan (the engine's " +
+    "checkpoint)") {
+    import java.nio.file.Files
+    import graft.ops.Manifest
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_k1").toString
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    val src = Files.createTempDirectory("kq").resolve("req").toString
+    Seq((3L, 1000L), (7L, 2000L), (99L, 0L)).toDF("id", "w")
+      .write.parquet(src)
+    spark.read.parquet(src).createOrReplaceTempView("k1_req")
+    def seed(name: String): String = {
+      val p = s"$root/$name"
+      Manifest.commit((0L until 20L).map(i => (i, i * 10))
+        .toDF("id", "v").coalesce(2), p, statsCols = Seq("id"))
+      p
+    }
+    val forms = Seq(
+      "DELETE-IN" -> ((t: String) =>
+        s"DELETE FROM graft.`$t` WHERE id IN (SELECT id FROM k1_req)"),
+      "UPDATE-IN" -> ((t: String) =>
+        s"UPDATE graft.`$t` SET v = v + 1 WHERE id IN " +
+          "(SELECT id FROM k1_req)"),
+      "MERGE-DELETE" -> ((t: String) =>
+        s"MERGE INTO graft.`$t` AS t USING k1_req AS s ON t.id = s.id " +
+          "WHEN MATCHED THEN DELETE"),
+      "MERGE matched-UPDATE" -> ((t: String) =>
+        s"MERGE INTO graft.`$t` AS t USING k1_req AS s ON t.id = s.id " +
+          "WHEN MATCHED THEN UPDATE SET v = s.w"))
+    for (((form, stmt), i) <- forms.zipWithIndex) {
+      val t = seed(s"t$i")
+      var n = -1L
+      val reads = plansDuring {
+        n = spark.sql(stmt(t)).collect().head.getLong(0)
+      }.filter(p => p.contains("FileScan parquet") && p.contains(src))
+      assert(n == 2L, s"$form: 3 and 7 match, 99 does not")
+      assert(reads.size == 1,
+        s"$form read its source ${reads.size} times:\n" +
+          reads.mkString("\n---\n"))
+    }
   }
 
   test("SQL MERGE matched-only forms ≡ Merge.mergeMatchedDv: " +

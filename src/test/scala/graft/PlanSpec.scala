@@ -1,11 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
 /** Physical-plan assertions for the scale-critical queries: pushdown must
   * reach the parquet scan, small dims must broadcast, aggregates must have a
   * map-side partial phase, and hot paths must stay inside whole-stage
@@ -23,19 +17,8 @@ class PlanSpec extends SparkSpec {
   /** Every plan the query executes, final collect included: the eager
     * actions its construction runs (a `localCheckpoint`, say) plan
     * stages the final plan only reads back as `Scan ExistingRDD`. */
-  private def executedPlans(name: String): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.listenerManager.register(l)
-    try { plan(name); ListenerBusDrain(spark.sparkContext) }
-    finally spark.listenerManager.unregister(l)
-    seen.asScala.toSeq
-  }
+  private def executedPlans(name: String): Seq[String] =
+    plansDuring(plan(name))
 
   test("s4: filter and projection reach the parquet scan") {
     val p = plan("s4_pruned_scan")

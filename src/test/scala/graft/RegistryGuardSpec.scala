@@ -18,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the drain rule: every bounded stream drain goes through the `Streams`
   * drain combinator, and the footer rule: every parquet-mr open passes
   * read options built once, and the publish rule: every exclusive-link
-  * write and every dir claim has one home in `Manifest`. No Spark
+  * write and every dir claim has one home in `Manifest`, and the
+  * row-level rule: one file key (`relPathCol`) and one stats prune
+  * (`filesWithin`). No Spark
   * session needed — pure registry + file
   * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
@@ -227,5 +229,53 @@ class RegistryGuardSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${src(i).trim}"
     assert(hits.isEmpty, "exclusive-link writes go through Manifest.linkNew " +
       s"and dir claims through Manifest.claimDir:\n${hits.mkString("\n")}")
+  }
+
+  /** The scan's file-URI column, its driver-side decoding, and the
+    * per-file stats-intersection test. */
+  private val filePathToken = """_metadata\.file_path""".r
+  private val uriToken = """java\.net\.URI\(""".r
+  private val boundsToken = """mx\s*>=\s*lo\s*&&\s*mn\s*<=\s*hi""".r
+
+  test("the row-level write path keeps one file key and one stats " +
+    "prune: _metadata.file_path only in Manifest.relPathCol, the " +
+    "stats intersection only in Snapshot.filesWithin, and no " +
+    "java.net.URI( decode under ops/") {
+    // the copies these guards replaced trip them
+    val oldTouch = """        .withColumn("__f", col("_metadata.file_path"))))
+      |    val touchedRel = touchedAbs.map { p =>
+      |      val fsPath = // _metadata.file_path is a URI (file:/...): decode it
+      |        if (p.startsWith("file:")) new java.net.URI(p).getPath else p"""
+      .stripMargin.split("\n").toSeq
+    assert(codeHits(oldTouch, filePathToken) == Seq(0, 2))
+    assert(codeHits(oldTouch, uriToken) == Seq(3))
+    val oldPrune = """    val targets = all.filter { f =>
+      |      stats.get(f).flatMap(_.get(column)) match {
+      |        case Some((mn, mx)) => mx >= lo && mn <= hi"""
+      .stripMargin.split("\n").toSeq
+    assert(codeHits(oldPrune, boundsToken) == Seq(2))
+    val manifest = Paths.get("src/main/scala/graft/ops/Manifest.scala")
+    val mLines = Files.readAllLines(manifest).asScala.toSeq
+    val homes = Map(
+      filePathToken -> defSpan(mLines, "def relPathCol"),
+      boundsToken -> defSpan(mLines, "def filesWithin("))
+    homes.foreach { case (token, span) =>
+      assert(codeHits(mLines, token).count(span.contains) == 1,
+        s"$manifest: the home at line ${span.start + 1} must hold " +
+          s"exactly one $token")
+    }
+    val ops = Paths.get("src/main/scala/graft/ops")
+    val hits = for {
+      f <- Files.walk(Paths.get("src/main")).iterator.asScala.toSeq
+      if f.toString.endsWith(".scala")
+      src = Files.readAllLines(f).asScala.toSeq
+      token <- Seq(filePathToken, boundsToken, uriToken)
+      if token != uriToken || f.startsWith(ops)
+      i <- codeHits(src, token)
+      if !homes.get(token).exists(span =>
+        Files.isSameFile(f, manifest) && span.contains(i))
+    } yield s"$f:${i + 1}: ${src(i).trim}"
+    assert(hits.isEmpty, "the file key is Manifest.relPathCol and the " +
+      s"stats prune Snapshot.filesWithin:\n${hits.mkString("\n")}")
   }
 }

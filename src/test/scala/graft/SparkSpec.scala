@@ -1,10 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate -> one JVM-wide session). */
@@ -31,5 +36,21 @@ trait SparkSpec extends AnyFunSuite {
     try { f; ListenerBusDrain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
     jobs.get
+  }
+
+  /** The executed plan of every query `f` runs, eager actions included
+    * (a checkpoint's materializing plan, a write, a final collect). */
+  protected def plansDuring(f: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { f; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    seen.asScala.toSeq
   }
 }

@@ -422,6 +422,27 @@ class DeletionVectorSpec extends SparkSpec {
     assert(rows == 77)
   }
 
+  test("one fused key guard: a mergeMatchedDv DELETE costs exactly one " +
+    "Spark job (its source checkpoint) more than a deleteKeysDvCols of " +
+    "the same keys on a twin table, and both hide the same rows") {
+    val (a, b) = (freshTable(), freshTable())
+    seed(a); seed(b)
+    // one partition: no exchange splits either guard or the DV publish
+    // into partition-count-dependent jobs, so both paths run the same
+    // guard and publish jobs and differ only in their source handling
+    val keys = Seq(3L, 21L, 22L, 45L).toDF("id").coalesce(1)
+    val viaKeys =
+      jobsDuring(Merge.deleteKeysDvCols(spark, a, keys, Seq("id")))
+    val viaMerge = jobsDuring(Merge.mergeMatchedDv(spark, b, keys,
+      Seq("id")))
+    info(s"jobs: mergeMatchedDv $viaMerge, deleteKeysDvCols $viaKeys")
+    assert(viaMerge - viaKeys == 1,
+      s"mergeMatchedDv $viaMerge jobs vs deleteKeysDvCols $viaKeys")
+    assert(Manifest.read(spark, a).collect().toSet ==
+      Manifest.read(spark, b).collect().toSet)
+    assert(Manifest.read(spark, b).count() == 76L)
+  }
+
   test("the in-scan bitmap filter and the shuffle anti-join (past the " +
     "size gate) hide the same rows: stacked DVs, time travel, and a " +
     "DV'd SQL read") {
