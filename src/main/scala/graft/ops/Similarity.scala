@@ -289,31 +289,43 @@ object Similarity {
       idCol: String, vecCol: String, nProbe: Int, k: Int): DataFrame = {
     val cents = broadcast(
       centroids.select(col(idCol).as("cid"), col(vecCol).as("cv")))
-    // Corpus-side assignment is a min-struct ARGMIN aggregate (the same
-    // map-side-combining pattern as passage dedup), not a window: a
-    // row_number over partitionBy(nid) would shuffle+sort all n×k scored
-    // rows just to pick one. negate() turns "cos desc, cid asc" into a
-    // struct min; (negcos, cid) never ties (cid unique), so the carried
-    // vector field never participates in the comparison. One caveat to the
-    // window equivalence: a zero-norm vector scores cosine NaN, which a
-    // DESC sort ranks first (the old window picked a NaN centroid) while
-    // struct-min ranks last (NaN > everything in Spark's double ordering).
-    // Embeddings here are non-zero by contract, so the branch is dead; if
-    // that contract ever loosens, guard zero norms before the cosine.
     val assigned = assignToCentroids(corpus, cents, idCol, vecCol)
     val probes = probeCentroids(queries, cents, idCol, vecCol, nProbe)
     ivfScoreTail(probes, assigned, k)
   }
 
-  /** Corpus → (nid, nv, cluster) via the argmin aggregate above. */
+  /** The one nearest-centroid assignment: per row key `keys`, the
+    * argmax-cosine centroid of the broadcast `cents` (cid, cv), as
+    * `__best` = min(struct(negcos, cid, carry…)); returns (keys…,
+    * __best). The centroids cross-join, or equi-join on `sub` when `keys`
+    * holds it (one PQ codebook per subspace, grouped per (row, sub)).
+    *
+    * An ARGMIN aggregate (map-side combining, the passage-dedup
+    * pattern), not a window: a row_number over partitionBy(key) would
+    * shuffle+sort all n×k scored rows just to pick one. negate() turns
+    * "cos desc, cid asc" into a struct min; (negcos, cid) never ties (cid
+    * unique per key), so the carried fields never participate in the
+    * comparison. One caveat to the window equivalence: a zero-norm vector
+    * scores cosine NaN, which a DESC sort ranks first (a window picks a
+    * NaN centroid) while struct-min ranks last (NaN > everything in
+    * Spark's double ordering). Embeddings here are non-zero by contract,
+    * so the branch is dead; if that contract ever loosens, guard zero
+    * norms before the cosine. */
+  private[graft] def nearest(rows: DataFrame, cents: DataFrame,
+      keys: Seq[String], vec: String, carry: Column*): DataFrame = {
+    val joined =
+      if (keys.contains("sub")) rows.join(broadcast(cents), Seq("sub"))
+      else rows.crossJoin(broadcast(cents))
+    joined.groupBy(keys.map(col): _*)
+      .agg(min(struct(negate(cosine(col(vec), col("cv"))).as("negcos") +:
+        col("cid").as("cid") +: carry: _*)).as("__best"))
+  }
+
+  /** Corpus → (nid, nv, cluster) via [[nearest]]. */
   private[graft] def assignToCentroids(corpus: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .crossJoin(cents)
-      .groupBy(col("nid"))
-      .agg(min(struct(
-        negate(cosine(col("nv"), col("cv"))).as("negcos"),
-        col("cid").as("cid"), col("nv").as("v"))).as("__best"))
+    nearest(corpus.select(col(idCol).as("nid"), col(vecCol).as("nv")),
+        cents, Seq("nid"), "nv", col("nv").as("v"))
       .select(col("nid"), col("__best.v").as("nv"),
         col("__best.cid").as("cluster"))
 
@@ -529,18 +541,28 @@ object Similarity {
     * `iters` is fixed and small (Lloyd's converges fast for index-building
     * purposes) so the oracle can unroll the loop as plain CTEs. Each round
     * is one broadcast of k centroids + one corpus pass + one (cid, dim)
-    * aggregation — linear in the corpus, no quadratic step anywhere. */
+    * aggregation — linear in the corpus, no quadratic step anywhere.
+    *
+    * The result comes back checkpointed (iters ≥ 1: it is the last
+    * round's checkpoint), so callers never re-checkpoint it. */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 2): DataFrame = {
     val base = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val seeds = base
-      .withColumn("__h", hashing.h64(col("__id").cast("string")))
-      .orderBy(col("__h"), col("__id")).limit(k)
-    val seedRank = Window.orderBy(col("__h"), col("__id")) // k rows only
-    val cents0 = seeds
-      .withColumn("cid", (row_number().over(seedRank) - 1).cast("long"))
+    val cents0 = hashSeeds(base, k)
       .select(col("cid"), transform(col("__v"), e => e.cast("double")).as("cv"))
     lloydRounds(base, cents0, iters)
+  }
+
+  /** The one seed selection: the k rows of `rows` (keyed `__id`) with the
+    * smallest (h64(id), id) — a deterministic pseudo-random sample via the
+    * shared md5 hash, planned as a distributed top-k
+    * (TakeOrderedAndProject), not a global sort — numbered `cid` 0..k-1
+    * in that order. */
+  private def hashSeeds(rows: DataFrame, k: Int): DataFrame = {
+    val seedRank = Window.orderBy(col("__h"), col("__id")) // k rows only
+    rows.withColumn("__h", hashing.h64(col("__id").cast("string")))
+      .orderBy(col("__h"), col("__id")).limit(k)
+      .withColumn("cid", (row_number().over(seedRank) - 1).cast("long"))
   }
 
   /** AUTO-K centroid build — the SemDeDup contract (k ≈ n / target cluster
@@ -562,7 +584,9 @@ object Similarity {
     *
     * Deterministic and oracle-replayable end-to-end: bucket assignment,
     * representative argmin, dense remap, and every Lloyd's round are the
-    * shared md5/DECIMAL arithmetic. */
+    * shared md5/DECIMAL arithmetic. Like [[kmeansCentroids]], the result
+    * comes back checkpointed (iters ≥ 1), so callers never re-checkpoint
+    * it. */
   def kmeansCentroidsAutoK(corpus: DataFrame, idCol: String, vecCol: String,
       targetClusterSize: Int, iters: Int = 2): DataFrame = {
     require(targetClusterSize > 0, "targetClusterSize must be positive")
@@ -584,35 +608,36 @@ object Similarity {
     lloydRounds(base, cents0, iters)
   }
 
-  /** Lloyd's rounds shared by the fixed-k and auto-k builds: assignment is
-    * an argmax-cosine min-struct aggregate, means are exact-DECIMAL sums
-    * rounded to 9, each round checkpointed (k rows). */
+  /** The one Lloyd loop, shared by the fixed-k, auto-k and PQ builds:
+    * per round, [[nearest]] assigns every `base` row (`__id`, `__v`) to
+    * its argmax-cosine centroid, and each (cid, dim) mean is an exact
+    * DECIMAL(38,20) sum (partition-order independent), divided in double
+    * and rounded to 9 so the next round's inputs are stable literals;
+    * each round is checkpointed (k rows; cuts the per-round lineage
+    * growth). With `bySub`, `base` and `cents0` carry a subspace key
+    * `sub` and every subspace trains independently in the same plan. */
   private def lloydRounds(base: DataFrame, cents0: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int, bySub: Boolean = false): DataFrame = {
+    val sub = if (bySub) Seq("sub") else Nil
+    def keyed(cs: Column*): Seq[Column] = sub.map(col) ++ cs
     var cents = cents0
     for (_ <- 1 to iters) {
-      // argmin as a min-struct aggregate (map-side combining) — the
-      // row_number window would shuffle+sort the whole n×k cross join
-      // every round; see ivfTopK for the tie/ordering argument and the
-      // zero-norm/NaN caveat to the window equivalence
-      val assigned = base.crossJoin(broadcast(cents))
-        .groupBy(col("__id"))
-        .agg(min(struct(
-          negate(cosine(col("__v"), col("cv"))).as("negcos"),
-          col("cid").as("cid"), col("__v").as("v"))).as("__best"))
-        .select(col("__best.cid").as("cid"), col("__best.v").as("__v"))
+      val assigned = nearest(base, cents, "__id" +: sub, "__v",
+          col("__v").as("v"))
+        .select(keyed(col("__best.cid").as("cid"),
+          col("__best.v").as("__v")): _*)
       val dims = assigned
-        .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "val")))
-        .groupBy(col("cid"), col("pos"))
+        .select(keyed(col("cid"),
+          posexplode(col("__v")).as(Seq("pos", "val"))): _*)
+        .groupBy(keyed(col("cid"), col("pos")): _*)
         .agg(sum(col("val").cast("double").cast("decimal(38,20)")).as("__s"),
           count(lit(1)).as("__n"))
-        .select(col("cid"), col("pos"),
-          round(col("__s").cast("double") / col("__n"), 9).as("m"))
-      cents = Checkpoints.checkpoint(dims.groupBy(col("cid"))
+        .select(keyed(col("cid"), col("pos"),
+          round(col("__s").cast("double") / col("__n"), 9).as("m")): _*)
+      cents = Checkpoints.checkpoint(dims.groupBy(keyed(col("cid")): _*)
         .agg(collect_list(struct(col("pos"), col("m"))).as("__pm"))
-        .select(col("cid"),
-          transform(array_sort(col("__pm")), s => s.getField("m")).as("cv"))
-        ) // k rows; cuts the per-round lineage growth
+        .select(keyed(col("cid"), transform(array_sort(col("__pm")),
+          s => s.getField("m")).as("cv")): _*))
     }
     cents
   }
@@ -672,7 +697,7 @@ object Similarity {
     * cosines are strict-fold doubles rounded to 4 before the comparison,
     * and assignment ties break on centroid id.
     *
-    * Scale design: assignment is the [[ivfTopK]] min-struct aggregate (one
+    * Scale design: assignment is the [[nearest]] min-struct aggregate (one
     * corpus pass, map-side combine); the prune is an equi-join on the
     * cluster id, so candidate volume is Σ|cluster|² — bounded only if k
     * GROWS with the corpus (SemDeDup's own contract: k ≈ n / target
@@ -681,14 +706,9 @@ object Similarity {
     * the k-means DAG runs once, not once per self-join side. */
   def semDeDup(corpus: DataFrame, centroids: DataFrame, idCol: String,
       vecCol: String, tau: Double): DataFrame = {
-    val cents = broadcast(centroids.select(col("cid"), col("cv")))
     val assigned = Checkpoints.checkpoint(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-        .crossJoin(cents)
-        .groupBy(col("id"))
-        .agg(min(struct(
-          negate(cosine(col("v"), col("cv"))).as("negcos"),
-          col("cid").as("cid"), col("v").as("v"))).as("__best"))
+      nearest(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+          centroids.select(col("cid"), col("cv")), Seq("id"), "v", col("v"))
         .select(col("id"), col("__best.v").as("v"),
           col("__best.cid").as("cluster")))
     val rivals = assigned.select(col("cluster").as("__rc"),
@@ -717,13 +737,9 @@ object Similarity {
   def prototypePrune(corpus: DataFrame, centroids: DataFrame, idCol: String,
       vecCol: String, prunePct: Int): DataFrame = {
     require(prunePct >= 0 && prunePct <= 100, "prunePct must be in [0,100]")
-    val cents = broadcast(centroids.select(col("cid"), col("cv")))
-    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(cents)
-      .groupBy(col("id"))
-      .agg(min(struct(
-        negate(cosine(col("v"), col("cv"))).as("negcos"),
-        col("cid").as("cid"))).as("__best"))
+    val assigned = nearest(
+        corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+        centroids.select(col("cid"), col("cv")), Seq("id"), "v")
       .select(col("id"), col("__best.cid").as("cluster"),
         round(negate(col("__best.negcos")), 4).as("prox"))
     val byCluster = Window.partitionBy(col("cluster"))
@@ -770,63 +786,40 @@ object Similarity {
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, subspaces: Int, k: Int, iters: Int = 2): DataFrame = {
     require(dim % subspaces == 0, "subspaces must divide dim")
-    val len = dim / subspaces
     val subs = corpus.select(col(idCol).as("__id"),
-        explode(array((0 until subspaces).map(s0 =>
-          struct(lit(s0).as("sub"),
-            slice(col(vecCol), s0 * len + 1, len).as("sv"))): _*)).as("x"))
-      .select(col("__id"), col("x.sub").as("sub"), col("x.sv").as("sv"))
-    val seedRank = Window.orderBy(col("__h"), col("__id")) // k rows only
-    val seedIds = corpus.select(col(idCol).as("__id"))
-      .withColumn("__h", hashing.h64(col("__id").cast("string")))
-      .orderBy(col("__h"), col("__id")).limit(k)
-      .withColumn("cid", (row_number().over(seedRank) - 1).cast("long"))
+        subspaceSlices(col(vecCol), dim, subspaces).as("x"))
+      .select(col("__id"), col("x.sub").as("sub"), col("x.sv").as("__v"))
+    val seedIds = hashSeeds(corpus.select(col(idCol).as("__id")), k)
       .select(col("__id"), col("cid"))
-    var cents = Checkpoints.checkpoint(
+    val cents0 = Checkpoints.checkpoint(
       subs.join(broadcast(seedIds), Seq("__id"))
         .select(col("sub"), col("cid"),
-          transform(col("sv"), e => e.cast("double")).as("cv")))
-    for (_ <- 1 to iters) {
-      val assigned = subs.join(broadcast(cents), Seq("sub"))
-        .groupBy(col("__id"), col("sub"))
-        .agg(min(struct(negate(cosine(col("sv"), col("cv"))).as("negcos"),
-          col("cid").as("cid"), col("sv").as("sv"))).as("__best"))
-        .select(col("sub"), col("__best.cid").as("cid"),
-          col("__best.sv").as("sv"))
-      val dims = assigned
-        .select(col("sub"), col("cid"),
-          posexplode(col("sv")).as(Seq("pos", "val")))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(sum(col("val").cast("double").cast("decimal(38,20)")).as("__s"),
-          count(lit(1)).as("__n"))
-        .select(col("sub"), col("cid"), col("pos"),
-          round(col("__s").cast("double") / col("__n"), 9).as("m"))
-      cents = Checkpoints.checkpoint(dims.groupBy(col("sub"), col("cid"))
-        .agg(collect_list(struct(col("pos"), col("m"))).as("__pm"))
-        .select(col("sub"), col("cid"),
-          transform(array_sort(col("__pm")), s => s.getField("m")).as("cv")))
-    }
-    cents.withColumn("cc", round(dot(col("cv"), col("cv")), 9)
-      .cast("decimal(18,9)"))
+          transform(col("__v"), e => e.cast("double")).as("cv")))
+    lloydRounds(subs, cents0, iters, bySub = true)
+      .withColumn("cc", round(dot(col("cv"), col("cv")), 9)
+        .cast("decimal(18,9)"))
+  }
+
+  /** The one subspace split: `vec`'s `subspaces` equal slices as an
+    * exploded struct(sub, sv) per row — PQ training, encoding and both
+    * query-side lookup tables cut vectors with it. */
+  private def subspaceSlices(vec: Column, dim: Int, subspaces: Int): Column = {
+    val len = dim / subspaces
+    explode(array((0 until subspaces).map(s0 =>
+      struct(lit(s0).as("sub"), slice(vec, s0 * len + 1, len).as("sv"))): _*))
   }
 
   /** PQ encoding: one (id, sub, code) row per vector per subspace — the
     * max-cosine codebook entry for that slice (ties by cid, the
-    * [[ivfTopK]] min-struct argmin). The codes ARE the compressed corpus:
+    * [[nearest]] min-struct argmin). The codes ARE the compressed corpus:
     * everything downstream reads only this table. */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, dim: Int, subspaces: Int): DataFrame = {
-    val len = dim / subspaces
-    val subs = explode(array((0 until subspaces).map(s0 =>
-      struct(lit(s0).as("sub"),
-        slice(col(vecCol), s0 * len + 1, len).as("sv"))): _*))
-    corpus.select(col(idCol).as("id"), subs.as("x"))
+    val subs = corpus.select(col(idCol).as("id"),
+        subspaceSlices(col(vecCol), dim, subspaces).as("x"))
       .select(col("id"), col("x.sub").as("sub"), col("x.sv").as("sv"))
-      .join(broadcast(codebooks.select(col("sub"), col("cid"), col("cv"))),
-        Seq("sub"))
-      .groupBy(col("id"), col("sub"))
-      .agg(min(struct(negate(cosine(col("sv"), col("cv"))).as("negcos"),
-        col("cid").as("cid"))).as("__best"))
+    nearest(subs, codebooks.select(col("sub"), col("cid"), col("cv")),
+        Seq("id", "sub"), "sv")
       .select(col("id"), col("sub"), col("__best.cid").as("code"))
   }
 
@@ -865,16 +858,13 @@ object Similarity {
   // broadcast-sized by contract.
 
   /** Coarse assignment + residuals: (id, cluster, rv = v − cv), the
-    * [[assignToCentroids]] argmin aggregate carrying the element-wise
+    * [[nearest]] argmin aggregate carrying the element-wise
     * double residual the PQ codebooks then train on. */
   def ivfResiduals(corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame): DataFrame =
-    corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(cents.select(col("cid"), col("cv"))))
-      .groupBy(col("id"))
-      .agg(min(struct(negate(cosine(col("v"), col("cv"))).as("negcos"),
-        col("cid").as("cid"), col("v").as("v"), col("cv").as("cv")))
-        .as("__best"))
+    nearest(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+        cents.select(col("cid"), col("cv")), Seq("id"), "v", col("v"),
+        col("cv"))
       .select(col("id"), col("__best.cid").as("cluster"),
         zip_with(col("__best.v"), col("__best.cv"),
           (a, c) => a.cast("double") - c).as("rv"))
@@ -903,7 +893,6 @@ object Similarity {
       codebooks: DataFrame, cents: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, dim: Int, subspaces: Int,
       nProbe: Int, k: Int, shortlist: Int): DataFrame = {
-    val len = dim / subspaces
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
     val cb = broadcast(cents.select(col("cid"), col("cv")))
     val probes = probeCentroids(q, cb, "qid", "qv", nProbe)
@@ -915,11 +904,9 @@ object Similarity {
     val qsubs = probes.select(col("qid"), col("cluster").as("qcluster"),
         round(dot(col("qr"), col("qr")), 9).cast("decimal(18,9)")
           .as("qrr"),
-        explode(array((0 until subspaces).map(s0 =>
-          struct(lit(s0).as("sub"),
-            slice(col("qr"), s0 * len + 1, len).as("qs"))): _*)).as("x"))
+        subspaceSlices(col("qr"), dim, subspaces).as("x"))
       .select(col("qid"), col("qcluster"), col("qrr"),
-        col("x.sub").as("qsub"), col("x.qs").as("qs"))
+        col("x.sub").as("qsub"), col("x.sv").as("qs"))
     val lut = qsubs.join(broadcast(codebooks), col("qsub") === col("sub"))
       .select(col("qid"), col("qcluster"), col("qrr"), col("qsub"),
         col("cid").as("qcid"),
@@ -1003,13 +990,10 @@ object Similarity {
       codebooks: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, subspaces: Int, k: Int,
       shortlist: Int): DataFrame = {
-    val len = dim / subspaces
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
     val qsubs = q.select(col("qid"),
-        explode(array((0 until subspaces).map(s0 =>
-          struct(lit(s0).as("qsub"),
-            slice(col("qv"), s0 * len + 1, len).as("qs"))): _*)).as("x"))
-      .select(col("qid"), col("x.qsub").as("qsub"), col("x.qs").as("qs"))
+        subspaceSlices(col("qv"), dim, subspaces).as("x"))
+      .select(col("qid"), col("x.sub").as("qsub"), col("x.sv").as("qs"))
     val lut = qsubs.join(codebooks, col("qsub") === col("sub"))
       .select(col("qid"), col("qsub"), col("cid").as("qcid"),
         round(dot(col("qs"), col("cv")), 9).cast("decimal(18,9)").as("pd"),

@@ -89,27 +89,47 @@ object DedupQueries {
     s"""(${sqlDot(a, b)}
        / (${sqlNorm(a)} * ${sqlNorm(b)}))"""
 
-  /** Full DuckDB replay of the deterministic k-means centroid build
-    * ([[graft.ops.Similarity.kmeansCentroids]], k=12, two unrolled Lloyd's
-    * rounds) ending in `cents(cid, cv)` — shared by x3 and d10. Each round
-    * assigns to the argmax-cosine centroid (ties by cid), then recomputes
-    * per-dimension means via exact DECIMAL sums rounded to 9 so the next
-    * round's inputs are stable cross-engine. */
-  private def sqlLloydRound(rel: String, prev: String, i: Int): String =
-    s"""assign$i AS (SELECT cid, embedding FROM (
-         SELECT v.embedding, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-             ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-         FROM $rel v CROSS JOIN $prev c) WHERE rn = 1),
-       dims$i AS (SELECT cid, pos,
-           round(CAST(sum(CAST(CAST(embedding[pos] AS DOUBLE)
-               AS DECIMAL(38,20))) AS DOUBLE) / count(*), 9) AS m
-         FROM assign$i
-         CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) p
-         GROUP BY cid, pos),
-       cent$i AS (SELECT cid, list(m ORDER BY pos) AS cv
-         FROM dims$i GROUP BY cid)"""
+  /** The one nearest-centroid ranking, as CTE `name`: per row of `from`
+    * (partitioned by `part`), the centroids `c` ranked by
+    * (cosine(`vec`, c.cv) DESC, c.cid) as `rn`, keeping `rn <= top` —
+    * the SQL twin of [[Similarity.nearest]] (top = 1) and of the query
+    * probe ranking (top = nProbe). `ranked` is the inner select list
+    * beside `rn`, `cols` the CTE's own. */
+  private def sqlRankedCte(name: String, cols: String, ranked: String,
+      part: String, vec: String, from: String, top: Int = 1): String =
+    s"""$name AS (SELECT $cols FROM (
+         SELECT $ranked, row_number() OVER (PARTITION BY $part
+             ORDER BY ${sqlCosine(vec, "c.cv")} DESC, c.cid) AS rn
+         FROM $from) WHERE rn <= $top)"""
 
+  /** The one Lloyd generator: two unrolled rounds of the deterministic
+    * k-means ([[Similarity.kmeansCentroids]]'s loop) over relation `rel`
+    * (vec_id, `vec` of length `len`) from `<prefix>cent0`, ending in
+    * `<prefix>cents(cid, cv)`. Each round assigns to the argmax-cosine
+    * centroid (ties by cid), then recomputes per-dimension means via exact
+    * DECIMAL sums rounded to 9 so the next round's inputs are stable
+    * cross-engine. */
+  private def sqlLloydRounds(prefix: String, rel: String, vec: String,
+      len: Int): String = {
+    def lloydRound(i: Int): String =
+      s"""${sqlRankedCte(s"${prefix}assign$i", s"cid, $vec",
+           s"v.$vec, c.cid", "v.vec_id", s"v.$vec",
+           s"$rel v CROSS JOIN ${prefix}cent${i - 1} c")},
+         ${prefix}dims$i AS (SELECT cid, pos,
+             round(CAST(sum(CAST(CAST($vec[pos] AS DOUBLE)
+                 AS DECIMAL(38,20))) AS DOUBLE) / count(*), 9) AS m
+           FROM ${prefix}assign$i
+           CROSS JOIN (SELECT unnest(generate_series(1, $len)) AS pos) p
+           GROUP BY cid, pos),
+         ${prefix}cent$i AS (SELECT cid, list(m ORDER BY pos) AS cv
+           FROM ${prefix}dims$i GROUP BY cid)"""
+    s"""${lloydRound(1)},
+       ${lloydRound(2)},
+       ${prefix}cents AS (SELECT cid, cv FROM ${prefix}cent2)"""
+  }
+
+  /** Full DuckDB replay of [[Similarity.kmeansCentroids]] (k=12, two
+    * Lloyd's rounds) ending in `cents(cid, cv)` — shared by x3 and d10. */
   private def sqlKmeansCentsFrom(rel: String): String =
     s"""hseed AS (SELECT vec_id, embedding,
            ${hashing.sqlH64("CAST(vec_id AS VARCHAR)")} AS hh
@@ -119,9 +139,7 @@ object DedupQueries {
        cent0 AS (SELECT row_number() OVER (ORDER BY hh, vec_id) - 1 AS cid,
            list_transform(embedding, e -> CAST(e AS DOUBLE)) AS cv
          FROM seeds),
-       ${sqlLloydRound(rel, "cent0", 1)},
-       ${sqlLloydRound(rel, "cent1", 2)},
-       cents AS (SELECT cid, cv FROM cent2)"""
+       ${sqlLloydRounds("", rel, "embedding", 64)}"""
 
   /** AUTO-K twin of [[sqlKmeansCentsFrom]] — the replay of
     * [[graft.ops.Similarity.kmeansCentroidsAutoK]]: k = ceil(n/target)
@@ -143,9 +161,7 @@ object DedupQueries {
        cent0 AS (SELECT row_number() OVER (ORDER BY b) - 1 AS cid,
            list_transform(embedding, e -> CAST(e AS DOUBLE)) AS cv
          FROM reps),
-       ${sqlLloydRound(rel, "cent0", 1)},
-       ${sqlLloydRound(rel, "cent1", 2)},
-       cents AS (SELECT cid, cv FROM cent2)"""
+       ${sqlLloydRounds("", rel, "embedding", 64)}"""
 
   private def sqlKmeansCents: String = sqlKmeansCentsFrom("embeddings")
 
@@ -165,17 +181,11 @@ object DedupQueries {
     * oracle (via [[sqlIvfProbeBody]]) and x15's single-query k=20 probe. */
   private def sqlIvfProbeCtes(queryPred: String, nProbe: Int,
       k: Int, corpusRel: String = "embeddings"): String =
-    s"""assign AS (SELECT nid, nv, cid AS cluster FROM (
-         SELECT v.vec_id AS nid, v.embedding AS nv, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id
-             ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-         FROM $corpusRel v CROSS JOIN cents c) WHERE rn = 1),
-       probes AS (SELECT qid, qv, cid AS cluster FROM (
-         SELECT q.vec_id AS qid, q.embedding AS qv, c.cid,
-           row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY ${sqlCosine("q.embedding", "c.cv")} DESC, c.cid) AS rn
-         FROM embeddings q CROSS JOIN cents c WHERE $queryPred)
-         WHERE rn <= $nProbe),
+    s"""${sqlIvfAssign(corpusRel)},
+       ${sqlRankedCte("probes", "qid, qv, cid AS cluster",
+         "q.vec_id AS qid, q.embedding AS qv, c.cid", "q.vec_id",
+         "q.embedding", s"embeddings q CROSS JOIN cents c WHERE $queryPred",
+         nProbe)},
        scored AS (SELECT p.qid, a.nid,
            round(${sqlCosine("p.qv", "a.nv")}, 4) AS cos
          FROM probes p JOIN assign a
@@ -186,13 +196,20 @@ object DedupQueries {
          FROM scored)
        WHERE rank <= $k)"""
 
-  private def sqlIvfProbeBody: String =
-    s"""${sqlIvfProbeCtes("q.vec_id < 10", 2, 3)}
+  /** `assign(nid, nv, cluster)`: every `corpusRel` vector's `cents`
+    * winner — the SQL twin of [[Similarity.assignToCentroids]]. */
+  private def sqlIvfAssign(corpusRel: String): String =
+    sqlRankedCte("assign", "nid, nv, cid AS cluster",
+      "v.vec_id AS nid, v.embedding AS nv, c.cid", "v.vec_id", "v.embedding",
+      s"$corpusRel v CROSS JOIN cents c")
+
+  private def sqlIvfProbeBody(corpusRel: String = "embeddings"): String =
+    s"""${sqlIvfProbeCtes("q.vec_id < 10", 2, 3, corpusRel)}
        SELECT qid, rank, nid, cos FROM ivftop ORDER BY qid, rank"""
 
   private[queries] val sqlIvfAnn: String =
     s"""WITH $sqlKmeansCents,
-       $sqlIvfProbeBody"""
+       ${sqlIvfProbeBody()}"""
 
   /** st14's oracle: the same probe, but centroids trained on the
     * vec_id % 4 = 0 QUARTER only — the slice the streaming ingest query
@@ -201,7 +218,7 @@ object DedupQueries {
     s"""WITH q4 AS (SELECT vec_id, embedding FROM embeddings
          WHERE vec_id % 4 = 0),
        ${sqlKmeansCentsFrom("q4")},
-       $sqlIvfProbeBody"""
+       ${sqlIvfProbeBody()}"""
 
   /** Deterministic spherical k-means over ONE PQ subspace (the slice
     * [lo, lo+len-1] of `rel`'s embedding), as prefixed CTEs ending in
@@ -209,21 +226,7 @@ object DedupQueries {
     * build as [[sqlKmeansCentsFrom]], parameterized for x8's per-subspace
     * codebooks. */
   private def sqlKmeansSliceFrom(prefix: String, rel: String, lo: Int,
-      len: Int, k: Int): String = {
-    def lloydRound(prev: String, i: Int): String =
-      s"""${prefix}assign$i AS (SELECT cid, sv FROM (
-           SELECT v.sv, c.cid,
-             row_number() OVER (PARTITION BY v.vec_id
-               ORDER BY ${sqlCosine("v.sv", "c.cv")} DESC, c.cid) AS rn
-           FROM ${prefix}base v CROSS JOIN $prev c) WHERE rn = 1),
-         ${prefix}dims$i AS (SELECT cid, pos,
-             round(CAST(sum(CAST(CAST(sv[pos] AS DOUBLE)
-                 AS DECIMAL(38,20))) AS DOUBLE) / count(*), 9) AS m
-           FROM ${prefix}assign$i
-           CROSS JOIN (SELECT unnest(generate_series(1, $len)) AS pos) p
-           GROUP BY cid, pos),
-         ${prefix}cent$i AS (SELECT cid, list(m ORDER BY pos) AS cv
-           FROM ${prefix}dims$i GROUP BY cid)"""
+      len: Int, k: Int): String =
     s"""${prefix}base AS (SELECT vec_id,
            list_slice(embedding, $lo, ${lo + len - 1}) AS sv,
            ${hashing.sqlH64("CAST(vec_id AS VARCHAR)")} AS hh
@@ -234,10 +237,7 @@ object DedupQueries {
            row_number() OVER (ORDER BY hh, vec_id) - 1 AS cid,
            list_transform(sv, e -> CAST(e AS DOUBLE)) AS cv
          FROM ${prefix}seeds),
-       ${lloydRound(s"${prefix}cent0", 1)},
-       ${lloydRound(s"${prefix}cent1", 2)},
-       ${prefix}cents AS (SELECT cid, cv FROM ${prefix}cent2)"""
-  }
+       ${sqlLloydRounds(prefix, s"${prefix}base", "sv", len)}"""
 
   /** DuckDB replay of [[Similarity.semDeDup]] over relation `rel`
     * (vec_id, embedding) with `cents` in scope: nearest-centroid
@@ -245,15 +245,38 @@ object DedupQueries {
     * `assign`/`surv` (shared by d10 and e6 so the keep rule lives in ONE
     * place). */
   private def sqlSemDedupFrom(rel: String, tau: Double): String =
-    s"""assign AS (SELECT id, v, cid AS cluster FROM (
-         SELECT e.vec_id AS id, e.embedding AS v, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY ${sqlCosine("e.embedding", "c.cv")} DESC, c.cid) AS rn
-         FROM $rel e CROSS JOIN cents c) WHERE rn = 1),
+    s"""${sqlRankedCte("assign", "id, v, cid AS cluster",
+         "e.vec_id AS id, e.embedding AS v, c.cid", "e.vec_id", "e.embedding",
+         s"$rel e CROSS JOIN cents c")},
        surv AS (SELECT a.id, a.cluster FROM assign a
          WHERE NOT EXISTS (SELECT 1 FROM assign b
            WHERE b.cluster = a.cluster AND b.id < a.id
              AND round(${sqlCosine("a.v", "b.v")}, 4) >= $tau))"""
+
+  /** The PQ index over `rel`'s embeddings cut into `S` slices of `len`
+    * (shared by x8 and x13): `cbs(sub, cid, cv, cc)`, one k=16
+    * [[sqlKmeansSliceFrom]] codebook per slice (CTE prefix `<prefix><s>`)
+    * — the replay of [[Similarity.pqCodebooks]]; `subvecs(vec_id, sub,
+    * sv)`; and `codes(vec_id, sub, code)`, each slice's `cbs` winner —
+    * the replay of [[Similarity.pqEncode]]. */
+  private def sqlPqIndexFrom(prefix: String, rel: String, S: Int,
+      len: Int): String = {
+    val kms = (0 until S).map(s0 =>
+      sqlKmeansSliceFrom(s"$prefix$s0", rel, s0 * len + 1, len, 16))
+    val cbUnion = (0 until S).map(s0 =>
+      s"SELECT $s0 AS sub, cid, cv FROM $prefix${s0}cents")
+    s"""${kms.mkString(",\n")},
+       codebooks AS (${cbUnion.mkString(" UNION ALL ")}),
+       cbs AS (SELECT sub, cid, cv,
+           CAST(round(${sqlDot("cv", "cv")}, 9) AS DECIMAL(18,9)) AS cc
+         FROM codebooks),
+       subvecs AS (SELECT vec_id, s.sub,
+           list_slice(embedding, s.sub*$len + 1, s.sub*$len + $len) AS sv
+         FROM $rel, (SELECT unnest(generate_series(0, ${S - 1})) AS sub) s),
+       ${sqlRankedCte("codes", "vec_id, sub, cid AS code",
+         "v.vec_id, v.sub, c.cid", "v.vec_id, v.sub", "v.sv",
+         "subvecs v JOIN cbs c ON c.sub = v.sub")}"""
+  }
 
   /** `qz(vec_id, v)`: the int8 quantize→dequantize round-trip of the
     * embeddings table — the exact arithmetic of
@@ -394,86 +417,60 @@ object DedupQueries {
   private val sqlIvfPq: String = {
     val S = 8
     val len = 64 / S
-        val sub = s"(SELECT unnest(generate_series(0, ${S - 1})) AS sub)"
-        val kms = (0 until S).map(s0 =>
-          sqlKmeansSliceFrom(s"r$s0", "res", s0 * len + 1, len, 16))
-          .mkString(",\n")
-        val cbUnion = (0 until S).map(s0 =>
-          s"SELECT $s0 AS sub, cid, cv FROM r${s0}cents")
-          .mkString(" UNION ALL ")
-        val resid = """list_transform(list_zip(v.embedding, c.cv),
-          z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))"""
-        s"""WITH $sqlKmeansCents,
-           rsd AS (SELECT vec_id, cluster, rv FROM (
-               SELECT v.vec_id, c.cid AS cluster, $resid AS rv,
-                 row_number() OVER (PARTITION BY v.vec_id
-                   ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC,
-                     c.cid) AS rn
-               FROM embeddings v CROSS JOIN cents c) WHERE rn = 1),
-           res AS (SELECT vec_id, rv AS embedding FROM rsd),
-           $kms,
-           codebooks AS ($cbUnion),
-           cbs AS (SELECT sub, cid, cv,
-               CAST(round(${sqlDot("cv", "cv")}, 9) AS DECIMAL(18,9)) AS cc
-             FROM codebooks),
-           subvecs AS (SELECT vec_id, s.sub,
-               list_slice(embedding, s.sub*$len + 1, s.sub*$len + $len)
-                 AS sv
-             FROM res, $sub s),
-           codes AS (SELECT vec_id, sub, cid AS code FROM (
-               SELECT v.vec_id, v.sub, c.cid,
-                 row_number() OVER (PARTITION BY v.vec_id, v.sub
-                   ORDER BY ${sqlCosine("v.sv", "c.cv")} DESC, c.cid) AS rn
-               FROM subvecs v JOIN cbs c ON c.sub = v.sub) WHERE rn = 1),
-           probes AS (SELECT qid, qv, cluster, ccv FROM (
-               SELECT q.vec_id AS qid, q.embedding AS qv,
-                 c.cid AS cluster, c.cv AS ccv,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY ${sqlCosine("q.embedding", "c.cv")} DESC,
-                     c.cid) AS rn
-               FROM embeddings q CROSS JOIN cents c WHERE q.vec_id < 10)
-             WHERE rn <= 2),
-           qres AS (SELECT qid, cluster,
-               list_transform(list_zip(qv, ccv),
-                 z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS qr
-             FROM probes),
-           qrr AS (SELECT qid, cluster,
-               CAST(round(${sqlDot("qr", "qr")}, 9) AS DECIMAL(18,9))
-                 AS qrr
-             FROM qres),
-           qsub AS (SELECT qid, cluster, s.sub,
-               list_slice(qr, s.sub*$len + 1, s.sub*$len + $len) AS qs
-             FROM qres, $sub s),
-           lut AS (SELECT q.qid, q.cluster, q.sub, c.cid,
-               CAST(round(${sqlDot("q.qs", "c.cv")}, 9) AS DECIMAL(18,9))
-                 AS pd,
-               c.cc
-             FROM qsub q JOIN cbs c ON c.sub = q.sub),
-           scored AS (SELECT l.qid, k.vec_id AS nid,
-               min(r.qrr) AS qrr, sum(l.pd) AS spd, sum(l.cc) AS scc
-             FROM codes k
-               JOIN rsd a ON a.vec_id = k.vec_id
-               JOIN lut l ON l.sub = k.sub AND l.cid = k.code
-                 AND l.cluster = a.cluster
-               JOIN qrr r ON r.qid = l.qid AND r.cluster = l.cluster
-             WHERE k.vec_id <> l.qid GROUP BY 1, 2),
-           sl AS (SELECT qid, nid FROM (
-               SELECT qid, nid, row_number() OVER (PARTITION BY qid
-                 ORDER BY (qrr - 2*spd + scc) ASC, nid) AS arank
-               FROM scored)
-             WHERE arank <= 32),
-           qs2 AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-             WHERE vec_id < 10),
-           rer AS (SELECT s.qid, s.nid,
-               round(${sqlDot("q.qv", "q.qv")}
-                 + ${sqlDot("n.embedding", "n.embedding")}
-                 - 2 * ${sqlDot("q.qv", "n.embedding")}, 4) AS d2
-             FROM sl s JOIN qs2 q ON q.qid = s.qid
-               JOIN embeddings n ON n.vec_id = s.nid)
-           SELECT qid, rank, nid, d2 FROM (
-             SELECT qid, nid, d2, row_number() OVER (PARTITION BY qid
-               ORDER BY d2 ASC, nid) AS rank FROM rer)
-           WHERE rank <= 3 ORDER BY qid, rank"""
+    val sub = s"(SELECT unnest(generate_series(0, ${S - 1})) AS sub)"
+    val resid = """list_transform(list_zip(v.embedding, c.cv),
+      z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))"""
+    s"""WITH $sqlKmeansCents,
+       ${sqlRankedCte("rsd", "vec_id, cluster, rv",
+         s"v.vec_id, c.cid AS cluster, $resid AS rv", "v.vec_id",
+         "v.embedding", "embeddings v CROSS JOIN cents c")},
+       res AS (SELECT vec_id, rv AS embedding FROM rsd),
+       ${sqlPqIndexFrom("r", "res", S, len)},
+       ${sqlRankedCte("probes", "qid, qv, cluster, ccv",
+         "q.vec_id AS qid, q.embedding AS qv, c.cid AS cluster, c.cv AS ccv",
+         "q.vec_id", "q.embedding",
+         "embeddings q CROSS JOIN cents c WHERE q.vec_id < 10", 2)},
+       qres AS (SELECT qid, cluster,
+           list_transform(list_zip(qv, ccv),
+             z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS qr
+         FROM probes),
+       qrr AS (SELECT qid, cluster,
+           CAST(round(${sqlDot("qr", "qr")}, 9) AS DECIMAL(18,9))
+             AS qrr
+         FROM qres),
+       qsub AS (SELECT qid, cluster, s.sub,
+           list_slice(qr, s.sub*$len + 1, s.sub*$len + $len) AS qs
+         FROM qres, $sub s),
+       lut AS (SELECT q.qid, q.cluster, q.sub, c.cid,
+           CAST(round(${sqlDot("q.qs", "c.cv")}, 9) AS DECIMAL(18,9))
+             AS pd,
+           c.cc
+         FROM qsub q JOIN cbs c ON c.sub = q.sub),
+       scored AS (SELECT l.qid, k.vec_id AS nid,
+           min(r.qrr) AS qrr, sum(l.pd) AS spd, sum(l.cc) AS scc
+         FROM codes k
+           JOIN rsd a ON a.vec_id = k.vec_id
+           JOIN lut l ON l.sub = k.sub AND l.cid = k.code
+             AND l.cluster = a.cluster
+           JOIN qrr r ON r.qid = l.qid AND r.cluster = l.cluster
+         WHERE k.vec_id <> l.qid GROUP BY 1, 2),
+       sl AS (SELECT qid, nid FROM (
+           SELECT qid, nid, row_number() OVER (PARTITION BY qid
+             ORDER BY (qrr - 2*spd + scc) ASC, nid) AS arank
+           FROM scored)
+         WHERE arank <= 32),
+       qs2 AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
+         WHERE vec_id < 10),
+       rer AS (SELECT s.qid, s.nid,
+           round(${sqlDot("q.qv", "q.qv")}
+             + ${sqlDot("n.embedding", "n.embedding")}
+             - 2 * ${sqlDot("q.qv", "n.embedding")}, 4) AS d2
+         FROM sl s JOIN qs2 q ON q.qid = s.qid
+           JOIN embeddings n ON n.vec_id = s.nid)
+       SELECT qid, rank, nid, d2 FROM (
+         SELECT qid, nid, d2, row_number() OVER (PARTITION BY qid
+           ORDER BY d2 ASC, nid) AS rank FROM rer)
+       WHERE rank <= 3 ORDER BY qid, rank"""
   }
 
   val defs: Map[String, Q] = Map(
@@ -1451,13 +1448,10 @@ object DedupQueries {
       },
       Some(
         s"""WITH ${sqlKmeansCentsAutoKFrom("embeddings", 50)},
-           assign AS (SELECT id, prox, cid AS cluster FROM (
-             SELECT e.vec_id AS id,
-               round(${sqlCosine("e.embedding", "c.cv")}, 4) AS prox, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY ${sqlCosine("e.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM embeddings e CROSS JOIN cents c) WHERE rn = 1),
+           ${sqlRankedCte("assign", "id, prox, cid AS cluster",
+             s"""e.vec_id AS id,
+               round(${sqlCosine("e.embedding", "c.cv")}, 4) AS prox, c.cid""",
+             "e.vec_id", "e.embedding", "embeddings e CROSS JOIN cents c")},
            ranked AS (SELECT id, cluster, prox,
                row_number() OVER (PARTITION BY cluster
                  ORDER BY prox DESC, id) AS rk,
@@ -1541,28 +1535,7 @@ object DedupQueries {
         s"""WITH $sqlQzCorpus,
            qzr AS (SELECT vec_id, v AS embedding FROM qz),
            ${sqlKmeansCentsFrom("qzr")},
-           assign AS (SELECT nid, nv, cid AS cluster FROM (
-             SELECT v.vec_id AS nid, v.embedding AS nv, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id
-                 ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM qzr v CROSS JOIN cents c) WHERE rn = 1),
-           probes AS (SELECT qid, qv, cid AS cluster FROM (
-             SELECT q.vec_id AS qid, q.embedding AS qv, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY ${sqlCosine("q.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM embeddings q CROSS JOIN cents c WHERE q.vec_id < 10)
-             WHERE rn <= 2),
-           scored AS (SELECT p.qid, a.nid,
-               round(${sqlCosine("p.qv", "a.nv")}, 4) AS cos
-             FROM probes p JOIN assign a
-               ON a.cluster = p.cluster AND a.nid <> p.qid)
-           SELECT qid, rank, nid, cos FROM (
-             SELECT qid, nid, cos, row_number() OVER
-               (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-             FROM scored)
-           WHERE rank <= 3 ORDER BY qid, rank"""
+           ${sqlIvfProbeBody(corpusRel = "qzr")}"""
       }),
 
     // x2: hyperplane-LSH ANN — each query scans only its 8-bit bucket.
@@ -1660,26 +1633,7 @@ object DedupQueries {
       Some {
         val S = 8
         val len = 64 / S
-        val kms = (0 until S).map(s0 =>
-          sqlKmeansSliceFrom(s"p$s0", "embeddings", s0 * len + 1, len, 16))
-          .mkString(",\n")
-        val cbUnion = (0 until S).map(s0 =>
-          s"SELECT $s0 AS sub, cid, cv FROM p${s0}cents")
-          .mkString(" UNION ALL ")
-        s"""WITH $kms,
-           codebooks AS ($cbUnion),
-           cbs AS (SELECT sub, cid, cv,
-               CAST(round(${sqlDot("cv", "cv")}, 9) AS DECIMAL(18,9)) AS cc
-             FROM codebooks),
-           subvecs AS (SELECT vec_id, s.sub,
-               list_slice(embedding, s.sub*$len + 1, s.sub*$len + $len) AS sv
-             FROM embeddings,
-               (SELECT unnest(generate_series(0, ${S - 1})) AS sub) s),
-           codes AS (SELECT vec_id, sub, cid AS code FROM (
-               SELECT v.vec_id, v.sub, c.cid,
-                 row_number() OVER (PARTITION BY v.vec_id, v.sub
-                   ORDER BY ${sqlCosine("v.sv", "c.cv")} DESC, c.cid) AS rn
-               FROM subvecs v JOIN cbs c ON c.sub = v.sub) WHERE rn = 1),
+        s"""WITH ${sqlPqIndexFrom("p", "embeddings", S, len)},
            qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
              WHERE vec_id < 10),
            qsub AS (SELECT qid, s.sub,
@@ -1727,8 +1681,8 @@ object DedupQueries {
       (s, dir) => {
         import graft.ops.Checkpoints
         val e = T(s, dir, "embeddings")
-        val cents = Checkpoints.checkpoint(Similarity.kmeansCentroids(
-          e, "vec_id", "embedding", k = 12, iters = 2))
+        val cents = Similarity.kmeansCentroids(
+          e, "vec_id", "embedding", k = 12, iters = 2)
         val rsd = Checkpoints.checkpoint(Similarity.ivfResiduals(
           e, "vec_id", "embedding", cents))
         val cbs = Checkpoints.checkpoint(Similarity.pqCodebooks(
@@ -2776,8 +2730,8 @@ object DedupQueries {
         import graft.ops.Checkpoints
         val e = T(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 50)
-        val cents = broadcast(Checkpoints.checkpoint(Similarity
-          .kmeansCentroids(e, "vec_id", "embedding", k = 12, iters = 2)))
+        val cents = broadcast(Similarity
+          .kmeansCentroids(e, "vec_id", "embedding", k = 12, iters = 2))
         val assigned = Checkpoints.checkpoint(
           Similarity.assignToCentroids(e, cents, "vec_id", "embedding"))
         val probes = Similarity.probeCentroids(q, cents, "vec_id",
@@ -2821,18 +2775,10 @@ object DedupQueries {
         s"""WITH $sqlKmeansCents,
            q AS (SELECT vec_id, embedding FROM embeddings
              WHERE vec_id < 50),
-           assign AS (SELECT nid, nv, cid AS cluster FROM (
-             SELECT v.vec_id AS nid, v.embedding AS nv, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id
-                 ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM embeddings v CROSS JOIN cents c) WHERE rn = 1),
-           probes AS (SELECT qid, qv, cid AS cluster FROM (
-             SELECT q.vec_id AS qid, q.embedding AS qv, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY ${sqlCosine("q.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM q CROSS JOIN cents c) WHERE rn <= 2),
+           ${sqlIvfAssign("embeddings")},
+           ${sqlRankedCte("probes", "qid, qv, cid AS cluster",
+             "q.vec_id AS qid, q.embedding AS qv, c.cid", "q.vec_id",
+             "q.embedding", "q CROSS JOIN cents c", 2)},
            truth AS (SELECT qid, nid FROM (
              SELECT qid, nid, row_number() OVER
                (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
@@ -2890,8 +2836,8 @@ object DedupQueries {
         import graft.ops.Checkpoints
         val e = T(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 50)
-        val cents = broadcast(Checkpoints.checkpoint(Similarity
-          .kmeansCentroids(e, "vec_id", "embedding", k = 12, iters = 2)))
+        val cents = broadcast(Similarity
+          .kmeansCentroids(e, "vec_id", "embedding", k = 12, iters = 2))
         val assigned = Checkpoints.checkpoint(
           Similarity.assignToCentroids(e, cents, "vec_id", "embedding"))
         val truth = Checkpoints.checkpoint(
@@ -2977,18 +2923,10 @@ object DedupQueries {
         s"""WITH $sqlKmeansCents,
            q AS (SELECT vec_id, embedding FROM embeddings
              WHERE vec_id < 50),
-           assign AS (SELECT nid, nv, cid AS cluster FROM (
-             SELECT v.vec_id AS nid, v.embedding AS nv, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id
-                 ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM embeddings v CROSS JOIN cents c) WHERE rn = 1),
-           probes AS (SELECT qid, qv, cluster, rn FROM (
-             SELECT q.vec_id AS qid, q.embedding AS qv, c.cid AS cluster,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY ${sqlCosine("q.embedding", "c.cv")} DESC, c.cid)
-                 AS rn
-             FROM q CROSS JOIN cents c) WHERE rn <= 4),
+           ${sqlIvfAssign("embeddings")},
+           ${sqlRankedCte("probes", "qid, qv, cluster, rn",
+             "q.vec_id AS qid, q.embedding AS qv, c.cid AS cluster",
+             "q.vec_id", "q.embedding", "q CROSS JOIN cents c", 4)},
            truth AS (SELECT qid, nid FROM (
              SELECT qid, nid, row_number() OVER
                (PARTITION BY qid ORDER BY cos DESC, nid) AS rank

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * read options built once, and the publish rule: every exclusive-link
   * write and every dir claim has one home in `Manifest`, and the
   * row-level rule: one file key (`relPathCol`) and one stats prune
-  * (`filesWithin`). No Spark
+  * (`filesWithin`), and the k-means rule: one nearest-centroid argmin
+  * (`nearest`), one Lloyd mean (`lloydRounds`) and one oracle centroid
+  * ranking (`sqlRankedCte`). No Spark
   * session needed — pure registry + file
   * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
@@ -277,5 +279,79 @@ class RegistryGuardSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${src(i).trim}"
     assert(hits.isEmpty, "the file key is Manifest.relPathCol and the " +
       s"stats prune Snapshot.filesWithin:\n${hits.mkString("\n")}")
+  }
+
+  /** The assignment argmin, the exact Lloyd mean (the Spark cast and the
+    * oracle's CAST) and the oracle's (cosine DESC, cid) centroid ranking,
+    * which its copies split across lines. */
+  private val argminToken = """negate\(cosine\(""".r
+  private val meanToken = """(?i)decimal\(38,\s*20\)""".r
+  private val rankToken = """DESC,\s*c\.cid\b""".r
+
+  /** Line indices of every `token` match in `lines`, comment lines
+    * blanked first; a match may span lines (reported at its first). */
+  private def textHits(lines: Seq[String], token: scala.util.matching.Regex)
+      : Seq[Int] = {
+    val code = lines.map(l =>
+      if (Seq("//", "*", "/*").exists(l.trim.startsWith)) "" else l)
+    val text = code.mkString("\n")
+    token.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n'))
+      .toSeq
+  }
+
+  test("each k-means step has one home: negate(cosine( only in " +
+    "Similarity.nearest, decimal(38,20) only in lloydRounds and the " +
+    "oracle's sqlLloydRounds, and under queries/ the (cosine DESC, c.cid) " +
+    "ranking only in sqlRankedCte") {
+    // the copies these guards replaced trip them
+    val oldAssign = """        .groupBy(col("id"))
+      |        .agg(min(struct(
+      |          negate(cosine(col("v"), col("cv"))).as("negcos"),"""
+      .stripMargin.split("\n").toSeq
+    assert(textHits(oldAssign, argminToken) == Seq(2))
+    val oldPqMean = """        .groupBy(col("sub"), col("cid"), col("pos"))
+      |        .agg(sum(col("val").cast("double").cast("decimal(38,20)")).as("__s"),"""
+      .stripMargin.split("\n").toSeq
+    assert(textHits(oldPqMean, meanToken) == Seq(1))
+    val oldSliceMean = """         ${prefix}dims$i AS (SELECT cid, pos,
+      |             round(CAST(sum(CAST(CAST(sv[pos] AS DOUBLE)
+      |                 AS DECIMAL(38,20))) AS DOUBLE) / count(*), 9) AS m"""
+      .stripMargin.split("\n").toSeq
+    assert(textHits(oldSliceMean, meanToken) == Seq(2))
+    val oldRank = """               SELECT v.vec_id, c.cid AS cluster, $resid AS rv,
+      |                 row_number() OVER (PARTITION BY v.vec_id
+      |                   ORDER BY ${sqlCosine("v.embedding", "c.cv")} DESC,
+      |                     c.cid) AS rn"""
+      .stripMargin.split("\n").toSeq
+    assert(textHits(oldRank, rankToken) == Seq(2))
+    val similarity = Paths.get("src/main/scala/graft/ops/Similarity.scala")
+    val dedupQueries =
+      Paths.get("src/main/scala/graft/queries/DedupQueries.scala")
+    def lines(f: java.nio.file.Path) = Files.readAllLines(f).asScala.toSeq
+    val homes = Seq(
+      (argminToken, similarity, defSpan(lines(similarity), "def nearest(")),
+      (meanToken, similarity, defSpan(lines(similarity), "def lloydRounds(")),
+      (meanToken, dedupQueries,
+        defSpan(lines(dedupQueries), "def sqlLloydRounds(")),
+      (rankToken, dedupQueries,
+        defSpan(lines(dedupQueries), "def sqlRankedCte(")))
+    homes.foreach { case (token, f, span) =>
+      assert(textHits(lines(f), token).count(span.contains) == 1,
+        s"$f: the home at line ${span.start + 1} must hold exactly one $token")
+    }
+    val queries = Paths.get("src/main/scala/graft/queries")
+    val hits = for {
+      f <- Files.walk(Paths.get("src/main")).iterator.asScala.toSeq
+      if f.toString.endsWith(".scala")
+      src = lines(f)
+      token <- Seq(argminToken, meanToken, rankToken)
+      if token != rankToken || f.startsWith(queries)
+      i <- textHits(src, token)
+      if !homes.exists { case (t, h, span) =>
+        t == token && Files.isSameFile(f, h) && span.contains(i) }
+    } yield s"$f:${i + 1}: ${src(i).trim}"
+    assert(hits.isEmpty, "centroid assignment goes through " +
+      "Similarity.nearest, Lloyd means through lloydRounds/sqlLloydRounds " +
+      s"and the oracle ranking through sqlRankedCte:\n${hits.mkString("\n")}")
   }
 }

@@ -841,6 +841,50 @@ class DedupSimilaritySpec extends SparkSpec {
       "all-lists probe + full-corpus shortlist must recover exact L2")
   }
 
+  test("pqCodebooks == kmeansCentroids run on each slice, exactly " +
+    "(sf0.001 embeddings, dim 64, 8 subspaces, k = 16)") {
+    val e = graft.queries.QueryDSL.T(spark, sf, "embeddings")
+    val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding",
+        dim = 64, subspaces = 8, k = 16)
+      .collect().groupBy(_.getAs[Int]("sub")).map { case (s0, rows) =>
+        s0 -> rows.map(r =>
+          r.getAs[Long]("cid") -> r.getAs[Seq[Double]]("cv")).toMap
+      }
+    assert(cbs.keySet == (0 until 8).toSet)
+    for (s0 <- 0 until 8) {
+      val sliced = e.select(col("vec_id"),
+        slice(col("embedding"), s0 * 8 + 1, 8).as("sv"))
+      val want = Similarity.kmeansCentroids(sliced, "vec_id", "sv", k = 16)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      assert(want.nonEmpty)
+      assert(cbs(s0) == want, s"subspace $s0: codebook != slice k-means")
+    }
+  }
+
+  test("k-means training job counts are pinned, and x10, x11 and x13 " +
+    "use the checkpointed centroids k-means returns without a second " +
+    "checkpoint") {
+    val e = graft.queries.QueryDSL.T(spark, sf, "embeddings")
+    def noop(q: String): Unit = graft.SparkEntry.queries(q)(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    val jobs = Seq(
+      "kmeansCentroids" -> jobsDuring(Similarity.kmeansCentroids(
+        e, "vec_id", "embedding", k = 12, iters = 2)),
+      "kmeansCentroidsAutoK" -> jobsDuring(Similarity.kmeansCentroidsAutoK(
+        e, "vec_id", "embedding", targetClusterSize = 50)),
+      "pqCodebooks" -> jobsDuring(Similarity.pqCodebooks(
+        e, "vec_id", "embedding", dim = 64, subspaces = 8, k = 16,
+        iters = 2)),
+      "x10" -> jobsDuring(noop("x10_ann_recall")),
+      "x11" -> jobsDuring(noop("x11_nprobe_sweep")),
+      "x13" -> jobsDuring(noop("x13_ivf_pq")))
+    // x10, x11 and x13 ran 31, 60 and 47 jobs while they re-checkpointed
+    // the centroids kmeansCentroids already returns checkpointed
+    assert(jobs == Seq("kmeansCentroids" -> 10, "kmeansCentroidsAutoK" -> 14,
+      "pqCodebooks" -> 12, "x10" -> 30, "x11" -> 59, "x13" -> 46),
+      jobs.mkString(", "))
+  }
+
   test("bloom: no false negatives — every inserted hash passes its own " +
     "filter, even on a 64-bit filter where bit 63 is certainly used") {
     val hs = (1L to 200L).map(i => hashing.md5Long(s"h$i")).toDF("h")
