@@ -99,27 +99,14 @@ object DbfReader {
     }
   }
 
-  /** Read one local `.dbf` file (driver-side edge). */
-  def readDbf(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val schema = layout(bytes).schema
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows(bytes).toArray: _*), schema)
-  }
+  private val format = ingest.BinaryFormat(layout(_).schema, rows(_))
 
-  /** Distributed read of many `.dbf` files (one task per file). */
-  def readDbfFiles(spark: SparkSession, pattern: String): DataFrame = {
-    val files = spark.sparkContext.binaryFiles(pattern)
-    val schema = layout(files.first()._2.toArray()).schema
-    spark.createDataFrame(
-      files.flatMap { case (path, pds) =>
-        val bytes = pds.toArray()
-        // positional rows: fail loudly on layout drift across the glob
-        val fileSchema = layout(bytes).schema
-        require(fileSchema == schema,
-          s"$path schema $fileSchema differs from the glob's first-file " +
-            s"schema $schema")
-        rows(bytes)
-      }, schema)
-  }
+  /** Read one local `.dbf` file ([[ingest.BinaryFormat.read]]). */
+  def readDbf(spark: SparkSession, path: String): DataFrame =
+    format.read(spark, path)
+
+  /** Distributed read of many `.dbf` files, one task per file, refusing
+    * schema drift across the glob ([[ingest.BinaryFormat.readFiles]]). */
+  def readDbfFiles(spark: SparkSession, pattern: String): DataFrame =
+    format.readFiles(spark, pattern)
 }

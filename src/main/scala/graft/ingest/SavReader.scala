@@ -364,29 +364,14 @@ object SavReader {
     }
   }
 
-  /** Read one local `.sav` file (driver-side edge, like the ZIP utility). */
-  def readSav(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val schema = layout(bytes).schema
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows(bytes).toArray: _*), schema)
-  }
+  private val format = ingest.BinaryFormat(layout(_).schema, rows(_))
 
-  /** Distributed read of many `.sav` files (one task per file — the INEI
-    * corpus shape). All files must share the glob's first-file schema;
-    * divergence fails loudly (rows are positional — silent drift would land
-    * values in the wrong columns). */
-  def readSavFiles(spark: SparkSession, pattern: String): DataFrame = {
-    val files = spark.sparkContext.binaryFiles(pattern)
-    val schema = layout(files.first()._2.toArray()).schema
-    val rdd = files.flatMap { case (path, pds) =>
-      val bytes = pds.toArray()
-      val fileSchema = layout(bytes).schema
-      require(fileSchema == schema,
-        s"$path schema $fileSchema differs from the glob's first-file " +
-          s"schema $schema")
-      rows(bytes)
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Read one local `.sav` file ([[ingest.BinaryFormat.read]]). */
+  def readSav(spark: SparkSession, path: String): DataFrame =
+    format.read(spark, path)
+
+  /** Distributed read of many `.sav` files, one task per file, refusing
+    * schema drift across the glob ([[ingest.BinaryFormat.readFiles]]). */
+  def readSavFiles(spark: SparkSession, pattern: String): DataFrame =
+    format.readFiles(spark, pattern)
 }

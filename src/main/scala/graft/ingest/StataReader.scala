@@ -136,32 +136,14 @@ object StataReader {
     }
   }
 
-  /** Read one local `.dta` file (driver-side edge, like the ZIP utility). */
-  def readDta(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val schema = layout(bytes).schema
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows(bytes).toArray: _*), schema)
-  }
+  private val format = ingest.BinaryFormat(layout(_).schema, rows(_))
 
-  /** Distributed read of many `.dta` files (one task per file — the INEI
-    * corpus shape: thousands of per-module files). All files must share the
-    * schema of the first (standard for survey module collections); the
-    * parser runs inside executors via `binaryFiles`. */
-  def readDtaFiles(spark: SparkSession, pattern: String): DataFrame = {
-    val files = spark.sparkContext.binaryFiles(pattern)
-    val schema = layout(files.first()._2.toArray()).schema
-    val rdd = files.flatMap { case (path, pds) =>
-      val bytes = pds.toArray()
-      // rows are positional: a file whose layout diverges from the glob's
-      // reference schema would silently land values in the wrong columns —
-      // fail loudly instead (survey module collections share one layout).
-      val fileSchema = layout(bytes).schema
-      require(fileSchema == schema,
-        s"$path schema $fileSchema differs from the glob's first-file " +
-          s"schema $schema")
-      rows(bytes)
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Read one local `.dta` file ([[ingest.BinaryFormat.read]]). */
+  def readDta(spark: SparkSession, path: String): DataFrame =
+    format.read(spark, path)
+
+  /** Distributed read of many `.dta` files, one task per file, refusing
+    * schema drift across the glob ([[ingest.BinaryFormat.readFiles]]). */
+  def readDtaFiles(spark: SparkSession, pattern: String): DataFrame =
+    format.readFiles(spark, pattern)
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Driver-side ingest-edge utilities (SURVEY §2.1 S1/S2/S9/S11 and §2.7
@@ -64,6 +64,41 @@ object ingest {
       bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes.sliding(4).exists(w =>
         w(0) == 'P' && w(1) == 'K' && w(2) == 5 && w(3) == 6)
+
+  /** The one reader of the positional binary survey formats (`.sav`,
+    * `.dta`, `.dbf`): a format is its `schemaOf` (`layout(_).schema`) and
+    * its `rows` parser, and these are the two reads each reader exposes. */
+  private[graft] final case class BinaryFormat(
+      schemaOf: Array[Byte] => StructType,
+      rows: Array[Byte] => Iterator[Row]) {
+
+    /** Read one local file (driver-side edge, like the ZIP utility). */
+    def read(spark: SparkSession, path: String): DataFrame = {
+      val bytes =
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+      val schema = schemaOf(bytes)
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows(bytes).toArray: _*), schema)
+    }
+
+    /** Distributed read of many files (one task per file — the INEI
+      * corpus shape: thousands of per-module files). All files must share
+      * the glob's first-file schema: rows are positional, so a file whose
+      * layout diverges would silently land values in the wrong columns —
+      * it fails loudly, naming its path, instead. */
+    def readFiles(spark: SparkSession, pattern: String): DataFrame = {
+      val files = spark.sparkContext.binaryFiles(pattern)
+      val schema = schemaOf(files.first()._2.toArray())
+      spark.createDataFrame(files.flatMap { case (path, pds) =>
+        val bytes = pds.toArray()
+        val fileSchema = schemaOf(bytes)
+        require(fileSchema == schema,
+          s"$path schema $fileSchema differs from the glob's first-file " +
+            s"schema $schema")
+        rows(bytes)
+      }, schema)
+    }
+  }
 
   /** F17: percent-encode in an explicit charset (the reference quotes INEI
     * names in latin-1, `perustats/inei/utils/http_utils.py:11-13`; built-in

@@ -2,6 +2,7 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -282,11 +283,48 @@ object Manifest {
       c -> (lo.toDouble, hi.toDouble)
     }.toMap
 
-  private def lines(tablePath: String, v: Long): Seq[String] = {
+  /** A decoded manifest-format file (version, checkpoint, WAP stage or
+    * branch commit): `#key=value` meta, `-path` removals, add lines. */
+  private final case class ManifestLines(meta: Map[String, String],
+      removed: Vector[String], added: Vector[String])
+
+  /** THE manifest-line decoder: one read of `f`, empty lines skipped.
+    * Callers own the existence checks, refusals and [[onMetaRead]]. */
+  private def decodeLines(f: Path): ManifestLines = {
+    val meta = Map.newBuilder[String, String]
+    val removed = Vector.newBuilder[String]
+    val added = Vector.newBuilder[String]
+    Files.readAllLines(f).forEach { l =>
+      if (l.isEmpty) ()
+      else if (l.startsWith("#")) l.substring(1).split("=", 2) match {
+        case Array(k, value) => meta += k -> value
+        case _ => ()
+      }
+      else if (l.startsWith("-")) removed += l.substring(1)
+      else added += l
+    }
+    ManifestLines(meta.result(), removed.result(), added.result())
+  }
+
+  /** THE manifest-line encoder (checkpoints keep their grouped layout):
+    * sorted `#key=value` meta lines, then `-` removals, then adds. */
+  private def encodeLines(meta: Map[String, String], removed: Seq[String],
+      added: Seq[String]): Seq[String] =
+    meta.toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
+      removed.map("-" + _) ++ added
+
+  /** `(key minus prefix) -> value` for the meta keys under `prefix`. */
+  private def tagged(meta: Map[String, String],
+      prefix: String): Map[String, String] = meta.collect {
+    case (k, value) if k.startsWith(prefix) => k.stripPrefix(prefix) -> value
+  }
+
+  /** Version `v`'s manifest, decoded — loud when it is not committed. */
+  private def readManifest(tablePath: String, v: Long): ManifestLines = {
     val f = manifestFile(tablePath, v)
     require(Files.exists(f), s"version $v is not committed at $tablePath")
     onMetaRead(f)
-    Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
+    decodeLines(f)
   }
 
   // ——— DELTA-ACTION LOG (the Delta-log shape). Each version's manifest
@@ -381,10 +419,8 @@ object Manifest {
     * written by a pre-delta-log library version — see
     * [[LogFormatKey]]). */
   private[graft] def delta(tablePath: String, v: Long): CommitDelta = {
-    val ls = lines(tablePath, v)
-    val meta = ls.filter(_.startsWith("#"))
-      .map(_.stripPrefix("#").split("=", 2))
-      .collect { case Array(k, value) => k -> value }.toMap
+    val m = readManifest(tablePath, v)
+    val meta = m.meta
     if (!meta.get(LogFormatKey).contains(LogFormatValue))
       throw new IllegalStateException(
         s"manifest v$v at $tablePath carries no '#$LogFormatKey=" +
@@ -400,12 +436,10 @@ object Manifest {
           "was written by a pre-schema-tracking library version. " +
           "Re-create the table (or re-commit its content) with the " +
           "current library.")
-    CommitDelta(v,
-      added = ls.filterNot(l => l.startsWith("#") || l.startsWith("-")),
-      removed = ls.filter(_.startsWith("-")).map(_.stripPrefix("-")),
+    CommitDelta(v, added = m.added, removed = m.removed,
       replace = meta.get(ReplaceKey).contains("true"),
-      dvSet = meta.collect { case (k, value) if k.startsWith(DvPrefix) =>
-        k.stripPrefix(DvPrefix) -> parseDv(value) },
+      dvSet = tagged(meta, DvPrefix).map { case (f, value) =>
+        f -> parseDv(value) },
       meta = meta)
   }
 
@@ -576,18 +610,15 @@ object Manifest {
           rows = s.rows -- rm, stats = s.stats -- rm,
           bytes = s.bytes -- rm, addedIn = s.addedIn -- rm)
       }
-    def tagged(prefix: String): Map[String, String] = d.meta.collect {
-      case (k, value) if k.startsWith(prefix) =>
-        k.stripPrefix(prefix) -> value }
     Snapshot(s.tablePath, d.version, d.meta,
       base.files ++ d.added, base.dv ++ d.dvSet,
-      base.rows ++ tagged(FileRowsPrefix).map { case (f, n) =>
+      base.rows ++ tagged(d.meta, FileRowsPrefix).map { case (f, n) =>
         f -> n.toLong },
-      base.stats ++ tagged(FileStatsPrefix),
-      base.bytes ++ tagged(FileBytesPrefix).map { case (f, n) =>
+      base.stats ++ tagged(d.meta, FileStatsPrefix),
+      base.bytes ++ tagged(d.meta, FileBytesPrefix).map { case (f, n) =>
         f -> n.toLong },
       base.addedIn ++ d.added.map(_ -> d.version),
-      base.txns ++ tagged(TxnPrefix).map { case (app, n) =>
+      base.txns ++ tagged(d.meta, TxnPrefix).map { case (app, n) =>
         app -> (n.toLong, d.version) })
   }
 
@@ -595,37 +626,30 @@ object Manifest {
     * (txn state, adding versions, byte sizes); a v1 checkpoint lacks
     * them, so resolving from it would silently forget txn stamps —
     * refuse loudly instead (same posture as [[delta]]'s log marker). */
-  private val CkptVerLine = "#ckptver=2"
+  private val CkptVerKey = "ckptver"
+  private val CkptVerLine = s"#$CkptVerKey=2"
   private val TxnStatePrefix = "txnstate."
   private val AddedInPrefix = "addedin."
 
   private def readCkpt(tablePath: String, v: Long): Snapshot = {
     onMetaRead(ckptFile(tablePath, v))
-    val ls = Files.readAllLines(ckptFile(tablePath, v)).toArray
-      .map(_.toString).toSeq.filter(_.nonEmpty)
-    if (!ls.contains(CkptVerLine))
+    val ck = decodeLines(ckptFile(tablePath, v))
+    if (!ck.meta.get(CkptVerKey).contains("2"))
       throw new IllegalStateException(
         s"checkpoint v$v at $tablePath predates the v2 checkpoint " +
           "format (no '" + CkptVerLine + "' line) — it carries no txn " +
           "state, so resolving from it would silently forget recorded " +
           "transactions. Re-create the table with the current library.")
-    checkFeatures(s"checkpoint v$v at $tablePath",
-      ls.find(_.startsWith(s"#$FeaturesKey="))
-        .map(_.stripPrefix(s"#$FeaturesKey=")))
-    def tagged(prefix: String): Map[String, String] =
-      ls.filter(_.startsWith(s"#$prefix"))
-        .map(_.stripPrefix(s"#$prefix").split("=", 2))
-        .collect { case Array(f, value) => f -> value }.toMap
+    checkFeatures(s"checkpoint v$v at $tablePath", ck.meta.get(FeaturesKey))
     // the version's own meta is its manifest's: [[snapshot]] reads it
     // when the resolution starts AND ends at this checkpoint
-    Snapshot(tablePath, v, Map.empty,
-      ls.filterNot(_.startsWith("#")).toVector,
-      tagged(DvPrefix).map { case (f, value) => f -> parseDv(value) },
-      tagged(FileRowsPrefix).map { case (f, n) => f -> n.toLong },
-      tagged(FileStatsPrefix),
-      tagged(FileBytesPrefix).map { case (f, n) => f -> n.toLong },
-      tagged(AddedInPrefix).map { case (f, n) => f -> n.toLong },
-      tagged(TxnStatePrefix).map { case (app, value) =>
+    def longs(prefix: String) =
+      tagged(ck.meta, prefix).map { case (f, n) => f -> n.toLong }
+    Snapshot(tablePath, v, Map.empty, ck.added,
+      tagged(ck.meta, DvPrefix).map { case (f, value) => f -> parseDv(value) },
+      longs(FileRowsPrefix), tagged(ck.meta, FileStatsPrefix),
+      longs(FileBytesPrefix), longs(AddedInPrefix),
+      tagged(ck.meta, TxnStatePrefix).map { case (app, value) =>
         val i = value.lastIndexOf(':')
         app -> (value.substring(0, i).toLong,
           value.substring(i + 1).toLong) })
@@ -721,12 +745,9 @@ object Manifest {
       removed: Seq[String], added: Seq[String]): Option[Long] = {
     val next = base.version + 1
     val now = System.currentTimeMillis
-    val lines =
-      (meta ++ formatMeta ++ maxTsMeta(base, now) +
-        (SchemaKey -> schema.json) +
-        (CommitTsKey -> now.toString))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++
-      removed.map("-" + _) ++ added
+    val lines = encodeLines(meta ++ formatMeta ++ maxTsMeta(base, now) +
+      (SchemaKey -> schema.json) + (CommitTsKey -> now.toString),
+      removed, added)
     beforePublish()
     if (!linkNew(manifestFile(tablePath, next), lines)) None
     else {
@@ -735,15 +756,6 @@ object Manifest {
       Some(next)
     }
   }
-
-  /** Version `v`'s raw `#key=value` meta — ONE manifest read, for the
-    * probes that need a single stamp, not the resolved state
-    * ([[txnState]], [[versionAsOf]]). */
-  private def rawMeta(tablePath: String, v: Long): Map[String, String] =
-    lines(tablePath, v)
-      .filter(_.startsWith("#"))
-      .map(_.stripPrefix("#").split("=", 2))
-      .collect { case Array(k, value) => k -> value }.toMap
 
   /** Prefix of metadata keys recording per-file column min/max — the
     * Iceberg/Delta data-skipping stats, in the LOG where a reader finds
@@ -846,9 +858,9 @@ object Manifest {
     * wholesale at [[delta]]'s format marker before a mixed history
     * could exist). */
   private def adjustedTimeAt(tablePath: String, v: Long): Long =
-    rawMeta(tablePath, v).get(MaxTsKey).map(_.toLong).getOrElse(
+    readManifest(tablePath, v).meta.get(MaxTsKey).map(_.toLong).getOrElse(
       (1L to v).filter(w => Files.exists(manifestFile(tablePath, w)))
-        .map(w => stampOf(tablePath, w, rawMeta(tablePath, w))).max)
+        .map(w => stampOf(tablePath, w, readManifest(tablePath, w).meta)).max)
 
   /** TIMESTAMP AS OF resolution: the newest version whose
     * monotonically-ADJUSTED commit time is <= `tsMillis` (each
@@ -958,23 +970,115 @@ object Manifest {
       s"no tag '$name' at $tablePath (tags: " +
         s"${tags(tablePath).keys.toSeq.sorted.mkString(", ")})"))
 
-  // ——— WRITE-AUDIT-PUBLISH (the Iceberg WAP pattern): stage a commit
-  // OFF the version chain, audit the would-be table, then publish as a
-  // METADATA-ONLY fast-forward or drop it. The staged batch's data
-  // files land in a normally-claimed batch dir, but the manifest goes
-  // to `wap-<id>.txt` — invisible to every reader, version() unmoved.
-  // Publish re-carries the PUBLISH-TIME head (staged commits are
-  // append-shaped, so interim appends rebase for free), validates the
-  // staged files against the head's CHECK constraints (the declared
-  // gate holds even if the audit was lax), and links the next version
-  // without touching a data file. Drop deletes the staged manifest and
-  // reclaims the claimed batch dir immediately (its files are
-  // unreferenced by construction). At 100 TB this is how risky ingest
-  // ships: the expensive write happens once, quarantined; the
-  // promote/abandon decision costs metadata. ———
+  // ——— OFF-CHAIN STAGES: a WAP stage (`wap-<id>.txt`) or a branch
+  // (ref `branch-<name>.txt` + commits `branch-<name>-cNNNNNN.txt`) is
+  // manifest-format files no version lists, over normally-claimed batch
+  // dirs — invisible to every main-chain reader. Both run one lifecycle,
+  // one helper per step: [[stages]] lists, [[writeStage]] writes,
+  // [[stageView]] reads, [[publishStage]] publishes one metadata-only
+  // version (idempotent through a `txn.<stage>` stamp, `<stage>` =
+  // `wap-<id>` or `branch-<name>`) and [[retireStage]] retires or drops.
+  // Each verb keeps its own policy: WAP reads over and rebases onto the
+  // HEAD and checks constraints at publish; a branch reads over its
+  // FORK, checks fork-frozen constraints at commit and refuses to
+  // publish on divergence. At 100 TB this is how risky ingest ships:
+  // the expensive writes happen once, quarantined; the promote/abandon
+  // decision costs metadata. ———
 
   private def wapFile(tablePath: String, id: String): Path =
     manifestDir(tablePath).resolve(s"wap-$id.txt")
+
+  private def branchRefFile(tablePath: String, name: String): Path =
+    manifestDir(tablePath).resolve(s"branch-$name.txt")
+
+  private def branchCommitFile(tablePath: String, name: String,
+      c: Long): Path =
+    manifestDir(tablePath).resolve(f"branch-$name-c$c%06d.txt")
+
+  private val WapFileName = """wap-(.+)\.txt""".r
+  private val BranchRefName = """branch-(.+)\.txt""".r
+
+  /** No branch name ends in a commit-file suffix (see [[branch]]). */
+  private val BranchCommitSuffix = ".*-c\\d{6}"
+
+  /** Staged WAP ids and live branches' commit numbers, sorted. */
+  private final case class Stages(wapIds: Seq[String],
+      branches: Map[String, Seq[Long]])
+
+  /** THE stage listing: ONE listing of `_manifests/`, matched by exact
+    * file name. A branch's commits are exactly the files
+    * `branch-<name>-cNNNNNN.txt` — branches named `x-c5` or `x-cab`
+    * beside `x` are other branches, never commits of `x`. */
+  private def stages(tablePath: String): Stages = {
+    val dir = manifestDir(tablePath)
+    val names =
+      if (!Files.isDirectory(dir)) Seq.empty[String]
+      else ls(dir).map(p => Paths.get(p).getFileName.toString)
+    val refs = names.collect {
+      case BranchRefName(n) if !n.matches(BranchCommitSuffix) => n }
+    Stages(names.collect { case WapFileName(id) => id }.sorted,
+      refs.map { n =>
+        val commit = s"branch-${Pattern.quote(n)}-c(\\d{6})\\.txt".r
+        n -> names.collect { case commit(c) => c.toLong }.sorted
+      }.toMap)
+  }
+
+  /** THE stage write: [[checkMeta]], [[writeBatch]] (gated by
+    * `constraints`), then the encoded stage body — caller meta, the
+    * batch's row/stats/byte meta, `schema` and `stamp` (taken after the
+    * write), the fresh files as adds. The caller links it. */
+  private def writeStage(df: DataFrame, tablePath: String,
+      meta: Map[String, String], statsCols: Seq[String], schema: StructType,
+      constraints: Map[String, String] = Map.empty,
+      refusal: String => String = identity,
+      stamp: => Map[String, String] = Map.empty): (Batch, Seq[String]) = {
+    checkMeta(meta)
+    val batch = writeBatch(df, tablePath, version(tablePath) + 1, statsCols,
+      constraints, refusal)
+    (batch, encodeLines(meta ++ batch.rowsMeta ++ batch.statsMeta ++
+      freshBytesMeta(tablePath, batch.fresh) ++ stamp +
+      (SchemaKey -> schema.json), Nil, batch.fresh))
+  }
+
+  /** THE stage view: `snap`'s live rows (deletion vectors applied) plus
+    * the stage's `files`, read under `schema`. */
+  private def stageView(spark: SparkSession, snap: Snapshot,
+      files: Seq[String], schema: StructType): DataFrame =
+    snap.applyDv(spark, spark.read.schema(schema).parquet(
+      (snap.files ++ files)
+        .map(rel => Paths.get(snap.tablePath).resolve(rel).toString): _*))
+
+  /** THE stage publish: `files` as `base`'s successor, metadata-only
+    * and O(staged) (resolution inherits `base`'s files and DVs), with
+    * the stage's `meta`, `base`'s CHECK constraints and the
+    * `txn.<stage>` stamp [[publishedAt]] finds. None = lost the race. */
+  private def publishStage(tablePath: String, base: Snapshot, stage: String,
+      meta: Map[String, String], schema: StructType,
+      files: Seq[String]): Option[Long] =
+    publishVersion(tablePath, base, meta ++ base.constraints.map {
+      case (n, ex) => s"$ConstraintPrefix$n" -> ex } +
+      (s"$TxnPrefix$stage" -> "0"), schema, Nil, files)
+
+  /** The version that published `stage`, if one did: the bounded
+    * [[txnState]] probe, vacuum-proof (the stamp rides checkpoints). */
+  private def publishedAt(tablePath: String, stage: String): Option[Long] =
+    txnState(tablePath, stage).map(_._2)
+
+  /** THE stage retire/drop: delete the stage manifests `files` (a
+    * branch's ref last), then — unless `published` made its adds live —
+    * reclaim their batch dirs, unreferenced by construction. */
+  private def retireStage(tablePath: String, files: Seq[Path],
+      published: Boolean): Unit = {
+    val dirs =
+      if (published) Nil
+      else files.flatMap(f => decodeLines(f).added)
+        .map(rel => Paths.get(tablePath).resolve(rel).getParent).distinct
+    files.foreach(Files.deleteIfExists(_))
+    dirs.foreach(rmTree)
+  }
+
+  // ——— WRITE-AUDIT-PUBLISH (the Iceberg WAP pattern): stage one
+  // commit, audit the would-be table, then publish or drop it. ———
 
   /** Stage `df` as WAP id `id`: files are written (and their stats
     * harvested) exactly like a commit's, but NO version publishes —
@@ -988,13 +1092,7 @@ object Manifest {
     require(validRefName(id), s"invalid WAP id '$id'")
     require(!Files.exists(wapFile(tablePath, id)),
       s"WAP id '$id' is already staged at $tablePath")
-    checkMeta(meta)
-    val batch = writeBatch(df, tablePath, version(tablePath) + 1, statsCols)
-    val lines =
-      (meta ++ batch.rowsMeta ++ batch.statsMeta ++
-        freshBytesMeta(tablePath, batch.fresh) +
-        (SchemaKey -> df.schema.json))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ batch.fresh
+    val (batch, lines) = writeStage(df, tablePath, meta, statsCols, df.schema)
     if (!linkNew(wapFile(tablePath, id), lines)) {
       rmTree(batch.dir)
       throw new IllegalArgumentException(
@@ -1003,29 +1101,23 @@ object Manifest {
   }
 
   /** Staged WAP ids, oldest-named first. */
-  def stagedIds(tablePath: String): Seq[String] = {
-    val dir = manifestDir(tablePath)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else ls(dir).map(p => Paths.get(p).getFileName.toString)
-      .collect { case s if s.startsWith("wap-") && s.endsWith(".txt") =>
-        s.stripPrefix("wap-").stripSuffix(".txt") }
-      .sorted
+  def stagedIds(tablePath: String): Seq[String] = stages(tablePath).wapIds
+
+  private def readStageFile(f: Path, missing: => String): ManifestLines = {
+    require(Files.exists(f), missing)
+    decodeLines(f)
   }
 
-  private def stagedLines(tablePath: String, id: String): Seq[String] = {
-    val f = wapFile(tablePath, id)
-    require(Files.exists(f), s"no staged WAP id '$id' at $tablePath " +
-      s"(staged: ${stagedIds(tablePath).mkString(", ")})")
-    Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
-  }
+  private def readStage(tablePath: String, id: String): ManifestLines =
+    readStageFile(wapFile(tablePath, id), s"no staged WAP id '$id' at " +
+      s"$tablePath (staged: ${stagedIds(tablePath).mkString(", ")})")
 
   /** The schema a staged manifest recorded — [[stageCommit]] always
     * writes one; a stage without it refuses. */
   private def stagedSchema(tablePath: String, id: String,
-      staged: Seq[String]): StructType =
-    staged.find(_.startsWith(s"#$SchemaKey="))
-      .map(l => DataType.fromJson(l.substring(SchemaKey.length + 2))
-        .asInstanceOf[StructType])
+      staged: ManifestLines): StructType =
+    staged.meta.get(SchemaKey)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(
         s"staged WAP id '$id' at $tablePath records no schema"))
 
@@ -1043,12 +1135,10 @@ object Manifest {
     * (row counts, invariants, model-side evals) before deciding. */
   def readStaged(spark: SparkSession, tablePath: String,
       id: String): DataFrame = {
-    val staged = stagedLines(tablePath, id)
+    val staged = readStage(tablePath, id)
     val head = at(tablePath)
-    head.applyDv(spark, spark.read
-      .schema(publishedSchema(head, stagedSchema(tablePath, id, staged)))
-      .parquet((head.files ++ staged.filterNot(_.startsWith("#")))
-        .map(rel => Paths.get(tablePath).resolve(rel).toString): _*))
+    stageView(spark, head, staged.added,
+      publishedSchema(head, stagedSchema(tablePath, id, staged)))
   }
 
   /** PUBLISH staged `id` as the next version — metadata-only: no data
@@ -1061,32 +1151,21 @@ object Manifest {
     * the table's constraints and retry). IDEMPOTENT: the published
     * manifest carries a `txn.wap-<id>` stamp, so a replay after the
     * link-then-cleanup crash window (or the loser of two concurrent
-    * publishers of the same stage) returns the already-published
-    * version instead of listing the staged files twice. Returns the
-    * published version. */
+    * publishers of the same stage) finishes the cleanup and returns the
+    * already-published version instead of listing the staged files
+    * twice. Returns the published version. */
   def publishStaged(spark: SparkSession, tablePath: String,
       id: String): Long = {
-    // IDEMPOTENT publish: the published manifest carries a txn stamp
-    // for this WAP id, so a replay after a crash in the window between
-    // the manifest link and the wap-file cleanup — or the loser of two
-    // concurrent publishers of the SAME stage — finds the stamp,
-    // finishes the cleanup, and returns the already-published version
-    // instead of listing the staged files twice.
-    val txnKey = s"${TxnPrefix}wap-$id"
-    // bounded probe (head stamp or checkpoint fold — never an
-    // O(history) walk), and vacuum-proof: the stamp rides the
-    // checkpoints even after the publishing version's manifest is gone
-    def alreadyPublished: Option[Long] =
-      txnState(tablePath, s"wap-$id").map(_._2)
-    alreadyPublished match {
-      case Some(v) => Files.deleteIfExists(wapFile(tablePath, id)); return v
+    val stage = s"wap-$id"
+    def retired(v: Long): Long = {
+      retireStage(tablePath, Seq(wapFile(tablePath, id)), published = true)
+      v
+    }
+    publishedAt(tablePath, stage) match {
+      case Some(v) => return retired(v)
       case None => ()
     }
-    val staged = stagedLines(tablePath, id)
-    val freshKept = staged.filterNot(_.startsWith("#"))
-    val stagedMeta = staged.filter(_.startsWith("#"))
-      .map(_.stripPrefix("#").split("=", 2))
-      .collect { case Array(k, value) => k -> value }.toMap
+    val staged = readStage(tablePath, id)
     val batchSchema = stagedSchema(tablePath, id, staged)
     var head = at(tablePath)
     // validate the head's constraints over ONLY the staged files; the
@@ -1096,8 +1175,8 @@ object Manifest {
     while (true) {
       val constraints = head.constraints
       if (!validatedAgainst.contains(constraints) &&
-          constraints.nonEmpty && freshKept.nonEmpty) {
-        val paths = freshKept.map(rel =>
+          constraints.nonEmpty && staged.added.nonEmpty) {
+        val paths = staged.added.map(rel =>
           Paths.get(tablePath).resolve(rel).toString)
         constraintAggregate(
           spark.read.schema(batchSchema).parquet(paths: _*), constraints,
@@ -1107,24 +1186,14 @@ object Manifest {
               "stage is intact)"))
       }
       validatedAgainst = Some(constraints)
-      val constraintMeta = constraints
-        .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-      // delta manifest: the staged files publish as this version's adds;
-      // the head's file list and DV state are inherited by resolution —
-      // the publish is metadata-only AND O(staged), never O(table)
-      publishVersion(tablePath, head,
-        (stagedMeta - SchemaKey) ++ constraintMeta + (txnKey -> "0"),
-        publishedSchema(head, batchSchema), Nil, freshKept) match {
-        case Some(next) =>
-          Files.deleteIfExists(wapFile(tablePath, id))
-          return next
+      publishStage(tablePath, head, stage, staged.meta,
+        publishedSchema(head, batchSchema), staged.added) match {
+        case Some(next) => return retired(next)
         case None =>
           // the winner may have been ANOTHER publisher of this very
           // stage: surrender to its version instead of double-listing
-          alreadyPublished match {
-            case Some(v) =>
-              Files.deleteIfExists(wapFile(tablePath, id))
-              return v
+          publishedAt(tablePath, stage) match {
+            case Some(v) => return retired(v)
             case None => ()
           }
           attempts += 1
@@ -1143,55 +1212,27 @@ object Manifest {
     * construction (no version ever listed them) — EXCEPT in
     * [[publishStaged]]'s link-then-cleanup crash window, where the wap
     * file still exists but the staged files ARE the just-published
-    * head: the same `txn.wap-<id>` probe publishStaged replays on runs
-    * first, and a published stage drops only the wap file, leaving the
-    * live data files alone. False when no such stage exists. */
+    * head: the publish probe runs first (vacuum-safe — the stamp
+    * persists in the checkpoints, so files live in retained snapshots
+    * are never reclaimed as unpublished), and a published stage drops
+    * only the wap file. False when no such stage exists. */
   def dropStaged(tablePath: String, id: String): Boolean = {
     val f = wapFile(tablePath, id)
     if (!Files.exists(f)) return false
-    // publish probe via the checkpoint-folded txn state: bounded, and
-    // VACUUM-SAFE — even when retention dropped the publishing
-    // version's manifest (while the crash-window wap file survived),
-    // the stamp persists in the checkpoints, so the staged files —
-    // live in retained snapshots — are never rmTree'd as unpublished
-    val published = txnState(tablePath, s"wap-$id").isDefined
-    if (published) { Files.delete(f); return true }
-    val dirs = Files.readAllLines(f).toArray.map(_.toString)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(rel => Paths.get(tablePath).resolve(rel).getParent)
-      .distinct
-    Files.delete(f)
-    dirs.foreach(rmTree)
+    retireStage(tablePath, Seq(f),
+      published = publishedAt(tablePath, s"wap-$id").isDefined)
     true
   }
 
   // ——— WRITABLE BRANCH REFS (the Iceberg branch shape, generalizing
-  // WAP from one staged commit to a CHAIN of them): [[branch]] forks
-  // the commit chain at a base version; [[commitBranch]] lands
-  // append-shaped commits on the branch under the same optimistic
-  // link-retry and CHECK-constraint gate as [[commit]] — each branch
-  // commit is a stage-format manifest `branch-<name>-cNNNNNN.txt`,
-  // invisible to every main-chain reader, schema evolving
-  // append-compatibly along the branch; [[readBranch]] serves the
-  // branch view (BASE state + branch commits — pinned at the fork, the
-  // isolation contract); [[fastForward]] publishes the branch's net
-  // state back as ONE metadata-only main commit iff main has not moved
-  // off the base (divergence REFUSES loudly — re-branch and replay),
-  // idempotent through a `txn.branch-<name>` stamp exactly like WAP
-  // publish; [[dropBranch]] abandons. [[vacuum]] pins every branch's
-  // base version and protects branch data files until
-  // publish/drop decides. The WAP stage is the one-commit special
-  // case of this shape. At 100 TB this is how a multi-batch risky
-  // ingest ships: N expensive writes land quarantined on the branch,
-  // audited as a unit, and the promote decision costs one manifest
-  // write. ———
+  // WAP from one staged commit to a CHAIN of them): [[branch]] forks,
+  // [[commitBranch]] appends, [[readBranch]] reads pinned at the fork,
+  // [[fastForward]] publishes the net state iff main has not moved,
+  // [[dropBranch]] abandons; [[vacuum]] pins every branch's base. ———
 
-  private def branchRefFile(tablePath: String, name: String): Path =
-    manifestDir(tablePath).resolve(s"branch-$name.txt")
-
-  private def branchCommitFile(tablePath: String, name: String,
-      c: Long): Path =
-    manifestDir(tablePath).resolve(f"branch-$name-c$c%06d.txt")
+  private def branchFiles(tablePath: String, name: String): Seq[Path] =
+    branchCommits(tablePath, name).map(branchCommitFile(tablePath, name, _)) :+
+      branchRefFile(tablePath, name)
 
   /** Fork a branch named `name` at `from` (the head when omitted).
     * Loud on an invalid name, an uncommitted base, or an existing
@@ -1202,13 +1243,14 @@ object Manifest {
         "start alphanumeric)")
     // a name shaped like a branch COMMIT file suffix would make
     // branch-<name>.txt ambiguous with another branch's commit
-    require(!name.matches(".*-c\\d{6}"),
+    require(!name.matches(BranchCommitSuffix),
       s"invalid branch name '$name' (the '-cNNNNNN' suffix is " +
         "reserved for branch commit numbering)")
     val base = if (from >= 0) from else version(tablePath)
     require(base > 0 && Files.exists(manifestFile(tablePath, base)),
       s"version $base is not committed at $tablePath")
-    if (!linkNew(branchRefFile(tablePath, name), Seq(s"#base=$base")))
+    if (!linkNew(branchRefFile(tablePath, name),
+        encodeLines(Map("base" -> base.toString), Nil, Nil)))
       throw new IllegalArgumentException(
         s"branch '$name' already exists at $tablePath — " +
           "fastForward or dropBranch first")
@@ -1216,63 +1258,40 @@ object Manifest {
   }
 
   /** Live branches: name → (base version, branch commit count). */
-  def branches(tablePath: String): Map[String, (Long, Long)] = {
-    val dir = manifestDir(tablePath)
-    if (!Files.isDirectory(dir)) return Map.empty
-    val names = ls(dir).map(p => Paths.get(p).getFileName.toString)
-      .collect { case s if s.startsWith("branch-") && s.endsWith(".txt")
-          && !s.stripPrefix("branch-").stripSuffix(".txt")
-            .matches(".*-c\\d{6}") =>
-        s.stripPrefix("branch-").stripSuffix(".txt") }
-    names.map(n => n -> (branchBase(tablePath, n),
-      branchCommits(tablePath, n).size.toLong)).toMap
-  }
+  def branches(tablePath: String): Map[String, (Long, Long)] =
+    stages(tablePath).branches.map { case (n, cs) =>
+      n -> (branchBase(tablePath, n), cs.size.toLong) }
 
   private def branchBase(tablePath: String, name: String): Long = {
     val f = branchRefFile(tablePath, name)
     require(Files.exists(f), s"no branch '$name' at $tablePath")
-    new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim
-      .stripPrefix("#base=").toLong
+    decodeLines(f).meta("base").toLong
   }
 
-  private def branchCommits(tablePath: String, name: String): Seq[Long] = {
-    val dir = manifestDir(tablePath)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else ls(dir).map(p => Paths.get(p).getFileName.toString)
-      .collect {
-        case s if s.startsWith(s"branch-$name-c") && s.endsWith(".txt") =>
-          s.stripPrefix(s"branch-$name-c").stripSuffix(".txt").toLong
-      }.sorted
-  }
+  private def branchCommits(tablePath: String, name: String): Seq[Long] =
+    stages(tablePath).branches.getOrElse(name, Nil)
 
-  private def branchLines(tablePath: String, name: String,
-      c: Long): Seq[String] = {
-    val f = branchCommitFile(tablePath, name, c)
-    require(Files.exists(f),
+  private def readBranchCommit(tablePath: String, name: String,
+      c: Long): ManifestLines =
+    readStageFile(branchCommitFile(tablePath, name, c),
       s"branch '$name' commit $c is missing at $tablePath")
-    Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
-  }
 
   /** The branch's resolved (base snapshot, schema, all added files,
-    * merged structured meta): base state folded through the branch
-    * commits in order. Constraints are the BASE's — frozen at fork
-    * (constraint changes refuse on branches). */
+    * merged meta): base state folded through the branch commits in
+    * order. Constraints are the BASE's — frozen at fork (constraint
+    * changes refuse on branches). */
   private def branchState(tablePath: String, name: String)
       : (Snapshot, StructType, Seq[String], Map[String, String]) = {
     val base = at(tablePath, branchBase(tablePath, name))
-    val cs = branchCommits(tablePath, name)
     var schema = base.schema
     val files = Seq.newBuilder[String]
     var meta = Map.empty[String, String]
-    cs.foreach { c =>
-      val lines = branchLines(tablePath, name, c)
-      val m = lines.filter(_.startsWith("#"))
-        .map(_.stripPrefix("#").split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      m.get(SchemaKey).foreach(j => schema = evolve(schema,
+    branchCommits(tablePath, name).foreach { c =>
+      val bc = readBranchCommit(tablePath, name, c)
+      bc.meta.get(SchemaKey).foreach(j => schema = evolve(schema,
         DataType.fromJson(j).asInstanceOf[StructType]))
-      files ++= lines.filterNot(_.startsWith("#"))
-      meta ++= (m - SchemaKey - CommitTsKey)
+      files ++= bc.added
+      meta ++= bc.meta
     }
     (base, schema, files.result(), meta)
   }
@@ -1299,14 +1318,10 @@ object Manifest {
     * MAIN txn fold (newest branch stamp wins — the SetTransaction
     * overwrite), so [[lastTxn]] keeps answering downstream. */
   def branchTxn(tablePath: String, name: String,
-      appId: String): Option[Long] = {
-    val key = s"$TxnPrefix$appId"
-    val vs = branchCommits(tablePath, name).flatMap { c =>
-      branchLines(tablePath, name, c).find(_.startsWith(s"#$key="))
-        .map(_.stripPrefix(s"#$key=").toLong)
-    }
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+      appId: String): Option[Long] =
+    branchCommits(tablePath, name).flatMap(c =>
+      readBranchCommit(tablePath, name, c).meta.get(s"$TxnPrefix$appId")
+        .map(_.toLong)).maxOption
 
   /** Idempotent [[commitBranch]] for replayable writers — the
     * [[commitOnce]] contract applied to a BRANCH: the (appId,
@@ -1334,22 +1349,15 @@ object Manifest {
       name: String, meta: Map[String, String],
       statsCols: Seq[String],
       txnGate: Option[(String, Long)]): Long = {
-    checkMeta(meta)
     val (base, headSchema, _, _) = branchState(tablePath, name)
     // append-compatible evolution gate BEFORE writing (loud on type
-    // changes; new columns ride)
-    val evolved = evolve(headSchema, df.schema)
-    // the fork-frozen constraint gate, over the WRITTEN rows
-    val batch = writeBatch(df, tablePath, version(tablePath) + 1, statsCols,
-      base.constraints, bad => s"requirement failed: branch '$name' " +
-        s"commit violates CHECK constraint(s) $bad — nothing landed on " +
-        "the branch")
-    val lines =
-      (meta ++ batch.rowsMeta ++ batch.statsMeta ++
-        freshBytesMeta(tablePath, batch.fresh) +
-        (SchemaKey -> evolved.json) +
-        (CommitTsKey -> System.currentTimeMillis.toString))
-        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ batch.fresh
+    // changes; new columns ride), then the fork-frozen constraint gate
+    // over the WRITTEN rows
+    val (batch, lines) = writeStage(df, tablePath, meta, statsCols,
+      evolve(headSchema, df.schema), base.constraints,
+      bad => s"requirement failed: branch '$name' commit violates CHECK " +
+        s"constraint(s) $bad — nothing landed on the branch",
+      Map(CommitTsKey -> System.currentTimeMillis.toString))
     // optimistic link-retry on the branch commit number; a txn-gated
     // commit RE-PROBES its stamp after every lost race — the loser of
     // two writers replaying the same micro-batch surrenders instead
@@ -1375,10 +1383,8 @@ object Manifest {
     * to main readers (the isolation contract both directions). */
   def readBranch(spark: SparkSession, tablePath: String,
       name: String): DataFrame = {
-    val (base, schema, branchFiles, _) = branchState(tablePath, name)
-    val paths = (base.files ++ branchFiles)
-      .map(rel => Paths.get(tablePath).resolve(rel).toString)
-    base.applyDv(spark, spark.read.schema(schema).parquet(paths: _*))
+    val (base, schema, files, _) = branchState(tablePath, name)
+    stageView(spark, base, files, schema)
   }
 
   /** Publish branch `name` back onto the main chain as ONE
@@ -1397,17 +1403,15 @@ object Manifest {
     * version. Returns the published main version. */
   def fastForward(spark: SparkSession, tablePath: String,
       name: String): Long = {
-    val txnApp = s"branch-$name"
-    txnState(tablePath, txnApp) match {
-      case Some((_, v)) =>
+    val stage = s"branch-$name"
+    publishedAt(tablePath, stage) match {
+      case Some(v) =>
         // already published (crash-window replay): finish the cleanup
-        branchCommits(tablePath, name).foreach(c =>
-          Files.deleteIfExists(branchCommitFile(tablePath, name, c)))
-        Files.deleteIfExists(branchRefFile(tablePath, name))
+        retireStage(tablePath, branchFiles(tablePath, name), published = true)
         return v
       case None => ()
     }
-    val (base, schema, branchFiles, meta) = branchState(tablePath, name)
+    val (base, schema, files, meta) = branchState(tablePath, name)
     val head = version(tablePath)
     if (head != base.version)
       throw new IllegalStateException(
@@ -1416,17 +1420,12 @@ object Manifest {
           "the chains have diverged. Re-branch from the head and replay the " +
           "branch's commits (append-shaped work is re-commitable), or " +
           "drop the branch")
-    val constraintMeta = base.constraints
-      .map { case (n, ex) => s"$ConstraintPrefix$n" -> ex }
-    val next = publishVersion(tablePath, base,
-      meta ++ constraintMeta + (s"$TxnPrefix$txnApp" -> "0"), schema, Nil,
-      branchFiles).getOrElse(throw new IllegalStateException(
+    val next = publishStage(tablePath, base, stage, meta, schema, files)
+      .getOrElse(throw new IllegalStateException(
         s"cannot fast-forward branch '$name' at $tablePath: a main " +
           s"commit won the race for version ${base.version + 1} — the " +
           "chains have diverged. Re-branch from the new head and replay"))
-    branchCommits(tablePath, name).foreach(c =>
-      Files.deleteIfExists(branchCommitFile(tablePath, name, c)))
-    Files.deleteIfExists(branchRefFile(tablePath, name))
+    retireStage(tablePath, branchFiles(tablePath, name), published = true)
     next
   }
 
@@ -1437,22 +1436,8 @@ object Manifest {
     * Returns false if the branch did not exist. */
   def dropBranch(tablePath: String, name: String): Boolean = {
     if (!Files.exists(branchRefFile(tablePath, name))) return false
-    val published = txnState(tablePath, s"branch-$name").isDefined
-    val cs = branchCommits(tablePath, name)
-    if (!published) {
-      val dirs = cs.flatMap(c =>
-        branchLines(tablePath, name, c).filterNot(_.startsWith("#"))
-          .map(rel => Paths.get(tablePath).resolve(rel).getParent))
-        .distinct
-      cs.foreach(c =>
-        Files.deleteIfExists(branchCommitFile(tablePath, name, c)))
-      Files.deleteIfExists(branchRefFile(tablePath, name))
-      dirs.foreach(rmTree)
-    } else {
-      cs.foreach(c =>
-        Files.deleteIfExists(branchCommitFile(tablePath, name, c)))
-      Files.deleteIfExists(branchRefFile(tablePath, name))
-    }
+    retireStage(tablePath, branchFiles(tablePath, name),
+      published = publishedAt(tablePath, s"branch-$name").isDefined)
     true
   }
 
@@ -1500,7 +1485,7 @@ object Manifest {
       appId: String): Option[(Long, Long)] = {
     val head = version(tablePath)
     if (head <= 0) None
-    else rawMeta(tablePath, head).get(s"$TxnPrefix$appId") match {
+    else readManifest(tablePath, head).meta.get(s"$TxnPrefix$appId") match {
       case Some(n) => Some((n.toLong, head))
       case None => snapshot(tablePath, head).txns.get(appId)
     }
@@ -2371,9 +2356,9 @@ object Manifest {
     // fast-forward): their manifests, data files and DV dirs all
     // survive until the tag/branch is deleted — the audit-point
     // contract
-    val liveBranches = branches(tablePath).keys.toSeq.sorted
+    val st = stages(tablePath)
     val pinned = tags(tablePath).values.toSet ++
-      liveBranches.map(branchBase(tablePath, _))
+      st.branches.keys.map(branchBase(tablePath, _))
     val retained = (all.takeRight(retainLast) ++
       all.filter(pinned.contains)).distinct.sorted
     val droppedSet = all.toSet -- retained
@@ -2382,11 +2367,10 @@ object Manifest {
     // branches' commits are referenced by their stage/branch manifests,
     // not by any version — protect their files like retained versions'
     // until publish/drop decides
-    val stagedKeep = stagedIds(tablePath)
-      .flatMap(id => stagedLines(tablePath, id))
-      .filterNot(_.startsWith("#")) ++
-      liveBranches.flatMap(n => branchCommits(tablePath, n).flatMap(c =>
-        branchLines(tablePath, n, c).filterNot(_.startsWith("#"))))
+    val stagedKeep = (st.wapIds.map(wapFile(tablePath, _)) ++
+      st.branches.toSeq.flatMap { case (n, cs) =>
+        cs.map(branchCommitFile(tablePath, n, _)) })
+      .flatMap(f => decodeLines(f).added)
     // resolve retained state BEFORE any deletion (also warms the work
     // below), and MATERIALIZE A CHECKPOINT at every retained version
     // whose delta chain would cross a dropped manifest — dropping the

@@ -294,12 +294,7 @@ object TextIndex {
     val stats = spark.table(corpusStatsTable(prefix))
     val keep = posts.columns
       .filterNot(Set("token", "tf", "positions").contains)
-    val avgdl = col("dlsum") / col("n")
-    val idf = log(lit(1.0) +
-      (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val contrib = idf * ((col("tf") * lit(TextSearch.K1 + 1)) /
-      (col("tf") + lit(TextSearch.K1) * (lit(1 - TextSearch.B) +
-        lit(TextSearch.B) * (col("dl") / avgdl))))
+    val contrib = TextSearch.bm25Term(col("tf"), col("df"))
     val partials = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("token") === lit(t), col("__c"))).as(s"__c$i")
     }

@@ -28,6 +28,16 @@ object TextSearch {
   val K1 = 1.2
   val B = 0.75
 
+  /** ONE term's BM25 contribution for term/document frequencies `tf`/
+    * `df` over columns `n`, `dlsum` and `dl` — [[bm25]]'s and
+    * [[TextIndex.bm25Probe]]'s Column tree ([[sqlScore]] is its twin). */
+  private[ops] def bm25Term(tf: Column, df: Column): Column = {
+    val avgdl = col("dlsum") / col("n")
+    val idf = log(lit(1.0) + (col("n") - df + lit(0.5)) / (df + lit(0.5)))
+    idf * ((tf * lit(K1 + 1)) /
+      (tf + lit(K1) * (lit(1 - B) + lit(B) * (col("dl") / avgdl))))
+  }
+
   /** Adds `dl`, per-term `tf<i>`, and a `score` column; other input columns
     * pass through. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
@@ -44,13 +54,8 @@ object TextSearch {
       sum(col("dl")).as("dlsum") +:
         terms.indices.map(i =>
           sum((col(s"tf$i") > 0).cast("int")).as(s"df$i")): _*)
-    val avgdl = col("dlsum") / col("n")
-    val score = terms.indices.map { i =>
-      val idf = log(lit(1.0) +
-        (col("n") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-      idf * ((col(s"tf$i") * lit(K1 + 1)) /
-        (col(s"tf$i") + lit(K1) * (lit(1 - B) + lit(B) * (col("dl") / avgdl))))
-    }.reduce(_ + _)
+    val score = terms.indices
+      .map(i => bm25Term(col(s"tf$i"), col(s"df$i"))).reduce(_ + _)
     base.crossJoin(broadcast(stats))
       .withColumn("score", score)
       .drop("n" +: "dlsum" +: terms.indices.map(i => s"df$i"): _*)

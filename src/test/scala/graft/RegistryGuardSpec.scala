@@ -22,7 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * row-level rule: one file key (`relPathCol`) and one stats prune
   * (`filesWithin`), and the k-means rule: one nearest-centroid argmin
   * (`nearest`), one Lloyd mean (`lloydRounds`) and one oracle centroid
-  * ranking (`sqlRankedCte`). No Spark
+  * ranking (`sqlRankedCte`), and the format rule: one manifest-line
+  * decoder and encoder in `Manifest` and one binary-file reader in
+  * `ingest`. No Spark
   * session needed — pure registry + file
   * introspection. */
 class RegistryGuardSpec extends AnyFunSuite {
@@ -353,5 +355,58 @@ class RegistryGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, "centroid assignment goes through " +
       "Similarity.nearest, Lloyd means through lloydRounds/sqlLloydRounds " +
       s"and the oracle ranking through sqlRankedCte:\n${hits.mkString("\n")}")
+  }
+
+  /** A manifest-file line read, a `#key=value` meta parse, a `#key=value`
+    * meta line encoding, and a distributed binary-file read. */
+  private val readLinesToken = """Files\.readAllLines\(""".r
+  private val metaParseToken = """\.split\("=", 2\)""".r
+  private val metaLineToken = """s"#\$\w+=\$\w+"""".r
+  private val binaryFilesToken = """binaryFiles\(""".r
+
+  test("each format decision has one home: in Manifest, " +
+    "Files.readAllLines( and .split(\"=\", 2) only in decodeLines and " +
+    "the #key=value encoding only in encodeLines (and writeCheckpoint's " +
+    "grouped lines); in src/main, binaryFiles( only in " +
+    "ingest.BinaryFormat.readFiles") {
+    // the copies these guards replaced trip them
+    val oldStage = """    Files.readAllLines(f).toArray.map(_.toString).toSeq.filter(_.nonEmpty)
+      |      val m = lines.filter(_.startsWith("#"))
+      |        .map(_.stripPrefix("#").split("=", 2))
+      |        .toSeq.sorted.map { case (k, v) => s"#$k=$v" } ++ batch.fresh
+      |    val files = spark.sparkContext.binaryFiles(pattern)"""
+      .stripMargin.split("\n").toSeq
+    assert(codeHits(oldStage, readLinesToken) == Seq(0))
+    assert(codeHits(oldStage, metaParseToken) == Seq(2))
+    assert(codeHits(oldStage, metaLineToken) == Seq(3))
+    assert(codeHits(oldStage, binaryFilesToken) == Seq(4))
+    val manifest = Paths.get("src/main/scala/graft/ops/Manifest.scala")
+    val ingest = Paths.get("src/main/scala/graft/ingest/ingest.scala")
+    def lines(f: java.nio.file.Path) = Files.readAllLines(f).asScala.toSeq
+    val mLines = lines(manifest)
+    val homes = Seq(
+      (readLinesToken, manifest, defSpan(mLines, "def decodeLines(")),
+      (metaParseToken, manifest, defSpan(mLines, "def decodeLines(")),
+      (metaLineToken, manifest, defSpan(mLines, "def encodeLines(")),
+      (metaLineToken, manifest, defSpan(mLines, "def writeCheckpoint(")),
+      (binaryFilesToken, ingest, defSpan(lines(ingest), "def readFiles(")))
+    homes.foreach { case (token, f, span) =>
+      assert(codeHits(lines(f), token).count(span.contains) == 1,
+        s"$f: the home at line ${span.start + 1} must hold exactly one $token")
+    }
+    val hits = for {
+      f <- Files.walk(Paths.get("src/main")).iterator.asScala.toSeq
+      if f.toString.endsWith(".scala")
+      src = lines(f)
+      token <- Seq(readLinesToken, metaParseToken, metaLineToken,
+        binaryFilesToken)
+      if token == binaryFilesToken || Files.isSameFile(f, manifest)
+      i <- codeHits(src, token)
+      if !homes.exists { case (t, h, span) =>
+        t == token && Files.isSameFile(f, h) && span.contains(i) }
+    } yield s"$f:${i + 1}: ${src(i).trim}"
+    assert(hits.isEmpty, "manifest lines are read and written only through " +
+      "Manifest.decodeLines/encodeLines and binary survey files read only " +
+      s"through ingest.BinaryFormat:\n${hits.mkString("\n")}")
   }
 }

@@ -45,6 +45,24 @@ class DbfReaderSpec extends SparkSpec {
     assert(dist == local && dist.size == 3)
   }
 
+  test("readDbfFiles refuses a file whose layout drifts from the glob's " +
+    "first file, naming it") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("dbf-drift")
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(fixture))
+    Files.write(dir.resolve("a.dbf"), bytes)
+    // field 1 (ANIO) descriptor's type byte: 'N' (BIGINT) -> 'F' (DOUBLE)
+    val drifted = bytes.clone()
+    assert(drifted(32 + 32 + 11) == 'N'.toByte)
+    drifted(32 + 32 + 11) = 'F'.toByte
+    Files.write(dir.resolve("b.dbf"), drifted)
+    val e = intercept[Exception](
+      DbfReader.readDbfFiles(spark, s"$dir/*.dbf").collect())
+    assert(e.getMessage.contains(s"${dir.resolve("b.dbf")} schema") &&
+      e.getMessage.contains("differs from the glob's first-file schema"),
+      e.getMessage)
+  }
+
   test("rejects non-dBase-III versions loudly") {
     val bogus = new Array[Byte](64)
     bogus(0) = 0x04

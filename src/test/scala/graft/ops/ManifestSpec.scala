@@ -1695,4 +1695,21 @@ class ManifestSpec extends SparkSpec {
       .filter(col("id") === 2L).count() == 1L,
       "published-then-vacuumed stage's files must survive dropStaged")
   }
+
+  test("branch commits are listed by exact name: branches 'x-c5' and " +
+    "'x-cab' beside 'x' are never read as commits of 'x'") {
+    val tbl = freshTable()
+    Manifest.commit(Seq((1L, 10L)).toDF("id", "v"), tbl)       // v1
+    Seq("x", "x-c5", "x-cab").foreach(Manifest.branch(tbl, _))
+    Manifest.commitBranch(Seq((2L, 20L)).toDF("id", "v"), tbl, "x")
+    assert(Manifest.branches(tbl) == Map("x" -> ((1L, 1L)),
+      "x-c5" -> ((1L, 0L)), "x-cab" -> ((1L, 0L))))
+    assert(Manifest.readBranch(spark, tbl, "x").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    Manifest.vacuum(tbl, retainLast = 1)
+    assert(Manifest.fastForward(spark, tbl, "x") == 2L)
+    assert(Manifest.read(spark, tbl).count() == 2L)
+    assert(Manifest.branches(tbl) == Map("x-c5" -> ((1L, 0L)),
+      "x-cab" -> ((1L, 0L))))
+  }
 }
